@@ -89,16 +89,6 @@ def linked_mentions_from(docs: DataFrame) -> DataFrame:
     )
 
 
-def entity_dictionary(docs: DataFrame) -> DataFrame:
-    """Corpus-derived gazetteer: (entity=mention term, n_docs). At web scale
-    the dictionary side is small -> broadcast into downstream link joins."""
-    return (
-        linked_mentions_from(docs)
-        .select(F.col("mention").alias("entity"), "n_docs")
-        .distinct()
-    )
-
-
 def kg_entity_link(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, mention, entity_iri, n_occurrences) — mention rows whose term
     is in the corpus gazetteer."""

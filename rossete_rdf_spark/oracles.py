@@ -29,20 +29,19 @@ from .kgops import (
 )
 from .kgops import UNBOUND as KG_UNBOUND
 from .kgops import CONSTRUCT_MIN_DOCS as KG_CONSTRUCT_MIN_DOCS
-from .pipeline.pagedup import MAX_BUCKET as PAGE_MAX_BUCKET
-from .pipeline.pagedup import MIN_BANDS as PAGE_MIN_BANDS
 from .pipeline.pagedup import NEAR_DUP_JACCARD as PAGE_NEAR_DUP_JACCARD
 from .relops import FUNNEL_WINDOW_HOURS, HIST_BINS, HIST_WIDTH_CENTS, RANGE_SLOTS
 from .relops import Z_THRESHOLD as REL_Z_THRESHOLD
 from .textops.ann import EMB_NEARDUP_THRESHOLD, IVF_NPROBE, KMEANS_ITERS
 from .textops.common import sql_ngrams, sql_pos_grams, sql_words
 from .textops.webclean import EMAIL_RE, PHONE_RE, TRACKING_PARAM_RE
+from .textops.lsh import BAND_ROWS, N_HASHES
+from .textops.lsh import MAX_BUCKET as MINHASH_MAX_BUCKET
+from .textops.lsh import MAX_BUCKET as PAGE_MAX_BUCKET
+from .textops.lsh import MIN_BANDS as PAGE_MIN_BANDS
 from .textops.dedup import (
-    BAND_ROWS,
     DECON_NGRAM,
     INCREMENTAL_BATCH_BUCKET,
-    MINHASH_MAX_BUCKET,
-    N_HASHES,
     NGRAM_MAX_DF,
     SIMHASH_BITS,
     SPAN_POS_PACK,
@@ -1093,19 +1092,16 @@ WHERE comp.component IS NULL OR comp.component = p.url
 # --- entity canonicalization (LSH -> >=2-band -> Jaccard verify -> CC) -----
 
 from .pipeline.canonicalize import (  # noqa: E402
-    BAND_ROWS as CANON_BAND_ROWS,
     CANON_JACCARD,
     CANON_PLURAL_MOD,
+    NGRAM as CANON_NGRAM,
+)
+from .textops.lsh import (  # noqa: E402
     MAX_BUCKET as CANON_MAX_BUCKET,
     MIN_BANDS as CANON_MIN_BANDS,
     N_HASHES as CANON_N_HASHES,
-    NGRAM as CANON_NGRAM,
 )
 from .kgops import MIN_MENTION_LEN as _CANON_MIN_LEN  # noqa: E402
-
-# _band_select_sql bakes dedup's N_HASHES/BAND_ROWS; the canonicalizer's
-# banding must stay in lock-step or the oracle silently diverges
-assert CANON_N_HASHES == N_HASHES and CANON_BAND_ROWS == BAND_ROWS
 
 _canon_minhash_cols = ", ".join(
     f"min(('0x' || substr(md5('{i}|' || g), 1, 15))::BIGINT) AS h{i}"

@@ -1,6 +1,7 @@
 """Entity canonicalization: MinHash-LSH blocking over surface char-n-grams
-generates candidate duplicate pairs, exact Jaccard verifies them, and
-connected components collapses the verified pairs into canonical entities.
+generates candidate duplicate pairs, exact Jaccard verifies them (both in
+textops/lsh.py), and connected components collapses the verified pairs into
+canonical entities.
 
 Scale shape: candidate generation is linear in #surfaces x #bands (never
 all-pairs); verification touches only candidates; CC runs on the (tiny
@@ -12,106 +13,48 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph.cc import connected_components
+from ..textops.lsh import (
+    MAX_BUCKET,
+    MIN_BANDS,
+    candidate_pairs,
+    gram_table,
+    minhash64,
+    verify_jaccard,
+)
 
-N_HASHES = 8
-BAND_ROWS = 2
 NGRAM = 3
-# Short surfaces (4-6 chars) have only a handful of char n-grams, so many
-# distinct surfaces share identical MinHash bands — without a bucket cap the
-# banding self-join is quadratic on those buckets (observed as a runaway
-# single-task ArrayDistinct stage in the KG bench). Oversized buckets are
-# non-discriminative anyway; dropping them loses only low-signal candidates.
-MAX_BUCKET = 50
-MIN_BANDS = 2  # candidates must collide in >= 2 of 4 bands
 CANON_JACCARD = 0.6  # exact-Jaccard verification threshold (oracle twin imports it)
 
 
-def _char_ngrams(col, n: int = NGRAM):
-    """Distinct character n-grams of a surface string."""
-    idx = F.sequence(F.lit(1), F.greatest(F.length(col) - (n - 1), F.lit(0)))
-    return F.array_distinct(F.transform(idx, lambda i: F.substring(col, i, n)))
+def _surface_grams(surfaces: DataFrame, col: str) -> DataFrame:
+    """(id = surface, g, n) over distinct character n-grams."""
+    c = F.col(col)
+    idx = F.sequence(F.lit(1), F.greatest(F.length(c) - (NGRAM - 1), F.lit(0)))
+    grams = F.transform(idx, lambda i: F.substring(c, i, NGRAM))
+    return gram_table(surfaces, col, F.array_distinct(grams))
 
 
 def surface_candidate_pairs(surfaces: DataFrame, col: str = "surface") -> DataFrame:
-    """(surface) -> candidate pairs (a, b) with a < b via MinHash banding
-    over char n-grams."""
-    grams = surfaces.select(
-        F.col(col).alias("s"), F.explode(_char_ngrams(F.col(col))).alias("g")
-    )
-    from ..textops.dedup import minhash64
-
-    sig = grams.groupBy("s").agg(
-        *[F.min(minhash64(F.col("g"), i)).alias(f"h{i}") for i in range(N_HASHES)]
-    )
-    bands = sig.select(
-        "s",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.concat_ws(
-                                "|",
-                                *[F.col(f"h{b * BAND_ROWS + r}") for r in range(BAND_ROWS)],
-                            )
-                        ).alias("key"),
-                    )
-                    for b in range(N_HASHES // BAND_ROWS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("s", "bk.band", "bk.key")
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("band", "key")
-    bands = (
-        bands.withColumn("__bn", F.count(F.lit(1)).over(w))
-        .filter(F.col("__bn") <= MAX_BUCKET)
-        .drop("__bn")
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    # require agreement in >= MIN_BANDS of the 4 bands: single-band
-    # collisions on few-gram surfaces are near-random and would flood the
-    # verifier (8000-page probe: 186k single-band pairs -> 26k at >=2)
+    """(surface) -> candidate pairs (a, b) with a < b that collide in >=
+    MIN_BANDS bands."""
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.s") < F.col("b.s")),
-        )
-        .groupBy(F.col("a.s").alias("a"), F.col("b.s").alias("b"))
-        .agg(F.count(F.lit(1)).alias("n_bands"))
+        candidate_pairs(_surface_grams(surfaces, col), MAX_BUCKET)
         .filter(F.col("n_bands") >= MIN_BANDS)
-        .select("a", "b")
+        .select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     )
 
 
 def verified_pairs(candidates: DataFrame, threshold: float = CANON_JACCARD) -> DataFrame:
-    """Exact char-n-gram Jaccard on candidates only. The gram array is
-    computed ONCE per surface and joined in (broadcast — the surface set is
-    the gazetteer, small by construction), not recomputed per pair row."""
+    """Candidate pairs (a, b) whose exact char-n-gram Jaccard is >=
+    threshold; grams are built once per candidate surface."""
     surfaces = (
         candidates.select(F.col("a").alias("s"))
         .unionByName(candidates.select(F.col("b").alias("s")))
         .distinct()
-        .select("s", _char_ngrams(F.col("s")).alias("g"))
     )
-    jac = F.size(F.array_intersect(F.col("ga"), F.col("gb"))) / F.size(
-        F.array_union(F.col("ga"), F.col("gb"))
-    )
-    return (
-        candidates.join(
-            F.broadcast(surfaces.select(F.col("s").alias("a"), F.col("g").alias("ga"))),
-            "a",
-        )
-        .join(
-            F.broadcast(surfaces.select(F.col("s").alias("b"), F.col("g").alias("gb"))),
-            "b",
-        )
-        .filter(jac >= threshold)
-        .select("a", "b")
+    cands = candidates.select(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
+    return verify_jaccard(cands, _surface_grams(surfaces, "s"), threshold).select(
+        F.col("id_a").alias("a"), F.col("id_b").alias("b")
     )
 
 
@@ -120,15 +63,15 @@ def canonical_entity_map(surfaces: DataFrame, threshold: float = CANON_JACCARD) 
     duplicate cluster (connected component); singletons map to themselves.
 
     Both intermediates here are multiply referenced and gazetteer-BOUNDED,
-    so they are lazily localCheckpointed (the pagedup.duplicate_edges
-    lesson, measured there as 202s -> 20s): `surfaces` feeds the gram
-    explode AND the final distinct join — without the checkpoint a caller
-    passing a derived plan (kg_job passes the salted gazetteer aggregate)
-    re-executes that whole upstream DAG once per reference; `cands` is
-    referenced three times inside verified_pairs (two semi-side distincts +
-    the pair join), which otherwise re-runs the LSH banding self-join
-    three times. Lazy (eager=False) so each materializes at most once, on
-    first use, and never adds a separate job."""
+    so they are lazily localCheckpointed (the pair-table lesson of page
+    near-dup verification, measured at 8k pages as 202s -> 20s): `surfaces`
+    feeds the gram explode AND the final distinct join — without the
+    checkpoint a caller passing a derived plan (kg_job passes the salted
+    gazetteer aggregate) re-executes that whole upstream DAG once per
+    reference; `cands` is referenced twice by verified_pairs (the candidate
+    surface set and the verifier's pair table), which otherwise re-runs the
+    LSH banding self-join twice. Lazy (eager=False) so each materializes at
+    most once, on first use, and never adds a separate job."""
     surfaces = surfaces.localCheckpoint(eager=False)
     cands = surface_candidate_pairs(surfaces).localCheckpoint(eager=False)
     edges = verified_pairs(cands, threshold).select(
@@ -163,17 +106,10 @@ def entity_canonical_query(spark, sf_dir: str) -> DataFrame:
     (page_canonical_lsh) applied to ENTITY surfaces. LSH recall < 1 is fine:
     the DuckDB oracle replays the identical banding/cap/verify pipeline and
     closes components with a recursive min-label CTE, so both engines miss
-    the same pairs.
-
-    Scale shape: unchanged from canonical_entity_map — banding linear in
-    surfaces x bands with the MAX_BUCKET cap, verification only on >=2-band
-    candidates with ONE gram array per surface (broadcast), CC on the
-    verified-pair edge list (gazetteer-bounded, so string keys beat the
-    dictionary-encoding pass that pays off on corpus-sized page graphs)."""
+    the same pairs. Scale shape: that of canonical_entity_map."""
     from pyspark.sql import functions as F
 
     from ..kgops import eligible_tokens
-    from ..textops.dedup import minhash64
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     words = eligible_tokens(docs, "w").select("w").distinct()

@@ -1,7 +1,8 @@
 """Page-level deduplication: exact (fingerprint hash-groupBy) + near-dup
-(MinHash-LSH banding with a bucket-size skew cap) edges, collapsed with
-connected components; only the canonical page of each duplicate cluster
-survives into mention detection and triple materialisation.
+(MinHash-LSH blocking and exact-Jaccard verification, textops/lsh.py)
+edges, collapsed with connected components; only the canonical page of
+each duplicate cluster survives into mention detection and triple
+materialisation.
 
 This is the classic Common-Crawl hygiene stage: ~several percent of pages
 are boilerplate duplicates; dropping them BEFORE the Python mention stage
@@ -13,93 +14,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph.cc import connected_components_encoded
-from ..textops.common import pos_grams, words_col
-from ..textops.dedup import minhash_lsh_pairs, normalized_fingerprint
+from ..textops.dedup import _doc_ngrams, normalized_fingerprint
+from ..textops.lsh import MAX_BUCKET, MIN_BANDS, candidate_pairs, verify_jaccard
 
-MAX_BUCKET = 50  # LSH band buckets bigger than this are non-discriminative
-MIN_BANDS = 2  # near-dup candidates must collide in >= 2 of 4 bands
 NEAR_DUP_JACCARD = 0.5  # exact-verify bar: candidates below this are dropped
 
 
 def duplicate_edges(pages_text: DataFrame) -> DataFrame:
-    """(src, dst) url pairs that are exact or near duplicates."""
-    exact = exact_duplicate_edges(pages_text)
-    cands = (
-        minhash_lsh_pairs(
-            pages_text, id_col="url", text_col="text", max_bucket=MAX_BUCKET
-        )
-        .filter(F.col("n_bands") >= MIN_BANDS)
-        .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        # materialized ONCE: the pair table is referenced three times below
-        # (two semi-join builds + the probe broadcast), and each reference
-        # would otherwise re-execute the whole LSH candidate DAG (signature
-        # aggregate + banding self-join) — measured 202s -> ~20s at 8k
-        # pages. The table is small by construction (bucket cap + band
-        # threshold), so localCheckpoint keeps it distributed but cuts the
-        # lineage.
-        .localCheckpoint(eager=True)
+    """(src, dst) url pairs that are exact or near duplicates. Near-dup
+    candidates are exact-Jaccard verified before CC: a false-positive band
+    collision would otherwise permanently and silently drop a distinct page
+    from the corpus."""
+    grams = _doc_ngrams(pages_text, "url", "text", 3)
+    cands = candidate_pairs(grams, MAX_BUCKET).filter(F.col("n_bands") >= MIN_BANDS)
+    near = verify_jaccard(cands, grams, NEAR_DUP_JACCARD)
+    return exact_duplicate_edges(pages_text).unionByName(
+        near.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
-    # Exact-Jaccard verification before CC (mirrors canonicalize.verified_pairs'
-    # intent): a false-positive band collision would otherwise permanently and
-    # silently drop a distinct page from the corpus. Implementation is the
-    # inverted-index shape — explode grams, count per-pair intersections with
-    # hash joins/aggs, derive the union from per-page set sizes — NOT
-    # per-pair array_intersect/array_union columns: those allocate a hash set
-    # per evaluated pair inside the join condition, which serializes into
-    # whatever single task AQE coalesces the tiny pair table into (observed:
-    # a 14-minute one-task stage). Everything below is hash-partitioned and
-    # linear in #candidate-pair grams.
-    # words staged at a projection boundary before the gram transform: CSE
-    # does not reach inside the pos_grams lambda, so grams built directly
-    # over words_col(text) re-tokenize once per element_at (see
-    # textops/dedup._doc_ngrams — same fix, measured ~5x on the gram stage).
-    grams = pages_text.select(
-        "url", words_col(F.col("text")).alias("_ws")
-    ).select(
-        "url",
-        F.explode(F.array_distinct(pos_grams(F.col("_ws"), 3))).alias("ng"),
-    )
-    sizes = grams.groupBy("url").agg(F.count(F.lit(1)).alias("n"))
-    # Candidate pairs and the per-page size table are small relative to the
-    # corpus BY CONSTRUCTION (LSH bucket cap + band threshold), so broadcast
-    # THEM — and only them. Broadcasting the cands⋈src_grams result would
-    # ship pairs × grams-per-page (hundreds of MB on a big corpus). Shape:
-    #   1. semi-join each gram side down to candidate pages via the
-    #      broadcast pair table (probed in place — the corpus-sized gram
-    #      tables are never shuffled);
-    #   2. equi-join the two REDUCED gram sides, sized by candidate pages
-    #      only, as a shuffle-hash join — hinted, because the planner's SMJ
-    #      default would re-sort the gram rows (the allocation-heavy sort is
-    #      the measured anti-pattern on skewed string keys; BENCH.md).
-    src_g = grams.select(F.col("url").alias("src"), "ng").join(
-        F.broadcast(cands.select("src").distinct()), "src", "leftsemi"
-    )
-    dst_g = grams.select(F.col("url").alias("dst"), "ng").join(
-        F.broadcast(cands.select("dst").distinct()), "dst", "leftsemi"
-    )
-    inter = (
-        F.broadcast(cands)
-        .join(src_g, "src")
-        .join(dst_g.hint("shuffle_hash"), ["dst", "ng"])
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    near = (
-        inter.join(
-            F.broadcast(sizes.select(F.col("url").alias("src"), F.col("n").alias("na"))),
-            "src",
-        )
-        .join(
-            F.broadcast(sizes.select(F.col("url").alias("dst"), F.col("n").alias("nb"))),
-            "dst",
-        )
-        .filter(
-            F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-            >= NEAR_DUP_JACCARD
-        )
-        .select("src", "dst")
-    )
-    return exact.unionByName(near)
 
 
 def canonical_pages(pages_text: DataFrame) -> DataFrame:

@@ -160,16 +160,6 @@ def get_spark(
         and "spark.local.dir" not in (extra_conf or {})
     ):
         b = b.config("spark.local.dir", "/dev/shm/spark-local")
-        # With RAM-backed shuffle dirs there is no disk or network to save,
-        # so lz4 on shuffle blocks/spills is pure CPU overhead — measured
-        # 11.8s -> 10.8s on the 1-core materialization core (guide §2.3:
-        # "there is no universal answer — measure"). Scoped to the SAME
-        # sandbox opt-in as the tmpfs dirs themselves: a real cluster (no
-        # SPARK_GRAFT_TMPFS, or SPARK_LOCAL_DIRS set) keeps the compressed
-        # defaults, where shuffle bytes do cross disks and NICs.
-        b = b.config("spark.shuffle.compress", "false").config(
-            "spark.shuffle.spill.compress", "false"
-        )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -6,8 +6,10 @@ the hot path); each has a DuckDB oracle twin in oracles.py:
   exact_dedup         hash-groupBy on a normalized-text md5 fingerprint
   ngram_jaccard_pairs exact n-gram Jaccard all-pairs (inverted-index join —
                       the standard prefix-filter-free similarity join)
-  minhash_lsh_pairs   MinHash signatures + LSH banding join (the scale path:
-                      candidate generation cost ~ #docs x #bands, not #pairs)
+  minhash_lsh_pairs   MinHash-LSH candidate pairs (the scale path: cost
+                      ~ #docs x #bands, not #pairs); blocking and the
+                      Jaccard verifier live in textops/lsh.py, shared with
+                      pipeline/pagedup.py and pipeline/canonicalize.py
   simhash             per-doc SimHash bit signature for Hamming-style near-dup
 
 At 100 TB: all joins key on content-derived hashes -> uniformly distributed,
@@ -22,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .common import pos_grams, words_col
+from .lsh import MAX_BUCKET, band_rows, candidate_pairs, gram_table, signatures
 
 # ---------------------------------------------------------------------------
 
@@ -103,14 +106,8 @@ def _doc_ngrams(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFram
     # over words_col(text) re-tokenize once per element_at (n per gram) — the
     # same fix as winnow_fingerprints/decontaminate, kept by CollapseProject
     # because the word array is multiply referenced.
-    staged = docs.select(
-        F.col(id_col).alias("doc_id"),
-        words_col(F.col(text_col)).alias("_ws"),
-    )
-    return staged.select(
-        "doc_id",
-        F.explode(F.array_distinct(pos_grams(F.col("_ws"), n))).alias("ng"),
-    )
+    staged = docs.select(F.col(id_col), words_col(F.col(text_col)).alias("_ws"))
+    return gram_table(staged, id_col, F.array_distinct(pos_grams(F.col("_ws"), n)))
 
 
 NGRAM_MAX_DF = 50  # drop n-grams present in more docs than this before the self-join
@@ -142,31 +139,31 @@ def ngram_jaccard_pairs(
         # The df guard is a count() window over the gram shuffle key ON
         # PURPOSE — measured against a hash-agg + broadcast-anti-join
         # variant (20.2s vs 50.1s at sf0.1): the self-join below is a
-        # sort-merge join on the very same ng key, so the window's
+        # sort-merge join on the very same gram key, so the window's
         # exchange+sort is reused by BOTH join inputs and costs nothing
         # extra, while the anti-join variant re-tokenizes the corpus for
         # the hot-gram aggregate and then sorts both join sides anyway.
-        # (minhash_lsh_pairs uses the anti-join shape instead because its
+        # (lsh.band_rows uses the anti-join shape instead because its
         # signature aggregate is shared via AQE stage reuse.)
         from pyspark.sql.window import Window
 
-        w = Window.partitionBy("ng")
+        w = Window.partitionBy("g")
         grams = (
             grams.withColumn("__df", F.count(F.lit(1)).over(w))
             .filter(F.col("__df") <= max_df)
             .drop("__df")
         )
-    sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
+    sizes = grams.groupBy("id").agg(F.count(F.lit(1)).alias("n_grams"))
 
     a = grams.alias("a")
     b = grams.alias("b")
     inter = (
-        a.join(b, (F.col("a.ng") == F.col("b.ng")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+        a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.id") < F.col("b.id")))
+        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_grams").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_grams").alias("nb"))
+    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_grams").alias("na"))
+    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_grams").alias("nb"))
     return (
         inter.join(sa, "id_a")
         .join(sb, "id_b")
@@ -178,119 +175,19 @@ def ngram_jaccard_pairs(
 
 # ---------------------------------------------------------------------------
 
-N_HASHES = 8
-BAND_ROWS = 2  # 4 bands of 2 rows
-MINHASH_MAX_BUCKET = 50  # default LSH bucket skew cap (see minhash_lsh_pairs)
-
-
-def minhash64(col, seed: int | str):
-    """Portable 60-bit hash: the first 15 hex chars of md5 as a BIGINT.
-    Identical in DuckDB: ('0x' || substr(md5(x),1,15))::BIGINT.
-
-    Numeric on purpose: min(string) has a variable-length aggregation buffer
-    which forces Spark out of the hash-aggregate fast path into sort-based
-    aggregation (measured 20x slower on the signature build); min(long)
-    stays in the UnsafeRow hash map."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{seed}|"), col)), 1, 15), 16, 10
-    ).cast("long")
-
-
-def minhash_signatures(
-    docs: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(doc_id, h0..h{N_HASHES-1}) MinHash signature; hash family i is the
-    numeric md5-prefix hash of (i || '|' || shingle)."""
-    grams = _doc_ngrams(docs, id_col, text_col, n)
-    # project the hash columns BEFORE the aggregate: keeps the generator
-    # stage and the partial aggregation in separate codegen shapes (measured
-    # 2x faster than evaluating the hash chain inside the agg)
-    proj = grams.select(
-        "doc_id", *[minhash64(F.col("ng"), i).alias(f"x{i}") for i in range(N_HASHES)]
-    )
-    return proj.groupBy("doc_id").agg(
-        *[F.min(f"x{i}").alias(f"h{i}") for i in range(N_HASHES)]
-    )
-
-
-def _band_rows(sig: DataFrame) -> DataFrame:
-    """(doc_id, band, key) LSH banding rows of a signature table: band key =
-    md5 of that band's BAND_ROWS signature columns. The single banding
-    builder — the self-join (minhash_lsh_pairs) and the batch-vs-corpus
-    incremental variant share it."""
-    n_bands = N_HASHES // BAND_ROWS
-    return sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.col(f"h{b * BAND_ROWS + r}")
-                                    for r in range(BAND_ROWS)
-                                ],
-                            )
-                        ).alias("key"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-
 
 def minhash_lsh_pairs(
     docs: DataFrame,
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_bucket: int | None = MINHASH_MAX_BUCKET,
+    max_bucket: int | None = MAX_BUCKET,
 ) -> DataFrame:
-    """Candidate near-dup pairs (id_a < id_b, n_bands they collide in).
-
-    Banding: N_HASHES/BAND_ROWS bands, band key = md5 of its rows; docs
-    sharing any band key become candidates.
-
-    max_bucket is the skew guard for web-scale corpora, ON by default: a
-    band bucket with thousands of members is non-discriminative (boilerplate,
-    near-empty pages) and would make the self-join quadratic on that key —
-    standard LSH practice drops buckets above a size cap before joining.
-    max_bucket=None opts into the uncapped all-candidates variant (only sane
-    on corpora known to be free of hot buckets)."""
-    sig = minhash_signatures(docs, n, id_col, text_col)
-    bands = _band_rows(sig)
-
-    if max_bucket:
-        # same anti-join shape as the ngram df cap: oversized buckets are
-        # the rare non-discriminative tail, so count them (hash agg with
-        # map-side partials; the signature-build exchange below is shared
-        # with the probe side via AQE stage reuse) and broadcast-anti the
-        # band rows against that tiny hot set — no window sort over the
-        # full banding table
-        hot = (
-            bands.groupBy("band", "key")
-            .agg(F.count(F.lit(1)).alias("__bn"))
-            .filter(F.col("__bn") > max_bucket)
-            .select("band", "key")
-        )
-        bands = bands.join(F.broadcast(hot), ["band", "key"], "left_anti")
-
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_bands"))
-    )
+    """Candidate near-dup pairs (id_a < id_b, n_bands they collide in):
+    lsh.candidate_pairs over word n-grams. The hot-bucket cap is ON by
+    default; max_bucket=None opts into the uncapped all-candidates variant
+    (only sane on corpora known to be free of hot buckets)."""
+    return candidate_pairs(_doc_ngrams(docs, id_col, text_col, n), max_bucket)
 
 
 # ---------------------------------------------------------------------------
@@ -460,7 +357,7 @@ def incremental_minhash_neardup(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_bucket: int | None = MINHASH_MAX_BUCKET,
+    max_bucket: int | None = MAX_BUCKET,
 ) -> DataFrame:
     """NEAR-dup candidates of a NEW BATCH against an EXISTING CORPUS — the
     incremental face of minhash_lsh_pairs, completing the pair with
@@ -471,8 +368,8 @@ def incremental_minhash_neardup(
 
     Plan: ONE scan builds signatures for both sides (the bucket is a pure
     function of the id, recomputed after the signature agg rather than
-    dragged through it); banding is the shared _band_rows builder. The hot-
-    bucket cap applies to the CORPUS side only — that is the side whose
+    dragged through it); banding and the hot-bucket cap are lsh.band_rows.
+    The cap applies to the CORPUS side only — that is the side whose
     boilerplate buckets grow with the archive; the batch side is one
     increment and joins as the (smaller) probe. The batch x corpus band join
     is a plain equi-join on (band, key) — NOT a self-join, so cost scales
@@ -484,28 +381,13 @@ def incremental_minhash_neardup(
     of an archived doc, with LSH evidence strength."""
     from .quality import split_bucket
 
-    sig = minhash_signatures(docs, n, id_col, text_col)
-    bands = _band_rows(sig).withColumn("__bucket", split_bucket(F.col("doc_id")))
-    corp = bands.filter(F.col("__bucket") < INCREMENTAL_BATCH_BUCKET).drop("__bucket")
-    batch = bands.filter(F.col("__bucket") >= INCREMENTAL_BATCH_BUCKET).drop(
-        "__bucket"
-    )
-    if max_bucket:
-        hot = (
-            corp.groupBy("band", "key")
-            .agg(F.count(F.lit(1)).alias("__bn"))
-            .filter(F.col("__bn") > max_bucket)
-            .select("band", "key")
-        )
-        corp = corp.join(F.broadcast(hot), ["band", "key"], "left_anti")
+    sig = signatures(_doc_ngrams(docs, id_col, text_col, n))
+    bucket = split_bucket(F.col("id"))
+    corp = band_rows(sig.filter(bucket < INCREMENTAL_BATCH_BUCKET), max_bucket)
+    batch = band_rows(sig.filter(bucket >= INCREMENTAL_BATCH_BUCKET))
     return (
         batch.alias("b")
-        .join(
-            corp.alias("c"),
-            (F.col("b.band") == F.col("c.band")) & (F.col("b.key") == F.col("c.key")),
-        )
-        .groupBy(
-            F.col("b.doc_id").alias("new_id"), F.col("c.doc_id").alias("corpus_id")
-        )
+        .join(corp.alias("c"), ["band", "key"])
+        .groupBy(F.col("b.id").alias("new_id"), F.col("c.id").alias("corpus_id"))
         .agg(F.count(F.lit(1)).alias("n_bands"))
     )

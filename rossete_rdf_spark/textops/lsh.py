@@ -1,0 +1,151 @@
+"""MinHash-LSH blocking and exact-Jaccard verification: the one
+implementation behind page near-dup detection (textops.dedup
+minhash_lsh_pairs / incremental_minhash_neardup, pipeline.pagedup) and
+entity canonicalization (pipeline.canonicalize).
+
+Blocking and verification are separate steps, as in MinoanER: blocking
+proposes candidate pairs at a cost linear in #ids x #bands (never
+all-pairs), verification scores only those candidates. Every function works
+on one gram-table shape (id, g, n): one row per DISTINCT gram g of an id,
+with n = the id's distinct-gram count carried on every row, so the verifier
+reads set sizes off the gram rows instead of aggregating a size table.
+
+The hash family, the banding and the bucket cap are replayed bit for bit by
+the DuckDB oracles (oracles.py imports these constants), so both engines
+block identically and miss the same pairs.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+
+N_HASHES = 8
+BAND_ROWS = 2  # 4 bands of 2 rows
+# A band bucket with more members than this is non-discriminative
+# (boilerplate pages; short surfaces with only a handful of char n-grams)
+# and would make the banding self-join quadratic on that key, so it is
+# dropped before joining; it loses only low-signal candidates.
+MAX_BUCKET = 50
+# Pipeline callers keep candidates that collide in >= MIN_BANDS of the 4
+# bands: single-band collisions on few-gram ids are near-random and flood
+# the verifier (8000-page probe: 186k single-band surface pairs -> 26k).
+MIN_BANDS = 2
+
+
+def minhash64(col, seed: int | str) -> Column:
+    """Portable 60-bit hash: the first 15 hex chars of md5 as a BIGINT.
+    Identical in DuckDB: ('0x' || substr(md5(x),1,15))::BIGINT.
+
+    Numeric on purpose: min(string) has a variable-length aggregation buffer
+    which forces Spark out of the hash-aggregate fast path into sort-based
+    aggregation (measured 20x slower on the signature build); min(long)
+    stays in the UnsafeRow hash map."""
+    return F.conv(
+        F.substring(F.md5(F.concat(F.lit(f"{seed}|"), col)), 1, 15), 16, 10
+    ).cast("long")
+
+
+def gram_table(df: DataFrame, id_col: str, grams: Column) -> DataFrame:
+    """(id, g, n) from a per-row array of distinct grams."""
+    # n is sized before the explode so the array is not carried on every
+    # exploded row. explode_outer + a null filter, not explode: an inner
+    # explode of the staged `_ga` column makes the optimizer infer
+    # size(_ga) > 0 and push it below the projections, re-inlining the gram
+    # expression (and the word tokenization under it) once per reference.
+    staged = df.select(F.col(id_col).alias("id"), grams.alias("_ga"))
+    sized = staged.select("id", "_ga", F.size("_ga").alias("n"))
+    return sized.select("id", F.explode_outer("_ga").alias("g"), "n").filter(
+        F.col("g").isNotNull()
+    )
+
+
+def signatures(grams: DataFrame) -> DataFrame:
+    """(id, h0..h{N_HASHES-1}) MinHash signature; hash family i is the
+    numeric md5-prefix hash of (i || '|' || gram)."""
+    # hash columns projected BEFORE the aggregate: keeps the generator stage
+    # and the partial aggregation in separate codegen shapes (measured 2x
+    # faster than evaluating the hash chain inside the agg)
+    proj = grams.select(
+        "id", *[minhash64(F.col("g"), i).alias(f"x{i}") for i in range(N_HASHES)]
+    )
+    return proj.groupBy("id").agg(*[F.min(f"x{i}").alias(f"h{i}") for i in range(N_HASHES)])
+
+
+def band_rows(sig: DataFrame, max_bucket: int | None = None) -> DataFrame:
+    """(id, band, key) banding rows of a signature table: band key = md5 of
+    that band's '|'-joined BAND_ROWS signature columns. With max_bucket,
+    buckets of more than max_bucket ids are dropped."""
+
+    def band(b: int) -> Column:
+        rows = [F.col(f"h{b * BAND_ROWS + r}") for r in range(BAND_ROWS)]
+        return F.struct(F.lit(b).alias("band"), F.md5(F.concat_ws("|", *rows)).alias("key"))
+
+    bands = sig.select("id", F.inline(F.array(*[band(b) for b in range(N_HASHES // BAND_ROWS)])))
+    if not max_bucket:
+        return bands
+    # oversized buckets are the rare tail: count them (hash agg with
+    # map-side partials; the signature exchange is shared with the probe
+    # side via AQE stage reuse) and broadcast-anti the band rows against
+    # that tiny hot set — no window sort over the full banding table
+    hot = (
+        bands.groupBy("band", "key")
+        .agg(F.count(F.lit(1)).alias("__bn"))
+        .filter(F.col("__bn") > max_bucket)
+        .select("band", "key")
+    )
+    return bands.join(F.broadcast(hot), ["band", "key"], "left_anti")
+
+
+def candidate_pairs(grams: DataFrame, max_bucket: int | None = MAX_BUCKET) -> DataFrame:
+    """(id_a, id_b, n_bands): pairs id_a < id_b sharing at least one band
+    key, with the number of bands they collide in. max_bucket=None turns
+    the hot-bucket cap off."""
+    bands = band_rows(signatures(grams), max_bucket)
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.key") == F.col("b.key"))
+            & (F.col("a.id") < F.col("b.id")),
+        )
+        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("n_bands"))
+    )
+
+
+def verify_jaccard(cands: DataFrame, grams: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b) candidate pairs whose exact gram-set Jaccard is >=
+    threshold.
+
+    Inverted-index shape: join the two ids' gram rows on the gram, count the
+    matches per pair, and take the union size from the carried n. Never
+    per-pair array_intersect/array_union columns: those allocate a hash set
+    per evaluated pair, serialized into whatever single task AQE coalesces
+    the tiny pair table into (observed: a 14-minute one-task stage).
+
+    The pair table is small by construction (bucket cap + band threshold),
+    so it is broadcast and the gram table is probed in place: the a side by
+    the pair join itself, the b side by a semi join, so only candidate ids'
+    gram rows reach the shuffle. The gram join is hinted shuffle-hash: the
+    planner's sort-merge default would re-sort the gram rows."""
+    # referenced twice below; lazily checkpointed so the candidate DAG
+    # (signature aggregate + banding self-join) runs at most once, on first
+    # use, without a job of its own
+    cands = cands.select("id_a", "id_b").localCheckpoint(eager=False)
+    ga = grams.select(F.col("id").alias("id_a"), "g", F.col("n").alias("na"))
+    gb = grams.select(F.col("id").alias("id_b"), "g", F.col("n").alias("nb")).join(
+        F.broadcast(cands.select("id_b")), "id_b", "leftsemi"
+    )
+    inter = (
+        F.broadcast(cands)
+        .join(ga, "id_a")
+        .join(gb.hint("shuffle_hash"), ["id_b", "g"])
+        # na/nb are constant per pair: carried through as max(), measured
+        # ~1.7x faster than adding them to the grouping keys
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("inter"), F.max("na").alias("na"), F.max("nb").alias("nb"))
+    )
+    jaccard = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
+    return inter.filter(jaccard >= threshold).select("id_a", "id_b")

@@ -428,7 +428,7 @@ def winnow_fingerprints(
     the downstream shape (explode -> groupBy fp) is the same inverted-index
     join family as the other dedup tiers. Docs shorter than k+w-1 words
     yield no fingerprints. Oracle twin: list comprehensions in oracles.py."""
-    from .dedup import minhash64
+    from .lsh import minhash64
 
     # TWO projection boundaries, not style: common-subexpression elimination
     # does not reach inside higher-order-function lambdas. (1) pos_grams'

@@ -7,7 +7,7 @@ distinct?" and "how often?" questions that are exact-aggregation killers at
   heavy_hitters_cms    count-min-sketch frequency estimates for the corpus's
                        top tokens next to their exact counts
 
-Both use the repo's portable 60-bit md5-prefix hash (textops.dedup.minhash64
+Both use the repo's portable 60-bit md5-prefix hash (textops.lsh.minhash64
 convention) so the DuckDB oracles replay the sketch arithmetic bit-for-bit —
 deliberately NOT Spark's approx_count_distinct / datasketches, whose register
 layouts can't be reproduced in another engine. The point of each query is the
@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .common import pos_grams, words_col
-from .dedup import minhash64
+from .lsh import minhash64
 
 # 2^60: the md5-prefix hash is 15 hex digits, uniform on [0, 2^60).
 HASH_SPACE = float(1 << 60)

@@ -15,7 +15,7 @@ from rossete_rdf_spark.pipeline import (
     run_kg_pipeline,
     synth_pages,
 )
-from rossete_rdf_spark.pipeline.canonicalize import canonical_entity_map
+from rossete_rdf_spark.pipeline.canonicalize import canonical_entity_map, verified_pairs
 
 N_PAGES = 400
 
@@ -71,6 +71,13 @@ def test_canonicalize_collapses_variants(spark):
     assert m["database"] == m["databases"]
     assert m["qqqq"] == "qqqq"
     assert m["sparkle"] != m["database"]
+    # verification bar is >=: on char 3-grams abcdef/abcdeg share 3 of 5
+    # distinct grams (exactly 0.6, kept), abcdefg/abcdefxy 4 of 7 (dropped)
+    cands = spark.createDataFrame(
+        [("abcdef", "abcdeg"), ("abcdefg", "abcdefxy")], ["a", "b"]
+    )
+    kept = {(r.a, r.b) for r in verified_pairs(cands, 0.6).collect()}
+    assert kept == {("abcdef", "abcdeg")}
 
 
 @pytest.fixture(scope="module")

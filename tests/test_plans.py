@@ -403,3 +403,22 @@ def test_rdfs_closure_matches_spark_fixpoint(spark):
             break
         closed |= new
     assert closed == expected
+
+
+def test_lsh_blocking_has_no_window_and_verifier_no_array_sets(spark):
+    # blocking caps hot band buckets with a broadcast anti join, not a
+    # window count (a sort over the whole banding table); the verifier
+    # counts gram matches through an inverted-index join, not per-pair
+    # array_intersect/array_union hash sets
+    from rossete_rdf_spark.textops.dedup import _doc_ngrams
+    from rossete_rdf_spark.textops.lsh import candidate_pairs, verify_jaccard
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    grams = _doc_ngrams(docs, "doc_id", "text", 3)
+    cands = candidate_pairs(grams)
+    blocking = _plan(cands)
+    assert "Window" not in blocking
+    assert "LeftAnti" in blocking and "BroadcastExchange" in blocking
+    verify = _plan(verify_jaccard(cands, grams, 0.5)).lower()
+    assert "arrayintersect" not in verify and "array_intersect" not in verify
+    assert "array_union" not in verify and "arrayunion" not in verify
