@@ -7,10 +7,11 @@ threads + SQLite staging.
 
 Layout:
   rml/       RML mapping parser (pure Python) + Spark compiler + writers
-  graph/     connected components (large-star/small-star), MinHash-LSH
+  graph/     connected components (large-star/small-star), graph analytics
   pipeline/  web-scale KG construction: page table -> extract -> mentions ->
              entity linking -> canonicalization -> triples, with checkpoints
-  textops/   training-data ops: dedup family, similarity search, text analysis
+  textops/   training-data ops: dedup family, MinHash-LSH (lsh.py), similarity
+             search, text analysis
   streaming/ structured-streaming variants of the event operators
 """
 

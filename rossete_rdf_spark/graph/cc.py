@@ -20,13 +20,8 @@ Scale behavior:
   signature, checked once per two-round wave; rounds are O(log^2 n) worst
   case, ~5 for our graphs, and both star operations are identities on the
   converged star graph, so overshooting by one round is free-by-idempotence
-- node ids may be any orderable type; connected_components takes url/
-  surface STRINGS directly. At 10^12 nodes use connected_components_encoded
-  below — the production path: dictionary-encode nodes to order-preserving
-  dense longs (so min-label semantics survive encoding), run the untouched
-  loop on longs (every round re-shuffles the edge set, and long keys
-  shuffle and compare several times cheaper than urls), decode once at the
-  end.
+- node ids may be any orderable type; url and surface strings are used
+  directly
 """
 
 from __future__ import annotations
@@ -35,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+MAX_ROUNDS = 20  # star rounds before the loop stops without converging
+
 
 def _sym(edges: DataFrame) -> DataFrame:
     """Symmetrize + drop self loops + distinct.
@@ -42,8 +39,7 @@ def _sym(edges: DataFrame) -> DataFrame:
     Explode-of-both-orientations, NOT edges UNION reversed(edges): one scan
     of the edge set instead of two, and no Union node — Catalyst's
     UnionBase.rewriteConstraints crashes ("key not found: dst#N") on
-    self-unions of join-built edge plans (the dictionary-encoded path feeds
-    exactly that shape)."""
+    self-unions of join-built edge plans."""
     return (
         edges.select(
             F.explode(
@@ -98,12 +94,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    max_rounds: int = 20,
-    checkpoint: bool = True,
-    shuffle_partitions: int | None = None,
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges(src, dst) -> (node, component) with component = min node id of
     the component (any orderable node type works; strings are fine).
 
@@ -118,15 +109,13 @@ def connected_components(
     stage-overhead (measured 13.4s -> 5.2s on a 700-edge graph going
     64 -> 8). The edge count from the first convergence signature sizes the
     loop (~500k edges/partition, floor 8, but never above the session
-    setting — the session value wins when it is below the floor); pass
-    shuffle_partitions to pin it. The session value is restored after.
+    setting — the session value wins when it is below the floor). The
+    session value is restored after.
 
     NOT thread-safe: the sizing works by scoping the session-global
     spark.sql.shuffle.partitions for the duration of the loop, so a
     concurrent query on the same SparkSession would silently plan with the
-    loop's (tiny) partition count. Run CC serially per session, or pass
-    shuffle_partitions equal to the session setting to keep the conf
-    untouched."""
+    loop's (tiny) partition count. Run CC serially per session."""
     spark = edges.sparkSession
     cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
@@ -143,18 +132,14 @@ def connected_components(
     # LAZY checkpoint + signature aggregate = ONE action that both
     # materializes the checkpoint and signs the edge set (an eager
     # checkpoint would be a second, separate job per wave)
-    e = _sym(edges).localCheckpoint(eager=False) if checkpoint else _sym(edges)
+    e = _sym(edges).localCheckpoint(eager=False)
     sig = _sig(e)
-    target = (
-        shuffle_partitions
-        if shuffle_partitions is not None
-        else min(cur, max(8, (sig[0] or 1) // 500_000 + 1))
-    )
+    target = min(cur, max(8, (sig[0] or 1) // 500_000 + 1))
     from ..session import scoped_conf
 
     with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(target)}):
         rounds = 0
-        while rounds < max_rounds:
+        while rounds < MAX_ROUNDS:
             # TWO star rounds per convergence wave: checkpointing and
             # signing every round doubled the loop's serial action count
             # for no information — the star operations are idempotent on
@@ -163,11 +148,10 @@ def connected_components(
             # shallow enough to plan cheaply
             e2 = _small_star(_large_star(e))
             rounds += 1
-            if rounds < max_rounds:
+            if rounds < MAX_ROUNDS:
                 e2 = _small_star(_large_star(e2))
                 rounds += 1
-            if checkpoint:
-                e2 = e2.localCheckpoint(eager=False)
+            e2 = e2.localCheckpoint(eager=False)
             sig2 = _sig(e2)
             e = e2
             if sig2 == sig:  # converged: the canonicalized edge set is stable
@@ -182,12 +166,9 @@ def connected_components(
         roots = comp.select(F.col("component").alias("node")).distinct().withColumn(
             "component", F.col("node")
         )
-        out = comp.unionByName(roots).distinct()
-        if checkpoint:
-            # materialize before restoring the session partitions so the
-            # small-partition plan is what actually runs
-            out = out.localCheckpoint(eager=True)
-        return out
+        # materialize before restoring the session partitions so the
+        # small-partition plan is what actually runs
+        return comp.unionByName(roots).distinct().localCheckpoint(eager=True)
 
 
 def dense_ids(
@@ -229,62 +210,4 @@ def dense_ids(
     return ranged.join(F.broadcast(offsets), "__pid").select(
         col,
         (F.col("__off") + F.row_number().over(w_rank) - 1).alias("nid"),
-    )
-
-
-def dictionary_encode_nodes(
-    edges: DataFrame, partitions: int | None = None
-) -> DataFrame:
-    """(node, nid) dictionary over an edge set's endpoints via dense_ids.
-    Order preservation is load-bearing — the CC loop labels components with
-    the MIN node id, so min(nid) must decode back to min(node)."""
-    # single-pass explode, not select(src) UNION select(dst): one scan of
-    # the edge set instead of two, and it sidesteps a Catalyst constraint-
-    # rewrite crash (UnionBase.rewriteConstraints "key not found: dst#N")
-    # on self-unions of multi-join edge plans
-    nodes = edges.select(
-        F.explode(F.array(F.col("src"), F.col("dst"))).alias("node")
-    )
-    return dense_ids(nodes, "node", partitions)
-
-
-def connected_components_encoded(
-    edges: DataFrame,
-    max_rounds: int = 20,
-    checkpoint: bool = True,
-    shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """connected_components through an order-preserving long-id dictionary —
-    the 10^12-node production path: every CC round re-shuffles the edge set
-    ~7 times, and dense long keys shuffle, hash, and compare several times
-    cheaper than url/surface strings, so the one-time encode (two joins) and
-    decode (two joins) amortize immediately at scale. Output-equivalent to
-    connected_components by construction (encoding preserves order, so
-    min-label components decode to the same min node; property-tested in
-    tests/test_ops_properties.py).
-
-    The dictionary is referenced four times (encode src/dst, decode
-    node/component) — lazily checkpointed once so its DAG runs once. At
-    test scale AQE broadcasts it into all four joins; at 10^12 nodes they
-    become shuffle joins on the dense key, which is the point."""
-    d = dictionary_encode_nodes(edges, shuffle_partitions).localCheckpoint(
-        eager=False
-    )
-    enc = (
-        edges.join(
-            d.select(F.col("node").alias("src"), F.col("nid").alias("__s")), "src"
-        )
-        .join(d.select(F.col("node").alias("dst"), F.col("nid").alias("__d")), "dst")
-        .select(F.col("__s").alias("src"), F.col("__d").alias("dst"))
-    )
-    comp = connected_components(enc, max_rounds, checkpoint, shuffle_partitions)
-    return (
-        comp.join(
-            d.select(F.col("nid").alias("node"), F.col("node").alias("__n")), "node"
-        )
-        .join(
-            d.select(F.col("nid").alias("component"), F.col("node").alias("__c")),
-            "component",
-        )
-        .select(F.col("__n").alias("node"), F.col("__c").alias("component"))
     )

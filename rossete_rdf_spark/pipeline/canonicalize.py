@@ -77,11 +77,6 @@ def canonical_entity_map(surfaces: DataFrame, threshold: float = CANON_JACCARD) 
     edges = verified_pairs(cands, threshold).select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     )
-    # string-keyed CC on purpose: the node set here is the verified-pair
-    # surfaces — bounded by the GAZETTEER (min-page-count entities), not the
-    # corpus — so the dictionary-encoding pass that pays off on corpus-sized
-    # page graphs (connected_components_encoded, used by pipeline/pagedup)
-    # would cost more stages than its cheaper shuffles save
     comp = connected_components(edges)  # (node, component)
     return (
         surfaces.select(F.col("surface"))

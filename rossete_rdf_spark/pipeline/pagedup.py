@@ -13,7 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..graph.cc import connected_components_encoded
+# bound under this name: perfbench/kg_build.py traces CC by patching it here
+from ..graph.cc import connected_components as connected_components_encoded
 from ..textops.dedup import _doc_ngrams, normalized_fingerprint
 from ..textops.lsh import MAX_BUCKET, MIN_BANDS, candidate_pairs, verify_jaccard
 
@@ -35,14 +36,8 @@ def duplicate_edges(pages_text: DataFrame) -> DataFrame:
 
 def canonical_pages(pages_text: DataFrame) -> DataFrame:
     """Drop non-canonical duplicates: CC over duplicate edges, keep one page
-    (the min url) per cluster. Output schema == input schema. CC runs
-    DICTIONARY-ENCODED (graph/cc.py): the loop re-shuffles the edge set
-    every round, and dense long keys are several times cheaper to shuffle
-    than urls — the 10^12-node production shape; min-url labels survive the
-    encoding because the ids are order-preserving."""
-    return _keep_canonical(
-        pages_text, connected_components_encoded(duplicate_edges(pages_text))
-    )
+    (the min url) per cluster. Output schema == input schema."""
+    return _keep_canonical(pages_text, duplicate_edges(pages_text))
 
 
 def exact_duplicate_edges(pages_text: DataFrame) -> DataFrame:
@@ -67,11 +62,8 @@ def canonical_pages_exact(pages_text: DataFrame) -> DataFrame:
     set, then keeps one page per component. Because the component id is the
     min url of each fingerprint group, the result has a closed-form DuckDB
     oracle (url = min(url) over fingerprint) — this is what promotes the CC
-    tier into the driver's CORRECTNESS gate. Runs the dictionary-encoded CC
-    (see canonical_pages)."""
-    return _keep_canonical(
-        pages_text, connected_components_encoded(exact_duplicate_edges(pages_text))
-    )
+    tier into the driver's CORRECTNESS gate."""
+    return _keep_canonical(pages_text, exact_duplicate_edges(pages_text))
 
 
 def page_canonical_exact_query(spark, sf_dir: str) -> DataFrame:
@@ -117,7 +109,8 @@ def page_canonical_lsh_query(spark, sf_dir: str) -> DataFrame:
     return canonical_pages(orig.unionByName(twin)).select("url")
 
 
-def _keep_canonical(pages_text: DataFrame, comp: DataFrame) -> DataFrame:
+def _keep_canonical(pages_text: DataFrame, edges: DataFrame) -> DataFrame:
+    comp = connected_components_encoded(edges)  # (node, component)
     return (
         pages_text.join(comp, pages_text["url"] == comp["node"], "left")
         .filter(F.col("component").isNull() | (F.col("component") == F.col("url")))

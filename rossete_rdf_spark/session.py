@@ -48,13 +48,24 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
                 spark.conf.set(k, v)
 
 
+def _default_driver_memory() -> str:
+    """Half of physical RAM in whole GiB (at least 1g), capped at 48g: a
+    fixed 48g heap let the driver JVM outgrow small hosts and get killed by
+    the OOM killer mid-run."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf (Windows)
+        return "48g"
+    return f"{min(48, max(1, ram // 2 // 2**30))}g"
+
+
 def _ensure_driver_memory() -> None:
     """spark.driver.memory is a JVM launch option: setting it on the builder
     is silently IGNORED in local mode once the gateway JVM exists. With the
     1g default heap, 32 concurrent local tasks thrash the unified memory pool
     (cache eviction + recompute + GC storms — measured 30x slowdowns). Inject
     it into PYSPARK_SUBMIT_ARGS before the first JVM launch instead."""
-    mem = os.environ.get("SPARK_DRIVER_MEMORY", "48g")
+    mem = os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory())
     args = os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
     if "--driver-memory" not in args:
         os.environ["PYSPARK_SUBMIT_ARGS"] = f"--driver-memory {mem} " + args
@@ -63,11 +74,13 @@ def _ensure_driver_memory() -> None:
 def _configured_driver_gb() -> int:
     """Heap size the driver JVM will (or did) launch with, from the same
     sources _ensure_driver_memory uses: an explicit --driver-memory in
-    PYSPARK_SUBMIT_ARGS wins, else SPARK_DRIVER_MEMORY, else the 48g default."""
+    PYSPARK_SUBMIT_ARGS wins, else SPARK_DRIVER_MEMORY, else the RAM-derived
+    default."""
     args = os.environ.get("PYSPARK_SUBMIT_ARGS", "")
     m = re.search(r"--driver-memory[= ](\d+)([gGmM])", args)
     if not m:
-        m = re.match(r"(\d+)([gGmM])", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        mem = os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory())
+        m = re.match(r"(\d+)([gGmM])", mem)
     if not m:
         return 48
     n, unit = int(m.group(1)), m.group(2).lower()
@@ -128,7 +141,7 @@ def get_spark(
         # per task by default — defeating the whole point of hash-based
         # first-occurrence dedup. Keep it hash-based, scaled to the heap the
         # session actually gets (~1M keys/GiB-of-heap, capped at 8M): a 4g
-        # spark-submit driver gets 1<<22, the 48g bench driver 1<<23.
+        # spark-submit driver gets 1<<22, a 48g driver 1<<23.
         .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
                 str(_object_agg_threshold()))
         # AQE SMJ -> shuffled-hash rewrite (guide §3.1): when every

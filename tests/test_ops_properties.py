@@ -103,33 +103,35 @@ def test_asof_join_bucketed_matches_asof_join(spark):
             assert got == base, (tol, bucket_sec)
 
 
-def test_dictionary_encode_nodes_is_rank(spark):
-    """Encoded ids must be the dense rank of the node under its natural
-    ordering — order preservation is what lets min-label components decode
-    to the min node."""
-    from rossete_rdf_spark.graph.cc import dictionary_encode_nodes
+def _union_find_components(edges):
+    """Reference CC on the driver: (node, min node of its component) for
+    every node with a non-self-loop edge — the connected_components output
+    contract (a node whose only edges are self-loops is absent)."""
+    parent = {}
 
-    edges = spark.range(100).select(
-        F.concat(F.lit("u"), ((F.col("id") * 13) % 57).cast("string")).alias("src"),
-        F.concat(F.lit("u"), ((F.col("id") * 7) % 41).cast("string")).alias("dst"),
-    )
-    d = {r.node: r.nid for r in dictionary_encode_nodes(edges).collect()}
-    assert d == {n: i for i, n in enumerate(sorted(d))}
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a == b:
+            continue
+        for x in (a, b):
+            parent.setdefault(x, x)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return sorted((x, find(x)) for x in parent)
 
 
 def test_connected_components_encoded_matches_string_cc(spark):
-    """The dictionary-encoded 10^12-node path must be output-identical to
-    the string-keyed loop — across graph shapes: chains (worst-case round
-    count), stars, random unions, singleton edges, and the pagedup exact
-    duplicate graph."""
-    from rossete_rdf_spark.graph.cc import (
-        connected_components,
-        connected_components_encoded,
-    )
+    """connected_components must equal a driver-side union-find across
+    graph shapes: chains (worst-case round count), stars, random unions,
+    and the pagedup exact duplicate graph."""
+    from rossete_rdf_spark.graph.cc import connected_components
     from rossete_rdf_spark.pipeline.pagedup import exact_duplicate_edges
-
-    def norm(df):
-        return sorted((r.node, r.component) for r in df.collect())
 
     u = lambda i: F.concat(F.lit("u"), i.cast("string"))  # noqa: E731
     graphs = [
@@ -139,7 +141,7 @@ def test_connected_components_encoded_matches_string_cc(spark):
         spark.range(200).select(
             u(F.col("id") % 5).alias("src"), u(F.col("id") + 10).alias("dst")
         ),
-        # pseudo-random unions (dense mixing, several components)
+        # pseudo-random unions (dense mixing, several components, self-loops)
         spark.range(400).select(
             u((F.col("id") * 37) % 97).alias("src"),
             u((F.col("id") * 53) % 89).alias("dst"),
@@ -151,9 +153,10 @@ def test_connected_components_encoded_matches_string_cc(spark):
     )
     graphs.append(exact_duplicate_edges(pages))
     for i, g in enumerate(graphs):
-        base = norm(connected_components(g))
-        assert base, f"graph {i} produced no components"
-        assert norm(connected_components_encoded(g)) == base, f"graph {i}"
+        want = _union_find_components((r.src, r.dst) for r in g.collect())
+        assert want, f"graph {i} produced no components"
+        got = sorted((r.node, r.component) for r in connected_components(g).collect())
+        assert got == want, f"graph {i}"
 
 
 def test_salted_top_k_matches_unsalted(spark):

@@ -121,117 +121,6 @@ def test_pipeline_resume_identity(spark, pages, workdir):
     assert a == b
 
 
-def test_compaction_shrinks_files_and_preserves_content(spark, tmp_path):
-    # a fragmented write (32 tiny files) compacts to the byte-derived
-    # target count with identical content; a crashed-safe swap leaves no
-    # temp dirs behind
-    from pyspark.sql import functions as F
-
-    from rossete_rdf_spark.pipeline.compact import (
-        compact_parquet_dir,
-        parquet_file_count,
-    )
-
-    path = str(tmp_path / "frag.parquet")
-    df = spark.range(0, 10000, 1, 32).withColumn(
-        "v", (F.col("id") * 7 % 1000).cast("long")
-    )
-    df.write.mode("overwrite").parquet(path)
-    assert parquet_file_count(path) == 32
-    before = {(r.id, r.v) for r in spark.read.parquet(path).collect()}
-
-    m = compact_parquet_dir(spark, path, target_bytes=1 << 30)
-    assert m["rewritten"] and m["files_before"] == 32 and m["files_after"] == 1
-    assert m["rows"] == 10000
-    after = {(r.id, r.v) for r in spark.read.parquet(path).collect()}
-    assert after == before
-    import os
-
-    assert not os.path.exists(path + ".__compact__")
-    assert not os.path.exists(path + ".__old__")
-
-    # idempotent: already at/below target -> no rewrite
-    m2 = compact_parquet_dir(spark, path, target_bytes=1 << 30)
-    assert not m2["rewritten"] and m2["files_after"] == 1
-
-
-def test_compaction_split_recovery_and_partitioned_guard(spark, tmp_path):
-    import os
-
-    from pyspark.sql import functions as F
-
-    from rossete_rdf_spark.pipeline.compact import (
-        compact_parquet_dir,
-        parquet_file_count,
-    )
-
-    # allow_shuffle=True splits a too-few-file table up to the byte target
-    path = str(tmp_path / "big.parquet")
-    spark.range(0, 20000, 1, 1).withColumn(
-        "pad", F.sha2(F.col("id").cast("string"), 256)
-    ).write.mode("overwrite").parquet(path)
-    assert parquet_file_count(path) == 1
-    bytes_total = sum(
-        os.path.getsize(os.path.join(path, f))
-        for f in os.listdir(path) if f.endswith(".parquet")
-    )
-    m = compact_parquet_dir(
-        spark, path, target_bytes=bytes_total // 4 + 1, allow_shuffle=True
-    )
-    assert m["rewritten"] and m["files_after"] > 1
-
-    # crash window recovery: original stranded at .__old__ is restored
-    rows = {r.id for r in spark.read.parquet(path).collect()}
-    os.replace(path, path + ".__old__")
-    m2 = compact_parquet_dir(spark, path, target_bytes=1 << 30)
-    assert {r.id for r in spark.read.parquet(path).collect()} == rows
-    assert m2["rows"] == 20000
-
-    # Hive-partitioned layouts are rejected, not silently no-oped
-    part = str(tmp_path / "part.parquet")
-    spark.range(0, 100).withColumn("k", F.col("id") % 3).write.partitionBy(
-        "k"
-    ).mode("overwrite").parquet(part)
-    import pytest
-
-    with pytest.raises(NotImplementedError):
-        compact_parquet_dir(spark, part)
-
-
-def test_compaction_reaps_stale_old_and_rejects_mixed_layout(spark, tmp_path):
-    # r6 ADVICE fixes: (1) a crash AFTER the new table swapped in but
-    # BEFORE the old copy was removed leaves <path>.__old__ next to a live
-    # table — the next invocation (even a no-op) must reap it, or it leaks
-    # a full table copy forever; (2) a MIXED layout (top-level parquet plus
-    # key=*/ subdirs) must hit the NotImplementedError boundary, not a
-    # confusing row-count-mismatch abort.
-    import os
-    import shutil
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from rossete_rdf_spark.pipeline.compact import compact_parquet_dir
-
-    path = str(tmp_path / "t.parquet")
-    spark.range(0, 1000, 1, 2).write.mode("overwrite").parquet(path)
-    # simulate the post-swap crash window: live table + stale .__old__ copy
-    shutil.copytree(path, path + ".__old__")
-    m = compact_parquet_dir(spark, path, target_bytes=1 << 30)
-    assert not os.path.exists(path + ".__old__")  # reaped on entry
-    assert m["rows"] == 1000
-    assert {r.id for r in spark.read.parquet(path).collect()} == set(range(1000))
-
-    # mixed layout: nested data dir alongside top-level files
-    os.makedirs(os.path.join(path, "k=0"))
-    srcfile = next(
-        os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
-    )
-    shutil.copy(srcfile, os.path.join(path, "k=0", "part-0.parquet"))
-    with pytest.raises(NotImplementedError):
-        compact_parquet_dir(spark, path)
-
-
 def test_unpivot_pivot_types_cover_generated_events(spark):
     # r6 ADVICE: events_unpivot_roundtrip only round-trips event types in
     # PIVOT_TYPES while its oracle aggregates ALL types — pin the data

@@ -51,3 +51,25 @@ def test_spark_submit_pyfiles_runs_pipeline(tmp_path):
     assert set(metrics) <= set(manifest["stages"])
     assert all(s["rows"] >= 0 and "partition_rows" in s
                for s in manifest["stages"].values())
+
+
+def test_default_driver_heap_follows_physical_memory(monkeypatch):
+    # with neither PYSPARK_SUBMIT_ARGS nor SPARK_DRIVER_MEMORY set, the heap
+    # (and the object-agg threshold derived from it) is half of physical RAM
+    # in whole GiB, at least 1g and capped at 48g
+    from rossete_rdf_spark import session
+
+    monkeypatch.delenv("PYSPARK_SUBMIT_ARGS", raising=False)
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    for ram_gib, heap_gb in ((15.6, 7), (1, 1), (512, 48)):
+        pages = int(ram_gib * 2**30) // 4096
+        monkeypatch.setattr(
+            session.os, "sysconf",
+            lambda name, pages=pages: 4096 if name == "SC_PAGE_SIZE" else pages,
+        )
+        assert session._configured_driver_gb() == heap_gb
+        assert session._object_agg_threshold() == min(
+            1 << 23, max(1 << 17, heap_gb << 20)
+        )
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert session._configured_driver_gb() == 3
