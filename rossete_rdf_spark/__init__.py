@@ -7,7 +7,8 @@ threads + SQLite staging.
 
 Layout:
   rml/       RML mapping parser (pure Python) + Spark compiler + writers
-  graph/     connected components (large-star/small-star), graph analytics
+  graph/     connected components (size-gated: driver union-find or
+             large-star/small-star), graph analytics
   pipeline/  web-scale KG construction: page table -> extract -> mentions ->
              entity linking -> canonicalization -> triples, with checkpoints
   textops/   training-data ops: dedup family, MinHash-LSH (lsh.py), similarity

@@ -1022,7 +1022,7 @@ FROM region
 ORACLES["streaming_sessionize"] = ORACLES["events_sessionize"]
 
 # CC-tier canonicalisation over exact-duplicate edges: the Spark side runs
-# real iterative large-star/small-star CC; with exact edges only, each
+# graph/cc.py's connected components; with exact edges only, each
 # component is one fingerprint group and its id is the min url, so the
 # canonical survivor set has this closed form
 ORACLES["page_canonical_exact"] = f"""
@@ -1041,7 +1041,7 @@ QUALIFY url = min(url) OVER (PARTITION BY fp)
 # inverted-index exact-Jaccard verify — then closes connected components with
 # a recursive min-label reachability CTE (components are small by
 # construction, so the transitive closure is cheap at oracle scale; the
-# Spark side runs the real iterative large-star/small-star loop).
+# Spark side runs graph/cc.py's connected components).
 _pl_minhash_cols = ", ".join(
     f"min(('0x' || substr(md5('{i}|' || ng), 1, 15))::BIGINT) AS h{i}"
     for i in range(N_HASHES)

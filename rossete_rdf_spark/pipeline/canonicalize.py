@@ -5,7 +5,8 @@ canonical entities.
 
 Scale shape: candidate generation is linear in #surfaces x #bands (never
 all-pairs); verification touches only candidates; CC runs on the (tiny
-relative to pages) entity-pair edge list with per-round checkpointing."""
+relative to pages) entity-pair edge list, which at gazetteer sizes stays
+under graph/cc.py's bound and is closed with union-find on the driver."""
 
 from __future__ import annotations
 

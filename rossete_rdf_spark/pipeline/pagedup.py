@@ -57,12 +57,13 @@ def exact_duplicate_edges(pages_text: DataFrame) -> DataFrame:
 
 
 def canonical_pages_exact(pages_text: DataFrame) -> DataFrame:
-    """canonical_pages restricted to exact-duplicate edges: runs the REAL
-    iterative large-star/small-star CC (graph/cc.py) over the exact edge
-    set, then keeps one page per component. Because the component id is the
-    min url of each fingerprint group, the result has a closed-form DuckDB
-    oracle (url = min(url) over fingerprint) — this is what promotes the CC
-    tier into the driver's CORRECTNESS gate."""
+    """canonical_pages restricted to exact-duplicate edges: runs
+    graph/cc.py's connected_components over the exact edge set (union-find
+    on the driver at registry sizes, the distributed star loop above its
+    bound), then keeps one page per component. Because the component id is
+    the min url of each fingerprint group, the result has a closed-form
+    DuckDB oracle (url = min(url) over fingerprint) — this is what promotes
+    the CC tier into the driver's CORRECTNESS gate."""
     return _keep_canonical(pages_text, exact_duplicate_edges(pages_text))
 
 
@@ -89,11 +90,12 @@ def page_canonical_lsh_query(spark, sf_dir: str) -> DataFrame:
     """Driver-contract wrapper for the NEAR-DUP tier — the full
     duplicate_edges path that page_canonical_exact cannot reach: capped
     MinHash-LSH banding, >=2-band agreement, inverted-index exact-Jaccard
-    verification, then real iterative CC. The corpus has no near-duplicates,
-    so the query plants them deterministically: every 11th doc gets a twin
-    with the first word substituted (word-level trigrams lose only the one
-    leading gram, so the planted Jaccard is (w-3)/(w-1) — far above the 0.5
-    bar at any doc length >= the corpus minimum). The oracle replays the
+    verification, then connected components. The corpus has no
+    near-duplicates, so the query plants them deterministically: every
+    11th doc gets a twin with the first word substituted (word-level
+    trigrams lose only the one leading gram, so the planted Jaccard is
+    (w-3)/(w-1) — far above the 0.5 bar at any doc length >= the corpus
+    minimum). The oracle replays the
     identical LSH pipeline in SQL (same md5 hash family, banding, bucket
     cap, band threshold, Jaccard verify) and closes the components with a
     recursive min-label reachability CTE — so every planted OR incidental

@@ -22,7 +22,7 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
 
     NOT thread-safe: spark.conf is session-global, so a concurrent query on
     the same SparkSession would plan under the scoped values (same caveat as
-    graph/cc.py's loop sizing).
+    graph/cc.py's distributed-loop sizing, above its driver-side bound).
 
     Two distinct usage idioms — pick deliberately:
     - memoize-inside: for OPTIMIZATION-time behavior (e.g. runtime

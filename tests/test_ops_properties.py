@@ -1,6 +1,7 @@
 """Semantic property tests for the beyond-reference operators (the oracle
 cross-checks pin exact values; these pin the CLAIMED guarantees)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from rossete_rdf_spark.relops import asof_join
@@ -126,15 +127,17 @@ def _union_find_components(edges):
     return sorted((x, find(x)) for x in parent)
 
 
-def test_connected_components_encoded_matches_string_cc(spark):
-    """connected_components must equal a driver-side union-find across
-    graph shapes: chains (worst-case round count), stars, random unions,
-    and the pagedup exact duplicate graph."""
-    from rossete_rdf_spark.graph.cc import connected_components
+def _cc_graphs(spark):
+    """Graph shapes for the CC property tests: chains (worst-case round
+    count), stars, random unions, and the pagedup exact duplicate graph."""
     from rossete_rdf_spark.pipeline.pagedup import exact_duplicate_edges
 
     u = lambda i: F.concat(F.lit("u"), i.cast("string"))  # noqa: E731
-    graphs = [
+    pages = spark.range(60).select(
+        F.concat(F.lit("p"), F.col("id").cast("string")).alias("url"),
+        F.concat(F.lit("text "), (F.col("id") % 13).cast("string")).alias("text"),
+    )
+    return [
         # chain u0-u1-...-u29: one component, max star rounds
         spark.range(29).select(u(F.col("id")).alias("src"), u(F.col("id") + 1).alias("dst")),
         # 5 stars of 40 leaves each
@@ -146,17 +149,57 @@ def test_connected_components_encoded_matches_string_cc(spark):
             u((F.col("id") * 37) % 97).alias("src"),
             u((F.col("id") * 53) % 89).alias("dst"),
         ),
+        exact_duplicate_edges(pages),
     ]
-    pages = spark.range(60).select(
-        F.concat(F.lit("p"), F.col("id").cast("string")).alias("url"),
-        F.concat(F.lit("text "), (F.col("id") % 13).cast("string")).alias("text"),
+
+
+def test_connected_components_matches_union_find(spark, monkeypatch):
+    """Both CC paths — union-find on the driver (the default at these
+    sizes) and the distributed star loop (forced with a bound of 0) — must
+    equal an independent driver-side union-find on every graph shape."""
+    from rossete_rdf_spark.graph import cc
+
+    for bound in (cc.DRIVER_MAX_EDGES, 0):
+        monkeypatch.setattr(cc, "DRIVER_MAX_EDGES", bound)
+        for i, g in enumerate(_cc_graphs(spark)):
+            want = _union_find_components((r.src, r.dst) for r in g.collect())
+            assert want, f"graph {i} produced no components"
+            got = sorted((r.node, r.component) for r in cc.connected_components(g).collect())
+            assert got == want, f"graph {i}, bound {bound}"
+
+
+def test_connected_components_paths_agree_at_the_bound(spark, monkeypatch):
+    """A graph of n edges (self-loops aside, duplicates counted) runs the
+    distributed loop at bound n-1 and union-find on the driver at bound n;
+    both give identical rows and the same column types."""
+    from rossete_rdf_spark.graph import cc
+
+    g = _cc_graphs(spark)[2]
+    n = sum(r.src != r.dst for r in g.collect())
+    driver_calls = []
+    real = cc._union_find
+    monkeypatch.setattr(
+        cc, "_union_find", lambda pairs: driver_calls.append(1) or real(pairs)
     )
-    graphs.append(exact_duplicate_edges(pages))
-    for i, g in enumerate(graphs):
-        want = _union_find_components((r.src, r.dst) for r in g.collect())
-        assert want, f"graph {i} produced no components"
-        got = sorted((r.node, r.component) for r in connected_components(g).collect())
-        assert got == want, f"graph {i}"
+    results = []
+    for bound in (n - 1, n):
+        monkeypatch.setattr(cc, "DRIVER_MAX_EDGES", bound)
+        comp = cc.connected_components(g)
+        results.append((comp.dtypes, sorted(comp.collect())))
+    assert driver_calls == [1], "bound n-1 must run the loop, bound n the driver"
+    assert results[0] == results[1]
+
+
+def test_connected_components_raises_when_not_converged(spark, monkeypatch):
+    """A loop cut short by MAX_ROUNDS must raise, not return a star graph
+    that breaks the component = min-node contract."""
+    from rossete_rdf_spark.graph import cc
+
+    monkeypatch.setattr(cc, "DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(cc, "MAX_ROUNDS", 1)
+    chain = _cc_graphs(spark)[0]
+    with pytest.raises(RuntimeError, match="1 star rounds over 29 edges"):
+        cc.connected_components(chain)
 
 
 def test_salted_top_k_matches_unsalted(spark):

@@ -422,3 +422,24 @@ def test_lsh_blocking_has_no_window_and_verifier_no_array_sets(spark):
     verify = _plan(verify_jaccard(cands, grams, 0.5)).lower()
     assert "arrayintersect" not in verify and "array_intersect" not in verify
     assert "array_union" not in verify and "arrayunion" not in verify
+
+
+def test_small_connected_components_is_two_jobs(spark):
+    # a 100-edge graph is below cc.DRIVER_MAX_EDGES: one count and one
+    # collect, then union-find on the driver — not the distributed star
+    # loop's jobs per two-round wave (dozens on this graph)
+    from rossete_rdf_spark.graph.cc import connected_components
+
+    edges = spark.createDataFrame(
+        [(f"n{i:03d}", f"n{(i * 7 + 1) % 150:03d}") for i in range(100)],
+        ["src", "dst"],
+    ).localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    sc.setJobGroup("cc-small", "connected_components job-count pin")
+    try:
+        comp = connected_components(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("cc-small")
+    assert 1 <= len(jobs) <= 2, jobs
+    assert comp.count() > 0
