@@ -45,7 +45,6 @@ def main() -> None:
     if unknown:
         sys.exit(f"unknown queries: {unknown}")
 
-    os.environ.setdefault("SPARK_GRAFT_TMPFS", "1")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark("bench-extra", master=f"local[{cpus}]",

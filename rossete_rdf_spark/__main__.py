@@ -11,6 +11,9 @@ Output is written as a single text file at the requested path (the per-task
 part files are coalesced driver-side only for the final concat — the
 materialization itself is fully distributed; pass --output-dir to keep the
 distributed part-file directory instead for large graphs).
+
+The session comes from session.get_spark: --master wins, else the master
+the launcher set (spark-submit, PYSPARK_SUBMIT_ARGS), else local[*].
 """
 
 from __future__ import annotations
@@ -32,7 +35,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--config", help="JSON config (files-data read options, output-format)")
     ap.add_argument("--base-dir", help="base dir for relative rml:source paths "
                     "(default: the current working directory, like the reference CLI)")
-    ap.add_argument("--master", default=None, help="spark master (default local[*])")
+    ap.add_argument("--master", help="spark master "
+                    "(default: the launcher's master, else local[*])")
     ap.add_argument("--strict-nt", action="store_true",
                     help="emit full rdf:type IRI instead of the reference's 'a' quirk")
     ap.add_argument("--output-dir", action="store_true",
@@ -62,7 +66,7 @@ def main(argv: list[str] | None = None) -> int:
         print("no TriplesMaps found", file=sys.stderr)
         return 2
 
-    spark = get_spark(app_name="rossete-rml", master=args.master or "local[*]")
+    spark = get_spark(app_name="rossete-rml", master=args.master)
     triples = materialize_all(spark, maps, config=cfg)
 
     out_path = args.output if args.output_dir else tempfile.mkdtemp(prefix="rossete_out_")

@@ -239,9 +239,7 @@ def connected_components(edges: DataFrame) -> DataFrame:
         return comp.unionByName(roots).distinct().localCheckpoint(eager=True)
 
 
-def dense_ids(
-    values: DataFrame, col: str = "node", partitions: int | None = None
-) -> DataFrame:
+def dense_ids(values: DataFrame, col: str = "node") -> DataFrame:
     """(col, nid) with ORDER-PRESERVING dense long ids 0..n-1: the rank of
     each DISTINCT value under its natural ordering. The general distributed
     id-assignment primitive (vocabulary ids, node dictionaries, surrogate
@@ -257,8 +255,7 @@ def dense_ids(
          set).
     The two consumers of the ranged set (counts + rank) share one lazy
     localCheckpoint so the distinct+range shuffle runs once."""
-    spark = values.sparkSession
-    p = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    p = int(values.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     ranged = (
         values.select(col)
         .distinct()

@@ -93,23 +93,19 @@ def run_kg_pipeline(
     pages: DataFrame,
     workdir: str,
     stop_after: str | None = None,
-    min_entity_pages: int = 3,
-    jaccard_threshold: float = 0.6,
-    python_parallelism: int | None = None,
 ) -> dict:
     """Run (or resume) the pipeline; returns the manifest's stage metrics.
 
     `stop_after` aborts after the named stage completes — the resume test
-    uses it to simulate a mid-pipeline kill. `python_parallelism` caps the
-    pandas-UDF stages' concurrent Python workers (see extract.extract_pages)."""
+    uses it to simulate a mid-pipeline kill. Every stage runs with its
+    defaults: build_gazetteer's min_pages and canonicalize.CANON_JACCARD, the
+    bar the canonicalization oracle also imports."""
     cp = CheckpointManager(spark, workdir)
 
     def upto(stage: str) -> bool:
         return stop_after == stage
 
-    pages_text = cp.run_stage(
-        "extract", lambda: extract_pages(pages, python_parallelism)
-    )
+    pages_text = cp.run_stage("extract", lambda: extract_pages(pages))
     if upto("extract"):
         return cp.stage_metrics()
 
@@ -117,15 +113,11 @@ def run_kg_pipeline(
     if upto("pagedup"):
         return cp.stage_metrics()
 
-    mentions = cp.run_stage(
-        "mentions", lambda: page_mentions(pages_text, python_parallelism)
-    )
+    mentions = cp.run_stage("mentions", lambda: page_mentions(pages_text))
     if upto("mentions"):
         return cp.stage_metrics()
 
-    gaz = cp.run_stage(
-        "gazetteer", lambda: build_gazetteer(mentions, min_pages=min_entity_pages)
-    )
+    gaz = cp.run_stage("gazetteer", lambda: build_gazetteer(mentions))
     if upto("gazetteer"):
         return cp.stage_metrics()
 
@@ -134,10 +126,7 @@ def run_kg_pipeline(
         return cp.stage_metrics()
 
     canonical = cp.run_stage(
-        "canonical",
-        lambda: canonical_entity_map(
-            gaz.select("surface"), threshold=jaccard_threshold
-        ),
+        "canonical", lambda: canonical_entity_map(gaz.select("surface"))
     )
     if upto("canonical"):
         return cp.stage_metrics()

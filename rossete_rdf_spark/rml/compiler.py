@@ -190,19 +190,12 @@ def _join_pom_frame(
     Reference semantics (src/materialiser.rs:547-740): per child row, take the
     FIRST parent row (by ingest order) whose parent fields equal the child's
     join-condition values; no match -> no triple; the parent's subject
-    template mints the object IRI (space-discard applies)."""
+    template mints the object IRI (space-discard applies). Same-source
+    parents never get here: materialize_map computes them in its scalar
+    pass."""
     parent_map = maps_by_name.get(join.parent_map)
     if parent_map is None:
         raise KeyError(f"{tmap.name}: unknown parentTriplesMap {join.parent_map}")
-
-    if _same_source(tmap, parent_map):
-        # Same logical source: the "join" is the same physical row
-        # (src/materialiser.rs:673-677) — no join at all, just compute the
-        # parent template from this row's columns.
-        obj_col = template_column(parent_map.subject.template, cmap)
-        return child.filter(iri_is_valid(obj_col)).select(
-            F.col("subj"), F.lit(pred).alias("pred"), obj_col.alias("obj")
-        )
 
     parent_fields: list[str] = list(parent_map.subject.template.fields)
     for _child_f, parent_f in join.conditions:

@@ -59,33 +59,17 @@ def ttl_lines(triples: DataFrame) -> DataFrame:
     )
 
 
-def write_ttl(triples: DataFrame, path: str, prefixes: dict[str, str] | None = None) -> None:
-    """The reference's own TTL exemplars carry no @prefix headers
-    (output.ttl:1 starts directly with triples), so none are emitted by
-    default; pass `prefixes` to add a driver-side header file that sorts
-    before the part files (`cat path/*` reads header first)."""
+def write_ttl(triples: DataFrame, path: str) -> None:
+    """No @prefix header: the reference's own TTL exemplars carry none
+    (output.ttl:1 starts directly with triples)."""
     ttl_lines(triples).write.mode("overwrite").text(path)
-    if prefixes:
-        import os
-
-        lines = [
-            f"@prefix {k.rstrip(':')}: <{v}> ."
-            for k, v in sorted(prefixes.items())
-            if k
-        ]
-        with open(os.path.join(path, "00000_prefixes.ttl"), "w", encoding="utf-8") as f:
-            f.write("\n".join(lines) + "\n")
 
 
-def write_quad_table(triples: DataFrame, path: str, buckets: int = 0) -> None:
+def write_quad_table(triples: DataFrame, path: str) -> None:
     """Partitioned (subj, pred, obj, graph) table — the scale sink.
 
     Partitioned by `graph` (mapping/provenance id) so per-mapping reprocessing
-    prunes files; optionally pre-repartitioned by subj hash so downstream
-    subject-grouped consumers (TTL export, entity assembly) avoid a shuffle.
-    On a real cluster this would be an Iceberg table with bucket(subj)
-    partition transform; plain parquet keeps the sandbox dependency-free."""
-    df = triples
-    if buckets:
-        df = df.repartition(buckets, F.col("subj"))
-    df.write.mode("overwrite").partitionBy("graph").parquet(path)
+    prunes files. On a real cluster this would be an Iceberg table with
+    bucket(subj) partition transform; plain parquet keeps the sandbox
+    dependency-free."""
+    triples.write.mode("overwrite").partitionBy("graph").parquet(path)

@@ -12,6 +12,8 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf
+
 _SINK_SEQ = itertools.count()
 
 # State-store count for the stateful contract queries. Stateful operators
@@ -26,33 +28,11 @@ STATEFUL_SHUFFLE_PARTITIONS = "8"
 def _ckpt_dir(tag: str) -> str:
     """Fresh checkpoint dir per query start. Real deployments point this at
     durable shared storage (HDFS/S3) — the whole point of the checkpoint is
-    surviving driver loss. In this sandbox the state-store commit fsyncs to
-    java.io.tmpdir (spinning-disk path, the measured bottleneck here), so
-    under the SPARK_GRAFT_TMPFS opt-in the throwaway availableNow checkpoints
-    go to tmpfs instead."""
-    import os
+    surviving driver loss; the availableNow contract queries throw theirs
+    away, so the temp dir serves."""
     import tempfile
 
-    base = "/dev/shm" if os.environ.get("SPARK_GRAFT_TMPFS") and os.path.isdir("/dev/shm") else None
-    return tempfile.mkdtemp(prefix=f"rossete_ckpt_{tag}_", dir=base)
-
-
-class _stateful_partitions:
-    """Scoped override of spark.sql.shuffle.partitions for the duration of a
-    stateful query start (the store count is latched into the checkpoint at
-    start, so only the start needs the override)."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set(
-            "spark.sql.shuffle.partitions", STATEFUL_SHUFFLE_PARTITIONS
-        )
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
+    return tempfile.mkdtemp(prefix=f"rossete_ckpt_{tag}_")
 
 
 def streaming_hourly_agg(
@@ -106,7 +86,9 @@ def _run_to_memory_sink(
     scoped stateful-partition override (state stores are latched at query
     start)."""
     name = f"streaming_{tag}_sink_{next(_SINK_SEQ)}"
-    with _stateful_partitions(spark):
+    with scoped_conf(
+        spark, {"spark.sql.shuffle.partitions": STATEFUL_SHUFFLE_PARTITIONS}
+    ):
         q = (
             out.writeStream.format("memory")
             .queryName(name)

@@ -119,40 +119,37 @@ def ngram_jaccard_pairs(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_df: int | None = NGRAM_MAX_DF,
 ) -> DataFrame:
     """All pairs (id_a < id_b) with word-n-gram Jaccard >= threshold, computed
     over *discriminative* n-grams only: grams whose document frequency exceeds
-    max_df (boilerplate — "click here to subscribe") are dropped before the
-    self-join, from intersections AND set sizes, so the score stays a true
-    Jaccard over the filtered gram sets.
+    NGRAM_MAX_DF (boilerplate — "click here to subscribe") are dropped before
+    the self-join, from intersections AND set sizes, so the score stays a
+    true Jaccard over the filtered gram sets.
 
     Why the cap is load-bearing at scale: the inverted-index join costs
     sum over grams of df(gram)^2 — one hot shingle makes it a cartesian on
-    that key. With df <= max_df the cost is bounded by max_df * |gram rows|,
-    i.e. linear in corpus size. (Measured here: sf0.1 went 198.8s -> seconds.)
-    The df guard is one window over the gram shuffle key, and the self-join
-    reuses that exchange. Set max_df=None for the exact-all-grams variant
-    (only sane as a post-LSH verifier on candidate pairs, never corpus-wide)."""
+    that key. With df <= NGRAM_MAX_DF the cost is bounded by
+    NGRAM_MAX_DF * |gram rows|, i.e. linear in corpus size. (Measured here:
+    sf0.1 went 198.8s -> seconds.) The df guard is one window over the gram
+    shuffle key, and the self-join reuses that exchange."""
     grams = _doc_ngrams(docs, id_col, text_col, n)
-    if max_df is not None:
-        # The df guard is a count() window over the gram shuffle key ON
-        # PURPOSE — measured against a hash-agg + broadcast-anti-join
-        # variant (20.2s vs 50.1s at sf0.1): the self-join below is a
-        # sort-merge join on the very same gram key, so the window's
-        # exchange+sort is reused by BOTH join inputs and costs nothing
-        # extra, while the anti-join variant re-tokenizes the corpus for
-        # the hot-gram aggregate and then sorts both join sides anyway.
-        # (lsh.band_rows uses the anti-join shape instead because its
-        # signature aggregate is shared via AQE stage reuse.)
-        from pyspark.sql.window import Window
+    # The df guard is a count() window over the gram shuffle key ON
+    # PURPOSE — measured against a hash-agg + broadcast-anti-join
+    # variant (20.2s vs 50.1s at sf0.1): the self-join below is a
+    # sort-merge join on the very same gram key, so the window's
+    # exchange+sort is reused by BOTH join inputs and costs nothing
+    # extra, while the anti-join variant re-tokenizes the corpus for
+    # the hot-gram aggregate and then sorts both join sides anyway.
+    # (lsh.band_rows uses the anti-join shape instead because its
+    # signature aggregate is shared via AQE stage reuse.)
+    from pyspark.sql.window import Window
 
-        w = Window.partitionBy("g")
-        grams = (
-            grams.withColumn("__df", F.count(F.lit(1)).over(w))
-            .filter(F.col("__df") <= max_df)
-            .drop("__df")
-        )
+    w = Window.partitionBy("g")
+    grams = (
+        grams.withColumn("__df", F.count(F.lit(1)).over(w))
+        .filter(F.col("__df") <= NGRAM_MAX_DF)
+        .drop("__df")
+    )
     sizes = grams.groupBy("id").agg(F.count(F.lit(1)).alias("n_grams"))
 
     a = grams.alias("a")

@@ -7,19 +7,19 @@ Usage (cluster):
       --pages-parquet s3://bucket/pages/ --workdir s3://bucket/kgrun1 \
       [--n-synth 1000000]
 
-Local sandbox:
-  spark-submit --master local[32] --py-files rossete_rdf_spark.zip \
+Local:
+  spark-submit --master local[8] --py-files rossete_rdf_spark.zip \
       scripts/submit_kg.py --n-synth 100000 --workdir /tmp/kgrun
 
-The job resumes from `workdir`'s manifest if a previous run was killed."""
+The session comes from session.get_spark, so the launcher's master and
+--conf settings win over the library defaults. The job resumes from
+`workdir`'s manifest if a previous run was killed."""
 
 from __future__ import annotations
 
 import argparse
 import json
 import sys
-
-from pyspark.sql import SparkSession
 
 
 def main() -> None:
@@ -30,15 +30,10 @@ def main() -> None:
     ap.add_argument("--partitions", type=int, default=64)
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.appName("rossete-kg-pipeline")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .getOrCreate()
-    )
-
     from rossete_rdf_spark.pipeline import run_kg_pipeline, synth_pages
+    from rossete_rdf_spark.session import get_spark
 
+    spark = get_spark("rossete-kg-pipeline")
     if args.n_synth:
         pages = synth_pages(spark, args.n_synth, partitions=args.partitions)
     elif args.pages_parquet:

@@ -5,9 +5,6 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# sandbox opt-in: tmpfs shuffle dirs (see session.py — never a library default)
-os.environ.setdefault("SPARK_GRAFT_TMPFS", "1")
-
 from rossete_rdf_spark.session import get_spark  # noqa: E402
 
 

@@ -228,25 +228,6 @@ def test_whatwg_encoding_aliases():
     assert canonical_encoding("unicode_escape") == "UTF-8"
 
 
-def test_write_ttl_prefix_header_is_valid_turtle(spark, tmp_path):
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from rossete_rdf_spark.rml.writers import write_ttl
-
-    triples = spark.createDataFrame(
-        [("<http://ex.org/s>", "<http://ex.org/p>", "<http://ex.org/o>")],
-        ["subj", "pred", "obj"],
-    ).withColumn("subj", F.col("subj"))
-    out = str(tmp_path / "out_ttl")
-    write_ttl(triples, out, prefixes={"ex": "http://ex.org/", "rr:": "http://rr/"})
-    header = open(glob.glob(f"{out}/00000_prefixes.ttl")[0]).read().splitlines()
-    # bare and colon-suffixed prefix keys both serialize as `name:` (valid Turtle)
-    assert "@prefix ex: <http://ex.org/> ." in header
-    assert "@prefix rr: <http://rr/> ." in header
-
-
 def test_strict_ingest_order_multi_file_csv(spark, tmp_path):
     from rossete_rdf_spark.rml.ast import LogicalSource
     from rossete_rdf_spark.rml.config import EngineConfig
