@@ -34,8 +34,10 @@ Scale behavior of the distributed loop:
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 
@@ -112,8 +114,8 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def _union_find(pairs) -> list[tuple]:
-    """(node, min node of its component) for every endpoint of `pairs`
+def _union_find(pairs) -> dict:
+    """{node: min node of its component} for every endpoint of `pairs`
     (self-loop-free, or their nodes would appear): path-halving union-find
     whose union keeps the smaller root, so each root is its component's
     minimum."""
@@ -129,7 +131,7 @@ def _union_find(pairs) -> list[tuple]:
         ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    return [(x, find(x)) for x in parent]
+    return {x: find(x) for x in parent}
 
 
 def connected_components(edges: DataFrame) -> DataFrame:
@@ -142,8 +144,10 @@ def connected_components(edges: DataFrame) -> DataFrame:
     The input edges, self-loops dropped, are checkpointed and counted. At
     most DRIVER_MAX_EDGES of them are collected and closed with union-find
     on the driver (2 jobs past the upstream plan's own: the count and the
-    collect); above the bound the distributed large-star/small-star loop
-    runs on the same checkpoint.
+    collect), returned as an Arrow table: a LocalRelation of known size that
+    joins can broadcast (a Python list plans as a LogicalRDD of unknown
+    size); above the bound the distributed large-star/small-star loop runs
+    on the same checkpoint.
 
     The iterative loop re-shuffles the edge set ~7 times per round, so the
     right shuffle-partition count is a function of EDGE volume, not of the
@@ -188,10 +192,10 @@ def connected_components(edges: DataFrame) -> DataFrame:
     n_edges = raw._jdf.rdd().count()
     if n_edges <= DRIVER_MAX_EDGES:
         t = raw.schema["src"].dataType
-        return spark.createDataFrame(
-            _union_find(raw.collect()),
-            StructType([StructField("node", t), StructField("component", t)]),
-        )
+        schema = StructType([StructField("node", t), StructField("component", t)])
+        comp = _union_find(raw.collect())
+        table = pa.table([list(comp), list(comp.values())], schema=to_arrow_schema(schema))
+        return spark.createDataFrame(table, schema)
     # LAZY checkpoint + signature aggregate = ONE action that both
     # materializes the checkpoint and signs the edge set (an eager
     # checkpoint would be a second, separate job per wave)

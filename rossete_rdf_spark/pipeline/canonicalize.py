@@ -4,13 +4,14 @@ textops/lsh.py), and connected components collapses the verified pairs into
 canonical entities.
 
 Scale shape: candidate generation is linear in #surfaces x #bands (never
-all-pairs); verification touches only candidates; CC runs on the (tiny
-relative to pages) entity-pair edge list, which at gazetteer sizes stays
-under graph/cc.py's bound and is closed with union-find on the driver."""
+all-pairs); verification builds grams in each candidate pair's row; CC
+runs on the (tiny relative to pages) entity-pair edge list, which at
+gazetteer sizes stays under graph/cc.py's bound and is closed with
+union-find on the driver into a table the final join broadcasts."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..graph.cc import connected_components
@@ -20,26 +21,25 @@ from ..textops.lsh import (
     candidate_pairs,
     gram_table,
     minhash64,
-    verify_jaccard,
+    pair_jaccard_filter,
 )
 
 NGRAM = 3
 CANON_JACCARD = 0.6  # exact-Jaccard verification threshold (oracle twin imports it)
 
 
-def _surface_grams(surfaces: DataFrame, col: str) -> DataFrame:
-    """(id = surface, g, n) over distinct character n-grams."""
-    c = F.col(col)
+def _char_grams(c: Column) -> Column:
+    """The distinct character n-grams of a surface."""
     idx = F.sequence(F.lit(1), F.greatest(F.length(c) - (NGRAM - 1), F.lit(0)))
-    grams = F.transform(idx, lambda i: F.substring(c, i, NGRAM))
-    return gram_table(surfaces, col, F.array_distinct(grams))
+    return F.array_distinct(F.transform(idx, lambda i: F.substring(c, i, NGRAM)))
 
 
 def surface_candidate_pairs(surfaces: DataFrame, col: str = "surface") -> DataFrame:
     """(surface) -> candidate pairs (a, b) with a < b that collide in >=
     MIN_BANDS bands."""
+    grams = gram_table(surfaces, col, _char_grams(F.col(col)))
     return (
-        candidate_pairs(_surface_grams(surfaces, col), MAX_BUCKET)
+        candidate_pairs(grams, MAX_BUCKET)
         .filter(F.col("n_bands") >= MIN_BANDS)
         .select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     )
@@ -47,14 +47,13 @@ def surface_candidate_pairs(surfaces: DataFrame, col: str = "surface") -> DataFr
 
 def verified_pairs(candidates: DataFrame, threshold: float = CANON_JACCARD) -> DataFrame:
     """Candidate pairs (a, b) whose exact char-n-gram Jaccard is >=
-    threshold; grams are built once per candidate surface."""
-    surfaces = (
-        candidates.select(F.col("a").alias("s"))
-        .unionByName(candidates.select(F.col("b").alias("s")))
-        .distinct()
+    threshold > 0, with each endpoint's grams built in the pair row."""
+    ends = candidates.select(
+        F.col("a").alias("id_a"), F.col("b").alias("id_b"),
+        F.explode(F.array("a", "b")).alias("s"),
     )
-    cands = candidates.select(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
-    return verify_jaccard(cands, _surface_grams(surfaces, "s"), threshold).select(
+    pair_grams = ends.select("id_a", "id_b", F.explode(_char_grams(F.col("s"))).alias("g"))
+    return pair_jaccard_filter(pair_grams, threshold).select(
         F.col("id_a").alias("a"), F.col("id_b").alias("b")
     )
 
@@ -63,19 +62,13 @@ def canonical_entity_map(surfaces: DataFrame, threshold: float = CANON_JACCARD) 
     """(surface) -> (surface, canonical) where canonical = min surface of the
     duplicate cluster (connected component); singletons map to themselves.
 
-    Both intermediates here are multiply referenced and gazetteer-BOUNDED,
-    so they are lazily localCheckpointed (the pair-table lesson of page
-    near-dup verification, measured at 8k pages as 202s -> 20s): `surfaces`
-    feeds the gram explode AND the final distinct join — without the
-    checkpoint a caller passing a derived plan (kg_job passes the salted
-    gazetteer aggregate) re-executes that whole upstream DAG once per
-    reference; `cands` is referenced twice by verified_pairs (the candidate
-    surface set and the verifier's pair table), which otherwise re-runs the
-    LSH banding self-join twice. Lazy (eager=False) so each materializes at
-    most once, on first use, and never adds a separate job."""
+    `surfaces` feeds the gram explode AND the final distinct join, so it is
+    lazily localCheckpointed: without it a caller passing a derived plan
+    (kg_job passes the salted gazetteer aggregate) re-executes that whole
+    upstream DAG once per reference. Lazy (eager=False) so it materializes
+    at most once, on first use, and never adds a separate job."""
     surfaces = surfaces.localCheckpoint(eager=False)
-    cands = surface_candidate_pairs(surfaces).localCheckpoint(eager=False)
-    edges = verified_pairs(cands, threshold).select(
+    edges = verified_pairs(surface_candidate_pairs(surfaces), threshold).select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     )
     comp = connected_components(edges)  # (node, component)

@@ -89,7 +89,7 @@ def page_canonical_exact_query(spark, sf_dir: str) -> DataFrame:
 def page_canonical_lsh_query(spark, sf_dir: str) -> DataFrame:
     """Driver-contract wrapper for the NEAR-DUP tier — the full
     duplicate_edges path that page_canonical_exact cannot reach: capped
-    MinHash-LSH banding, >=2-band agreement, inverted-index exact-Jaccard
+    MinHash-LSH banding, >=2-band agreement, one-aggregate exact-Jaccard
     verification, then connected components. The corpus has no
     near-duplicates, so the query plants them deterministically: every
     11th doc gets a twin with the first word substituted (word-level

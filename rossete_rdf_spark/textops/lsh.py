@@ -6,9 +6,9 @@ entity canonicalization (pipeline.canonicalize).
 Blocking and verification are separate steps, as in MinoanER: blocking
 proposes candidate pairs at a cost linear in #ids x #bands (never
 all-pairs), verification scores only those candidates. Every function works
-on one gram-table shape (id, g, n): one row per DISTINCT gram g of an id,
-with n = the id's distinct-gram count carried on every row, so the verifier
-reads set sizes off the gram rows instead of aggregating a size table.
+on one gram-table shape (id, g): one row per DISTINCT gram g of an id.
+Blocking is one bucket aggregate, verification one count-distinct
+aggregate.
 
 The hash family, the banding and the bucket cap are replayed bit for bit by
 the DuckDB oracles (oracles.py imports these constants), so both engines
@@ -24,8 +24,8 @@ N_HASHES = 8
 BAND_ROWS = 2  # 4 bands of 2 rows
 # A band bucket with more members than this is non-discriminative
 # (boilerplate pages; short surfaces with only a handful of char n-grams)
-# and would make the banding self-join quadratic on that key, so it is
-# dropped before joining; it loses only low-signal candidates.
+# and would make its pair list quadratic, so it is dropped before pairing;
+# it loses only low-signal candidates.
 MAX_BUCKET = 50
 # Pipeline callers keep candidates that collide in >= MIN_BANDS of the 4
 # bands: single-band collisions on few-gram ids are near-random and flood
@@ -47,15 +47,13 @@ def minhash64(col, seed: int | str) -> Column:
 
 
 def gram_table(df: DataFrame, id_col: str, grams: Column) -> DataFrame:
-    """(id, g, n) from a per-row array of distinct grams."""
-    # n is sized before the explode so the array is not carried on every
-    # exploded row. explode_outer + a null filter, not explode: an inner
-    # explode of the staged `_ga` column makes the optimizer infer
-    # size(_ga) > 0 and push it below the projections, re-inlining the gram
-    # expression (and the word tokenization under it) once per reference.
+    """(id, g) from a per-row array of distinct grams."""
+    # explode_outer + a null filter, not explode: an inner explode of the
+    # staged `_ga` column makes the optimizer infer size(_ga) > 0 and push it
+    # below the projections, re-inlining the gram expression (and the word
+    # tokenization under it) once per reference.
     staged = df.select(F.col(id_col).alias("id"), grams.alias("_ga"))
-    sized = staged.select("id", "_ga", F.size("_ga").alias("n"))
-    return sized.select("id", F.explode_outer("_ga").alias("g"), "n").filter(
+    return staged.select("id", F.explode_outer("_ga").alias("g")).filter(
         F.col("g").isNotNull()
     )
 
@@ -100,52 +98,47 @@ def band_rows(sig: DataFrame, max_bucket: int | None = None) -> DataFrame:
 def candidate_pairs(grams: DataFrame, max_bucket: int | None = MAX_BUCKET) -> DataFrame:
     """(id_a, id_b, n_bands): pairs id_a < id_b sharing at least one band
     key, with the number of bands they collide in. max_bucket=None turns
-    the hot-bucket cap off."""
-    bands = band_rows(signatures(grams), max_bucket)
-    a, b = bands.alias("a"), bands.alias("b")
+    the hot-bucket cap off. Bucket-local: pairs are enumerated inside each
+    kept bucket's id list, with no self-join (a hot bucket's list is held
+    in one task before the size filter drops it)."""
+    size = F.size("ids")
+    keep = size > 1 if not max_bucket else (size > 1) & (size <= max_bucket)
+    buckets = (
+        band_rows(signatures(grams))
+        .groupBy("band", "key")
+        .agg(F.collect_list("id").alias("ids"))
+        .filter(keep)
+    )
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        buckets.select(F.explode("ids").alias("id_a"), "ids")
+        .select("id_a", F.explode("ids").alias("id_b"))
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_bands"))
     )
 
 
-def verify_jaccard(cands: DataFrame, grams: DataFrame, threshold: float) -> DataFrame:
-    """(id_a, id_b) candidate pairs whose exact gram-set Jaccard is >=
-    threshold.
+def pair_jaccard_filter(pair_grams: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b) pairs whose exact gram-set Jaccard is >= threshold > 0,
+    from (id_a, id_b, g) rows: each endpoint's DISTINCT grams, stacked.
 
-    Inverted-index shape: join the two ids' gram rows on the gram, count the
-    matches per pair, and take the union size from the carried n. Never
+    One aggregate: tot = |A| + |B| and uni = |A u B|, so (tot - uni) / uni
+    is the Jaccard (a disjoint pair scores 0, hence threshold > 0). Never
     per-pair array_intersect/array_union columns: those allocate a hash set
     per evaluated pair, serialized into whatever single task AQE coalesces
-    the tiny pair table into (observed: a 14-minute one-task stage).
+    the tiny pair table into (observed: a 14-minute one-task stage)."""
+    if threshold <= 0:
+        raise ValueError(f"Jaccard threshold must be > 0, got {threshold}")
+    scored = pair_grams.groupBy("id_a", "id_b").agg(
+        F.count(F.lit(1)).alias("tot"), F.countDistinct("g").alias("uni")
+    )
+    jaccard = (F.col("tot") - F.col("uni")) / F.col("uni")
+    return scored.filter(jaccard >= threshold).select("id_a", "id_b")
 
-    The pair table is small by construction (bucket cap + band threshold),
-    so it is broadcast and the gram table is probed in place: the a side by
-    the pair join itself, the b side by a semi join, so only candidate ids'
-    gram rows reach the shuffle. The gram join is hinted shuffle-hash: the
-    planner's sort-merge default would re-sort the gram rows."""
-    # referenced twice below; lazily checkpointed so the candidate DAG
-    # (signature aggregate + banding self-join) runs at most once, on first
-    # use, without a job of its own
-    cands = cands.select("id_a", "id_b").localCheckpoint(eager=False)
-    ga = grams.select(F.col("id").alias("id_a"), "g", F.col("n").alias("na"))
-    gb = grams.select(F.col("id").alias("id_b"), "g", F.col("n").alias("nb")).join(
-        F.broadcast(cands.select("id_b")), "id_b", "leftsemi"
-    )
-    inter = (
-        F.broadcast(cands)
-        .join(ga, "id_a")
-        .join(gb.hint("shuffle_hash"), ["id_b", "g"])
-        # na/nb are constant per pair: carried through as max(), measured
-        # ~1.7x faster than adding them to the grouping keys
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"), F.max("na").alias("na"), F.max("nb").alias("nb"))
-    )
-    jaccard = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-    return inter.filter(jaccard >= threshold).select("id_a", "id_b")
+
+def verify_jaccard(cands: DataFrame, grams: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b) candidate pairs whose exact gram-set Jaccard is >=
+    threshold > 0. The pair table is small by construction (bucket cap +
+    band threshold), so its endpoints are broadcast onto the gram rows."""
+    ends = cands.select("id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias("id"))
+    return pair_jaccard_filter(grams.join(F.broadcast(ends), "id"), threshold)

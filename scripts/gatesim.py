@@ -9,13 +9,16 @@ Defaults: /root/testdata/sf0.01, all queries.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-from rossete_rdf_spark.registry import QUERIES, oracle_sql
-from rossete_rdf_spark.session import get_spark
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from rossete_rdf_spark.registry import QUERIES, oracle_sql  # noqa: E402
+from rossete_rdf_spark.session import get_spark  # noqa: E402
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",

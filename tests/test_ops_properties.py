@@ -338,3 +338,52 @@ def test_dense_ids_are_gapfree_and_order_preserving(spark):
     ).repartition(7)
     got = {r.token: r.nid for r in dense_ids(df, "token").collect()}
     assert got == {v: i for i, v in enumerate(sorted(vals))}
+
+
+def test_verify_jaccard_matches_python_jaccard(spark):
+    """verify_jaccard's one-aggregate score equals a pure-Python set
+    Jaccard on random gram sets, including identical sets, disjoint sets
+    and an id with no grams; a threshold <= 0 is refused, since a disjoint
+    pair scores 0 under the stacked-gram count."""
+    import random
+
+    from rossete_rdf_spark.pipeline.canonicalize import verified_pairs
+    from rossete_rdf_spark.textops.lsh import verify_jaccard
+
+    rng = random.Random(11)
+    sets = {i: set(rng.sample(range(12), rng.randint(1, 8))) for i in range(14)}
+    sets[14] = set(sets[3])  # identical to id 3
+    sets[15] = {100, 101, 102}  # disjoint from every other id
+    sets[16] = set()  # no grams at all
+    grams = spark.createDataFrame(
+        [(i, f"g{g}") for i, gs in sets.items() for g in gs], "id long, g string"
+    )
+    pairs = [(a, b) for a in sets for b in sets if a < b]
+    cands = spark.createDataFrame(pairs, "id_a long, id_b long")
+
+    def jaccard(a, b):
+        union = sets[a] | sets[b]
+        return len(sets[a] & sets[b]) / len(union) if union else 0.0
+
+    for t in (0.5, 0.6, 1.0):
+        want = sorted(p for p in pairs if jaccard(*p) >= t)
+        got = sorted(map(tuple, verify_jaccard(cands, grams, t).collect()))
+        assert got == want, t
+    assert (3, 14) in want  # identical sets pass even the 1.0 bar
+    for t in (0.0, -0.5):
+        with pytest.raises(ValueError):
+            verify_jaccard(cands, grams, t)
+
+    # canonicalize builds each surface's char-3-grams in the pair row; the
+    # same Python Jaccard over those gram sets is the reference ("banana"
+    # repeats the gram "ana", which must count once)
+    words = [
+        "sparkle", "sparkles", "database", "databases", "qqqq",
+        "banana", "bananas", "ananas",
+    ]
+    surf_pairs = [(a, b) for a in words for b in words if a < b]
+    sets = {w: {w[i:i + 3] for i in range(len(w) - 2)} for w in words}
+    cands = spark.createDataFrame(surf_pairs, "a string, b string")
+    for t in (0.5, 0.6, 1.0):
+        want = sorted(p for p in surf_pairs if jaccard(*p) >= t)
+        assert sorted(map(tuple, verified_pairs(cands, t).collect())) == want, t

@@ -405,10 +405,19 @@ def test_rdfs_closure_matches_spark_fixpoint(spark):
     assert closed == expected
 
 
+def _node_names(df) -> list[str]:
+    """The operator names of df's formatted physical plan tree, top down
+    (e.g. "Exchange", "BroadcastExchange", "BroadcastHashJoin")."""
+    tree = _plan(df).split("\n\n")[0].splitlines()[1:]
+    return [ln.lstrip(" :+-").split()[0] for ln in tree]
+
+
 def test_lsh_blocking_has_no_window_and_verifier_no_array_sets(spark):
-    # blocking caps hot band buckets with a broadcast anti join, not a
-    # window count (a sort over the whole banding table); the verifier
-    # counts gram matches through an inverted-index join, not per-pair
+    # blocking is bucket-local: the signature, bucket and pair aggregates
+    # are its only exchanges — no hot-bucket count, broadcast, anti join,
+    # banding self-join or window; the verifier adds one broadcast of the
+    # pair endpoints, one join onto the gram rows and the count-distinct
+    # aggregate's (at most two) exchanges, never per-pair
     # array_intersect/array_union hash sets
     from rossete_rdf_spark.textops.dedup import _doc_ngrams
     from rossete_rdf_spark.textops.lsh import candidate_pairs, verify_jaccard
@@ -416,12 +425,57 @@ def test_lsh_blocking_has_no_window_and_verifier_no_array_sets(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     grams = _doc_ngrams(docs, "doc_id", "text", 3)
     cands = candidate_pairs(grams)
-    blocking = _plan(cands)
-    assert "Window" not in blocking
-    assert "LeftAnti" in blocking and "BroadcastExchange" in blocking
-    verify = _plan(verify_jaccard(cands, grams, 0.5)).lower()
-    assert "arrayintersect" not in verify and "array_intersect" not in verify
-    assert "array_union" not in verify and "arrayunion" not in verify
+    blocking = _node_names(cands)
+    assert blocking.count("Exchange") == 3, blocking
+    assert "BroadcastExchange" not in blocking and "Window" not in blocking
+    assert not [n for n in blocking if "Join" in n], blocking
+    verifier = verify_jaccard(cands, grams, 0.5)
+    verify = _node_names(verifier)
+    assert verify.count("BroadcastExchange") == 1, verify
+    assert len([n for n in verify if "Join" in n]) == 1, verify
+    assert verify.count("Exchange") - blocking.count("Exchange") <= 2, verify
+    text = _plan(verifier).lower()
+    assert "arrayintersect" not in text and "array_intersect" not in text
+    assert "array_union" not in text and "arrayunion" not in text
+
+
+def test_small_cc_result_is_a_sized_local_relation(spark):
+    # the driver path's result plans as a LocalRelation (known size, so
+    # joins against it can broadcast), with or without Arrow conversion
+    # enabled — never a LogicalRDD of unknown size
+    from rossete_rdf_spark.graph.cc import connected_components
+    from rossete_rdf_spark.session import scoped_conf
+
+    edges = spark.createDataFrame([("a", "b"), ("b", "c"), ("x", "y")], ["src", "dst"])
+    for arrow in ("true", "false"):
+        with scoped_conf(spark, {"spark.sql.execution.arrow.pyspark.enabled": arrow}):
+            comp = connected_components(edges)
+            opt = comp._jdf.queryExecution().optimizedPlan()
+            assert opt.getClass().getSimpleName() == "LocalRelation", arrow
+            assert sorted(map(tuple, comp.collect())) == [
+                ("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")
+            ]
+
+
+def test_keep_canonical_broadcasts_small_components(spark):
+    # a small component table is broadcast onto the pages: no shuffle of
+    # the pages side
+    from pyspark.sql import functions as F
+
+    from rossete_rdf_spark.pipeline.pagedup import _keep_canonical
+
+    pages = spark.range(20).select(
+        F.concat(F.lit("p"), F.col("id").cast("string")).alias("url"),
+        F.lit("t").alias("text"),
+    )
+    edges = spark.createDataFrame([("p1", "p2"), ("p3", "p4")], ["src", "dst"])
+    kept = _keep_canonical(pages, edges)
+    names = _node_names(kept)
+    assert "BroadcastHashJoin" in names, names
+    assert "Exchange" not in names, names
+    assert sorted(r.url for r in kept.collect()) == sorted(
+        f"p{i}" for i in range(20) if i not in (2, 4)
+    )
 
 
 def test_small_connected_components_is_two_jobs(spark):
