@@ -28,7 +28,6 @@ from .extract import extract_pages
 from .mentions import build_gazetteer, link_mentions, page_mentions
 from .pagedup import canonical_pages
 
-PAGE_NS = "http://kg.example.com/page/"
 ENTITY_NS = "http://kg.example.com/entity/"
 ONTO = "http://kg.example.com/ontology#"
 RDF_TYPE = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
@@ -96,47 +95,34 @@ def run_kg_pipeline(
 ) -> dict:
     """Run (or resume) the pipeline; returns the manifest's stage metrics.
 
-    `stop_after` aborts after the named stage completes — the resume test
-    uses it to simulate a mid-pipeline kill. Every stage runs with its
-    defaults: build_gazetteer's min_pages and canonicalize.CANON_JACCARD, the
-    bar the canonicalization oracle also imports."""
+    `stop_after` aborts after the named stage (one of STAGES) completes —
+    the resume test uses it to simulate a mid-pipeline kill. Every stage runs
+    with its defaults: build_gazetteer's min_pages and
+    canonicalize.CANON_JACCARD, the bar the canonicalization oracle also
+    imports."""
+    if stop_after is not None and stop_after not in STAGES:
+        raise ValueError(f"unknown stage {stop_after!r}; expected one of {STAGES}")
     cp = CheckpointManager(spark, workdir)
-
-    def upto(stage: str) -> bool:
-        return stop_after == stage
-
-    pages_text = cp.run_stage("extract", lambda: extract_pages(pages))
-    if upto("extract"):
-        return cp.stage_metrics()
-
-    pages_text = cp.run_stage("pagedup", lambda: canonical_pages(pages_text))
-    if upto("pagedup"):
-        return cp.stage_metrics()
-
-    mentions = cp.run_stage("mentions", lambda: page_mentions(pages_text))
-    if upto("mentions"):
-        return cp.stage_metrics()
-
-    gaz = cp.run_stage("gazetteer", lambda: build_gazetteer(mentions))
-    if upto("gazetteer"):
-        return cp.stage_metrics()
-
-    linked = cp.run_stage("linked", lambda: link_mentions(mentions, gaz))
-    if upto("linked"):
-        return cp.stage_metrics()
-
-    canonical = cp.run_stage(
-        "canonical", lambda: canonical_entity_map(gaz.select("surface"))
-    )
-    if upto("canonical"):
-        return cp.stage_metrics()
+    out: dict[str, DataFrame] = {}
 
     def build_triples() -> DataFrame:
-        pt = page_triples(pages_text).withColumn("graph", F.lit("pages"))
-        mt = mention_triples(linked, canonical).withColumn("graph", F.lit("mentions"))
-        return pt.unionByName(mt)
+        pt = page_triples(out["pagedup"]).withColumn("graph", F.lit("pages"))
+        mt = mention_triples(out["linked"], out["canonical"])
+        return pt.unionByName(mt.withColumn("graph", F.lit("mentions")))
 
-    cp.run_stage("triples", build_triples)
+    builds = {
+        "extract": lambda: extract_pages(pages),
+        "pagedup": lambda: canonical_pages(out["extract"]),
+        "mentions": lambda: page_mentions(out["pagedup"]),
+        "gazetteer": lambda: build_gazetteer(out["mentions"]),
+        "linked": lambda: link_mentions(out["mentions"], out["gazetteer"]),
+        "canonical": lambda: canonical_entity_map(out["gazetteer"].select("surface")),
+        "triples": build_triples,
+    }
+    for name in STAGES:
+        out[name] = cp.run_stage(name, builds[name])
+        if name == stop_after:
+            break
     return cp.stage_metrics()
 
 

@@ -34,12 +34,6 @@ EXACT_DUP_EVERY = 50
 RARE_TOKENS = 50_000  # long-tail vocabulary size (web text is heavy-tailed)
 
 
-def _word(seed_col, i: int):
-    """Deterministic vocab pick: affine hash of (id, position) mod |VOCAB|."""
-    mix = (seed_col * 2654435761 + F.lit(i * 40503 + 7)) % (2**31)
-    return F.element_at(F.lit(VOCAB), (mix % len(VOCAB) + 1).cast("int"))
-
-
 def synth_pages(
     spark: SparkSession,
     n_pages: int,

@@ -33,8 +33,6 @@ from .terms import (
     template_column,
 )
 
-TRIPLE_COLS = ("subj", "pred", "obj", "graph")
-
 
 def _same_source(a: TriplesMap, b: TriplesMap) -> bool:
     return a.source.source == b.source.source and (a.source.iterator or "") == (

@@ -10,6 +10,11 @@ Mirrors the reference's JSON config surface (reference: src/config.rs):
     scheduler replaces the [parse, read, write] thread caps
     (src/config.rs:275-297) and Tungsten spill replaces the in-memory-DB
     threshold (src/config.rs:203-220).
+  - "xml-real": true swaps the reference's zero-row XML stub for a real
+    XML reader (sources._load_xml_real).
+  - Ingest order (the reference's `col_id`) is not configurable: it is read
+    off each source's file count (sources.py module docstring). Unknown
+    keys, including a former ingest-order switch, are ignored.
 
 Encodings: the reference maps ~40 WHATWG labels onto encoding_rs with a few
 quirks ("KOI8"->KOI8-R, "WINDOWS"->windows-1258, "UTF-16"->LE, unknown ->
@@ -98,12 +103,6 @@ class EngineConfig:
     # opts into an actual XML source: XPath-style iterator over elements,
     # fields from child-element text / @attributes.
     xml_real: bool = False
-    # strict_ingest_order=True gives CSV/JSON sources the same exact,
-    # split-invariant (file, row-in-file) __rid that parquet sources always
-    # have — at the cost of one per-file window sort at ingest (see
-    # sources.py). Default off: the order only decides first-occurrence
-    # tie-breaks among rows identical in every referenced column.
-    strict_ingest_order: bool = False
 
     def spec_for(self, path: str) -> FileSpec | None:
         """Match by normalized path, like the reference's PathBuf-keyed
@@ -145,5 +144,4 @@ def config_from_json(data: dict, base_dir: str | None = None) -> EngineConfig:
     if of is not None:
         cfg.output_format = str(of).lower()
     cfg.xml_real = bool(data.get("xml-real", False))
-    cfg.strict_ingest_order = bool(data.get("strict-ingest-order", False))
     return cfg

@@ -7,31 +7,31 @@ semantics — all referenced fields as strings, NULL read back as '' — but the
 referenced columns; no copy is materialized).
 
 Returned DataFrames have one sanitized column per referenced field plus
-`__rid`, a monotonically-increasing ingest id that stands in for SQLite's
-rowid for first-occurrence dedup / first-match join ordering.
+`__rid`, an ingest-order id that stands in for SQLite's rowid for
+first-occurrence dedup / first-match join ordering.
 
-__rid determinism: monotonically_increasing_id is (partitionId << 33 | row
-offset), so its ORDER depends on how the scan is split. Guarantees:
-  - a source that lands in ONE split (any file under
-    spark.sql.files.maxPartitionBytes, i.e. every RML mapping fixture) gets
-    exact file order — identical to SQLite rowid;
-  - multi-file / multi-split sources get a stable order for a FIXED file
-    layout, but Spark bin-packs splits by size, so the winner of a
-    first-occurrence tie can differ from strict ingest order across layouts.
-    The reference's rowid is absolute; at the 100 TB design point the
-    tie-break among true duplicates is value-irrelevant by construction
-    (duplicate projected tuples are identical in every referenced column),
-    so this only matters for byte-level diffs of text exports, not for graph
-    parity. Parquet sources upgrade to exact per-file order via
-    _metadata.row_index below; CSV/JSON sources upgrade to the same
-    split-invariant (file, row-in-file) order under
-    EngineConfig.strict_ingest_order, paying one per-file window sort at
-    ingest (partitioned by file — parallel across files).
+__rid determinism: the order is read off the source's file count
+(`DataFrame.inputFiles()`, a driver-side listing that runs no job):
+  - ONE file keeps the scan's monotonically_increasing_id (partitionId << 33
+    | row offset). Spark plans one file's splits in byte order, so this is
+    exact file order at any split count — identical to SQLite rowid;
+  - SEVERAL files (a directory or glob) get (file key << 40) + row-in-file,
+    the file key being the file's rank in that sorted listing (a broadcast
+    local table; the files are not scanned for it). Row-in-file is
+    parquet's _metadata.row_index, XML's element index, or for CSV/JSON a
+    per-file window over (block start, scan position) — a shuffle and sort
+    of the source's rows, the price of exact order. This order does not
+    depend on how Spark bin-packs the files into splits.
+Catalog tables (`table` format) keep the bare scan id: Hive-serde tables
+have no _metadata columns.
 """
 
 from __future__ import annotations
 
 import re
+from urllib.parse import urlsplit
+
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -66,49 +66,58 @@ _META_FP = "__fp"
 _META_BS = "__bs"
 
 
-def _file_key_table(df: DataFrame, path_col) -> DataFrame:
-    """(__fp, __fkey): dense rank over the DISTINCT file-path set — the
-    collision-FREE per-file key for the exact-__rid schemes below. A
-    truncated-hash bucket (the previous 22-bit scheme) collides with ~1%
-    odds at ~400 files and near-certainly at web-scale file counts; a
-    collision gives two files identical rid high bits, i.e. duplicate rids,
-    making the min_by first-occurrence tie-break nondeterministic — exactly
-    what the exact modes exist to rule out. The rank window sorts #files
-    rows (never data rows) and the keyed table broadcasts back onto the
-    scan; the distinct itself reads only the file-path metadata column."""
-    from pyspark.sql.window import Window
+def _file_keys(spark: SparkSession, files: list) -> DataFrame:
+    """(__fkey, __fp): 1-based rank of each input file in sorted path order —
+    a collision-free per-file key. A truncated hash of the path would give
+    two files the same rid high bits, i.e. duplicate rids and a
+    nondeterministic first-occurrence tie-break. Built from the driver's
+    file listing (a local table, no scan); paths are put in
+    `_metadata.file_path` form, which spells an empty URI authority `file:/`
+    where `inputFiles()` spells it `file:///`."""
 
-    files = df.select(path_col.alias(_META_FP)).distinct()
-    w = Window.orderBy(_META_FP)
-    return files.withColumn("__fkey", F.dense_rank().over(w).cast("long"))
+    def meta_path(uri: str) -> str:
+        u = urlsplit(uri)
+        return uri if u.netloc else f"{u.scheme}:{u.path}"
+
+    paths = sorted(map(meta_path, files))
+    keys = pa.table({"__fkey": pa.array(range(1, len(paths) + 1), pa.int64()), _META_FP: paths})
+    # an Arrow table plans as a LocalRelation: no Python worker evaluates it
+    return spark.createDataFrame(keys)
 
 
-def _with_rid(df: DataFrame, cols: list, strict: bool) -> DataFrame:
-    """Project `cols` and attach __rid. strict=False: per-split monotonic id
-    (cheap, layout-dependent across splits — module docstring). strict=True:
-    exact (file, row-in-file) order — dense per-file key in the high bits
-    (same scheme as the parquet path), row index from a window partitioned
-    by file and ordered by (block offset, within-task position); the sort is
-    per-file, so a many-file corpus keeps full parallelism."""
-    if not strict:
+def _with_rid(df: DataFrame, cols: list, pos=None) -> DataFrame:
+    """Project `cols` and attach __rid (module docstring). `pos` is the
+    row-in-file column where the source has one; without it, row-in-file is
+    a window partitioned by file — parallel across files. File path and
+    block start come from the _META_FP/_META_BS columns when `df` carries
+    them (an iterator or a parser that drops the scan columns), else from
+    the scan's _metadata."""
+    files = df.inputFiles()
+    if len(files) < 2:
         return df.select(*cols).withColumn(RID, F.monotonically_increasing_id())
     from pyspark.sql.window import Window
 
-    if _META_FP not in df.columns:
-        df = df.select(
-            "*",
-            F.col("_metadata.file_path").alias(_META_FP),
-            F.col("_metadata.file_block_start").alias(_META_BS),
-        )
-    staged = df.select(
-        *cols, _META_FP, _META_BS,
-        F.monotonically_increasing_id().alias("__mono"),
+    def meta(name: str, field: str):
+        return F.col(name) if name in df.columns else F.col(f"_metadata.{field}")
+
+    fp = meta(_META_FP, "file_path").alias(_META_FP)
+    if pos is None:
+        bs = meta(_META_BS, "file_block_start").alias(_META_BS)
+        staged = df.select(*cols, fp, bs, F.monotonically_increasing_id().alias("__mono"))
+        pos = F.row_number().over(Window.partitionBy(_META_FP).orderBy(_META_BS, "__mono"))
+    else:
+        staged = df.select(*cols, fp, pos.alias("__pos"))
+        pos = F.col("__pos")
+    keys = F.broadcast(_file_keys(df.sparkSession, files))
+    # left join + raise_error: a path the listing spells differently fails
+    # loudly instead of dropping that file's rows
+    fkey = F.coalesce(
+        F.col("__fkey"),
+        F.raise_error(F.concat(F.lit("file not in source listing: "), F.col(_META_FP))),
     )
-    fkeys = _file_key_table(staged, F.col(_META_FP))
-    staged = staged.join(F.broadcast(fkeys), _META_FP)
-    w = Window.partitionBy(_META_FP).orderBy(_META_BS, "__mono")
-    rid = F.shiftleft(F.col("__fkey"), 40) + F.row_number().over(w).cast("long")
-    return staged.withColumn(RID, rid).drop(_META_FP, _META_BS, "__mono", "__fkey")
+    rid = F.shiftleft(fkey, 40) + pos.cast("long")
+    staged = staged.join(keys, _META_FP, "left")
+    return staged.withColumn(RID, rid).drop(_META_FP, _META_BS, "__mono", "__pos", "__fkey")
 
 
 def _resolve_path(df: DataFrame, path: str):
@@ -138,8 +147,8 @@ def _apply_json_iterator(df: DataFrame, iterator: str) -> DataFrame:
     if not path:
         return df
 
-    # ingest-order metadata columns (strict_ingest_order) ride along through
-    # every explode so the post-iterator rows still know their source file
+    # ingest-order metadata columns ride along through every explode so the
+    # post-iterator rows still know their source file (_with_rid)
     keep = [c for c in (_META_FP, _META_BS) if c in df.columns]
     expr = None
     dtype: T.DataType = df.schema
@@ -227,14 +236,15 @@ def load_logical_source(
             )
             for f in fields
         ]
-        return _with_rid(df, cols, bool(config and config.strict_ingest_order))
+        return _with_rid(df, cols)
 
     if fmt == "json":
         df = spark.read.option("multiLine", "true").json(source.source)
-        strict = bool(config and config.strict_ingest_order)
-        if strict:
-            # capture the file metadata BEFORE the iterator explodes away
-            # the scan columns; _apply_json_iterator threads it through
+        if len(df.inputFiles()) > 1:
+            # _with_rid's several-files case: capture the file metadata
+            # BEFORE the iterator explodes away the scan columns;
+            # _apply_json_iterator threads it. Not for one file: Catalyst
+            # does not prune the captured columns out of the scan again.
             df = df.select(
                 "*",
                 F.col("_metadata.file_path").alias(_META_FP),
@@ -250,7 +260,7 @@ def load_logical_source(
                 cols.append(F.lit("").alias(cmap[f]))
             else:
                 cols.append(_string_or_empty(col, dtype).alias(cmap[f]))
-        return _with_rid(df, cols, strict)
+        return _with_rid(df, cols)
 
     if fmt == "xml":
         if config is not None and config.xml_real:
@@ -279,20 +289,8 @@ def load_logical_source(
                 raise KeyError(f"source {source.source} lacks column {f}")
             cols.append(_string_or_empty(col, dtype).alias(cmap[f]))
         if is_parquet:
-            # exact, split-invariant ingest order: (file, row-in-file) via the
-            # parquet _metadata columns — cross-cluster-stable rowid semantics.
-            # file key = dense rank over the distinct file paths (collision-
-            # free; see _file_key_table), shifted clear of the 40-bit row
-            # index — bitwise, ANSI-overflow-safe. The key table is tiny and
-            # broadcast; the distinct reads only parquet footers.
-            fkeys = _file_key_table(df, F.col("_metadata.file_path"))
-            staged = df.select(
-                *cols,
-                F.col("_metadata.file_path").alias(_META_FP),
-                F.col("_metadata.row_index").alias("__ri"),
-            ).join(F.broadcast(fkeys), _META_FP)
-            rid = F.shiftleft(F.col("__fkey"), 40) + F.col("__ri")
-            return staged.withColumn(RID, rid).drop(_META_FP, "__fkey", "__ri")
+            return _with_rid(df, cols, pos=F.col("_metadata.row_index"))
+        # catalog table: scan order (Hive-serde tables have no _metadata)
         return df.select(*cols).withColumn(RID, F.monotonically_increasing_id())
 
     raise ValueError(f"unsupported source format: {fmt}")
@@ -315,16 +313,14 @@ def _load_xml_real(
 
     out_schema = T.StructType(
         [T.StructField(cmap[f], T.StringType()) for f in field_list]
-        + [T.StructField(RID, T.LongType())]
+        + [T.StructField(_META_FP, T.StringType()), T.StructField("__pos", T.LongType())]
     )
 
     def parse(batches):
         import xml.etree.ElementTree as ET
-        import zlib
 
         for pdf in batches:
-            rows: dict[str, list] = {cmap[f]: [] for f in field_list}
-            rids: list[int] = []
+            rows: dict[str, list] = {c: [] for c in out_schema.fieldNames()}
             for path, content in zip(pdf["path"], pdf["content"]):
                 try:
                     root = ET.fromstring(bytes(content))
@@ -336,8 +332,6 @@ def _load_xml_real(
                     parts = [p for p in xp.split("/") if p]
                     # first segment names the root element itself
                     xp = "./" + "/".join(parts[1:]) if len(parts) > 1 else "."
-                # stable per-file base (Python hash() is salted per process)
-                base = (zlib.crc32(path.encode()) & 0x3FFFFF) << 40
                 for i, el in enumerate(root.findall(xp or ".")):
                     for f in field_list:
                         if f.startswith("@"):
@@ -346,14 +340,14 @@ def _load_xml_real(
                             child = el.find(f)
                             v = (child.text or "") if child is not None else ""
                         rows[cmap[f]].append(v)
-                    rids.append(base + i)
-            out = pd.DataFrame(rows)
-            out[RID] = pd.Series(rids, dtype="int64")
-            yield out
+                    rows[_META_FP].append(path)
+                    rows["__pos"].append(i)
+            yield pd.DataFrame(rows).astype({"__pos": "int64"})
 
     files = (
         spark.read.format("binaryFile")
         .load(source.source)
-        .select(F.col("path"), F.col("content"))
+        .select(F.col("_metadata.file_path").alias("path"), F.col("content"))
     )
-    return files.mapInPandas(parse, schema=out_schema)
+    parsed = files.mapInPandas(parse, schema=out_schema)
+    return _with_rid(parsed, [cmap[f] for f in field_list], pos=F.col("__pos"))

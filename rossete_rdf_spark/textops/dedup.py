@@ -140,8 +140,8 @@ def ngram_jaccard_pairs(
     # exchange+sort is reused by BOTH join inputs and costs nothing
     # extra, while the anti-join variant re-tokenizes the corpus for
     # the hot-gram aggregate and then sorts both join sides anyway.
-    # (lsh.band_rows uses the anti-join shape instead because its
-    # signature aggregate is shared via AQE stage reuse.)
+    # (LSH blocking caps its band buckets inside the bucket aggregate it
+    # already runs, so it needs neither a window nor an anti-join.)
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("g")
@@ -365,14 +365,16 @@ def incremental_minhash_neardup(
 
     Plan: ONE scan builds signatures for both sides (the bucket is a pure
     function of the id, recomputed after the signature agg rather than
-    dragged through it); banding and the hot-bucket cap are lsh.band_rows.
-    The cap applies to the CORPUS side only — that is the side whose
-    boilerplate buckets grow with the archive; the batch side is one
-    increment and joins as the (smaller) probe. The batch x corpus band join
-    is a plain equi-join on (band, key) — NOT a self-join, so cost scales
-    with batch size x bucket occupancy, not corpus^2; in production the
-    corpus banding table is a persisted, bucketed-by-key artifact appended
-    per increment, so only the batch side is ever rebuilt.
+    dragged through it); banding is lsh.band_rows. The corpus side is one
+    bucket aggregate, as in lsh.candidate_pairs: collect_list(id) per
+    (band, key), buckets of more than max_bucket ids dropped. The cap
+    applies to the CORPUS side only — that is the side whose boilerplate
+    buckets grow with the archive; the batch side is one increment and joins
+    as the (smaller) probe. The batch x corpus band join is a plain
+    equi-join on (band, key) — NOT a self-join, so cost scales with batch
+    size x bucket occupancy, not corpus^2; in production the corpus bucket
+    table is a persisted, bucketed-by-key artifact appended per increment,
+    so only the batch side is ever rebuilt.
 
     Output: (new_id, corpus_id, n_bands) — batch docs likely-near-duplicate
     of an archived doc, with LSH evidence strength."""
@@ -380,11 +382,17 @@ def incremental_minhash_neardup(
 
     sig = signatures(_doc_ngrams(docs, id_col, text_col, n))
     bucket = split_bucket(F.col("id"))
-    corp = band_rows(sig.filter(bucket < INCREMENTAL_BATCH_BUCKET), max_bucket)
+    corp = (
+        band_rows(sig.filter(bucket < INCREMENTAL_BATCH_BUCKET))
+        .groupBy("band", "key")
+        .agg(F.collect_list("id").alias("ids"))
+    )
+    if max_bucket:
+        corp = corp.filter(F.size("ids") <= max_bucket)
     batch = band_rows(sig.filter(bucket >= INCREMENTAL_BATCH_BUCKET))
     return (
-        batch.alias("b")
-        .join(corp.alias("c"), ["band", "key"])
-        .groupBy(F.col("b.id").alias("new_id"), F.col("c.id").alias("corpus_id"))
+        batch.join(corp, ["band", "key"])
+        .select(F.col("id").alias("new_id"), F.explode("ids").alias("corpus_id"))
+        .groupBy("new_id", "corpus_id")
         .agg(F.count(F.lit(1)).alias("n_bands"))
     )

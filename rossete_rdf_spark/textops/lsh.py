@@ -70,29 +70,15 @@ def signatures(grams: DataFrame) -> DataFrame:
     return proj.groupBy("id").agg(*[F.min(f"x{i}").alias(f"h{i}") for i in range(N_HASHES)])
 
 
-def band_rows(sig: DataFrame, max_bucket: int | None = None) -> DataFrame:
+def band_rows(sig: DataFrame) -> DataFrame:
     """(id, band, key) banding rows of a signature table: band key = md5 of
-    that band's '|'-joined BAND_ROWS signature columns. With max_bucket,
-    buckets of more than max_bucket ids are dropped."""
+    that band's '|'-joined BAND_ROWS signature columns."""
 
     def band(b: int) -> Column:
         rows = [F.col(f"h{b * BAND_ROWS + r}") for r in range(BAND_ROWS)]
         return F.struct(F.lit(b).alias("band"), F.md5(F.concat_ws("|", *rows)).alias("key"))
 
-    bands = sig.select("id", F.inline(F.array(*[band(b) for b in range(N_HASHES // BAND_ROWS)])))
-    if not max_bucket:
-        return bands
-    # oversized buckets are the rare tail: count them (hash agg with
-    # map-side partials; the signature exchange is shared with the probe
-    # side via AQE stage reuse) and broadcast-anti the band rows against
-    # that tiny hot set — no window sort over the full banding table
-    hot = (
-        bands.groupBy("band", "key")
-        .agg(F.count(F.lit(1)).alias("__bn"))
-        .filter(F.col("__bn") > max_bucket)
-        .select("band", "key")
-    )
-    return bands.join(F.broadcast(hot), ["band", "key"], "left_anti")
+    return sig.select("id", F.inline(F.array(*[band(b) for b in range(N_HASHES // BAND_ROWS)])))
 
 
 def candidate_pairs(grams: DataFrame, max_bucket: int | None = MAX_BUCKET) -> DataFrame:

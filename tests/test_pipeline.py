@@ -121,6 +121,15 @@ def test_pipeline_resume_identity(spark, pages, workdir):
     assert a == b
 
 
+def test_unknown_stop_after_is_rejected(spark, pages, tmp_path):
+    # a typo must not silently run the whole pipeline; it fails before any
+    # stage runs or the workdir is created
+    workdir = tmp_path / "typo"
+    with pytest.raises(ValueError, match="link"):
+        run_kg_pipeline(spark, pages, str(workdir), stop_after="link")
+    assert not workdir.exists()
+
+
 def test_unpivot_pivot_types_cover_generated_events(spark):
     # r6 ADVICE: events_unpivot_roundtrip only round-trips event types in
     # PIVOT_TYPES while its oracle aggregates ALL types — pin the data

@@ -143,6 +143,46 @@ def test_rml_parquet_scan_is_column_pruned(spark):
     assert all("n_comment" not in ln for ln in nation_scans)
 
 
+def test_source_rid_plan_follows_file_count(spark, tmp_path):
+    # one parquet file and one JSON file under an iterator keep the scan's
+    # monotonic id: no file-key table, no window, no broadcast, no file
+    # metadata read; two CSV
+    # files sort data rows in exactly one window, per file, and key the
+    # files from the driver's listing (a local table) — the files are
+    # scanned once
+    from rossete_rdf_spark.rml.ast import LogicalSource
+    from rossete_rdf_spark.rml.sources import load_logical_source
+
+    one = load_logical_source(
+        spark, LogicalSource(source=f"{SF}/nation.parquet", fmt="parquet"), ["n_name"]
+    )
+    names = _node_names(one)
+    assert "Window" not in names and "BroadcastExchange" not in names, names
+
+    (tmp_path / "one.json").write_text('{"a": [{"x": 1}, {"x": 2}]}')
+    one_json = load_logical_source(
+        spark, LogicalSource(source=str(tmp_path / "one.json"), fmt="json", iterator="$.a[*]"), ["x"]
+    )
+    names = _node_names(one_json)
+    assert "Window" not in names and "BroadcastExchange" not in names, names
+    assert "Exchange" not in names, names
+    assert "file_path" not in _plan(one_json)  # the scan emits no metadata columns
+
+    d = tmp_path / "csvdir"
+    d.mkdir()
+    (d / "a.csv").write_text("x\n1\n2\n")
+    (d / "b.csv").write_text("x\n3\n")
+    two = load_logical_source(spark, LogicalSource(source=str(d), fmt="csv"), ["x"])
+    plan = _plan(two)
+    windows = [ln for ln in plan.splitlines() if ln.startswith("Arguments: [") and "windowspec" in ln]
+    names = _node_names(two)
+    assert names.count("Window") == len(windows) == 1, windows
+    assert "row_number()" in windows[0], windows
+    assert names.count("BroadcastExchange") == 1 and "LocalTableScan" in names, names
+    assert names.count("Scan") == 1, names
+    assert sorted(r["f_x"] for r in two.collect()) == ["1", "2", "3"]
+
+
 def test_bgp_lang_side_never_tokenizes(spark):
     # kg_bgp_entity_lang: Catalyst must constant-fold the lang-pattern filter
     # against the mention branch's literal predicate and prune that union

@@ -11,7 +11,7 @@ import sys
 
 from rossete_rdf_spark.rml.ast import LogicalSource
 from rossete_rdf_spark.rml.config import EngineConfig, FileSpec, config_from_json
-from rossete_rdf_spark.rml.sources import load_logical_source, sanitize
+from rossete_rdf_spark.rml.sources import RID, load_logical_source, sanitize
 
 
 def _spec_cfg(path, **kw):
@@ -166,7 +166,8 @@ def test_xml_real_reader_optin(spark, tmp_path):
 
     cfg = EngineConfig(xml_real=True)
     df = load_logical_source(spark, src, ["@id", "name"], config=cfg)
-    rows = sorted((r[sanitize("@id")], r[sanitize("name")]) for r in df.collect())
+    # one file: __rid follows element order
+    rows = [(r[sanitize("@id")], r[sanitize("name")]) for r in df.orderBy(RID).collect()]
     assert rows == [("1", "alpha"), ("2", "beta")]
 
 
@@ -229,8 +230,9 @@ def test_whatwg_encoding_aliases():
 
 
 def test_strict_ingest_order_multi_file_csv(spark, tmp_path):
+    """A directory source gets the exact (file, row-in-file) __rid by
+    default: the file key in the high bits, the row index in the low 40."""
     from rossete_rdf_spark.rml.ast import LogicalSource
-    from rossete_rdf_spark.rml.config import EngineConfig
     from rossete_rdf_spark.rml.sources import load_logical_source as load_source
 
     d = tmp_path / "csvdir"
@@ -239,9 +241,7 @@ def test_strict_ingest_order_multi_file_csv(spark, tmp_path):
     (d / "b.csv").write_text("id,name\n4,delta\n5,epsilon\n")
     src = LogicalSource(source=str(d), fmt="csv", iterator=None)
 
-    df = load_source(
-        spark, src, ["id", "name"], EngineConfig(strict_ingest_order=True)
-    )
+    df = load_source(spark, src, ["id", "name"])
     rows = sorted(
         [(r["f_id"], r["__rid"]) for r in df.collect()], key=lambda t: t[1]
     )
@@ -259,22 +259,28 @@ def test_strict_ingest_order_multi_file_csv(spark, tmp_path):
 
 
 def test_strict_ingest_order_json_iterator(spark, tmp_path):
+    """Two JSON files behind an iterator: the file path and block start are
+    captured before the explode and threaded through _apply_json_iterator,
+    so each exploded row keeps its (file, row-in-file) __rid."""
     from rossete_rdf_spark.rml.ast import LogicalSource
-    from rossete_rdf_spark.rml.config import EngineConfig
     from rossete_rdf_spark.rml.sources import load_logical_source as load_source
 
     d = tmp_path / "jsondir"
     d.mkdir()
     (d / "x.json").write_text('{"rows": [{"id": "1"}, {"id": "2"}]}')
+    (d / "y.json").write_text('{"rows": [{"id": "3"}, {"id": "4"}, {"id": "5"}]}')
     src = LogicalSource(source=str(d), fmt="json", iterator="$.rows[*]")
-    df = load_source(spark, src, ["id"], EngineConfig(strict_ingest_order=True))
-    got = sorted((r["f_id"], r["__rid"] & ((1 << 40) - 1)) for r in df.collect())
-    assert got == [("1", 1), ("2", 2)]
+    df = load_source(spark, src, ["id"])
+    low = (1 << 40) - 1
+    got = sorted((r["__rid"] >> 40, r["__rid"] & low, r["f_id"]) for r in df.collect())
+    assert got == [(1, 1, "1"), (1, 2, "2"), (2, 1, "3"), (2, 2, "4"), (2, 3, "5")]
 
 
 def test_strict_ingest_order_config_key():
-    from rossete_rdf_spark.rml.config import config_from_json
+    """Ingest order is not configurable; a config that sets the old key
+    still loads (unknown keys are ignored, like "threads") and the key
+    changes nothing."""
+    from rossete_rdf_spark.rml.config import EngineConfig, config_from_json
 
-    cfg = config_from_json({"strict-ingest-order": True})
-    assert cfg.strict_ingest_order is True
-    assert config_from_json({}).strict_ingest_order is False
+    cfg = config_from_json({"strict-ingest-order": True, "threads": 4, "output-format": "nt"})
+    assert cfg == EngineConfig(output_format="nt")
