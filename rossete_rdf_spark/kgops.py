@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .rml.terms import RDF_TYPE, XSD_INTEGER, XSD_STRING
 from .textops.common import words_col
 
 MIN_MENTION_LEN = 4
@@ -111,9 +112,6 @@ def doc_triples_from(docs: DataFrame) -> DataFrame:
     kg_predicate_stats, kg_bgp_entity_lang, and kg_triples_delta so every
     triple consumer sees the identical materialisation."""
     subj = F.concat(F.lit(f"<{DOC_NS}"), F.col("doc_id"), F.lit(">"))
-    xsd_string = "<http://www.w3.org/2001/XMLSchema#string>"
-    xsd_int = "<http://www.w3.org/2001/XMLSchema#integer>"
-    rdf_type = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
 
     def po(pred, obj):
         return F.struct(pred.alias("pred"), obj.alias("obj"))
@@ -122,14 +120,14 @@ def doc_triples_from(docs: DataFrame) -> DataFrame:
         subj.alias("subj"),
         F.explode(
             F.array(
-                po(F.lit(rdf_type), F.lit(f"<{ONTO}Document>")),
+                po(F.lit(RDF_TYPE), F.lit(f"<{ONTO}Document>")),
                 po(
                     F.lit(f"<{ONTO}lang>"),
-                    F.concat(F.lit('"'), F.col("lang"), F.lit(f'"^^{xsd_string}')),
+                    F.concat(F.lit('"'), F.col("lang"), F.lit(f'"^^{XSD_STRING}')),
                 ),
                 po(
                     F.lit(f"<{ONTO}nChars>"),
-                    F.concat(F.lit('"'), F.col("n_chars"), F.lit(f'"^^{xsd_int}')),
+                    F.concat(F.lit('"'), F.col("n_chars"), F.lit(f'"^^{XSD_INTEGER}')),
                 ),
                 po(
                     F.lit(f"<{ONTO}source>"),
@@ -166,7 +164,6 @@ def kg_doc_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 MENTIONS_PRED = f"<{ONTO}mentions>"
 LANG_PRED = f"<{ONTO}lang>"
-RDF_TYPE_PRED = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
 
 
 def kg_predicate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -501,7 +498,7 @@ def kg_shacl_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     focus by construction: minCount from the distinct focus set, value
     shapes from single-valued predicates)."""
     t = doc_triples_from(_docs(spark, sf_dir))
-    focus = t.filter(F.col("pred") == RDF_TYPE_PRED).select("subj")
+    focus = t.filter(F.col("pred") == RDF_TYPE).select("subj")
     ment = t.filter(F.col("pred") == MENTIONS_PRED).select("subj")
     v_mincount = focus.join(ment, "subj", "left_anti").select(
         "subj", F.lit("MentionsMinCount").alias("shape"), F.lit("").alias("value")

@@ -64,10 +64,7 @@ from .textops.quality import (
     WINNOW_K,
     WINNOW_W,
 )
-
-RDF_TYPE = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
-XSD_STRING = "<http://www.w3.org/2001/XMLSchema#string>"
-XSD_INT = "<http://www.w3.org/2001/XMLSchema#integer>"
+from .rml.terms import RDF_TYPE, XSD_INTEGER, XSD_STRING
 
 _FP = "md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))"
 _WORDS = sql_words("text")
@@ -559,7 +556,7 @@ t_{tag} AS (
   UNION ALL
   SELECT subj, '<{ONTO}lang>', '"' || lang || '"^^{XSD_STRING}' FROM s_{tag}
   UNION ALL
-  SELECT subj, '<{ONTO}nChars>', '"' || n_chars::VARCHAR || '"^^{XSD_INT}' FROM s_{tag}
+  SELECT subj, '<{ONTO}nChars>', '"' || n_chars::VARCHAR || '"^^{XSD_INTEGER}' FROM s_{tag}
   UNION ALL
   SELECT subj, '<{ONTO}source>', '<http://kg.example.com/source/' || source || '>' FROM s_{tag}
   UNION ALL
@@ -898,7 +895,7 @@ rt AS (SELECT '<http://ex.org/region/' || r_regionkey::VARCHAR || '>' AS subj,
               r_name, r_regionkey FROM region)
 SELECT subj, '{RDF_TYPE}' AS pred, '<http://ex.org/Nation>' AS obj FROM nt
 UNION ALL SELECT subj, '<http://ex.org/name>', '"' || n_name || '"^^{XSD_STRING}' FROM nt
-UNION ALL SELECT subj, '<http://ex.org/key>', '"' || n_nationkey::VARCHAR || '"^^{XSD_INT}' FROM nt
+UNION ALL SELECT subj, '<http://ex.org/key>', '"' || n_nationkey::VARCHAR || '"^^{XSD_INTEGER}' FROM nt
 UNION ALL SELECT n.subj, '<http://ex.org/inRegion>', r.subj
           FROM nt n JOIN rt r ON n.n_regionkey = r.r_regionkey
 UNION ALL SELECT subj, '{RDF_TYPE}', '<http://ex.org/Region>' FROM rt
@@ -940,7 +937,7 @@ WITH s AS (SELECT '<http://ex.org/nation/' || n_nationkey::VARCHAR || '>' AS sub
                   n_name, n_nationkey FROM nation)
 SELECT subj, '{RDF_TYPE}' AS pred, '<http://ex.org/Nation>' AS obj FROM s
 UNION ALL SELECT subj, '<http://ex.org/name>', '"' || n_name || '"^^{XSD_STRING}' FROM s
-UNION ALL SELECT subj, '<http://ex.org/key>', '"' || n_nationkey::VARCHAR || '"^^{XSD_INT}' FROM s
+UNION ALL SELECT subj, '<http://ex.org/key>', '"' || n_nationkey::VARCHAR || '"^^{XSD_INTEGER}' FROM s
 """
 
 # S2: nested-JSON fixture is likewise nation-derived.

@@ -22,17 +22,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..kgops import ENTITY_NS, ONTO
+from ..rml.terms import RDF_TYPE, XSD_DATETIME, XSD_STRING
 from .canonicalize import canonical_entity_map
 from .checkpoint import CheckpointManager
 from .extract import extract_pages
 from .mentions import build_gazetteer, link_mentions, page_mentions
 from .pagedup import canonical_pages
-
-ENTITY_NS = "http://kg.example.com/entity/"
-ONTO = "http://kg.example.com/ontology#"
-RDF_TYPE = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
-XSD_STRING = "<http://www.w3.org/2001/XMLSchema#string>"
-XSD_DATETIME = "<http://www.w3.org/2001/XMLSchema#dateTime>"
 
 STAGES = (
     "extract",

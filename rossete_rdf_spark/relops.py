@@ -1,5 +1,6 @@
 """Relational operators exposed as standalone, oracle-checkable queries:
-the RML J1 first-match join as a reusable op, event sessionization/windowed
+the RML J1 first-match join (rml.compiler.first_match_join) over TPC-H-ish
+tables, event sessionization/windowed
 aggregation, and two TPC-H-style health queries used as bench anchors."""
 
 from __future__ import annotations
@@ -8,49 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def first_match_join(
-    child: DataFrame,
-    parent: DataFrame,
-    on: list[tuple[str, str]],
-    parent_order: list[str],
-    parent_cols: list[str],
-    order_col=None,
-) -> DataFrame:
-    """Equi-join keeping only the FIRST matching parent row per join key —
-    the set-oriented form of the reference's per-child-row `query_row`
-    first-match lookup (src/materialiser.rs:573-580), with the match order
-    made explicit. Parent collapses BEFORE the join: one shuffle on the join
-    keys, and the collapsed side is broadcast-able when small.
-
-    The collapse is min_by hash aggregation, not a row_number window: the
-    window's per-partition sort exchange is the shape that inverts under
-    parallelism here (BENCH.md: window 4.9->6.1s at 1->4 cores). Aggregate
-    exec tiering matters too: min_by is a DECLARATIVE aggregate, so any
-    struct in its buffer (value or ordering) makes the buffer immutable and
-    drops the plan to SortAggregate — bringing the sort back. Passing
-    `order_col` (a single fixed-width numeric Column encoding the match
-    order, which must be UNIQUE per key so the per-column min_bys agree on
-    one row) keeps every buffer primitive and the whole collapse in
-    whole-stage-codegen HashAggregate with map-side partials. Without it, a
-    single-column order is used directly; multi-column orders fall back to a
-    struct ordering (SortAggregate — correct, but the slow shape)."""
-    keys = [p for _c, p in on]
-    val_cols = [c for c in parent_cols if c not in keys]
-    if order_col is None:
-        order_col = (
-            F.col(parent_order[0])
-            if len(parent_order) == 1
-            else F.struct(*[F.col(c) for c in parent_order])
-        )
-    p1 = parent.groupBy(*keys).agg(
-        *[F.min_by(F.col(c), order_col).alias(c) for c in val_cols]
-    )
-    cond = None
-    for c, p in on:
-        e = child[c] == p1[p]
-        cond = e if cond is None else cond & e
-    return child.join(p1, cond, "inner")
+from .rml.compiler import first_match_join
 
 
 def _asof_tag(
@@ -254,16 +213,18 @@ def rel_first_match_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (l_orderkey, l_linenumber)) — J1 semantics over TPC-H-ish tables."""
     part = spark.read.parquet(f"{sf_dir}/part.parquet")
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    # (l_orderkey, l_linenumber) bit-packed into one long: linenumber is
+    # 1..7, so *8 preserves lexicographic order and stays unique (the PK) —
+    # every carried column is fixed-width, so the collapse is HashAggregate
+    li = li.select(
+        "l_partkey",
+        "l_orderkey",
+        "l_linenumber",
+        "l_quantity",
+        (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("l_order"),
+    )
     out = first_match_join(
-        part.select("p_partkey", "p_name"),
-        li,
-        on=[("p_partkey", "l_partkey")],
-        parent_order=["l_orderkey", "l_linenumber"],
-        parent_cols=["l_partkey", "l_orderkey", "l_linenumber", "l_quantity"],
-        # (l_orderkey, l_linenumber) bit-packed into one long: linenumber is
-        # 1..7, so *8 preserves lexicographic order and stays unique (the PK)
-        # — keeps the collapse in HashAggregate (see first_match_join)
-        order_col=F.col("l_orderkey") * 8 + F.col("l_linenumber"),
+        part.select("p_partkey", "p_name"), li, [("p_partkey", "l_partkey")], "l_order"
     )
     return out.select(
         "p_partkey",

@@ -10,6 +10,8 @@ from __future__ import annotations
 import hashlib
 import re
 
+from .terms import RDF_TYPE
+
 Triple = tuple[str, str, str]
 
 _WS = re.compile(r"\s+")
@@ -53,7 +55,7 @@ def parse_graph_text(text: str) -> set[Triple]:
         else:
             continue
         if p == "a":
-            p = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
+            p = RDF_TYPE
         triples.add((subject, p, o))
     return triples
 

@@ -10,9 +10,9 @@ reference's `query_row` first-match semantics (src/materialiser.rs:573-580).
 
 Scale notes (100 TB design point):
 - term construction is pure Column exprs -> whole-stage codegen, no Python
-- the per-map dedup and the parent first-match collapse are min_by hash
-  aggregations (map-side partial agg, NO sort exchange — a row_number window
-  would sort the full relation on the keys)
+- ingest-order ties are broken by two primitives, both one aggregation
+  with map-side partials and no row_number window: first_occurrence_dedup
+  (per-map dedup, P2) and first_match_join (parent collapse + equi-join, J1)
 - the referencing join is an equi-join that AQE can broadcast (small dims)
   or skew-split (hub keys); no driver-side loops
 """
@@ -41,34 +41,46 @@ def _same_source(a: TriplesMap, b: TriplesMap) -> bool:
 
 
 def first_occurrence_dedup(df: DataFrame, keys: list[str], order_col: str = RID) -> DataFrame:
-    """DISTINCT on `keys` keeping the first-ingested row — the reference's
-    `GROUP BY fields HAVING MIN(col_id)` (src/materialiser.rs:358) and its
-    ingest-time duplicate delete (src/input.rs:454-466) collapse to ONE
-    hash aggregation: min_by(struct(other cols), order_col).
+    """DISTINCT on `keys` keeping the first row by `order_col` — the
+    reference's `GROUP BY fields HAVING MIN(col_id)` (src/materialiser.rs:358)
+    and its ingest-time duplicate delete (src/input.rs:454-466): one
+    aggregation, `min_by(c, order_col)` per carried column plus
+    `min(order_col)`, in `df`'s column order.
 
-    Hash agg, not a row_number window, on purpose: the window needs a full
-    sort exchange on the keys; min_by gets map-side partial aggregation and
-    no sort — measured 3.6x faster at 4 cores and, unlike the sort, it
-    SCALES with cores (the window inverted 4.9s->6.1s from 1 to 4 cores on
-    10M rows in this environment; min_by went 5.8s->1.6s)."""
-    others = [c for c in df.columns if c not in keys]
-    if not others:
-        return df.dropDuplicates(keys)
-    if others == [order_col]:
-        # the only carried column IS the ordering column: min_by(x, x) is
-        # min(x) — a primitive-buffer declarative aggregate that stays in
-        # whole-stage HashAggregate, where the struct-valued min_by below
-        # forces ObjectHashAggregate (per-group JVM objects). On the
-        # 40M-unique-key dedup of the scaling workload this is the
-        # difference between the UnsafeRow hash map and object
-        # aggregation + GC (guide §2.3: narrower aggregation state).
-        return df.groupBy(*[F.col(k) for k in keys]).agg(
-            F.min(order_col).alias(order_col)
+    Precondition: when columns other than `keys` and `order_col` are
+    carried, `order_col` is unique per key, so every min_by picks the same
+    row (`__rid` is unique; so is any primary-key packing).
+
+    The aggregate kind follows the carried columns: all fixed-width keeps
+    every buffer primitive -> whole-stage HashAggregate; a string carried
+    makes min_by's buffer immutable -> SortAggregate. Either way it is an
+    aggregation with map-side partials, not a row_number window (a full
+    sort exchange on the keys: measured 3.6x slower at 4 cores, and it did
+    not scale with cores — 4.9s->6.1s from 1 to 4 cores on 10M rows)."""
+    carried = [c for c in df.columns if c not in keys and c != order_col]
+    return (
+        df.groupBy(*keys)
+        .agg(
+            *[F.min_by(c, order_col).alias(c) for c in carried],
+            F.min(order_col).alias(order_col),
         )
-    row = F.min_by(F.struct(*[F.col(c) for c in others]), F.col(order_col))
-    return df.groupBy(*[F.col(k) for k in keys]).agg(row.alias("__row")).select(
-        *keys, "__row.*"
+        .select(*df.columns)
     )
+
+
+def first_match_join(
+    child: DataFrame, parent: DataFrame, on: list[tuple[str, str]], order_col: str
+) -> DataFrame:
+    """Inner equi-join of `child` to the FIRST `parent` row by `order_col`
+    per join key — the set-oriented form of the reference's per-child-row
+    `query_row` first-match lookup (src/materialiser.rs:573-580). `on` holds
+    (child column, parent column) pairs, ANDed; the parent collapses with
+    first_occurrence_dedup BEFORE the join, so the collapsed side is
+    broadcastable when small. Returns child's columns plus the collapsed
+    parent's (its `order_col` included)."""
+    first = first_occurrence_dedup(parent, [p for _c, p in on], order_col)
+    cond = [child[c] == first[p] for c, p in on]
+    return child.join(first, cond or None, "inner")
 
 
 def materialize_map(
@@ -206,22 +218,11 @@ def _join_pom_frame(
         *[F.col(sanitize(f)).alias(pmap_cols[f]) for f in parent_fields],
         F.col(RID).alias("__prid"),
     )
-    join_keys = [pmap_cols[p] for _c, p in join.conditions]
-    # first-match collapse: ONE parent row per join-key tuple, by ingest order
-    # — same min_by hash aggregation as first_occurrence_dedup (no sort)
-    parent_df = first_occurrence_dedup(parent_df, join_keys, order_col="__prid").drop(
-        "__prid"
-    )
-
-    cond = None
-    for child_f, parent_f in join.conditions:
-        c = child[cmap[child_f]] == parent_df[pmap_cols[parent_f]]
-        cond = c if cond is None else (cond & c)
-
-    joined = child.join(parent_df, cond, "inner")
+    on = [(cmap[c], pmap_cols[p]) for c, p in join.conditions]
+    joined = first_match_join(child, parent_df, on, order_col="__prid")
     obj_col = template_column(parent_map.subject.template, pmap_cols)
     return joined.filter(iri_is_valid(obj_col)).select(
-        child["subj"].alias("subj"), F.lit(pred).alias("pred"), obj_col.alias("obj")
+        "subj", F.lit(pred).alias("pred"), obj_col.alias("obj")
     )
 
 

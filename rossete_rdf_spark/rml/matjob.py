@@ -2,22 +2,23 @@
 
 Builds child/parent relations with `spark.range` (fully distributed, no
 external data), then runs the engine's core operators at scale:
-  P2 projected-field dedup (first-occurrence min_by hash aggregation)
+  P2 projected-field dedup (first_occurrence_dedup)
   P3 subject minting (template concat + space-discard)
   J1 referencing-object-map join with first-match parent collapse
   P4/P5 multi-predicate emit in the compiler's array+explode single pass
   W1 triple assembly
 This is the join/shuffle-dominated heart of graph materialization — the part
 whose throughput determines 100 TB feasibility — expressed with exactly the
-same compiler primitives the queries use (first_occurrence_dedup + equi-join
-+ array/explode term pass)."""
+same compiler primitives the queries use (first_occurrence_dedup,
+first_match_join and the array/explode term pass)."""
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .compiler import first_occurrence_dedup
+from .compiler import first_match_join, first_occurrence_dedup
+from .terms import XSD_INTEGER
 
 
 def rml_materialize_job(
@@ -40,7 +41,7 @@ def rml_materialize_job(
     )
 
     # P2: dedup child on its projected fields, first occurrence by ingest id
-    # (the engine's own primitive: min_by hash aggregation, no sort exchange).
+    # (the engine's own primitive: one aggregation, no sort exchange).
     # NOTE (r6, measured): pre-partitioning the dedup by the join key to
     # share one exchange (guide §2.4) was tried — dedup keyed by c_ref +
     # shuffle_hash-hinted join, one 40M-row shuffle instead of two — and ran
@@ -50,10 +51,8 @@ def rml_materialize_job(
     # aggregation below the exchange. Kept the planner shape.
     child = first_occurrence_dedup(child, ["c_id", "c_ref"], order_col="c_attr")
 
-    # J1 parent collapse: first row per join key by ingest order
-    p1 = first_occurrence_dedup(parent, ["p_key"], order_col="p_rid")
-
-    joined = child.join(p1, child["c_ref"] == p1["p_key"], "inner")
+    # J1: first parent row per join key by ingest order
+    joined = first_match_join(child, parent, [("c_ref", "p_key")], order_col="p_rid")
 
     # P3-P5 + W1: mint the subject IRI, then emit ALL scalar predicates in
     # the compiler's single-pass array+explode shape (compiler.py:90-139) —
@@ -61,7 +60,7 @@ def rml_materialize_job(
     # This matches what materialize_map really does per row (real TriplesMaps
     # carry several predicateObjectMaps), not a one-triple strawman.
     subj = F.concat(F.lit("<http://ex.org/child/"), F.col("c_id"), F.lit(">"))
-    xsd_int = '"^^<http://www.w3.org/2001/XMLSchema#integer>'
+    xsd_int = f'"^^{XSD_INTEGER}'
 
     def po(pred: str, obj) -> F.Column:
         return F.struct(F.lit(pred).alias("pred"), obj.alias("obj"))

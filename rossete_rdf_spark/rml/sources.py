@@ -18,10 +18,12 @@ __rid determinism: the order is read off the source's file count
   - SEVERAL files (a directory or glob) get (file key << 40) + row-in-file,
     the file key being the file's rank in that sorted listing (a broadcast
     local table; the files are not scanned for it). Row-in-file is
-    parquet's _metadata.row_index, XML's element index, or for CSV/JSON a
+    parquet's _metadata.row_index, XML's element index, JSON's row offset
+    in its scan partition (a multi-line JSON file is never split, so its
+    rows sit together and in order in one partition), or for CSV a
     per-file window over (block start, scan position) — a shuffle and sort
-    of the source's rows, the price of exact order. This order does not
-    depend on how Spark bin-packs the files into splits.
+    of the source's rows, the price of exact order for a splittable file.
+    This order does not depend on how Spark bin-packs the files into splits.
 Catalog tables (`table` format) keep the bare scan id: Hive-serde tables
 have no _metadata columns.
 """
@@ -87,22 +89,19 @@ def _file_keys(spark: SparkSession, files: list) -> DataFrame:
 
 def _with_rid(df: DataFrame, cols: list, pos=None) -> DataFrame:
     """Project `cols` and attach __rid (module docstring). `pos` is the
-    row-in-file column where the source has one; without it, row-in-file is
-    a window partitioned by file — parallel across files. File path and
-    block start come from the _META_FP/_META_BS columns when `df` carries
-    them (an iterator or a parser that drops the scan columns), else from
-    the scan's _metadata."""
+    row-in-file column where the source has one; without it (CSV, whose
+    files can be split), row-in-file is a window partitioned by file —
+    parallel across files. The file path comes from the _META_FP column
+    when `df` carries it (an iterator or a parser that drops the scan
+    columns), else from the scan's _metadata."""
     files = df.inputFiles()
     if len(files) < 2:
         return df.select(*cols).withColumn(RID, F.monotonically_increasing_id())
     from pyspark.sql.window import Window
 
-    def meta(name: str, field: str):
-        return F.col(name) if name in df.columns else F.col(f"_metadata.{field}")
-
-    fp = meta(_META_FP, "file_path").alias(_META_FP)
+    fp = F.col(_META_FP if _META_FP in df.columns else "_metadata.file_path").alias(_META_FP)
     if pos is None:
-        bs = meta(_META_BS, "file_block_start").alias(_META_BS)
+        bs = F.col("_metadata.file_block_start").alias(_META_BS)
         staged = df.select(*cols, fp, bs, F.monotonically_increasing_id().alias("__mono"))
         pos = F.row_number().over(Window.partitionBy(_META_FP).orderBy(_META_BS, "__mono"))
     else:
@@ -149,7 +148,7 @@ def _apply_json_iterator(df: DataFrame, iterator: str) -> DataFrame:
 
     # ingest-order metadata columns ride along through every explode so the
     # post-iterator rows still know their source file (_with_rid)
-    keep = [c for c in (_META_FP, _META_BS) if c in df.columns]
+    keep = [_META_FP] if _META_FP in df.columns else []
     expr = None
     dtype: T.DataType = df.schema
     for seg in path.split("."):
@@ -241,15 +240,11 @@ def load_logical_source(
     if fmt == "json":
         df = spark.read.option("multiLine", "true").json(source.source)
         if len(df.inputFiles()) > 1:
-            # _with_rid's several-files case: capture the file metadata
-            # BEFORE the iterator explodes away the scan columns;
+            # _with_rid's several-files case: capture the file path BEFORE
+            # the iterator explodes away the scan columns;
             # _apply_json_iterator threads it. Not for one file: Catalyst
-            # does not prune the captured columns out of the scan again.
-            df = df.select(
-                "*",
-                F.col("_metadata.file_path").alias(_META_FP),
-                F.col("_metadata.file_block_start").alias(_META_BS),
-            )
+            # does not prune the captured column out of the scan again.
+            df = df.select("*", F.col("_metadata.file_path").alias(_META_FP))
         it = (source.iterator or "$").strip()
         if it not in ("$", ""):
             df = _apply_json_iterator(df, it)
@@ -260,7 +255,12 @@ def load_logical_source(
                 cols.append(F.lit("").alias(cmap[f]))
             else:
                 cols.append(_string_or_empty(col, dtype).alias(cmap[f]))
-        return _with_rid(df, cols)
+        # row-in-file: the row's offset in its scan partition (the id's low
+        # 33 bits), taken after the iterator. A multi-line JSON file is never
+        # split, so its rows sit together and in order in one partition: the
+        # offset follows file order and is distinct within the file
+        pos = F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
+        return _with_rid(df, cols, pos=pos)
 
     if fmt == "xml":
         if config is not None and config.xml_real:

@@ -20,6 +20,9 @@ from pyspark.sql import functions as F
 from .ast import ObjectTerm, Template
 
 RDF_TYPE = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
+XSD_STRING = "<http://www.w3.org/2001/XMLSchema#string>"
+XSD_INTEGER = "<http://www.w3.org/2001/XMLSchema#integer>"
+XSD_DATETIME = "<http://www.w3.org/2001/XMLSchema#dateTime>"
 
 # warn-once registry for unresolved prefixes, mirroring the reference's
 # per-token "prefix ... was not found" log (src/materialiser.rs:752-760):

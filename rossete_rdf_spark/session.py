@@ -126,11 +126,11 @@ def _default_conf(driver_memory: str) -> dict[str, str]:
         "spark.speculation": "true",
         "spark.speculation.multiplier": "2",
         "spark.speculation.quantile": "0.5",
-        # min_by/collect-style aggregates run on ObjectHashAggregate, which
-        # falls back to SORT-based aggregation after only 128 distinct keys
-        # per task by default — defeating the whole point of hash-based
-        # first-occurrence dedup. Keep it hash-based, scaled to the heap the
-        # driver was launched with: a 4g driver gets 1<<22, a 48g one 1<<23.
+        # collect_list-style aggregates (the LSH bucket aggregate,
+        # writers.ttl_lines) run on ObjectHashAggregate, which falls back to
+        # SORT-based aggregation after only 128 distinct keys per task by
+        # default. Keep them hash-based, scaled to the heap the driver was
+        # launched with: a 4g driver gets 1<<22, a 48g one 1<<23.
         "spark.sql.objectHashAggregate.sortBased.fallbackThreshold":
             str(_object_agg_threshold(driver_memory)),
         # AQE SMJ -> shuffled-hash rewrite (guide §3.1): when every

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .common import pos_grams, words_col
-from .lsh import MAX_BUCKET, band_rows, candidate_pairs, gram_table, signatures
+from .lsh import MAX_BUCKET, band_rows, candidate_pairs, gram_table, hash60, signatures
 
 # ---------------------------------------------------------------------------
 
@@ -260,7 +260,7 @@ def decontaminate(
     ).select(
         "doc_id",
         "_b",
-        F.conv(F.substring(F.md5("gram"), 1, 15), 16, 10).cast("long").alias("gh"),
+        hash60(F.col("gram")).alias("gh"),
     )
     eval_grams = (
         grams.filter(F.col("_b") >= SPLIT_BOUNDS[1]).select("gh").distinct()

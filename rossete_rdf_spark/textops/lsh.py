@@ -33,7 +33,7 @@ MAX_BUCKET = 50
 MIN_BANDS = 2
 
 
-def minhash64(col, seed: int | str) -> Column:
+def hash60(col) -> Column:
     """Portable 60-bit hash: the first 15 hex chars of md5 as a BIGINT.
     Identical in DuckDB: ('0x' || substr(md5(x),1,15))::BIGINT.
 
@@ -41,9 +41,12 @@ def minhash64(col, seed: int | str) -> Column:
     which forces Spark out of the hash-aggregate fast path into sort-based
     aggregation (measured 20x slower on the signature build); min(long)
     stays in the UnsafeRow hash map."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{seed}|"), col)), 1, 15), 16, 10
-    ).cast("long")
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+def minhash64(col, seed: int | str) -> Column:
+    """hash60 of '{seed}|{col}': one member of a seeded hash family."""
+    return hash60(F.concat(F.lit(f"{seed}|"), col))
 
 
 def gram_table(df: DataFrame, id_col: str, grams: Column) -> DataFrame:

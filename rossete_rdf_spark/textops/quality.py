@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from .common import pos_grams, words_col
 from .dedup import normalized_fingerprint
+from .lsh import hash60, minhash64
 
 # BPE-ish lexer: words, digit runs, single punctuation marks. Identical
 # semantics under Java regex (Spark) and RE2 (DuckDB) — no lookaround.
@@ -105,14 +106,7 @@ def split_bucket(id_col, seed: str = SPLIT_SEED):
     '{seed}|{id}'. The engine-portable assignment primitive shared by
     train_test_split and incremental dedup (dedup.incremental_exact_dedup);
     the DuckDB twin is ('0x'||substr(md5(...),1,15))::BIGINT % 100."""
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(f"{seed}|"), id_col.cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
-    return F.pmod(h, F.lit(100))
+    return F.pmod(minhash64(id_col.cast("string"), seed), F.lit(100))
 
 
 def train_test_split(
@@ -428,8 +422,6 @@ def winnow_fingerprints(
     the downstream shape (explode -> groupBy fp) is the same inverted-index
     join family as the other dedup tiers. Docs shorter than k+w-1 words
     yield no fingerprints. Oracle twin: list comprehensions in oracles.py."""
-    from .lsh import minhash64
-
     # TWO projection boundaries, not style: common-subexpression elimination
     # does not reach inside higher-order-function lambdas. (1) pos_grams'
     # lambda does WINNOW_K element_at reads of the word array per gram, so
@@ -640,21 +632,9 @@ def content_key(text_col, id_col) -> F.Column:
     would silently put the row on different sides of the cutoff in the two
     engines. The id in the hash makes the key unique per row (total order,
     bit-stable ranks)."""
-    return F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.coalesce(text_col, F.lit("")),
-                    F.lit("|"),
-                    id_col.cast("string"),
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    return hash60(
+        F.concat(F.coalesce(text_col, F.lit("")), F.lit("|"), id_col.cast("string"))
+    )
 
 
 DOMAIN_QUOTA_K = 10

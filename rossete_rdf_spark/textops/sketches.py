@@ -7,8 +7,8 @@ distinct?" and "how often?" questions that are exact-aggregation killers at
   heavy_hitters_cms    count-min-sketch frequency estimates for the corpus's
                        top tokens next to their exact counts
 
-Both use the repo's portable 60-bit md5-prefix hash (textops.lsh.minhash64
-convention) so the DuckDB oracles replay the sketch arithmetic bit-for-bit —
+Both use the repo's portable 60-bit md5-prefix hash (textops.lsh.hash60 and
+its seeded minhash64) so the DuckDB oracles replay the sketch arithmetic bit-for-bit —
 deliberately NOT Spark's approx_count_distinct / datasketches, whose register
 layouts can't be reproduced in another engine. The point of each query is the
 sketch pipeline SHAPE (what shuffles, what stays fixed-size) plus an in-band
@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .common import pos_grams, words_col
-from .lsh import minhash64
+from .lsh import hash60, minhash64
 
 # 2^60: the md5-prefix hash is 15 hex digits, uniform on [0, 2^60).
 HASH_SPACE = float(1 << 60)
@@ -55,11 +55,6 @@ HLL_W_BITS = 60 - HLL_P  # 51-bit register word -> rho in [1, 52]
 # literal in both engines (the estimator numerator is a constant)
 HLL_ALPHA = 0.7213 / (1.0 + 1.079 / HLL_M)
 HLL_NUMER = HLL_ALPHA * HLL_M * HLL_M * float(1 << 52)
-
-
-def _hash60(col) -> F.Column:
-    """Unseeded portable 60-bit hash; DuckDB: ('0x'||substr(md5(x),1,15))::BIGINT."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def sketch_distinct_kmv(docs: DataFrame) -> DataFrame:
@@ -83,7 +78,7 @@ def sketch_distinct_kmv(docs: DataFrame) -> DataFrame:
     staged = docs.select(words_col(F.col("text")).alias("_ws"))
     h = (
         staged.select(F.explode(pos_grams(F.col("_ws"), KMV_NGRAM)).alias("g"))
-        .select(_hash60(F.col("g")).alias("h"))
+        .select(hash60(F.col("g")).alias("h"))
         .distinct()
     )
     # TakeOrderedAndProject: per-partition k-min heap, driver merge — no sort.
@@ -149,7 +144,7 @@ def sketch_distinct_hll(docs: DataFrame) -> DataFrame:
     staged = docs.select(words_col(F.col("text")).alias("_ws"))
     h = (
         staged.select(F.explode(pos_grams(F.col("_ws"), KMV_NGRAM)).alias("g"))
-        .select(_hash60(F.col("g")).alias("h"))
+        .select(hash60(F.col("g")).alias("h"))
         .distinct()
     )
     w = F.col("h").bitwiseAND(F.lit((1 << HLL_W_BITS) - 1))

@@ -1,6 +1,8 @@
 """Semantic property tests for the beyond-reference operators (the oracle
 cross-checks pin exact values; these pin the CLAIMED guarantees)."""
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -387,3 +389,70 @@ def test_verify_jaccard_matches_python_jaccard(spark):
     for t in (0.5, 0.6, 1.0):
         want = sorted(p for p in surf_pairs if jaccard(*p) >= t)
         assert sorted(map(tuple, verified_pairs(cands, t).collect())) == want, t
+
+
+def _first_per_key(rows, key_idx, order_idx):
+    """Pure-Python reference: the row with the smallest order value per key."""
+    first = {}
+    for r in rows:
+        k = tuple(r[i] for i in key_idx)
+        if k not in first or r[order_idx] < first[k][order_idx]:
+            first[k] = r
+    return first
+
+
+def test_first_occurrence_primitives_match_python(spark):
+    """first_occurrence_dedup and first_match_join against "first row per key
+    by order" in pure Python, on random frames with a unique order column
+    and duplicate keys: only the order column carried, fixed-width columns
+    carried, string columns carried (NULLs included), a composite key."""
+    from rossete_rdf_spark.rml.compiler import first_match_join, first_occurrence_dedup
+
+    rng = random.Random(9)
+
+    def maybe(v):
+        return None if rng.random() < 0.1 else v
+
+    n = 300
+    cases = {
+        "order only": (
+            "k int, o bigint",
+            ["k"],
+            lambda o: (rng.randrange(40), o),
+        ),
+        "fixed-width": (
+            "k int, o bigint, a double, b int",
+            ["k"],
+            lambda o: (rng.randrange(40), o, rng.random(), maybe(rng.randrange(9))),
+        ),
+        "strings": (
+            "k int, o bigint, s string, t string",
+            ["k"],
+            lambda o: (rng.randrange(40), o, f"s{rng.randrange(50)}", maybe(f"t{o}")),
+        ),
+        "composite key": (
+            "k int, k2 string, o bigint, v string",
+            ["k", "k2"],
+            lambda o: (rng.randrange(8), f"x{rng.randrange(5)}", o, f"v{o}"),
+        ),
+    }
+    for name, (schema, keys, make) in cases.items():
+        orders = rng.sample(range(10**6), n)  # unique per key, random vs keys
+        rows = [make(o) for o in orders]
+        parent = spark.createDataFrame(rows, schema)
+        cols = parent.columns
+        first = _first_per_key(rows, [cols.index(k) for k in keys], cols.index("o"))
+
+        got = first_occurrence_dedup(parent, keys, order_col="o").collect()
+        assert sorted(map(tuple, got), key=repr) == sorted(first.values(), key=repr), name
+
+        # child keys reach beyond the parent's, so some child rows match nothing
+        child_rows = [
+            (i, *(rng.randrange(-2, 42) if k == "k" else f"x{rng.randrange(7)}" for k in keys))
+            for i in range(n)
+        ]
+        ckeys = ["c_" + k for k in keys]
+        child = spark.createDataFrame(child_rows, ["cid", *ckeys])
+        joined = first_match_join(child, parent, list(zip(ckeys, keys)), "o").collect()
+        expected = [c + first[c[1:]] for c in child_rows if c[1:] in first]
+        assert sorted(map(tuple, joined), key=repr) == sorted(expected, key=repr), name

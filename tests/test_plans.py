@@ -146,7 +146,8 @@ def test_rml_parquet_scan_is_column_pruned(spark):
 def test_source_rid_plan_follows_file_count(spark, tmp_path):
     # one parquet file and one JSON file under an iterator keep the scan's
     # monotonic id: no file-key table, no window, no broadcast, no file
-    # metadata read; two CSV
+    # metadata read; two JSON files (never split) take row-in-file from the
+    # scan position: a broadcast file-key table and no window; two CSV
     # files sort data rows in exactly one window, per file, and key the
     # files from the driver's listing (a local table) — the files are
     # scanned once
@@ -167,6 +168,18 @@ def test_source_rid_plan_follows_file_count(spark, tmp_path):
     assert "Window" not in names and "BroadcastExchange" not in names, names
     assert "Exchange" not in names, names
     assert "file_path" not in _plan(one_json)  # the scan emits no metadata columns
+
+    jd = tmp_path / "jsondir"
+    jd.mkdir()
+    (jd / "a.json").write_text('{"a": [{"x": 1}, {"x": 2}]}')
+    (jd / "b.json").write_text('{"a": [{"x": 3}]}')
+    two_json = load_logical_source(
+        spark, LogicalSource(source=str(jd), fmt="json", iterator="$.a[*]"), ["x"]
+    )
+    names = _node_names(two_json)
+    assert "Window" not in names and "Sort" not in names, names
+    assert names.count("BroadcastExchange") == 1 and names.count("Scan") == 1, names
+    assert sorted(r["f_x"] for r in two_json.collect()) == ["1", "2", "3"]
 
     d = tmp_path / "csvdir"
     d.mkdir()
@@ -383,29 +396,29 @@ def test_pq_encode_is_min_by_agg_not_window(spark):
 
 
 def test_first_occurrence_dedup_single_column_stays_hash_agg(spark):
-    # r6: when the only carried column IS the ordering column, the dedup
-    # lowers to min() — primitive buffer, whole-stage HashAggregate. The
-    # struct-valued min_by general path falls to SortAggregate (declarative
-    # aggregate with an immutable buffer), so this fast path is what keeps
-    # the 40M-key scaling dedup sort-free. Results must be identical.
+    # the dedup is one aggregation; with only fixed-width columns carried —
+    # the order column alone, or beside other numbers — every aggregation
+    # buffer is primitive, so it plans whole-stage HashAggregate: no
+    # SortAggregate, no ObjectHashAggregate, no Window sort
     from pyspark.sql import functions as F
 
     from rossete_rdf_spark.rml.compiler import first_occurrence_dedup
 
     df = spark.range(0, 1000).select(
-        (F.col("id") % 100).alias("k"), (F.col("id") % 7).alias("v")
+        (F.col("id") % 100).alias("k"),
+        (F.col("id") % 7).alias("v"),
+        (F.col("id") * 10).alias("o"),
     )
-    fast = first_occurrence_dedup(df, ["k"], order_col="v")
-    plan = _plan(fast)
-    assert "SortAggregate" not in plan and "ObjectHashAggregate" not in plan
-    assert "HashAggregate" in plan
-    # same rows as the general struct path on an extra carried column
-    general = first_occurrence_dedup(
-        df.withColumn("w", F.col("v") * 10), ["k"], order_col="v"
-    ).select("k", "v")
-    assert sorted(map(tuple, fast.collect())) == sorted(
-        map(tuple, general.collect())
-    )
+    only = first_occurrence_dedup(df.select("k", "o"), ["k"], order_col="o")
+    wide = first_occurrence_dedup(df, ["k"], order_col="o")
+    for d in (only, wide):
+        plan = _plan(d)
+        assert "HashAggregate" in plan
+        for shape in ("SortAggregate", "ObjectHashAggregate", "Window"):
+            assert shape not in plan, shape
+    # the first row of key k is id == k
+    assert sorted(map(tuple, wide.collect())) == [(k, k % 7, k * 10) for k in range(100)]
+    assert sorted(map(tuple, only.collect())) == [(k, k * 10) for k in range(100)]
 
 
 def test_rdfs_closure_matches_spark_fixpoint(spark):

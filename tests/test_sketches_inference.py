@@ -232,17 +232,14 @@ def test_hll_rho_never_exceeds_word_width(spark):
     # the register value is rho(51-bit word) in [1, 52]; a value outside
     # that range means the bin()-length arithmetic broke
     from rossete_rdf_spark.textops.common import pos_grams, words_col
-    from rossete_rdf_spark.textops.sketches import (
-        HLL_W_BITS,
-        KMV_NGRAM,
-        _hash60,
-    )
+    from rossete_rdf_spark.textops.lsh import hash60
+    from rossete_rdf_spark.textops.sketches import HLL_W_BITS, KMV_NGRAM
 
     h = (
         _docs(spark)
         .select(words_col(F.col("text")).alias("w"))
         .select(F.explode(pos_grams(F.col("w"), KMV_NGRAM)).alias("g"))
-        .select(_hash60(F.col("g")).alias("h"))
+        .select(hash60(F.col("g")).alias("h"))
     )
     w = F.col("h").bitwiseAND(F.lit((1 << HLL_W_BITS) - 1))
     rho = F.when(w == 0, F.lit(HLL_W_BITS + 1)).otherwise(

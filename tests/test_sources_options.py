@@ -259,21 +259,32 @@ def test_strict_ingest_order_multi_file_csv(spark, tmp_path):
 
 
 def test_strict_ingest_order_json_iterator(spark, tmp_path):
-    """Two JSON files behind an iterator: the file path and block start are
-    captured before the explode and threaded through _apply_json_iterator,
-    so each exploded row keeps its (file, row-in-file) __rid."""
+    """Two JSON files behind an iterator: the file path is captured before
+    the explode and threaded through _apply_json_iterator, and row-in-file
+    is the row's offset in its scan partition. The (file, row-in-file)
+    order must not depend on how Spark packs the files into partitions:
+    both files in one partition, or one file per partition."""
     from rossete_rdf_spark.rml.ast import LogicalSource
     from rossete_rdf_spark.rml.sources import load_logical_source as load_source
+    from rossete_rdf_spark.session import scoped_conf
 
     d = tmp_path / "jsondir"
     d.mkdir()
     (d / "x.json").write_text('{"rows": [{"id": "1"}, {"id": "2"}]}')
     (d / "y.json").write_text('{"rows": [{"id": "3"}, {"id": "4"}, {"id": "5"}]}')
     src = LogicalSource(source=str(d), fmt="json", iterator="$.rows[*]")
-    df = load_source(spark, src, ["id"])
-    low = (1 << 40) - 1
-    got = sorted((r["__rid"] >> 40, r["__rid"] & low, r["f_id"]) for r in df.collect())
-    assert got == [(1, 1, "1"), (1, 2, "2"), (2, 1, "3"), (2, 2, "4"), (2, 3, "5")]
+    layouts = {
+        1: {"spark.sql.files.openCostInBytes": "0", "spark.sql.files.minPartitionNum": "1"},
+        2: {"spark.sql.files.maxPartitionBytes": "1"},
+    }
+    for n_parts, confs in layouts.items():
+        with scoped_conf(spark, confs):
+            df = load_source(spark, src, ["id"])
+            assert df.rdd.getNumPartitions() == n_parts
+            rows = sorted((r["__rid"], r["f_id"]) for r in df.collect())
+        assert [fid for _rid, fid in rows] == ["1", "2", "3", "4", "5"], n_parts
+        assert [rid >> 40 for rid, _fid in rows] == [1, 1, 2, 2, 2], n_parts
+        assert len({rid for rid, _fid in rows}) == 5
 
 
 def test_strict_ingest_order_config_key():
