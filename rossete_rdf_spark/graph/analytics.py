@@ -24,10 +24,11 @@ the oracle-determinism anchor, exactly like textops/ann._kmeans_centroids.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kgops import linked_mentions_from
+from ..relops import top_k
 
 PAGERANK_ITERS = 5
 PAGERANK_DAMPING = 0.85
@@ -148,15 +149,13 @@ def entity_knn_edges(docs: DataFrame, k: int = KNN_K) -> DataFrame:
 
     This is the standard entity-resolution move for a near-complete
     similarity graph — the dense graph is |gazetteer|^2; the k-NN graph is
-    k*|gazetteer|. The per-src top-k is a row_number window: the partition
-    key is an entity, the partition size its neighbour count (gazetteer-
-    bounded), so the sort is dimension-side cheap — NOT the corpus-side
-    window shape BENCH.md bans."""
+    k*|gazetteer|; per-entity top-k candidate lists are also how MinoanER
+    prunes its blocking graph. The per-src top-k is relops.top_k, the ANN
+    searches' primitive: the partition key is an entity, the partition size
+    its neighbour count (gazetteer-bounded), so the sort is dimension-side
+    cheap — NOT the corpus-side window shape BENCH.md bans."""
     sym = _symmetric(comention_edges(docs))
-    rn = F.row_number().over(
-        Window.partitionBy("src").orderBy(F.col("w").desc(), F.col("dst"))
-    )
-    kept = sym.withColumn("rn", rn).filter(F.col("rn") <= k)
+    kept = top_k(sym, ["src"], [F.desc("w"), F.asc("dst")], k)
     return kept.select(
         F.least("src", "dst").alias("e1"),
         F.greatest("src", "dst").alias("e2"),

@@ -5,7 +5,7 @@ aggregation, and two TPC-H-style health queries used as bench anchors."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -643,18 +643,16 @@ def events_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def top_k_per_group(
-    df: DataFrame, group_cols: list[str], order_col, k: int, desc: bool = True
-) -> DataFrame:
-    """Generic per-group top-k: ONE shuffle on the group keys + a bounded
-    per-group sort (row_number window, then rk <= k). At scale the shuffle
-    carries only the projected columns and AQE handles group skew; for
-    extreme hub groups use salted_top_k_per_group below (take k per salt,
-    then k-of-k), which composes on this same primitive."""
-    from pyspark.sql.window import Window as W
-
-    order = F.desc(order_col) if desc else F.asc(order_col)
-    w = W.partitionBy(*group_cols).orderBy(order)
+def top_k(df: DataFrame, by: list[str], order: list[Column], k: int) -> DataFrame:
+    """Per-group top-k: rank each `by` group's rows by the `order` columns
+    into a long `rk` and keep rk <= k. The tie-break goes into `order`;
+    with a total order the output is exact. The filter sits directly on the
+    row_number, so Spark plans a WindowGroupLimit below the shuffle (each
+    task keeps at most k rows per group before the exchange), then one
+    shuffle on the group keys and a bounded per-group sort. AQE splits
+    skewed joins only, never a window partition, so a hot group still
+    sorts on one reducer: salted_top_k_per_group below spreads it."""
+    w = Window.partitionBy(*by).orderBy(*order)
     return (
         df.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
@@ -671,12 +669,7 @@ def _row_salt(df: DataFrame, n_salts: int):
 
 
 def salted_top_k_per_group(
-    df: DataFrame,
-    group_cols: list[str],
-    order_col: str,
-    k: int,
-    n_salts: int = 16,
-    desc: bool = True,
+    df: DataFrame, by: list[str], order: list[Column], k: int, n_salts: int = 16
 ) -> DataFrame:
     """Hub-safe top-k: stage 1 takes the top k within every (salt, group)
     slice — a hub group's rows spread over n_salts reducers, each sorting
@@ -686,16 +679,13 @@ def salted_top_k_per_group(
     globally), so the salt is a hash of EVERY column — row-distinct, which
     keeps tied order values spreading across slices (salting on the order
     value would collapse the common hub case of thousands of rows sharing
-    one score onto a single reducer). Same SET of surviving rows as
-    top_k_per_group; for bit-identical output under ties make order_col
-    unique per group (pack a tie-break into it) — otherwise the winners
-    among boundary-tied rows are arbitrary in BOTH variants, as for any
-    top-k. Use when single groups are too hot for one reducer."""
+    one score onto a single reducer). Same output as top_k when `order` is
+    total per group; otherwise the winners among boundary-tied rows are
+    arbitrary in BOTH, as for any top-k. Use when single groups are too
+    hot for one reducer."""
     salted = df.withColumn("__salt", _row_salt(df, n_salts))
-    partial = top_k_per_group(
-        salted, [*group_cols, "__salt"], order_col, k, desc=desc
-    ).drop("rk", "__salt")
-    return top_k_per_group(partial, group_cols, order_col, k, desc=desc)
+    partial = top_k(salted, [*by, "__salt"], order, k).drop("rk", "__salt")
+    return top_k(partial, by, order, k)
 
 
 def events_top_spenders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -707,13 +697,8 @@ def events_top_spenders(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = ev.groupBy("event_type", "user_id").agg(
         F.round(F.sum("value"), 2).alias("total_value")
     )
-    ranked = top_k_per_group(
-        per_user.withColumn(
-            "__ord", F.struct(F.col("total_value"), (-F.col("user_id")).alias("u"))
-        ),
-        ["event_type"],
-        "__ord",
-        k=3,
+    ranked = top_k(
+        per_user, ["event_type"], [F.desc("total_value"), F.asc("user_id")], k=3
     )
     return ranked.select("event_type", "user_id", "total_value", "rk")
 
@@ -726,8 +711,8 @@ def events_top_spenders_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     salt derives from the ranking value instead of the whole row
     (salted_top_k_per_group's row-distinct xxhash64 salt spreads it; the
     heavy-ties property test proves the spread). Ranks RAW events — k per
-    salt slice, then k-of-k — and packs (score, event_id) as the order key
-    so output is deterministic and oracle-comparable despite the ties."""
+    salt slice, then k-of-k — with event_id as the tie-break, so output is
+    deterministic and oracle-comparable despite the ties."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     fact = ev.select(
         F.when(F.col("event_type") == "purchase", F.col("event_type"))
@@ -738,10 +723,7 @@ def events_top_spenders_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor("value").cast("long").alias("score"),
     )
     ranked = salted_top_k_per_group(
-        fact.withColumn("__ord", F.struct(F.col("score"), F.col("event_id"))),
-        ["grp"],
-        "__ord",
-        k=5,
+        fact, ["grp"], [F.desc("score"), F.desc("event_id")], k=5
     )
     return ranked.select("grp", "event_id", "user_id", "score", "rk")
 

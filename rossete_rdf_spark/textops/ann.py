@@ -1,10 +1,20 @@
 """Similarity search over an embedding column (array<float>).
 
 ann_cosine_topk      brute-force cosine top-k — the exactness baseline
-ann_lsh_bucket_topk  sign-bucketed variant — the scale path: candidates are
-                     co-partitioned by bucket key so the join touches only
-                     same-bucket rows (an IVF/LSH-style pruning; recall is
-                     traded for a #buckets-fold cost cut)
+ann_lsh_bucket_topk  sign-bucketed variant — candidates are co-partitioned
+                     by bucket key so the join touches only same-bucket rows
+                     (recall is traded for a #buckets-fold cost cut)
+ann_ivf_topk         IVF: search the query's own inverted list, centroids =
+                     the first vectors
+ann_ivf_kmeans_topk  ann_ivf_topk with Lloyd-trained centroids
+ann_ivf_nprobe_topk  IVF probing the query's nprobe nearest lists
+ann_sq8_topk         int8 scalar-quantized dot product, exact cosine beside
+ann_pq_adc_topk      product-quantization ADC score, exact cosine beside
+ann_pq_rerank_topk   ADC shortlist re-ranked by the exact cosine
+
+The five float-cosine searches share one skeleton (_cosine_topk): broadcast
+the queries, join the candidates (on a block key, or all of them), drop the
+self-pair, round the cosine to 6 dp, and take relops.top_k per query.
 
 All arithmetic is element-wise double (cast from float before multiply) and
 sequential summation via F.aggregate, so the DuckDB oracle — same casts, same
@@ -13,14 +23,15 @@ an id tie-break to stay engine-independent.
 
 No UDFs: zip/fold on arrays stays inside codegen. For 100 TB the brute-force
 variant is a broadcast of the (small) query set against the candidate scan;
-the bucketed variant turns that into a bucket-key equi-join.
+the blocked variants turn that into a block-key equi-join.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from ..relops import top_k
 
 N_QUERIES = 10
 TOP_K = 5
@@ -49,6 +60,37 @@ def cosine_col(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _sides(df: DataFrame, n_queries: int, id_col: str, vec_col: str, *keys: str):
+    """(queries, candidates): (query_id, qv, *keys) for the first n_queries
+    ids and (cand_id, cv, *keys) for every row."""
+    c = df.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"), *keys)
+    q = c.filter(F.col("cand_id") < n_queries).select(
+        F.col("cand_id").alias("query_id"), F.col("cv").alias("qv"), *keys
+    )
+    return q, c
+
+
+def _cosine_topk(
+    q: DataFrame, c: DataFrame, k: int, on: str | None = None
+) -> DataFrame:
+    """(query_id, cand_id, sim, rk): the k best candidates per query by the
+    6-dp cosine, cand_id breaking ties. The query side is tiny and
+    broadcast; with `on` it equi-joins the candidates on that block key,
+    without it the candidate scan is one pass and the self-pair filter is
+    the nested-loop join condition. No shuffle until the per-query top-k."""
+    not_self = F.col("query_id") != F.col("cand_id")
+    if on is None:
+        pairs = F.broadcast(q).join(c, not_self)
+    else:
+        pairs = F.broadcast(q).join(c, on).filter(not_self)
+    scored = pairs.select(
+        "query_id",
+        "cand_id",
+        F.round(cosine_col(F.col("qv"), F.col("cv")), 6).alias("sim"),
+    )
+    return top_k(scored, ["query_id"], [F.desc("sim"), F.asc("cand_id")], k)
+
+
 def ann_cosine_topk(
     emb: DataFrame,
     n_queries: int = N_QUERIES,
@@ -57,27 +99,8 @@ def ann_cosine_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Top-k cosine neighbors of the first n_queries vectors (query_id,
-    cand_id, sim). Query side is tiny -> broadcast; candidate scan is one
-    pass, no shuffle until the per-query top-k window."""
-    q = emb.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    c = emb.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"))
-    scored = (
-        F.broadcast(q)
-        .join(c, F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(cosine_col(F.col("qv"), F.col("cv")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "cand_id", "sim", F.col("rk").cast("long").alias("rk"))
-    )
+    cand_id, sim, rk) against every other vector."""
+    return _cosine_topk(*_sides(emb, n_queries, id_col, vec_col), k)
 
 
 def bucket_col(vec, dims: int = BUCKET_DIMS):
@@ -138,28 +161,8 @@ def ann_lsh_bucket_topk(
     withb = emb.select(
         F.col(id_col), F.col(vec_col), bucket_col(F.col(vec_col)).alias("bucket")
     )
-    q = withb.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"), "bucket"
-    )
-    c = withb.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"), "bucket"
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, "bucket")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(cosine_col(F.col("qv"), F.col("cv")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "cand_id", "sim", F.col("rk").cast("long").alias("rk"))
-    )
+    q, c = _sides(withb, n_queries, id_col, vec_col, "bucket")
+    return _cosine_topk(q, c, k, on="bucket")
 
 
 N_CENTROIDS = 16
@@ -195,6 +198,23 @@ def _ivf_assign(
     return scored_cent, assigned
 
 
+def _own_list_topk(
+    emb: DataFrame,
+    n_queries: int,
+    k: int,
+    n_centroids: int,
+    id_col: str,
+    vec_col: str,
+    cent: DataFrame | None = None,
+) -> DataFrame:
+    """Search each query's own inverted list (nprobe=1) under the given
+    centroid table (default: the first n_centroids vectors)."""
+    _scored, assigned = _ivf_assign(emb, n_centroids, id_col, vec_col, cent=cent)
+    return _cosine_topk(
+        *_sides(assigned, n_queries, "vid", "v", "cluster"), k, on="cluster"
+    )
+
+
 def ann_ivf_topk(
     emb: DataFrame,
     n_queries: int = N_QUERIES,
@@ -212,29 +232,7 @@ def ann_ivf_topk(
     assignment is a broadcast (tiny centroid table) + one max_by hash
     aggregation per vector — no sort, no all-pairs; search is an equi-join
     co-partitioned on the list id, cost ~ 1/n_centroids of brute force."""
-    _scored_cent, assigned = _ivf_assign(emb, n_centroids, id_col, vec_col)
-    q = assigned.filter(F.col("vid") < n_queries).select(
-        F.col("vid").alias("query_id"), F.col("v").alias("qv"), "cluster"
-    )
-    c = assigned.select(
-        F.col("vid").alias("cand_id"), F.col("v").alias("cv"), "cluster"
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, "cluster")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(cosine_col(F.col("qv"), F.col("cv")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "cand_id", "sim", F.col("rk").cast("long").alias("rk"))
-    )
+    return _own_list_topk(emb, n_queries, k, n_centroids, id_col, vec_col)
 
 
 KMEANS_ITERS = 2
@@ -316,29 +314,7 @@ def ann_ivf_kmeans_topk(
     search plan is identical (broadcast centroids, max_by assignment, list
     equi-join); only the centroid table changes."""
     cent = _kmeans_centroids(emb, n_centroids, n_iters, id_col, vec_col)
-    _scored, assigned = _ivf_assign(emb, n_centroids, id_col, vec_col, cent=cent)
-    q = assigned.filter(F.col("vid") < n_queries).select(
-        F.col("vid").alias("query_id"), F.col("v").alias("qv"), "cluster"
-    )
-    c = assigned.select(
-        F.col("vid").alias("cand_id"), F.col("v").alias("cv"), "cluster"
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, "cluster")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(cosine_col(F.col("qv"), F.col("cv")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "cand_id", "sim", F.col("rk").cast("long").alias("rk"))
-    )
+    return _own_list_topk(emb, n_queries, k, n_centroids, id_col, vec_col, cent=cent)
 
 
 def ann_ivf_nprobe_topk(
@@ -360,36 +336,18 @@ def ann_ivf_nprobe_topk(
     Candidates belong to exactly one list, so probing several lists unions
     disjoint candidate sets — no dedup needed before the top-k."""
     scored_cent, assigned = _ivf_assign(emb, n_centroids, id_col, vec_col)
-    wp = Window.partitionBy("vid").orderBy(F.desc("s"), F.asc("cent_id"))
-    qprobe = (
-        scored_cent.filter(F.col("vid") < n_queries)
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select(
-            F.col("vid").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("cent_id").alias("cluster"),
-        )
+    probes = top_k(
+        scored_cent.filter(F.col("vid") < n_queries),
+        ["vid"],
+        [F.desc("s"), F.asc("cent_id")],
+        nprobe,
+    ).select(
+        F.col("vid").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.col("cent_id").alias("cluster"),
     )
-    c = assigned.select(
-        F.col("vid").alias("cand_id"), F.col("v").alias("cv"), "cluster"
-    )
-    scored = (
-        F.broadcast(qprobe)
-        .join(c, "cluster")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(cosine_col(F.col("qv"), F.col("cv")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "cand_id", "sim", F.col("rk").cast("long").alias("rk"))
-    )
+    _q, c = _sides(assigned, n_queries, "vid", "v", "cluster")
+    return _cosine_topk(probes, c, k, on="cluster")
 
 
 # --- scalar quantization (int8-style) ----------------------------------------
@@ -467,18 +425,7 @@ def ann_sq8_topk(
             F.round(cosine_col(F.col("qv"), F.col("cv")), 6).alias("sim_exact"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score_q8"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id",
-            "cand_id",
-            "score_q8",
-            "sim_exact",
-            F.col("rk").cast("long").alias("rk"),
-        )
-    )
+    return top_k(scored, ["query_id"], [F.desc("score_q8"), F.asc("cand_id")], k)
 
 
 # --- product quantization (ADC) ----------------------------------------------
@@ -718,14 +665,13 @@ def ann_pq_adc_topk(
     exact cosine rides along as the in-band accuracy report, computed only
     for the k surviving rows per query."""
     scored, normed = _pq_scored(emb, n_queries, id_col, vec_col)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score_pq"), F.asc("cand_id"))
-    top = scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
+    top = top_k(scored, ["query_id"], [F.desc("score_pq"), F.asc("cand_id")], k)
     return _attach_exact(top, normed, id_col, vec_col).select(
         "query_id",
         "cand_id",
         F.round(F.col("score_pq"), 6).alias("score_pq"),
         "sim_exact",
-        F.col("rk").cast("long").alias("rk"),
+        "rk",
     )
 
 
@@ -758,24 +704,17 @@ def ann_pq_rerank_topk(
     shortlist filter (see _attach_exact), so the float pass costs
     pool x queries rows."""
     scored, normed = _pq_scored(emb, n_queries, id_col, vec_col)
-    w_pq = Window.partitionBy("query_id").orderBy(
-        F.desc("score_pq"), F.asc("cand_id")
-    )
-    shortlist = scored.withColumn("rk_pq", F.row_number().over(w_pq)).filter(
-        F.col("rk_pq") <= pool
+    shortlist = top_k(
+        scored, ["query_id"], [F.desc("score_pq"), F.asc("cand_id")], pool
     )
     pooled = _attach_exact(shortlist, normed, id_col, vec_col)
-    w_ex = Window.partitionBy("query_id").orderBy(
-        F.desc("sim_exact"), F.asc("cand_id")
-    )
-    return (
-        pooled.withColumn("rk", F.row_number().over(w_ex))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(F.col("score_pq"), 6).alias("score_pq"),
-            "sim_exact",
-            F.col("rk").cast("long").alias("rk"),
-        )
+    # the re-rank's rk overwrites the shortlist's
+    return top_k(
+        pooled, ["query_id"], [F.desc("sim_exact"), F.asc("cand_id")], k
+    ).select(
+        "query_id",
+        "cand_id",
+        F.round(F.col("score_pq"), 6).alias("score_pq"),
+        "sim_exact",
+        "rk",
     )

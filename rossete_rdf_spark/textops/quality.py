@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..relops import salted_top_k_per_group, top_k
 from .common import pos_grams, words_col
 from .dedup import normalized_fingerprint
 from .lsh import hash60, minhash64
@@ -263,8 +264,6 @@ def tfidf_top_terms(
     corpus. The df join keys on term — a plain shuffle join that AQE
     broadcasts when the vocabulary is small.
     """
-    from pyspark.sql.window import Window
-
     w = words_col(F.lower(F.col(text_col)))
     toks = docs.select(
         F.col(id_col).alias("doc_id"), F.explode(w).alias("term")
@@ -291,15 +290,8 @@ def tfidf_top_terms(
             ).alias("score"),
         )
     )
-    rank = F.row_number().over(
-        Window.partitionBy("doc_id").orderBy(
-            F.col("score").desc(), F.col("term")
-        )
-    )
-    return (
-        scored.withColumn("rank", rank.cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("doc_id", "term", "score", "rank")
+    return top_k(scored, ["doc_id"], [F.desc("score"), F.asc("term")], k).select(
+        "doc_id", "term", "score", F.col("rk").alias("rank")
     )
 
 
@@ -659,12 +651,10 @@ def domain_quota(docs: DataFrame, k: int = DOMAIN_QUOTA_K) -> DataFrame:
     row_number window would sort in ONE partition. The salted composition
     bounds every sort at slice size while provably keeping the same k
     survivors. Oracle: the plain global row_number per source."""
-    from ..relops import salted_top_k_per_group
-
     staged = docs.select(
         "doc_id", "source", content_key(F.col("text"), F.col("doc_id")).alias("qkey")
     )
-    return salted_top_k_per_group(staged, ["source"], "qkey", k, desc=False).select(
+    return salted_top_k_per_group(staged, ["source"], [F.asc("qkey")], k).select(
         "doc_id", "source", "rk"
     )
 

@@ -69,3 +69,40 @@ def test_writers_roundtrip(spark, reference_dir):
     for got in (got_nt, got_ttl):
         p, r, extra, missing = precision_recall(got, expected)
         assert p == 1.0 and r == 1.0, (extra, missing)
+
+
+def test_quad_table_roundtrip(spark, tmp_path):
+    # write_quad_table is the partitioned (subj, pred, obj, graph) sink: a
+    # map without a graphMap lands in the graph named after the map, and an
+    # IRI graph whose characters the partition path must escape reads back
+    # unchanged; each graph gets its own graph= directory
+    from collections import Counter
+
+    from rossete_rdf_spark.rml.parser import parse_mapping_text
+    from rossete_rdf_spark.rml.writers import write_quad_table
+
+    sf = "/root/testdata/sf0.001"
+    mapping = f"""
+@prefix rr: <http://www.w3.org/ns/r2rml#>.
+@prefix rml: <http://semweb.mmlab.be/ns/rml#>.
+@prefix ex: <http://ex.org/>.
+<#Regions> a rr:TriplesMap;
+  rml:logicalSource [ rml:source "{sf}/region.parquet" ];
+  rr:subjectMap [ rr:template "http://ex.org/region/{{r_regionkey}}" ];
+  rr:predicateObjectMap [ rr:predicate ex:name; rr:objectMap [ rml:reference "r_name" ] ].
+<#Nations> a rr:TriplesMap;
+  rml:logicalSource [ rml:source "{sf}/nation.parquet" ];
+  rr:subjectMap [ rr:template "http://ex.org/nation/{{n_nationkey}}";
+                  rr:graphMap [ rr:constant <http://ex.org/graph/a%20b?part=1> ] ];
+  rr:predicateObjectMap [ rr:predicate ex:name; rr:objectMap [ rml:reference "n_name" ] ].
+"""
+    quads = materialize_all(spark, parse_mapping_text(mapping)).select(
+        "subj", "pred", "obj", "graph"
+    )
+    out = tmp_path / "quads"
+    write_quad_table(quads, str(out))
+    back = spark.read.parquet(str(out)).select("subj", "pred", "obj", "graph")
+    wrote = Counter(map(tuple, quads.collect()))
+    assert Counter(map(tuple, back.collect())) == wrote
+    assert {q[3] for q in wrote} == {"Regions", "http://ex.org/graph/a%20b?part=1"}
+    assert len([p for p in out.iterdir() if p.name.startswith("graph=")]) == 2

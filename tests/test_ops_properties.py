@@ -205,23 +205,42 @@ def test_connected_components_raises_when_not_converged(spark, monkeypatch):
 
 
 def test_salted_top_k_matches_unsalted(spark):
-    from rossete_rdf_spark.relops import salted_top_k_per_group, top_k_per_group
+    """top_k and its salted form both equal "sort each group, take the first
+    k", ranks included: with unique scores under a one-column order, and
+    with tied scores broken by a second order column."""
+    from rossete_rdf_spark.relops import salted_top_k_per_group, top_k
 
-    df = spark.range(3000).select(
-        (F.col("id") % 3).alias("g"),
-        F.col("id").alias("item"),
+    def reference(rows, k):
+        groups = {}
+        for g, item, score in rows:
+            groups.setdefault(g, []).append((g, item, score))
+        out = set()
+        for members in groups.values():
+            members.sort(key=lambda r: (-r[2], r[1]))
+            out |= {(*r, rk) for rk, r in enumerate(members[:k], 1)}
+        return out
+
+    cases = [
         # unique order values (ties make the winner SET ambiguous for both)
-        ((F.col("id") * 37) % 3001).alias("score"),
-    )
-    plain = {
-        (r.g, r.item, r.score, r.rk)
-        for r in top_k_per_group(df, ["g"], "score", 5).collect()
-    }
-    salted = {
-        (r.g, r.item, r.score, r.rk)
-        for r in salted_top_k_per_group(df, ["g"], "score", 5, n_salts=8).collect()
-    }
-    assert plain == salted and len(plain) == 15
+        (((F.col("id") * 37) % 3001), [F.desc("score")]),
+        # ~140 rows of each group tie on its top score; item breaks the tie
+        ((F.col("id") % 7), [F.desc("score"), F.asc("item")]),
+    ]
+    for score, order in cases:
+        df = spark.range(3000).select(
+            (F.col("id") % 3).alias("g"),
+            F.col("id").alias("item"),
+            score.alias("score"),
+        )
+        expected = reference([tuple(r) for r in df.collect()], 5)
+        plain = {
+            (r.g, r.item, r.score, r.rk) for r in top_k(df, ["g"], order, 5).collect()
+        }
+        salted = {
+            (r.g, r.item, r.score, r.rk)
+            for r in salted_top_k_per_group(df, ["g"], order, 5, n_salts=8).collect()
+        }
+        assert plain == salted == expected and len(expected) == 15
 
 
 def test_salted_top_k_heavy_ties_spread_and_valid(spark):
@@ -230,11 +249,7 @@ def test_salted_top_k_heavy_ties_spread_and_valid(spark):
     the tied rows over the slices and (b) still return a valid top-k —
     winners among boundary-tied rows are arbitrary in ANY top-k, but the
     score multiset is not."""
-    from rossete_rdf_spark.relops import (
-        _row_salt,
-        salted_top_k_per_group,
-        top_k_per_group,
-    )
+    from rossete_rdf_spark.relops import _row_salt, salted_top_k_per_group, top_k
 
     n_salts = 8
     df = spark.range(6000).select(
@@ -244,10 +259,11 @@ def test_salted_top_k_heavy_ties_spread_and_valid(spark):
     )
     used = df.withColumn("s", _row_salt(df, n_salts)).select("s").distinct().count()
     assert used == n_salts, "tied order values must not collapse the salt"
-    plain = sorted(r.score for r in top_k_per_group(df, ["g"], "score", 5).collect())
+    order = [F.desc("score")]
+    plain = sorted(r.score for r in top_k(df, ["g"], order, 5).collect())
     salted = sorted(
         r.score
-        for r in salted_top_k_per_group(df, ["g"], "score", 5, n_salts=n_salts).collect()
+        for r in salted_top_k_per_group(df, ["g"], order, 5, n_salts=n_salts).collect()
     )
     assert plain == salted == [2, 2, 2, 2, 2]
 

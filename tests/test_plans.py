@@ -2,6 +2,8 @@
 actually appear in the plans — column pruning to the parquet scan, broadcast
 of small sides, no Python in JVM-only pipelines."""
 
+import pytest
+
 from rossete_rdf_spark.kgops import kg_doc_triples, kg_entity_link
 from rossete_rdf_spark.relops import tpch_q1_pricing, tpch_q3_shipping
 from rossete_rdf_spark.rmlops import rml_nation_region_graph
@@ -384,15 +386,42 @@ def test_global_sample_is_bounded_heap_not_sort(spark):
 
 
 def test_pq_encode_is_min_by_agg_not_window(spark):
-    # r6: the PQ encode argmin runs as a min_by hash aggregation with
-    # map-side partials, not a row_number window — the window shape sorted
-    # corpus x PQ_M x PQ_CODES distance rows twice. Exactly ONE window may
-    # remain in the whole query: the final per-query top-k.
+    # r6: the PQ encode argmin runs as a min_by aggregation with map-side
+    # partials (a SortAggregate: the struct(d, cid) ordering keeps the
+    # buffer off the hash path), not a row_number window — the window shape
+    # sorted corpus x PQ_M x PQ_CODES distance rows twice. Exactly ONE
+    # window may remain in the whole query: the final per-query top-k.
     from rossete_rdf_spark.textops.ann import ann_pq_adc_topk
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     plan = _plan(ann_pq_adc_topk(emb))
     assert plan.count("Window (") == 1  # top-k only; encode argmin is agg
+
+
+@pytest.mark.parametrize(
+    "name, group_limits, windows",
+    [
+        ("ann_cosine_topk", 2, 1),
+        ("ann_ivf_nprobe_topk", 4, 2),
+        ("ann_pq_rerank_topk", 3, 2),
+        ("events_top_spenders_salted", 4, 2),
+        ("doc_tfidf_top_terms", 2, 1),
+        ("doc_domain_quota", 4, 2),
+    ],
+)
+def test_top_k_plans_partial_group_limit(spark, name, group_limits, windows):
+    # relops.top_k filters rk <= k directly on the row_number, so every
+    # top-k window also plans a WindowGroupLimit (a partial one below the
+    # shuffle keeps at most k rows per group and task, a final one above
+    # it); a rank that is not a bare row_number still gives the same rows
+    # but loses every group limit. The PQ re-rank plans only the final
+    # limit: the broadcast exact-cosine join keeps the shortlist's query_id
+    # partitioning, so it needs no shuffle to put a partial limit under.
+    from rossete_rdf_spark.registry import QUERIES
+
+    plan = _plan(QUERIES[name](spark, SF))
+    assert plan.count("WindowGroupLimit (") == group_limits
+    assert plan.count("Window (") == windows
 
 
 def test_first_occurrence_dedup_single_column_stays_hash_agg(spark):
