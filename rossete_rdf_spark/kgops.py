@@ -11,19 +11,18 @@ driver can oracle-check them in DuckDB.
 
 Scan discipline (the 100 TB concern): `kg_doc_triples` reads `documents`
 exactly twice — one column-pruned scan of the metadata columns (doc_id, lang,
-n_chars, source) expanded to four triples per row via a single array+explode
-(the same single-pass pattern as rml/compiler.py), and one scan of (doc_id,
-text) for the mention chain. The gazetteer is a hash aggregate over the
-mention rows broadcast back onto them — no second tokenization pass, no
-shuffle of the fact side, and no window sort on the (potentially hub-skewed)
-term key."""
+n_chars, source) expanded to four triples per row by rml/terms.emit_triples
+(the compiler's single pass), and one scan of (doc_id, text) for the mention
+chain. The gazetteer is a hash aggregate over the mention rows broadcast back
+onto them — no second tokenization pass, no shuffle of the fact side, and no
+window sort on the (potentially hub-skewed) term key."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .rml.terms import RDF_TYPE, XSD_INTEGER, XSD_STRING
+from .rml.terms import RDF_TYPE, XSD_INTEGER, XSD_STRING, emit_triples, iri, po, typed_literal
 from .textops.common import words_col
 
 MIN_MENTION_LEN = 4
@@ -31,6 +30,8 @@ MIN_ENTITY_DOCS = 20  # a term is an "entity" if it appears in >= N distinct doc
 ENTITY_NS = "http://kg.example.com/entity/"
 DOC_NS = "http://kg.example.com/doc/"
 ONTO = "http://kg.example.com/ontology#"
+MENTIONS_PRED = f"<{ONTO}mentions>"
+LANG_PRED = f"<{ONTO}lang>"
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -107,39 +108,20 @@ def doc_triples_from(docs: DataFrame) -> DataFrame:
     source IRI, and one `mentions` edge per linked entity.
 
     The four per-document triples come from ONE metadata scan via
-    array+explode (cf. rml/compiler.py single-pass pattern); the mention
-    edges reuse the shared mention aggregate. Shared by kg_doc_triples,
-    kg_predicate_stats, kg_bgp_entity_lang, and kg_triples_delta so every
-    triple consumer sees the identical materialisation."""
-    subj = F.concat(F.lit(f"<{DOC_NS}"), F.col("doc_id"), F.lit(">"))
-
-    def po(pred, obj):
-        return F.struct(pred.alias("pred"), obj.alias("obj"))
-
-    per_doc = docs.select(
-        subj.alias("subj"),
-        F.explode(
-            F.array(
-                po(F.lit(RDF_TYPE), F.lit(f"<{ONTO}Document>")),
-                po(
-                    F.lit(f"<{ONTO}lang>"),
-                    F.concat(F.lit('"'), F.col("lang"), F.lit(f'"^^{XSD_STRING}')),
-                ),
-                po(
-                    F.lit(f"<{ONTO}nChars>"),
-                    F.concat(F.lit('"'), F.col("n_chars"), F.lit(f'"^^{XSD_INTEGER}')),
-                ),
-                po(
-                    F.lit(f"<{ONTO}source>"),
-                    F.concat(
-                        F.lit("<http://kg.example.com/source/"),
-                        F.col("source"),
-                        F.lit(">"),
-                    ),
-                ),
-            )
-        ).alias("t"),
-    ).select("subj", F.col("t.pred").alias("pred"), F.col("t.obj").alias("obj"))
+    rml/terms.emit_triples; the mention edges reuse the shared mention
+    aggregate. Shared by kg_doc_triples, kg_predicate_stats,
+    kg_bgp_entity_lang, and kg_triples_delta so every triple consumer sees
+    the identical materialisation."""
+    per_doc = emit_triples(
+        docs,
+        iri(DOC_NS, F.col("doc_id")),
+        [
+            po(RDF_TYPE, iri(ONTO, "Document")),
+            po(LANG_PRED, typed_literal(F.col("lang"), XSD_STRING)),
+            po(f"<{ONTO}nChars>", typed_literal(F.col("n_chars"), XSD_INTEGER)),
+            po(f"<{ONTO}source>", iri("http://kg.example.com/source/", F.col("source"))),
+        ],
+    )
 
     t_ment = (
         linked_mentions_from(docs)
@@ -149,9 +131,9 @@ def doc_triples_from(docs: DataFrame) -> DataFrame:
         # (same trick as linked_mentions_from; plan-asserted in test_plans)
         .filter(F.col("n_occurrences") > 0)
         .select(
-            F.concat(F.lit(f"<{DOC_NS}"), F.col("doc_id"), F.lit(">")).alias("subj"),
-            F.lit(f"<{ONTO}mentions>").alias("pred"),
-            F.concat(F.lit(f"<{ENTITY_NS}"), F.col("mention"), F.lit(">")).alias("obj"),
+            iri(DOC_NS, F.col("doc_id")).alias("subj"),
+            F.lit(MENTIONS_PRED).alias("pred"),
+            iri(ENTITY_NS, F.col("mention")).alias("obj"),
         )
         .distinct()
     )
@@ -160,10 +142,6 @@ def doc_triples_from(docs: DataFrame) -> DataFrame:
 
 def kg_doc_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     return doc_triples_from(_docs(spark, sf_dir))
-
-
-MENTIONS_PRED = f"<{ONTO}mentions>"
-LANG_PRED = f"<{ONTO}lang>"
 
 
 def kg_predicate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -381,7 +359,7 @@ def kg_construct_popular(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n") >= CONSTRUCT_MIN_DOCS)
         .select(
             F.col("entity").alias("subj"),
-            F.lit(f"<{ONTO}popularIn>").alias("pred"),
+            iri(ONTO, "popularIn").alias("pred"),
             F.col("lang").alias("obj"),
         )
     )
@@ -453,7 +431,7 @@ def kg_rdfs_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir)
     direct = docs.select(
-        F.concat(F.lit(f"<{DOC_NS}"), F.col("doc_id"), F.lit(">")).alias("subj"),
+        iri(DOC_NS, F.col("doc_id")).alias("subj"),
         F.concat(F.lit(f"{ONTO}Source_"), F.col("source")).alias("leaf"),
     )
     inferred = direct.join(
@@ -462,7 +440,7 @@ def kg_rdfs_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         direct.select("subj", F.col("leaf").alias("type"))
         .unionByName(inferred)
-        .select("subj", F.concat(F.lit("<"), F.col("type"), F.lit(">")).alias("type_iri"))
+        .select("subj", iri(F.col("type")).alias("type_iri"))
     )
 
 

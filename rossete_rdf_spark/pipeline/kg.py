@@ -8,9 +8,10 @@
     -> linked       broadcast entity linking
     -> canonical    MinHash-LSH blocking + Jaccard verify + connected
                     components -> canonical surface per entity
-    -> triples      RML-style (subj, pred, obj, graph) quad table,
-                    partitioned by graph, mention edges rewritten to
-                    canonical entity IRIs
+    -> triples      RML-style (subj, pred, obj, graph) quad table, mention
+                    edges rewritten to canonical entity IRIs; checkpointed
+                    as ONE unpartitioned parquet with a `graph` column
+                    (rml/writers.write_quad_table is the partitioned sink)
 
 Every stage snapshots through CheckpointManager: a killed run resumes from
 the last complete stage and produces the identical final triple set (tested
@@ -22,8 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..kgops import ENTITY_NS, ONTO
-from ..rml.terms import RDF_TYPE, XSD_DATETIME, XSD_STRING
+from ..kgops import ENTITY_NS, LANG_PRED, MENTIONS_PRED, ONTO
+from ..rml.terms import RDF_TYPE, XSD_DATETIME, XSD_STRING, emit_triples, iri, po, typed_literal
 from .canonicalize import canonical_entity_map
 from .checkpoint import CheckpointManager
 from .extract import extract_pages
@@ -41,33 +42,19 @@ STAGES = (
 )
 
 
-def _page_subj():
-    return F.concat(F.lit("<"), F.col("url"), F.lit(">"))
-
-
 def page_triples(pages_text: DataFrame) -> DataFrame:
-    """Per-page triples: rdf:type, lang literal, warc_ts literal."""
-    subj = _page_subj()
-    t_type = pages_text.select(
-        subj.alias("subj"),
-        F.lit(RDF_TYPE).alias("pred"),
-        F.lit(f"<{ONTO}WebPage>").alias("obj"),
+    """Per-page triples: rdf:type, lang literal, warc_ts literal — one
+    emit_triples pass over the pages."""
+    crawled_at = F.date_format(F.col("warc_ts"), "yyyy-MM-dd'T'HH:mm:ss")
+    return emit_triples(
+        pages_text,
+        iri(F.col("url")),
+        [
+            po(RDF_TYPE, iri(ONTO, "WebPage")),
+            po(LANG_PRED, typed_literal(F.col("lang"), XSD_STRING)),
+            po(f"<{ONTO}crawledAt>", typed_literal(crawled_at, XSD_DATETIME)),
+        ],
     )
-    t_lang = pages_text.select(
-        subj.alias("subj"),
-        F.lit(f"<{ONTO}lang>").alias("pred"),
-        F.concat(F.lit('"'), F.col("lang"), F.lit(f'"^^{XSD_STRING}')).alias("obj"),
-    )
-    t_ts = pages_text.select(
-        subj.alias("subj"),
-        F.lit(f"<{ONTO}crawledAt>").alias("pred"),
-        F.concat(
-            F.lit('"'),
-            F.date_format(F.col("warc_ts"), "yyyy-MM-dd'T'HH:mm:ss"),
-            F.lit(f'"^^{XSD_DATETIME}'),
-        ).alias("obj"),
-    )
-    return t_type.unionByName(t_lang).unionByName(t_ts)
 
 
 def mention_triples(linked: DataFrame, canonical: DataFrame) -> DataFrame:
@@ -77,9 +64,9 @@ def mention_triples(linked: DataFrame, canonical: DataFrame) -> DataFrame:
         "url", F.col("canonical").alias("entity")
     )
     return rewritten.distinct().select(
-        _page_subj().alias("subj"),
-        F.lit(f"<{ONTO}mentions>").alias("pred"),
-        F.concat(F.lit(f"<{ENTITY_NS}"), F.col("entity"), F.lit(">")).alias("obj"),
+        iri(F.col("url")).alias("subj"),
+        F.lit(MENTIONS_PRED).alias("pred"),
+        iri(ENTITY_NS, F.col("entity")).alias("obj"),
     )
 
 

@@ -50,20 +50,20 @@ def page_mentions(
 
 
 def salted_surface_counts(mentions: DataFrame) -> DataFrame:
-    """Two-phase (salted) count of occurrences per surface.
+    """Two-phase (salted), approximate count of pages per surface:
+    (surface, n_pages_approx).
 
     Phase 1 groups by (surface, salt) — hub surfaces fan out over
-    SALT_BUCKETS reducers; phase 2 merges the per-salt partials. The salt is
-    derived from url so it is deterministic."""
+    SALT_BUCKETS reducers; phase 2 sums the per-salt partials. The salt is
+    derived from url, so each url falls in exactly one salt and the per-salt
+    distinct counts add up."""
     salted = mentions.withColumn(
         "salt", F.pmod(F.xxhash64("url"), F.lit(SALT_BUCKETS))
     )
     partial = salted.groupBy("surface", "salt").agg(
-        F.count(F.lit(1)).alias("c"), F.approx_count_distinct("url").alias("u")
+        F.approx_count_distinct("url").alias("u")
     )
-    return partial.groupBy("surface").agg(
-        F.sum("c").alias("n_occurrences"), F.sum("u").alias("n_pages_approx")
-    )
+    return partial.groupBy("surface").agg(F.sum("u").alias("n_pages_approx"))
 
 
 def build_gazetteer(mentions: DataFrame, min_pages: int = 3) -> DataFrame:

@@ -607,12 +607,9 @@ def mention_counts_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     point is the shape — at web scale a handful of stopword-like terms
     would otherwise pin single reducers. AQE skew handling covers joins;
     salting is the aggregation-side equivalent, made explicit here."""
-    from .textops.common import words_col
+    from .kgops import eligible_tokens  # deferred: kgops -> textops -> relops
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = docs.select(
-        "doc_id", F.explode(words_col(F.col("text"))).alias("mention")
-    ).filter(F.length("mention") >= 4)
+    toks = eligible_tokens(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     salted = toks.withColumn("__salt", (F.crc32(F.col("doc_id").cast("string")) % 16))
     partial = salted.groupBy("__salt", "mention").agg(
         F.count(F.lit(1)).alias("c")

@@ -27,9 +27,12 @@ from .config import EngineConfig
 from .sources import RID, colmap_for, load_logical_source, sanitize
 from .terms import (
     RDF_TYPE,
+    emit_triples,
     expand_curie,
+    iri,
     iri_is_valid,
     object_term_column,
+    po,
     template_column,
 )
 
@@ -120,39 +123,28 @@ def materialize_map(
     frames: list[DataFrame] = []
 
     # All scalar (non-join) predicates — including the rr:class triple and
-    # same-source self-joins — are computed in ONE pass over the source:
-    # an array of (pred, obj) structs per row, nulled-out when the term's
-    # keep-condition fails, then explode. A union of per-predicate frames
-    # would re-scan the source once per predicate; at 100 TB that's the
-    # difference between 1 and N passes.
+    # same-source self-joins — are emitted in ONE pass over the source by
+    # terms.emit_triples, each term a po() struct nulled where its
+    # keep-condition fails. A union of per-predicate frames would re-scan
+    # the source once per predicate; at 100 TB that's the difference between
+    # 1 and N passes.
     scalar_terms: list = []
 
     if tmap.subject.rr_class:
         cls = expand_curie(tmap.subject.rr_class, tmap.prefixes, tags=True)
-        scalar_terms.append(
-            F.struct(F.lit(RDF_TYPE).alias("pred"), F.lit(cls).alias("obj"))
-        )
+        scalar_terms.append(po(RDF_TYPE, F.lit(cls)))
 
     for pom in tmap.poms:
         pred = expand_curie(pom.predicate, tmap.prefixes, tags=True)
         if isinstance(pom.object, ObjectTerm):
             obj_col, keep = object_term_column(pom.object, tmap.prefixes, cmap)
-            scalar_terms.append(
-                F.when(
-                    keep, F.struct(F.lit(pred).alias("pred"), obj_col.alias("obj"))
-                )
-            )
+            scalar_terms.append(po(pred, obj_col, keep))
         else:
             parent = maps_by_name.get(pom.object.parent_map)
             if parent is not None and _same_source(tmap, parent):
                 # J2 self-join: same-row compute, stays in the single pass
                 obj_col = template_column(parent.subject.template, cmap)
-                scalar_terms.append(
-                    F.when(
-                        iri_is_valid(obj_col),
-                        F.struct(F.lit(pred).alias("pred"), obj_col.alias("obj")),
-                    )
-                )
+                scalar_terms.append(po(pred, obj_col, iri_is_valid(obj_col)))
             else:
                 frames.append(
                     _join_pom_frame(
@@ -162,20 +154,14 @@ def materialize_map(
                 )
 
     if scalar_terms:
-        po = F.filter(F.array(*scalar_terms), lambda s: s.isNotNull())
-        frames.insert(
-            0,
-            child.select(F.col("subj"), F.explode(po).alias("po")).select(
-                "subj", F.col("po.pred").alias("pred"), F.col("po.obj").alias("obj")
-            ),
-        )
+        frames.insert(0, emit_triples(child, F.col("subj"), scalar_terms))
 
     if not frames:
         frames = [
             child.select(
                 F.col("subj"),
                 F.lit(RDF_TYPE).alias("pred"),
-                F.lit("<http://www.w3.org/2000/01/rdf-schema#Resource>").alias("obj"),
+                iri("http://www.w3.org/2000/01/rdf-schema#Resource").alias("obj"),
             ).limit(0)
         ]
 

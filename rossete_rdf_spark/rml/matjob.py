@@ -5,12 +5,12 @@ external data), then runs the engine's core operators at scale:
   P2 projected-field dedup (first_occurrence_dedup)
   P3 subject minting (template concat + space-discard)
   J1 referencing-object-map join with first-match parent collapse
-  P4/P5 multi-predicate emit in the compiler's array+explode single pass
+  P4/P5 multi-predicate emit in the compiler's single pass (emit_triples)
   W1 triple assembly
 This is the join/shuffle-dominated heart of graph materialization — the part
 whose throughput determines 100 TB feasibility — expressed with exactly the
-same compiler primitives the queries use (first_occurrence_dedup,
-first_match_join and the array/explode term pass)."""
+same primitives the queries use (first_occurrence_dedup, first_match_join
+and terms.emit_triples)."""
 
 from __future__ import annotations
 
@@ -18,7 +18,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .compiler import first_match_join, first_occurrence_dedup
-from .terms import XSD_INTEGER
+from .terms import XSD_INTEGER, emit_triples, iri, iri_is_valid, po, typed_literal
 
 
 def rml_materialize_job(
@@ -55,33 +55,16 @@ def rml_materialize_job(
     joined = first_match_join(child, parent, [("c_ref", "p_key")], order_col="p_rid")
 
     # P3-P5 + W1: mint the subject IRI, then emit ALL scalar predicates in
-    # the compiler's single-pass array+explode shape (compiler.py:90-139) —
-    # a class triple, two typed literals, and the referencing-object triple.
-    # This matches what materialize_map really does per row (real TriplesMaps
-    # carry several predicateObjectMaps), not a one-triple strawman.
-    subj = F.concat(F.lit("<http://ex.org/child/"), F.col("c_id"), F.lit(">"))
-    xsd_int = f'"^^{XSD_INTEGER}'
-
-    def po(pred: str, obj) -> F.Column:
-        return F.struct(F.lit(pred).alias("pred"), obj.alias("obj"))
-
-    def lit_int(col) -> F.Column:
-        # concat, not format_string: String.format allocates per call and is
-        # the dominant cost of the term pass (UTF8String concat is ~2x faster)
-        return F.concat(F.lit('"'), col, F.lit(xsd_int))
-
-    terms = F.array(
-        po("a", F.lit("<http://ex.org/Child>")),
-        po("<http://ex.org/id>", lit_int(F.col("c_id"))),
-        po("<http://ex.org/attr>", lit_int(F.col("c_attr"))),
-        po(
-            "<http://ex.org/ref>",
-            F.concat(F.lit("<http://ex.org/parent/"), F.col("p_name"), F.lit(">")),
-        ),
-    )
-    triples = (
-        joined.select(subj.alias("subj"), F.explode(terms).alias("t"))
-        .select("subj", F.col("t.pred").alias("pred"), F.col("t.obj").alias("obj"))
-        .filter(~F.col("subj").contains(" "))
-    )
+    # the compiler's single pass (terms.emit_triples) — a class triple, two
+    # typed literals, and the referencing-object triple. This matches what
+    # materialize_map really does per row (real TriplesMaps carry several
+    # predicateObjectMaps), not a one-triple strawman.
+    terms = [
+        po("a", iri("http://ex.org/Child")),
+        po("<http://ex.org/id>", typed_literal(F.col("c_id"), XSD_INTEGER)),
+        po("<http://ex.org/attr>", typed_literal(F.col("c_attr"), XSD_INTEGER)),
+        po("<http://ex.org/ref>", iri("http://ex.org/parent/", F.col("p_name"))),
+    ]
+    subj = iri("http://ex.org/child/", F.col("c_id"))
+    triples = emit_triples(joined, subj, terms).filter(iri_is_valid(F.col("subj")))
     return triples.count()

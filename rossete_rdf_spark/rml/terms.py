@@ -10,11 +10,21 @@ Terms are stored as final N-Triples tokens:
   literals  ->  "lexical"^^<datatype-iri>   (always typed; default xsd:string,
                 reference src/materialiser.rs:481,533-535)
   raw passthrough (unresolved prefix) -> the bare CURIE token
+
+Every triple producer in the package builds its terms with these four (a
+single-predicate frame stays a plain select over iri/typed_literal):
+  iri(*parts)                    <...> around literal text and row values
+  typed_literal(value, dt)       "value"^^dt
+  po(pred, obj, keep=None)       one (pred, obj) struct, NULL where keep fails
+  emit_triples(df, subj, terms)  one pass: explode the po structs, drop the
+                                 NULL ones, select (subj, pred, obj)
+template_column and object_term_column (the RML term maps) build through
+iri and typed_literal.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .ast import ObjectTerm, Template
@@ -65,21 +75,52 @@ def expand_curie(token: str, prefixes: dict[str, str], tags: bool) -> str:
     return token
 
 
+def iri(*parts: str | Column) -> Column:
+    """`<...>` around `parts`: a str part is literal IRI text, a Column part
+    a row value (all-text parts constant-fold to one literal)."""
+    cols = [F.lit(p) if isinstance(p, str) else p for p in parts]
+    return F.concat(F.lit("<"), *cols, F.lit(">"))
+
+
+def typed_literal(value: Column, dt: str) -> Column:
+    """`"value"^^dt`, dt an N-Triples datatype token. concat, not
+    format_string: String.format allocates per call and was the dominant
+    cost of the term pass (UTF8String concat is ~2x faster)."""
+    return F.concat(F.lit('"'), value, F.lit(f'"^^{dt}'))
+
+
+def po(pred: str, obj: Column, keep: Column | None = None) -> Column:
+    """One (pred, obj) term struct for emit_triples; NULL where `keep` is
+    false, so emit_triples drops that term for the row."""
+    term = F.struct(F.lit(pred).alias("pred"), obj.alias("obj"))
+    return term if keep is None else F.when(keep, term)
+
+
+def emit_triples(df: DataFrame, subj: Column, terms: list[Column]) -> DataFrame:
+    """(subj, pred, obj) for every po() term of every row, in ONE pass over
+    `df`: explode the term array, then drop NULL terms on the exploded rows.
+    A union of per-predicate frames would scan `df` once per predicate; a
+    lambda filter inside the array would run as an interpreted per-element
+    function. When no term can be NULL, Catalyst prunes the filter."""
+    return (
+        df.select(subj.alias("subj"), F.explode(F.array(*terms)).alias("t"))
+        .filter(F.col("t").isNotNull())
+        .select("subj", F.col("t.pred").alias("pred"), F.col("t.obj").alias("obj"))
+    )
+
+
 def template_column(template: Template, colmap: dict[str, str]) -> Column:
     """Fill {field} placeholders with row values and wrap <...>
     (reference format_uri, src/materialiser.rs:406-429). The space-discard
     rule is applied by the caller as a filter so the whole row can be
     dropped for subjects."""
-    parts: list[Column] = [F.lit("<")]
-    chunks = template.chunks
-    fields = template.fields
-    for i, chunk in enumerate(chunks):
+    parts: list[str | Column] = []
+    for i, chunk in enumerate(template.chunks):
         if chunk:
-            parts.append(F.lit(chunk))
-        if i < len(fields):
-            parts.append(F.col(colmap[fields[i]]))
-    parts.append(F.lit(">"))
-    return F.concat(*parts)
+            parts.append(chunk)
+        if i < len(template.fields):
+            parts.append(F.col(colmap[template.fields[i]]))
+    return iri(*parts)
 
 
 def iri_is_valid(iri_col: Column) -> Column:
@@ -108,19 +149,19 @@ def object_term_column(
 
     if obj.constant_string is not None:
         # quoted rr:constant -> IRI-wrapped (src/materialiser.rs:516-520)
-        return F.lit(f"<{obj.constant_string}>"), F.lit(True)
+        return iri(obj.constant_string), F.lit(True)
 
     if obj.constant_term is not None:
         # bare rr:constant -> prefix-expanded *without* tags, then emitted as
         # a typed literal (src/materialiser.rs:521-527 -> kind 3)
         value = expand_curie(obj.constant_term, prefixes, tags=False)
         dt = expand_curie(obj.datatype or "xsd:string", prefixes, tags=True)
-        return F.lit(f'"{value}"^^{dt}'), F.lit(True)
+        return typed_literal(F.lit(value), dt), F.lit(True)
 
     # rml:reference
     ref_col = F.col(colmap[obj.reference])
     keep = ref_col.isNotNull() & (ref_col != "")
     if as_iri:
-        return F.concat(F.lit("<"), ref_col, F.lit(">")), keep
+        return iri(ref_col), keep
     dt = expand_curie(obj.datatype or "xsd:string", prefixes, tags=True)
-    return F.concat(F.lit('"'), ref_col, F.lit('"^^'), F.lit(dt)), keep
+    return typed_literal(ref_col, dt), keep

@@ -145,6 +145,25 @@ def test_rml_parquet_scan_is_column_pruned(spark):
     assert all("n_comment" not in ln for ln in nation_scans)
 
 
+def test_triple_emitter_filters_after_explode_in_one_scan(spark, tmp_path):
+    # the compiler's term pass drops NULL terms with a filter on the
+    # exploded rows, not an interpreted lambda inside the term array
+    assert "lambdafunction" not in _plan(rml_nation_region_graph(spark, SF))
+    # page_triples emits its three predicates in one pass: one parquet scan,
+    # not one per predicate
+    from datetime import datetime
+
+    from rossete_rdf_spark.pipeline.kg import page_triples
+
+    pages = str(tmp_path / "pages.parquet")
+    spark.createDataFrame(
+        [("http://p.org/1", "en", datetime(2024, 1, 1))],
+        "url string, lang string, warc_ts timestamp",
+    ).coalesce(1).write.parquet(pages)
+    plan = _plan(page_triples(spark.read.parquet(pages)))
+    assert plan.count(") Scan parquet") == 1, plan
+
+
 def test_source_rid_plan_follows_file_count(spark, tmp_path):
     # one parquet file and one JSON file under an iterator keep the scan's
     # monotonic id: no file-key table, no window, no broadcast, no file

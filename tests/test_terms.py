@@ -5,10 +5,17 @@ from pyspark.sql import functions as F
 
 from rossete_rdf_spark.rml.ast import ObjectTerm, Template
 from rossete_rdf_spark.rml.terms import (
+    RDF_TYPE,
+    XSD_INTEGER,
+    XSD_STRING,
+    emit_triples,
     expand_curie,
+    iri,
     iri_is_valid,
     object_term_column,
+    po,
     template_column,
+    typed_literal,
 )
 
 PREFIXES = {
@@ -111,3 +118,41 @@ def test_object_template_break_ignores_datatype(spark):
     obj = ObjectTerm(template=Template("http://t.org/{r}"), datatype="xsd:int")
     col, _ = object_term_column(obj, PREFIXES, {"r": "r"})
     assert _eval(col, {"r": "9"}, spark) == "<http://t.org/9>"
+
+
+def test_emit_triples_matches_python_expansion(spark):
+    # keep=False and NULL-valued keep conditions drop just that term of the
+    # row; rows and terms come out in input order
+    rows = [("s1", "a", 1), ("s2", "", 2), ("s3", None, 3), ("s4", "d", None)]
+    df = spark.createDataFrame(rows, "s string, v string, n int")
+    subj = iri("http://ex.org/", F.col("s"))
+    terms = [
+        po(RDF_TYPE, iri("http://ex.org/T")),
+        po("<p:v>", typed_literal(F.col("v"), XSD_STRING), F.col("v") != ""),
+        po("<p:n>", iri("http://ex.org/n/", F.col("n")), F.col("n") % 2 == 1),
+    ]
+    expected = []
+    for s, v, n in rows:
+        expected.append((f"<http://ex.org/{s}>", RDF_TYPE, "<http://ex.org/T>"))
+        if v:
+            expected.append((f"<http://ex.org/{s}>", "<p:v>", f'"{v}"^^{XSD_STRING}'))
+        if n is not None and n % 2 == 1:
+            expected.append((f"<http://ex.org/{s}>", "<p:n>", f"<http://ex.org/n/{n}>"))
+    got = emit_triples(df, subj, terms).collect()
+    assert [tuple(r) for r in got] == expected
+
+    # no term can be NULL: every row yields every term
+    non_null = [
+        po(RDF_TYPE, iri("http://ex.org/T")),
+        po("<p:n>", typed_literal(F.col("n"), XSD_INTEGER)),
+    ]
+    got = emit_triples(df.fillna({"n": 0}), subj, non_null).collect()
+    expected = [
+        t
+        for s, _v, n in rows
+        for t in (
+            (f"<http://ex.org/{s}>", RDF_TYPE, "<http://ex.org/T>"),
+            (f"<http://ex.org/{s}>", "<p:n>", f'"{n or 0}"^^{XSD_INTEGER}'),
+        )
+    ]
+    assert [tuple(r) for r in got] == expected
