@@ -70,19 +70,23 @@ def main(argv: list[str] | None = None) -> int:
     triples = materialize_all(spark, maps, config=cfg)
 
     out_path = args.output if args.output_dir else tempfile.mkdtemp(prefix="rossete_out_")
-    if fmt == "nt":
-        write_nt(triples, out_path, strict=args.strict_nt)
-    else:
-        write_ttl(triples, out_path)
+    try:
+        if fmt == "nt":
+            write_nt(triples, out_path, strict=args.strict_nt)
+        else:
+            write_ttl(triples, out_path)
+        if not args.output_dir:
+            with open(args.output, "w", encoding="utf-8") as out:
+                for part in sorted(glob.glob(os.path.join(out_path, "*"))):
+                    if os.path.basename(part).startswith(("_", ".")):
+                        continue
+                    with open(part, encoding="utf-8") as f:
+                        shutil.copyfileobj(f, out)
+    finally:
+        if not args.output_dir:
+            shutil.rmtree(out_path, ignore_errors=True)
 
     if not args.output_dir:
-        with open(args.output, "w", encoding="utf-8") as out:
-            for part in sorted(glob.glob(os.path.join(out_path, "*"))):
-                if os.path.basename(part).startswith(("_", ".")):
-                    continue
-                with open(part, encoding="utf-8") as f:
-                    shutil.copyfileobj(f, out)
-        shutil.rmtree(out_path, ignore_errors=True)
         print(f"wrote {args.output} ({fmt})")
     else:
         print(f"wrote {out_path}/ ({fmt}, part files)")

@@ -77,12 +77,9 @@ def _symmetric(edges: DataFrame) -> DataFrame:
     ).select("ed.src", "ed.dst", "ed.w")
 
 
-def entity_pagerank(
-    docs: DataFrame,
-    iters: int = PAGERANK_ITERS,
-    damping: float = PAGERANK_DAMPING,
-) -> DataFrame:
-    """Weighted PageRank over the co-mention graph, fixed iteration count.
+def entity_pagerank(docs: DataFrame) -> DataFrame:
+    """Weighted PageRank over the co-mention graph, PAGERANK_ITERS
+    iterations with damping d = PAGERANK_DAMPING.
 
     rank_{t+1}(v) = (1-d)/N + d * sum_{u~v} rank_t(u) * w(u,v) / wdeg(u)
 
@@ -109,7 +106,7 @@ def entity_pagerank(
     state = wdeg.select(
         F.col("src").alias("entity"), "wdeg", F.lit(1.0 / n).alias("rank")
     )
-    for _ in range(iters):
+    for _ in range(PAGERANK_ITERS):
         contribs = edges.join(
             F.broadcast(
                 state.select(
@@ -133,16 +130,17 @@ def entity_pagerank(
         ).select(
             F.col("src").alias("entity"),
             "wdeg",
-            (F.lit((1.0 - damping) / n) + F.lit(damping) * F.col("s")).alias(
-                "rank"
-            ),
+            (
+                F.lit((1.0 - PAGERANK_DAMPING) / n)
+                + F.lit(PAGERANK_DAMPING) * F.col("s")
+            ).alias("rank"),
         )
     return state.select(
         "entity", "wdeg", F.round(F.col("rank"), 8).alias("rank")
     )
 
 
-def entity_knn_edges(docs: DataFrame, k: int = KNN_K) -> DataFrame:
+def entity_knn_edges(docs: DataFrame, k: int) -> DataFrame:
     """k-NN sparsification of the co-mention graph: keep the union of every
     node's k strongest edges (w DESC, dst ASC tie-break), undirected-deduped
     back to canonical (e1 < e2) pairs.
@@ -163,15 +161,15 @@ def entity_knn_edges(docs: DataFrame, k: int = KNN_K) -> DataFrame:
     ).distinct()
 
 
-def entity_triangles(docs: DataFrame, k: int = KNN_K) -> DataFrame:
-    """Per-entity triangle counts on the k-NN-sparsified co-mention graph —
+def entity_triangles(docs: DataFrame) -> DataFrame:
+    """Per-entity triangle counts on the KNN_K-NN-sparsified co-mention graph —
     the node-iterator-with-degree-orientation algorithm (orient every edge
     from the (deg, name)-smaller endpoint to the larger; each triangle is
     then exactly one wedge u->v, u->w (v before w) closed by v->w).
 
     Orientation bounds the out-degree of hub nodes by ~sqrt(|E|), which is
     what keeps the wedge self-join linear-ish at scale; on the k-NN graph
-    out-degree is additionally <= 2k. Three hash joins, all on entity-name
+    out-degree is additionally <= 2 * KNN_K. Three hash joins, all on entity-name
     keys; the wedge filter is tuple comparison on (deg, name) — integers
     and strings, no floats anywhere, so no determinism caveats.
     Output: (entity, n_triangles), entities in >= 1 triangle.
@@ -181,7 +179,7 @@ def entity_triangles(docs: DataFrame, k: int = KNN_K) -> DataFrame:
     sides + the closing side), so both carry a lazy localCheckpoint — the
     same re-execution cut as entity_pagerank's edge table; without it the
     full mention pipeline re-runs once per reference."""
-    und = entity_knn_edges(docs, k).localCheckpoint(eager=False)
+    und = entity_knn_edges(docs, KNN_K).localCheckpoint(eager=False)
     deg_long = und.select(
         F.explode(F.array("e1", "e2")).alias("v")
     ).groupBy("v").agg(F.count(F.lit(1)).alias("deg"))
@@ -289,10 +287,8 @@ LP_ITERS = 3
 LP_KNN_K = 2
 
 
-def label_propagation(
-    docs: DataFrame, iters: int = LP_ITERS, k: int = LP_KNN_K
-) -> DataFrame:
-    """Community detection on the k-NN-sparsified co-mention graph via
+def label_propagation(docs: DataFrame) -> DataFrame:
+    """Community detection on the LP_KNN_K-NN-sparsified co-mention graph via
     SYNCHRONOUS, deterministic label propagation: every node starts labeled
     with itself; each round, a node adopts the label with the highest
     weighted neighbour vote (sum of edge weights), ties broken by MINIMUM
@@ -308,11 +304,11 @@ def label_propagation(
     once (the pagedup lesson); rounds = LP_ITERS is the contract, not a
     convergence loop, so the serial depth is fixed and small.
     Output: (entity, community)."""
-    edges = _symmetric(entity_knn_edges(docs, k)).localCheckpoint(eager=False)
+    edges = _symmetric(entity_knn_edges(docs, LP_KNN_K)).localCheckpoint(eager=False)
     state = edges.select("src").distinct().select(
         F.col("src").alias("node"), F.col("src").alias("label")
     )
-    for _ in range(iters):
+    for _ in range(LP_ITERS):
         votes = (
             edges.join(
                 F.broadcast(state.withColumnRenamed("node", "src")), "src"
@@ -339,17 +335,13 @@ BFS_LANDMARKS = 2
 _BFS_INF = (1 << 62)
 
 
-def bfs_reachability(
-    docs: DataFrame,
-    hops: int = BFS_HOPS,
-    n_landmarks: int = BFS_LANDMARKS,
-    k: int = LP_KNN_K,
-) -> DataFrame:
+def bfs_reachability(docs: DataFrame) -> DataFrame:
     """Fixed-depth BFS distances from a deterministic landmark set over the
-    k=2-sparsified co-mention graph — the SPARQL property-path / reachability
-    query class (`?x (:related)* ?landmark` bounded to `hops` steps), run
-    Pregel-style: one frontier-expansion superstep per hop. Landmarks are
-    the n lexicographically-smallest entities (deterministic, no RNG).
+    LP_KNN_K-sparsified co-mention graph — the SPARQL property-path /
+    reachability query class (`?x (:related)* ?landmark` bounded to
+    BFS_HOPS steps), run Pregel-style: one frontier-expansion superstep per
+    hop. Landmarks are the BFS_LANDMARKS lexicographically-smallest
+    entities (deterministic, no RNG).
 
     Per-superstep plan: state JOIN edges on src (state is gazetteer x
     landmarks-sized -> broadcast), ONE hash agg taking min(dist + 1) per
@@ -361,12 +353,13 @@ def bfs_reachability(
     sparse graph as label_propagation (k=2): on the near-complete k>=3
     graph everything is at distance 1 and the query is degenerate.
 
-    Output: (entity, landmark, dist) for entities reachable within `hops`.
+    Output: (entity, landmark, dist) for entities reachable within
+    BFS_HOPS hops.
     """
-    edges = _symmetric(entity_knn_edges(docs, k)).localCheckpoint(eager=False)
+    edges = _symmetric(entity_knn_edges(docs, LP_KNN_K)).localCheckpoint(eager=False)
     nodes = edges.select("src").distinct()
     landmarks = (
-        nodes.orderBy("src").limit(n_landmarks)
+        nodes.orderBy("src").limit(BFS_LANDMARKS)
         .select(F.col("src").alias("landmark"))
     )
     state = landmarks.select(
@@ -374,7 +367,7 @@ def bfs_reachability(
         "landmark",
         F.lit(0).cast("long").alias("dist"),
     )
-    for _ in range(hops):
+    for _ in range(BFS_HOPS):
         cand = (
             F.broadcast(state.withColumnRenamed("node", "src"))
             .join(edges, "src")

@@ -32,7 +32,16 @@ from .kgops import CONSTRUCT_MIN_DOCS as KG_CONSTRUCT_MIN_DOCS
 from .pipeline.pagedup import NEAR_DUP_JACCARD as PAGE_NEAR_DUP_JACCARD
 from .relops import FUNNEL_WINDOW_HOURS, HIST_BINS, HIST_WIDTH_CENTS, RANGE_SLOTS
 from .relops import Z_THRESHOLD as REL_Z_THRESHOLD
-from .textops.ann import EMB_NEARDUP_THRESHOLD, IVF_NPROBE, KMEANS_ITERS
+from .textops.ann import (
+    BLOCKED_TOP_K,
+    BUCKET_DIMS,
+    EMB_NEARDUP_THRESHOLD,
+    IVF_NPROBE,
+    KMEANS_ITERS,
+    N_CENTROIDS,
+    N_QUERIES,
+    TOP_K,
+)
 from .textops.common import sql_ngrams, sql_pos_grams, sql_words
 from .textops.webclean import EMAIL_RE, PHONE_RE, TRACKING_PARAM_RE
 from .textops.lsh import BAND_ROWS, N_HASHES
@@ -42,7 +51,9 @@ from .textops.lsh import MIN_BANDS as PAGE_MIN_BANDS
 from .textops.dedup import (
     DECON_NGRAM,
     INCREMENTAL_BATCH_BUCKET,
+    NGRAM_JACCARD_MIN,
     NGRAM_MAX_DF,
+    SHINGLE_N,
     SIMHASH_BITS,
     SPAN_POS_PACK,
     SPAN_WORDS,
@@ -68,7 +79,7 @@ from .rml.terms import RDF_TYPE, XSD_INTEGER, XSD_STRING
 
 _FP = "md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))"
 _WORDS = sql_words("text")
-_NGRAMS = sql_ngrams(_WORDS, 3)
+_NGRAMS = sql_ngrams(_WORDS, SHINGLE_N)
 
 # --- textops -----------------------------------------------------------------
 
@@ -115,7 +126,7 @@ SELECT id_a, id_b,
 FROM inter
 JOIN sizes sa ON sa.doc_id = id_a
 JOIN sizes sb ON sb.doc_id = id_b
-WHERE inter / (sa.n + sb.n - inter) >= 0.5
+WHERE inter / (sa.n + sb.n - inter) >= {NGRAM_JACCARD_MIN}
 """
 
 _minhash_cols = ", ".join(
@@ -488,7 +499,7 @@ _CNORM = (
 _COS = f"round({_DOT} / ({_QNORM} * {_CNORM}), 6)"
 
 ORACLES["ann_cosine_topk"] = f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
+WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < {N_QUERIES}),
 c AS (SELECT vec_id AS cand_id, embedding AS cv FROM embeddings),
 scored AS (
   SELECT query_id, cand_id, {_COS} AS sim
@@ -496,15 +507,15 @@ scored AS (
 ranked AS (
   SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id) AS rk
   FROM scored)
-SELECT query_id, cand_id, sim, rk::BIGINT AS rk FROM ranked WHERE rk <= 5
+SELECT query_id, cand_id, sim, rk::BIGINT AS rk FROM ranked WHERE rk <= {TOP_K}
 """
 
 _BUCKET = " || ".join(
-    f"(CASE WHEN embedding[{i + 1}] >= 0 THEN '1' ELSE '0' END)" for i in range(8)
+    f"(CASE WHEN embedding[{i + 1}] >= 0 THEN '1' ELSE '0' END)" for i in range(BUCKET_DIMS)
 )
 ORACLES["ann_lsh_bucket_topk"] = f"""
 WITH e AS (SELECT vec_id, embedding, {_BUCKET} AS bucket FROM embeddings),
-q AS (SELECT vec_id AS query_id, embedding AS qv, bucket FROM e WHERE vec_id < 10),
+q AS (SELECT vec_id AS query_id, embedding AS qv, bucket FROM e WHERE vec_id < {N_QUERIES}),
 c AS (SELECT vec_id AS cand_id, embedding AS cv, bucket FROM e),
 scored AS (
   SELECT query_id, cand_id, {_COS} AS sim
@@ -512,7 +523,7 @@ scored AS (
 ranked AS (
   SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id) AS rk
   FROM scored)
-SELECT query_id, cand_id, sim, rk::BIGINT AS rk FROM ranked WHERE rk <= 3
+SELECT query_id, cand_id, sim, rk::BIGINT AS rk FROM ranked WHERE rk <= {BLOCKED_TOP_K}
 """
 
 # --- KG ops -------------------------------------------------------------------
@@ -964,9 +975,6 @@ FROM po GROUP BY subj
 """
 
 # embedding-cosine near-dup tier: sign-bucket blocking + exact cosine verify
-_EN_BUCKET = " || ".join(
-    f"(CASE WHEN embedding[{i + 1}] >= 0 THEN '1' ELSE '0' END)" for i in range(8)
-)
 _EN_COS = (
     "round("
     "list_reduce([av[i]::DOUBLE * bv[i]::DOUBLE for i in range(1, len(av)+1)], (x, y) -> x + y)"
@@ -974,7 +982,7 @@ _EN_COS = (
     " * sqrt(list_reduce([bv[i]::DOUBLE * bv[i]::DOUBLE for i in range(1, len(bv)+1)], (x, y) -> x + y))), 6)"
 )
 ORACLES["embedding_neardup_pairs"] = f"""
-WITH e AS (SELECT vec_id, embedding, {_EN_BUCKET} AS bucket FROM embeddings),
+WITH e AS (SELECT vec_id, embedding, {_BUCKET} AS bucket FROM embeddings),
 p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
              a.embedding AS av, b.embedding AS bv
       FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id),
@@ -1150,7 +1158,7 @@ SELECT surf.s AS surface, coalesce(comp.component, surf.s) AS canonical
 FROM surf LEFT JOIN comp ON comp.node = surf.s
 """
 
-# IVF ANN: deterministic centroids (vec_id < 16), nearest-centroid inverted
+# IVF ANN: deterministic centroids (vec_id < N_CENTROIDS), nearest-centroid inverted
 # lists, search within the query's own list. Assignment compares RAW doubles
 # (same fold order both engines -> bitwise equal); output sim rounded.
 _IVF_COS_RAW = (
@@ -1159,7 +1167,7 @@ _IVF_COS_RAW = (
     " * sqrt(list_reduce([cv[i]::DOUBLE * cv[i]::DOUBLE for i in range(1, len(cv)+1)], (x, y) -> x + y)))"
 )
 _IVF_COMMON = f"""
-WITH cent AS (SELECT vec_id AS cent_id, embedding AS cv FROM embeddings WHERE vec_id < 16),
+WITH cent AS (SELECT vec_id AS cent_id, embedding AS cv FROM embeddings WHERE vec_id < {N_CENTROIDS}),
 sc AS (SELECT e.vec_id AS vid, e.embedding AS v, cent_id, {_IVF_COS_RAW} AS s
        FROM embeddings e CROSS JOIN cent),
 scr AS (SELECT *, row_number() OVER (PARTITION BY vid ORDER BY s DESC, cent_id) AS rn FROM sc),
@@ -1167,25 +1175,25 @@ asg AS (SELECT vid, v, cent_id AS cluster FROM scr WHERE rn = 1),
 c AS (SELECT vid AS cand_id, v AS cv, cluster FROM asg)"""
 
 ORACLES["ann_ivf_topk"] = f"""{_IVF_COMMON},
-q AS (SELECT vid AS query_id, v AS qv, cluster FROM asg WHERE vid < 10),
+q AS (SELECT vid AS query_id, v AS qv, cluster FROM asg WHERE vid < {N_QUERIES}),
 scored AS (
   SELECT query_id, cand_id, {_COS} AS sim
   FROM q JOIN c USING (cluster) WHERE query_id <> cand_id),
 ranked AS (
   SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id) AS rk
   FROM scored)
-SELECT query_id, cand_id, sim, rk::BIGINT AS rk FROM ranked WHERE rk <= 3
+SELECT query_id, cand_id, sim, rk::BIGINT AS rk FROM ranked WHERE rk <= {BLOCKED_TOP_K}
 """
 
-# k-means IVF: replays _kmeans_centroids' fixed trajectory (first-16 init,
+# k-means IVF: replays _kmeans_centroids' fixed trajectory (first-N_CENTROIDS init,
 # KMEANS_ITERS Lloyd iterations) then searches the trained lists. Centroid
 # means use the identical deterministic fold both engines run — member values
 # sorted by vid, sequential sum (DuckDB list_reduce((a,b)->a+b) == Spark
 # aggregate(0.0, +) bit-for-bit since 0.0+x1 == x1), rounded to 6 dp — so the
 # trained centroids, the assignment, and the search all match bitwise.
-_KM_CENT0 = """cent0 AS (SELECT vec_id AS cent_id,
+_KM_CENT0 = f"""cent0 AS (SELECT vec_id AS cent_id,
        [embedding[i]::DOUBLE for i in range(1, len(embedding)+1)] AS cv
-     FROM embeddings WHERE vec_id < 16)"""
+     FROM embeddings WHERE vec_id < {N_CENTROIDS})"""
 
 
 def _km_iter(t: int) -> str:
@@ -1212,28 +1220,28 @@ scF AS (SELECT e.vec_id AS vid, e.embedding AS v, cent_id, {_IVF_COS_RAW} AS s
 scrF AS (SELECT *, row_number() OVER (PARTITION BY vid ORDER BY s DESC, cent_id) AS rn FROM scF),
 asgF AS (SELECT vid, v, cent_id AS cluster FROM scrF WHERE rn = 1),
 cF AS (SELECT vid AS cand_id, v AS cv, cluster FROM asgF),
-qF AS (SELECT vid AS query_id, v AS qv, cluster FROM asgF WHERE vid < 10),
+qF AS (SELECT vid AS query_id, v AS qv, cluster FROM asgF WHERE vid < {N_QUERIES}),
 scoredF AS (SELECT query_id, cand_id, {_COS} AS sim
             FROM qF JOIN cF USING (cluster) WHERE query_id <> cand_id),
 rankedF AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id) AS rk
             FROM scoredF)
-SELECT query_id, cand_id, sim, rk::BIGINT AS rk FROM rankedF WHERE rk <= 3
+SELECT query_id, cand_id, sim, rk::BIGINT AS rk FROM rankedF WHERE rk <= {BLOCKED_TOP_K}
 """
 )
 
-# nprobe=2 variant: queries probe their top-nprobe centroid lists; probe
+# IVF_NPROBE variant: queries probe their top-IVF_NPROBE centroid lists; probe
 # ranking uses the same RAW double s (same fold order both engines) and the
 # same (s DESC, cent_id) tie-break as the assignment
 ORACLES["ann_ivf_nprobe_topk"] = f"""{_IVF_COMMON},
 qp AS (SELECT vid AS query_id, v AS qv, cent_id AS cluster FROM scr
-       WHERE vid < 10 AND rn <= {IVF_NPROBE}),
+       WHERE vid < {N_QUERIES} AND rn <= {IVF_NPROBE}),
 scored AS (
   SELECT query_id, cand_id, {_COS} AS sim
   FROM qp JOIN c USING (cluster) WHERE query_id <> cand_id),
 ranked AS (
   SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id) AS rk
   FROM scored)
-SELECT query_id, cand_id, sim, rk::BIGINT AS rk FROM ranked WHERE rk <= 3
+SELECT query_id, cand_id, sim, rk::BIGINT AS rk FROM ranked WHERE rk <= {BLOCKED_TOP_K}
 """
 
 # --- entity-graph analytics (graph/analytics.py) -------------------------------
@@ -1808,7 +1816,7 @@ _SQ_CODE = (
 ORACLES["ann_sq8_topk"] = f"""
 WITH staged AS (SELECT vec_id, embedding, {_SQ_NORM} AS nrm FROM embeddings),
 coded AS (SELECT vec_id, embedding, {_SQ_CODE} AS codes FROM staged),
-q AS (SELECT vec_id AS query_id, embedding AS qv, codes AS qc FROM coded WHERE vec_id < 10),
+q AS (SELECT vec_id AS query_id, embedding AS qv, codes AS qc FROM coded WHERE vec_id < {N_QUERIES}),
 c AS (SELECT vec_id AS cand_id, embedding AS cv, codes AS cc FROM coded),
 scored AS (
   SELECT query_id, cand_id,
@@ -1820,7 +1828,7 @@ ranked AS (
   SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score_q8 DESC, cand_id) AS rk
   FROM scored)
 SELECT query_id, cand_id, score_q8, sim_exact, rk::BIGINT AS rk
-FROM ranked WHERE rk <= 5
+FROM ranked WHERE rk <= {TOP_K}
 """
 
 from .textops.webclean import BLOCKED_DOMAINS  # noqa: E402
@@ -1879,7 +1887,7 @@ enc AS (
      FROM dists)
   WHERE rn = 1),
 codes AS (SELECT cand_id, list(cid ORDER BY m) AS codes FROM enc GROUP BY 1),
-q AS (SELECT vec_id AS query_id, embedding AS qv FROM nvt WHERE vec_id < 10),
+q AS (SELECT vec_id AS query_id, embedding AS qv FROM nvt WHERE vec_id < {N_QUERIES}),
 lutr AS (SELECT query_id, m, cid, {_PQ_QDOT} AS val FROM q, cb),
 lut AS (SELECT query_id, list(val ORDER BY m, cid) AS lut FROM lutr GROUP BY 1),
 c AS (SELECT vec_id AS cand_id, embedding AS cv FROM nvt),
@@ -1894,9 +1902,9 @@ ranked AS (
   SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score_pq DESC, cand_id) AS rk
   FROM scored)"""
 
-ORACLES["ann_pq_adc_topk"] = _PQ_SCORED_CTES + """
+ORACLES["ann_pq_adc_topk"] = _PQ_SCORED_CTES + f"""
 SELECT query_id, cand_id, round(score_pq, 6) AS score_pq, sim_exact, rk::BIGINT AS rk
-FROM ranked WHERE rk <= 5
+FROM ranked WHERE rk <= {TOP_K}
 """
 
 # rerank: ADC shortlist on the raw-score ranks (cand_id tie-break), then
@@ -1911,5 +1919,5 @@ rer AS (
   FROM pool)
 SELECT query_id, cand_id, round(score_pq, 6) AS score_pq, sim_exact,
        rk2::BIGINT AS rk
-FROM rer WHERE rk2 <= 5
+FROM rer WHERE rk2 <= {TOP_K}
 """

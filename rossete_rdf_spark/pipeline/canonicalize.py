@@ -34,10 +34,10 @@ def _char_grams(c: Column) -> Column:
     return F.array_distinct(F.transform(idx, lambda i: F.substring(c, i, NGRAM)))
 
 
-def surface_candidate_pairs(surfaces: DataFrame, col: str = "surface") -> DataFrame:
+def surface_candidate_pairs(surfaces: DataFrame) -> DataFrame:
     """(surface) -> candidate pairs (a, b) with a < b that collide in >=
     MIN_BANDS bands."""
-    grams = gram_table(surfaces, col, _char_grams(F.col(col)))
+    grams = gram_table(surfaces, "surface", _char_grams(F.col("surface")))
     return (
         candidate_pairs(grams, MAX_BUCKET)
         .filter(F.col("n_bands") >= MIN_BANDS)

@@ -1,8 +1,15 @@
 """Per-stage checkpointing with a JSON manifest: stage outputs are parquet
 snapshots; the manifest records row counts, per-file (per-partition) lineage
-counters, and wall time. A re-run skips every stage whose snapshot is
-complete — mid-pipeline resume for free (the reference has no resume at all;
-its staging DB is deleted at exit, src/input.rs temp-db lifecycle)."""
+counters, wall time and the snapshot's schema. A re-run skips every stage
+whose snapshot is complete — mid-pipeline resume for free (the reference has
+no resume at all; its staging DB is deleted at exit, src/input.rs temp-db
+lifecycle).
+
+The manifest is the snapshots' log, as Delta Lake's log is its table's: a
+snapshot is read with the schema its entry records, so neither the read
+after a write nor a resume runs Spark's schema-inference job. An entry
+without a schema (a manifest written before schemas were recorded) counts
+as incomplete, and that stage is recomputed."""
 
 from __future__ import annotations
 
@@ -11,6 +18,21 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """The type a parquet read infers for data written as `dt`: Spark
+    writes every field, array element and map value as nullable."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
 
 
 class CheckpointManager:
@@ -34,23 +56,24 @@ class CheckpointManager:
         return os.path.join(self.workdir, f"stage_{name}.parquet")
 
     def is_complete(self, name: str) -> bool:
-        path = self._stage_path(name)
-        return (
-            name in self.manifest["stages"]
-            and os.path.exists(os.path.join(path, "_SUCCESS"))
-        )
+        entry = self.manifest["stages"].get(name, {})
+        success = os.path.join(self._stage_path(name), "_SUCCESS")
+        return "schema" in entry and os.path.exists(success)
+
+    def _read(self, name: str) -> DataFrame:
+        schema = StructType.fromJson(self.manifest["stages"][name]["schema"])
+        return self.spark.read.schema(schema).parquet(self._stage_path(name))
 
     def run_stage(self, name: str, build: "callable") -> DataFrame:
         """Run `build()` -> DataFrame, snapshot it, record lineage; or load
         the existing snapshot if this stage already completed."""
         path = self._stage_path(name)
         if self.is_complete(name):
-            return self.spark.read.parquet(path)
+            return self._read(name)
 
         t0 = time.time()
         df = build()
         df.write.mode("overwrite").parquet(path)
-        out = self.spark.read.parquet(path)
         # Per-partition lineage counters from the parquet FOOTERS of the files
         # just written — metadata-only driver-side reads (KBs per file), not a
         # second full scan of the snapshot (the old shape re-read the whole
@@ -63,9 +86,10 @@ class CheckpointManager:
             "partition_rows": lineage,
             "wall_sec": round(time.time() - t0, 3),
             "resumed": False,
+            "schema": _as_nullable(df.schema).jsonValue(),
         }
         self._save()
-        return out
+        return self._read(name)
 
     @staticmethod
     def _footer_counts(path: str) -> dict[str, int]:
@@ -79,4 +103,8 @@ class CheckpointManager:
         return counts
 
     def stage_metrics(self) -> dict:
-        return self.manifest["stages"]
+        """Each stage's manifest entry without the schema it records."""
+        return {
+            name: {k: v for k, v in entry.items() if k != "schema"}
+            for name, entry in self.manifest["stages"].items()
+        }

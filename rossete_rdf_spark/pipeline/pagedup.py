@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 # bound under this name: perfbench/kg_build.py traces CC by patching it here
 from ..graph.cc import connected_components as connected_components_encoded
-from ..textops.dedup import _doc_ngrams, normalized_fingerprint
+from ..textops.dedup import SHINGLE_N, _doc_ngrams, normalized_fingerprint
 from ..textops.lsh import MAX_BUCKET, MIN_BANDS, candidate_pairs, verify_jaccard
 
 NEAR_DUP_JACCARD = 0.5  # exact-verify bar: candidates below this are dropped
@@ -26,7 +26,7 @@ def duplicate_edges(pages_text: DataFrame) -> DataFrame:
     candidates are exact-Jaccard verified before CC: a false-positive band
     collision would otherwise permanently and silently drop a distinct page
     from the corpus."""
-    grams = _doc_ngrams(pages_text, "url", "text", 3)
+    grams = _doc_ngrams(pages_text, "url", "text", SHINGLE_N)
     cands = candidate_pairs(grams, MAX_BUCKET).filter(F.col("n_bands") >= MIN_BANDS)
     near = verify_jaccard(cands, grams, NEAR_DUP_JACCARD)
     return exact_duplicate_edges(pages_text).unionByName(

@@ -13,34 +13,27 @@ from .rml.compiler import first_match_join
 
 
 def _asof_tag(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    rcols: list[str],
+    left: DataFrame, right: DataFrame, on: str, rcols: list[str]
 ) -> tuple[DataFrame, DataFrame]:
     """Tagged union inputs for the as-of carry: (key, __ts, __tag, __l, __r)
     with right rows tagged 0 so they sort before left rows at equal ts."""
     lt = left.select(
         F.col(on),
-        F.col(left_ts).alias("__ts"),
+        F.col("ts").alias("__ts"),
         F.lit(1).alias("__tag"),
         F.struct(*[F.col(c) for c in left.columns]).alias("__l"),
         F.lit(None).cast(
             right.select(
-                F.struct(F.col(right_ts).alias("__rts"), *[F.col(c) for c in rcols]).alias("s")
+                F.struct(F.col("ts").alias("__rts"), *[F.col(c) for c in rcols]).alias("s")
             ).schema["s"].dataType.simpleString()
         ).alias("__r"),
     )
     rt = right.select(
         F.col(on),
-        F.col(right_ts).alias("__ts"),
+        F.col("ts").alias("__ts"),
         F.lit(0).alias("__tag"),
         F.lit(None).cast(lt.schema["__l"].dataType.simpleString()).alias("__l"),
-        F.struct(
-            F.col(right_ts).alias("__rts"), *[F.col(c) for c in rcols]
-        ).alias("__r"),
+        F.struct(F.col("ts").alias("__rts"), *[F.col(c) for c in rcols]).alias("__r"),
     )
     return lt, rt
 
@@ -49,7 +42,6 @@ def _asof_project(
     out: DataFrame,
     left_columns: list[str],
     rcols: list[str],
-    right_ts: str,
     tolerance_sec: int | None,
 ) -> DataFrame:
     """Tolerance filter + final projection shared by both as-of variants."""
@@ -65,7 +57,7 @@ def _asof_project(
     return out.select(
         *[F.col(f"__l.{c}").alias(c) for c in left_columns],
         *[F.col(f"__last_r.{c}").alias(f"right_{c}") for c in rcols],
-        F.col("__last_r.__rts").alias(f"right_{right_ts}"),
+        F.col("__last_r.__rts").alias("right_ts"),
     )
 
 
@@ -73,16 +65,13 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     right_cols: list[str] | None = None,
     tolerance_sec: int | None = None,
-    right_order: str = "event_id",
 ) -> DataFrame:
     """As-of join: for every left row, the single most recent right row with
     right.ts <= left.ts on the same key (inner semantics — left rows with no
     prior right row are dropped). Ties at equal ts break to the greatest
-    right `right_order` value.
+    right event_id.
 
     Spark has no native ASOF JOIN; the scalable formulation is the
     union-and-carry pattern: tag both inputs, union them, and carry the last
@@ -97,29 +86,26 @@ def asof_join(
     natural unit for user-keyed events. For hub keys whose history exceeds a
     partition (a bot user, a null-ish default key), use asof_join_bucketed:
     same semantics, per-bucket sorts."""
-    rcols = right_cols or [c for c in right.columns if c not in (on, right_ts)]
-    lt, rt = _asof_tag(left, right, on, left_ts, right_ts, rcols)
+    rcols = right_cols or [c for c in right.columns if c not in (on, "ts")]
+    lt, rt = _asof_tag(left, right, on, rcols)
     w = (
         Window.partitionBy(on)
-        .orderBy("__ts", "__tag", F.col(f"__r.{right_order}"))
+        .orderBy("__ts", "__tag", F.col("__r.event_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     carried = lt.unionByName(rt).withColumn(
         "__last_r", F.last("__r", ignorenulls=True).over(w)
     )
     out = carried.filter((F.col("__tag") == 1) & F.col("__last_r").isNotNull())
-    return _asof_project(out, left.columns, rcols, right_ts, tolerance_sec)
+    return _asof_project(out, left.columns, rcols, tolerance_sec)
 
 
 def asof_join_bucketed(
     left: DataFrame,
     right: DataFrame,
     on: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     right_cols: list[str] | None = None,
     tolerance_sec: int | None = None,
-    right_order: str = "event_id",
     bucket_sec: int = 3600,
 ) -> DataFrame:
     """asof_join with bounded per-partition sorts — the hub-key-safe variant.
@@ -145,8 +131,8 @@ def asof_join_bucketed(
     exactly the hub pattern this variant exists for), so the bucketed
     formulation must match them too — a plain equi-join would silently drop
     every cross-bucket match on the NULL key."""
-    rcols = right_cols or [c for c in right.columns if c not in (on, right_ts)]
-    lt, rt = _asof_tag(left, right, on, left_ts, right_ts, rcols)
+    rcols = right_cols or [c for c in right.columns if c not in (on, "ts")]
+    lt, rt = _asof_tag(left, right, on, rcols)
     # cast through "timestamp" first: a no-op for TIMESTAMP columns, and the
     # session-UTC conversion for TIMESTAMP_NTZ ones (Spark 4 refuses a
     # direct NTZ -> BIGINT cast); buckets only need a monotonic second count
@@ -156,7 +142,7 @@ def asof_join_bucketed(
     u = lt.unionByName(rt).withColumn("__b", b)
     w_in = (
         Window.partitionBy(on, "__b")
-        .orderBy("__ts", "__tag", F.col(f"__r.{right_order}"))
+        .orderBy("__ts", "__tag", F.col("__r.event_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     u = u.withColumn("__in_b", F.last("__r", ignorenulls=True).over(w_in))
@@ -165,7 +151,7 @@ def asof_join_bucketed(
         .groupBy(on, "__b")
         .agg(
             F.max_by(
-                F.col("__r"), F.struct(F.col("__ts"), F.col(f"__r.{right_order}"))
+                F.col("__r"), F.struct(F.col("__ts"), F.col("__r.event_id"))
             ).alias("__bl")
         )
         .alias("bl")
@@ -202,7 +188,7 @@ def asof_join_bucketed(
         .withColumn("__last_r", F.coalesce("__in_b", "__prev"))
         .filter(F.col("__last_r").isNotNull())
     )
-    return _asof_project(out, left.columns, rcols, right_ts, tolerance_sec)
+    return _asof_project(out, left.columns, rcols, tolerance_sec)
 
 
 # --- driver-contract queries ------------------------------------------------
@@ -520,7 +506,6 @@ def bucketed_range_join(
     start: str = "start",
     end: str = "end",
     bucket_sec: int = 3600,
-    end_inclusive: bool = False,
 ) -> DataFrame:
     """Point-in-interval range join as an EQUI-join: Spark plans a naive
     `ts BETWEEN start AND end` join as BroadcastNestedLoopJoin (fine only
@@ -534,9 +519,9 @@ def bucketed_range_join(
     too coarse widens the per-bucket candidate set.
 
     Containment is HALF-OPEN [start, end) — the natural form for abutting
-    time slots (a point on a boundary belongs to exactly one slot). A
-    SQL-style inclusive BETWEEN needs end_inclusive=True; porting an
-    existing BETWEEN join without it silently drops rows with ts == end."""
+    time slots (a point on a boundary belongs to exactly one slot). It is
+    not SQL's inclusive BETWEEN: a ported BETWEEN join would drop the rows
+    with ts == end."""
     lb = left.withColumn(
         "__b", F.floor(F.col(left_ts).cast("long") / F.lit(bucket_sec))
     )
@@ -549,12 +534,9 @@ def bucketed_range_join(
             )
         ),
     )
-    upper = (
-        F.col(left_ts) <= F.col(end) if end_inclusive else F.col(left_ts) < F.col(end)
-    )
     return (
         lb.join(ib, "__b")
-        .filter((F.col(left_ts) >= F.col(start)) & upper)
+        .filter((F.col(left_ts) >= F.col(start)) & (F.col(left_ts) < F.col(end)))
         .drop("__b")
     )
 

@@ -60,14 +60,17 @@ def parse_graph_text(text: str) -> set[Triple]:
     return triples
 
 
-def canonicalize_bnodes(triples: set[Triple], rounds: int = 3) -> set[Triple]:
-    """Deterministic blank-node labeling by iterative signature hashing
-    (color refinement) — sufficient for non-pathological graphs."""
+BNODE_ROUNDS = 3
+
+
+def canonicalize_bnodes(triples: set[Triple]) -> set[Triple]:
+    """Deterministic blank-node labeling by BNODE_ROUNDS rounds of signature
+    hashing (color refinement) — sufficient for non-pathological graphs."""
     bnodes = {t for tr in triples for t in (tr[0], tr[2]) if t.startswith("_:")}
     if not bnodes:
         return triples
     color = {b: "0" for b in bnodes}
-    for _ in range(rounds):
+    for _ in range(BNODE_ROUNDS):
         nxt = {}
         for b in bnodes:
             sig = []

@@ -21,12 +21,13 @@ from .compiler import first_match_join, first_occurrence_dedup
 from .terms import XSD_INTEGER, emit_triples, iri, iri_is_valid, po, typed_literal
 
 
-def rml_materialize_job(
-    spark: SparkSession, n_child: int, partitions: int = 64, fanout: int = 4
-) -> int:
+PARENT_FANOUT = 4  # parent rows per join key: the first-match collapse's input
+
+
+def rml_materialize_job(spark: SparkSession, n_child: int, partitions: int = 64) -> int:
     """Materialize `child -> parent` reference triples for n_child rows
-    against a parent table with `fanout` duplicate rows per key (exercising
-    the first-match collapse). Returns the triple count."""
+    against a parent table with PARENT_FANOUT duplicate rows per key
+    (exercising the first-match collapse). Returns the triple count."""
     n_parent_keys = max(n_child // 10, 1)
 
     child = spark.range(0, n_child, 1, partitions).select(
@@ -34,7 +35,7 @@ def rml_materialize_job(
         (F.col("id") % n_parent_keys).alias("c_ref"),
         (F.col("id") % 97).alias("c_attr"),
     )
-    parent = spark.range(0, n_parent_keys * fanout, 1, partitions).select(
+    parent = spark.range(0, n_parent_keys * PARENT_FANOUT, 1, partitions).select(
         (F.col("id") % n_parent_keys).alias("p_key"),
         F.col("id").alias("p_rid"),
         F.md5(F.col("id").cast("string")).alias("p_name"),

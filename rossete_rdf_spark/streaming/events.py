@@ -23,6 +23,7 @@ _SINK_SEQ = itertools.count()
 # saturate this workload; a real deployment sizes this to state volume
 # (stores must fit executor memory), not to core count.
 STATEFUL_SHUFFLE_PARTITIONS = "8"
+WATERMARK = "2 hours"  # event-time lateness bound of every watermarked stream
 
 
 def _ckpt_dir(tag: str) -> str:
@@ -35,16 +36,14 @@ def _ckpt_dir(tag: str) -> str:
     return tempfile.mkdtemp(prefix=f"rossete_ckpt_{tag}_")
 
 
-def streaming_hourly_agg(
-    events: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
+def streaming_hourly_agg(events: DataFrame) -> DataFrame:
     """events stream (ts, event_type, value) -> windowed counts/sums.
 
     Output schema matches the batch twin (hour, event_type, n_events,
     sum_value) so a batch backfill and the live stream can union."""
     return (
         events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -185,7 +184,7 @@ def streaming_sessionize(events_stream: DataFrame) -> DataFrame:
     )
 
 
-def streaming_dedup(events_stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def streaming_dedup(events_stream: DataFrame) -> DataFrame:
     """Watermarked streaming deduplication — the ingest-hygiene operator of a
     live pipeline (at-least-once sources redeliver; this collapses the
     redeliveries). dropDuplicatesWithinWatermark keeps one row per key and
@@ -197,7 +196,7 @@ def streaming_dedup(events_stream: DataFrame, watermark: str = "2 hours") -> Dat
     what the oracle (SELECT DISTINCT) checks."""
     keyed = (
         events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", WATERMARK)
         .select(
             "ts",
             "user_id",
@@ -232,7 +231,6 @@ def streaming_sessionize_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- stream-stream interval join ---------------------------------------------
 
 JOIN_TOLERANCE = "INTERVAL 1 HOUR"  # click attributed to a view within 1h
-JOIN_WATERMARK = "2 hours"
 
 
 def streaming_interval_join(events: DataFrame) -> DataFrame:
@@ -258,12 +256,12 @@ def streaming_interval_join(events: DataFrame) -> DataFrame:
         F.col("user_id").alias("v_user"),
         F.col("event_id").alias("view_id"),
         F.col("ts").alias("view_ts"),
-    ).withWatermark("view_ts", JOIN_WATERMARK)
+    ).withWatermark("view_ts", WATERMARK)
     clicks = ev.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("c_user"),
         F.col("event_id").alias("click_id"),
         F.col("ts").alias("click_ts"),
-    ).withWatermark("click_ts", JOIN_WATERMARK)
+    ).withWatermark("click_ts", WATERMARK)
     joined = views.join(
         clicks,
         (F.col("v_user") == F.col("c_user"))

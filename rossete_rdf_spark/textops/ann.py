@@ -7,7 +7,7 @@ ann_lsh_bucket_topk  sign-bucketed variant — candidates are co-partitioned
 ann_ivf_topk         IVF: search the query's own inverted list, centroids =
                      the first vectors
 ann_ivf_kmeans_topk  ann_ivf_topk with Lloyd-trained centroids
-ann_ivf_nprobe_topk  IVF probing the query's nprobe nearest lists
+ann_ivf_nprobe_topk  IVF probing the query's IVF_NPROBE nearest lists
 ann_sq8_topk         int8 scalar-quantized dot product, exact cosine beside
 ann_pq_adc_topk      product-quantization ADC score, exact cosine beside
 ann_pq_rerank_topk   ADC shortlist re-ranked by the exact cosine
@@ -33,8 +33,9 @@ from pyspark.sql import functions as F
 
 from ..relops import top_k
 
-N_QUERIES = 10
+N_QUERIES = 10  # the queries are the vectors with vec_id < N_QUERIES
 TOP_K = 5
+BLOCKED_TOP_K = 3  # k of the blocked searches (sign bucket, IVF lists)
 BUCKET_DIMS = 8
 
 
@@ -60,11 +61,13 @@ def cosine_col(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def _sides(df: DataFrame, n_queries: int, id_col: str, vec_col: str, *keys: str):
-    """(queries, candidates): (query_id, qv, *keys) for the first n_queries
-    ids and (cand_id, cv, *keys) for every row."""
-    c = df.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"), *keys)
-    q = c.filter(F.col("cand_id") < n_queries).select(
+def _sides(df: DataFrame, *keys: str):
+    """(queries, candidates): (query_id, qv, *keys) for the first N_QUERIES
+    vec_ids and (cand_id, cv, *keys) for every row."""
+    c = df.select(
+        F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cv"), *keys
+    )
+    q = c.filter(F.col("cand_id") < N_QUERIES).select(
         F.col("cand_id").alias("query_id"), F.col("cv").alias("qv"), *keys
     )
     return q, c
@@ -91,24 +94,19 @@ def _cosine_topk(
     return top_k(scored, ["query_id"], [F.desc("sim"), F.asc("cand_id")], k)
 
 
-def ann_cosine_topk(
-    emb: DataFrame,
-    n_queries: int = N_QUERIES,
-    k: int = TOP_K,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-k cosine neighbors of the first n_queries vectors (query_id,
+def ann_cosine_topk(emb: DataFrame) -> DataFrame:
+    """Top-TOP_K cosine neighbors of the first N_QUERIES vectors (query_id,
     cand_id, sim, rk) against every other vector."""
-    return _cosine_topk(*_sides(emb, n_queries, id_col, vec_col), k)
+    return _cosine_topk(*_sides(emb), TOP_K)
 
 
-def bucket_col(vec, dims: int = BUCKET_DIMS):
-    """Axis-aligned sign bucket: '1' per non-negative leading dim."""
+def bucket_col(vec):
+    """Axis-aligned sign bucket: '1' per non-negative leading dim, over the
+    first BUCKET_DIMS dims."""
     return F.concat(
         *[
             F.when(F.element_at(vec, i + 1) >= 0, "1").otherwise("0")
-            for i in range(dims)
+            for i in range(BUCKET_DIMS)
         ]
     )
 
@@ -116,22 +114,17 @@ def bucket_col(vec, dims: int = BUCKET_DIMS):
 EMB_NEARDUP_THRESHOLD = 0.25
 
 
-def embedding_neardup_pairs(
-    emb: DataFrame,
-    threshold: float = EMB_NEARDUP_THRESHOLD,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def embedding_neardup_pairs(emb: DataFrame) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cos) — the
     embedding tier of the dedup family: sign-bucket LSH blocks candidates
     (same co-partitioned equi-join as ann_lsh_bucket_topk, never all-pairs),
     exact cosine verifies. On a real near-dup corpus the bar is ~0.9; the
     synthetic embeddings have no true duplicates (max same-bucket cos ≈ 0.43),
-    so the contract default is low enough to produce checkable rows."""
+    so EMB_NEARDUP_THRESHOLD is low enough to produce checkable rows."""
     withb = emb.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        bucket_col(F.col(vec_col)).alias("bucket"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("v"),
+        bucket_col(F.col("embedding")).alias("bucket"),
     )
     a = withb.alias("a")
     b = withb.alias("b")
@@ -146,109 +139,82 @@ def embedding_neardup_pairs(
             F.col("b.id").alias("id_b"),
             F.round(cosine_col(F.col("a.v"), F.col("b.v")), 6).alias("cos"),
         )
-        .filter(F.col("cos") >= threshold)
+        .filter(F.col("cos") >= EMB_NEARDUP_THRESHOLD)
     )
 
 
-def ann_lsh_bucket_topk(
-    emb: DataFrame,
-    n_queries: int = N_QUERIES,
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-k cosine neighbors restricted to the query's sign bucket."""
+def ann_lsh_bucket_topk(emb: DataFrame) -> DataFrame:
+    """Top-BLOCKED_TOP_K cosine neighbors restricted to the query's sign
+    bucket."""
     withb = emb.select(
-        F.col(id_col), F.col(vec_col), bucket_col(F.col(vec_col)).alias("bucket")
+        "vec_id", "embedding", bucket_col(F.col("embedding")).alias("bucket")
     )
-    q, c = _sides(withb, n_queries, id_col, vec_col, "bucket")
-    return _cosine_topk(q, c, k, on="bucket")
+    return _cosine_topk(*_sides(withb, "bucket"), BLOCKED_TOP_K, on="bucket")
 
 
 N_CENTROIDS = 16
 IVF_NPROBE = 2
 
 
-def _ivf_assign(
-    emb: DataFrame, n_centroids: int, id_col: str, vec_col: str, cent: DataFrame | None = None
-):
+def _ivf_assign(emb: DataFrame, cent: DataFrame | None = None):
     """(scored_cent, assigned): per-vector centroid scores and the nearest-
-    centroid assignment. Default centroids are the first n_centroids vectors
+    centroid assignment, keyed by vec_id with the vector as embedding.
+    Default centroids are the first N_CENTROIDS vectors
     — deterministic so the DuckDB oracle reproduces the assignment
     bit-for-bit; pass `cent` (cent_id, cv) to plug in trained centroids
     (_kmeans_centroids) through the identical broadcast + max_by plan."""
     if cent is None:
-        cent = emb.filter(F.col(id_col) < n_centroids).select(
-            F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cv")
+        cent = emb.filter(F.col("vec_id") < N_CENTROIDS).select(
+            F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cv")
         )
     scored_cent = (
-        emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
+        emb.select("vec_id", "embedding")
         .join(F.broadcast(cent))
         .select(
-            "vid", "v", "cent_id", cosine_col(F.col("v"), F.col("cv")).alias("s")
+            "vec_id",
+            "embedding",
+            "cent_id",
+            cosine_col(F.col("embedding"), F.col("cv")).alias("s"),
         )
     )
     # nearest centroid, ties to the smaller cent_id (max over (s, -cent_id))
-    assigned = scored_cent.groupBy("vid").agg(
+    assigned = scored_cent.groupBy("vec_id").agg(
         F.max_by(
             F.col("cent_id"), F.struct(F.col("s"), (-F.col("cent_id")).alias("nc"))
         ).alias("cluster"),
-        F.first("v").alias("v"),
+        F.first("embedding").alias("embedding"),
     )
     return scored_cent, assigned
 
 
-def _own_list_topk(
-    emb: DataFrame,
-    n_queries: int,
-    k: int,
-    n_centroids: int,
-    id_col: str,
-    vec_col: str,
-    cent: DataFrame | None = None,
-) -> DataFrame:
+def _own_list_topk(emb: DataFrame, cent: DataFrame | None = None) -> DataFrame:
     """Search each query's own inverted list (nprobe=1) under the given
-    centroid table (default: the first n_centroids vectors)."""
-    _scored, assigned = _ivf_assign(emb, n_centroids, id_col, vec_col, cent=cent)
-    return _cosine_topk(
-        *_sides(assigned, n_queries, "vid", "v", "cluster"), k, on="cluster"
-    )
+    centroid table (default: the first N_CENTROIDS vectors)."""
+    _scored, assigned = _ivf_assign(emb, cent=cent)
+    return _cosine_topk(*_sides(assigned, "cluster"), BLOCKED_TOP_K, on="cluster")
 
 
-def ann_ivf_topk(
-    emb: DataFrame,
-    n_queries: int = N_QUERIES,
-    k: int = 3,
-    n_centroids: int = N_CENTROIDS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ann_ivf_topk(emb: DataFrame) -> DataFrame:
     """IVF-style ANN: partition vectors into inverted lists by nearest
     centroid, then search only the query's own list (nprobe=1).
 
-    Centroids here are the first n_centroids vectors — deterministic so the
+    Centroids here are the first N_CENTROIDS vectors — deterministic so the
     DuckDB oracle can reproduce the assignment bit-for-bit; a production run
     would plug k-means centroids into the same two-stage plan. Scale shape:
     assignment is a broadcast (tiny centroid table) + one max_by hash
     aggregation per vector — no sort, no all-pairs; search is an equi-join
-    co-partitioned on the list id, cost ~ 1/n_centroids of brute force."""
-    return _own_list_topk(emb, n_queries, k, n_centroids, id_col, vec_col)
+    co-partitioned on the list id, cost ~ 1/N_CENTROIDS of brute force."""
+    return _own_list_topk(emb)
 
 
 KMEANS_ITERS = 2
 
 
-def _kmeans_centroids(
-    emb: DataFrame,
-    n_centroids: int = N_CENTROIDS,
-    n_iters: int = KMEANS_ITERS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(cent_id, cv) after `n_iters` Lloyd iterations: assign every vector to
+def _kmeans_centroids(emb: DataFrame) -> DataFrame:
+    """(cent_id, cv) after KMEANS_ITERS Lloyd iterations: assign every vector to
     its nearest (cosine) centroid — broadcast centroids + one max_by hash
     aggregate, the same plan as _ivf_assign — then recompute each centroid as
-    the element-wise mean of its members. Init = first n_centroids vectors;
+    the element-wise mean of its members. Init = first N_CENTROIDS vectors;
     iteration count FIXED, not convergence-tested, so the DuckDB oracle can
     replay the trajectory.
 
@@ -260,14 +226,14 @@ def _kmeans_centroids(
     per (cluster, dim) here is bounded by cluster size) and drop the
     bitwise-replay requirement — the sorted fold is the oracle anchor, not
     the scale path."""
-    cent = emb.filter(F.col(id_col) < n_centroids).select(
-        F.col(id_col).alias("cent_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("cv"),
+    cent = emb.filter(F.col("vec_id") < N_CENTROIDS).select(
+        F.col("vec_id").alias("cent_id"),
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("cv"),
     )
-    for _ in range(n_iters):
-        _scored, assigned = _ivf_assign(emb, n_centroids, id_col, vec_col, cent=cent)
+    for _ in range(KMEANS_ITERS):
+        _scored, assigned = _ivf_assign(emb, cent=cent)
         memb = assigned.select(
-            "vid", "cluster", F.posexplode("v").alias("pos", "x")
+            "vec_id", "cluster", F.posexplode("embedding").alias("pos", "x")
         )
         comp = memb.groupBy("cluster", "pos").agg(
             F.round(
@@ -275,7 +241,8 @@ def _kmeans_centroids(
                     F.array_sort(
                         F.collect_list(
                             F.struct(
-                                F.col("vid"), F.col("x").cast("double").alias("x")
+                                F.col("vec_id"),
+                                F.col("x").cast("double").alias("x"),
                             )
                         )
                     ),
@@ -299,55 +266,38 @@ def _kmeans_centroids(
     return cent
 
 
-def ann_ivf_kmeans_topk(
-    emb: DataFrame,
-    n_queries: int = N_QUERIES,
-    k: int = 3,
-    n_centroids: int = N_CENTROIDS,
-    n_iters: int = KMEANS_ITERS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ann_ivf_topk with TRAINED centroids: n_iters Lloyd iterations refine
+def ann_ivf_kmeans_topk(emb: DataFrame) -> DataFrame:
+    """ann_ivf_topk with TRAINED centroids: KMEANS_ITERS Lloyd iterations refine
     the first-N init before the inverted lists are built — closing the gap
     between the deterministic-centroid demo and a production IVF index. The
     search plan is identical (broadcast centroids, max_by assignment, list
     equi-join); only the centroid table changes."""
-    cent = _kmeans_centroids(emb, n_centroids, n_iters, id_col, vec_col)
-    return _own_list_topk(emb, n_queries, k, n_centroids, id_col, vec_col, cent=cent)
+    return _own_list_topk(emb, cent=_kmeans_centroids(emb))
 
 
-def ann_ivf_nprobe_topk(
-    emb: DataFrame,
-    n_queries: int = N_QUERIES,
-    k: int = 3,
-    n_centroids: int = N_CENTROIDS,
-    nprobe: int = IVF_NPROBE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF ANN with multi-list probing: each query searches its `nprobe`
+def ann_ivf_nprobe_topk(emb: DataFrame) -> DataFrame:
+    """IVF ANN with multi-list probing: each query searches its IVF_NPROBE
     nearest inverted lists instead of only its own (the standard IVF recall
     knob — candidates near a cell boundary live in a neighboring list).
 
-    Same scale shape as ann_ivf_topk, with the probe table `nprobe` rows per
-    query: still a broadcast (queries x nprobe is tiny) into the co-
-    partitioned list equi-join, cost ~ nprobe/n_centroids of brute force.
+    Same scale shape as ann_ivf_topk, with the probe table IVF_NPROBE rows
+    per query: still a broadcast (queries x IVF_NPROBE is tiny) into the co-
+    partitioned list equi-join, cost ~ IVF_NPROBE/N_CENTROIDS of brute force.
     Candidates belong to exactly one list, so probing several lists unions
     disjoint candidate sets — no dedup needed before the top-k."""
-    scored_cent, assigned = _ivf_assign(emb, n_centroids, id_col, vec_col)
+    scored_cent, assigned = _ivf_assign(emb)
     probes = top_k(
-        scored_cent.filter(F.col("vid") < n_queries),
-        ["vid"],
+        scored_cent.filter(F.col("vec_id") < N_QUERIES),
+        ["vec_id"],
         [F.desc("s"), F.asc("cent_id")],
-        nprobe,
+        IVF_NPROBE,
     ).select(
-        F.col("vid").alias("query_id"),
-        F.col("v").alias("qv"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qv"),
         F.col("cent_id").alias("cluster"),
     )
-    _q, c = _sides(assigned, n_queries, "vid", "v", "cluster")
-    return _cosine_topk(probes, c, k, on="cluster")
+    _q, c = _sides(assigned, "cluster")
+    return _cosine_topk(probes, c, BLOCKED_TOP_K, on="cluster")
 
 
 # --- scalar quantization (int8-style) ----------------------------------------
@@ -355,14 +305,8 @@ def ann_ivf_nprobe_topk(
 SQ_SCALE = 127  # symmetric codes in [-127, 127] — the int8 memory tier
 
 
-def ann_sq8_topk(
-    emb: DataFrame,
-    n_queries: int = N_QUERIES,
-    k: int = TOP_K,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-k by INT8-quantized dot product, with the exact cosine of every
+def ann_sq8_topk(emb: DataFrame) -> DataFrame:
+    """Top-TOP_K by INT8-quantized dot product, with the exact cosine of every
     returned pair beside it as the in-band accuracy report — the scalar-
     quantization memory tier of the ANN family (4x smaller vectors than
     float32, integer SIMD distance kernels; the standard first compression
@@ -387,28 +331,28 @@ def ann_sq8_topk(
     as ann_cosine_topk; the int8 candidate table is what a real deployment
     persists."""
     staged = emb.select(
-        F.col(id_col), F.col(vec_col), _norm(F.col(vec_col)).alias("nrm")
+        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
     )
-    zero = F.transform(F.col(vec_col), lambda x: F.lit(0).cast("long"))
+    zero = F.transform(F.col("embedding"), lambda x: F.lit(0).cast("long"))
     quant = F.transform(
-        F.col(vec_col),
+        F.col("embedding"),
         lambda x: F.floor(
             x.cast("double") / F.col("nrm") * float(SQ_SCALE) + 0.5
         ).cast("long"),
     )
     coded = staged.select(
-        F.col(id_col),
-        F.col(vec_col),
+        "vec_id",
+        "embedding",
         F.when(F.col("nrm") > 0, quant).otherwise(zero).alias("codes"),
     )
-    q = coded.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
+    q = coded.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qv"),
         F.col("codes").alias("qc"),
     )
     c = coded.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).alias("cv"),
+        F.col("vec_id").alias("cand_id"),
+        F.col("embedding").alias("cv"),
         F.col("codes").alias("cc"),
     )
     scored = (
@@ -425,7 +369,9 @@ def ann_sq8_topk(
             F.round(cosine_col(F.col("qv"), F.col("cv")), 6).alias("sim_exact"),
         )
     )
-    return top_k(scored, ["query_id"], [F.desc("score_q8"), F.asc("cand_id")], k)
+    return top_k(
+        scored, ["query_id"], [F.desc("score_q8"), F.asc("cand_id")], TOP_K
+    )
 
 
 # --- product quantization (ADC) ----------------------------------------------
@@ -443,19 +389,19 @@ def _pq_subvec(vec, m: int):
     return F.slice(vec, m * PQ_DSUB + 1, PQ_DSUB)
 
 
-def _pq_codebook(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+def _pq_codebook(emb: DataFrame) -> DataFrame:
     """(m, cid, sv): the sampled codebook — subvectors of the first PQ_CODES
     vectors (sampling is the standard codebook init; a trained variant would
     run the ann_ivf_kmeans Lloyd per subspace on top of exactly this table).
     PQ_M * PQ_CODES rows total — broadcast everywhere it is used."""
-    return emb.filter(F.col(id_col) < PQ_CODES).select(
-        F.col(id_col).alias("cid"),
+    return emb.filter(F.col("vec_id") < PQ_CODES).select(
+        F.col("vec_id").alias("cid"),
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(m).cast("int").alias("m"),
-                        _pq_subvec(F.col(vec_col), m).alias("sv"),
+                        _pq_subvec(F.col("embedding"), m).alias("sv"),
                     )
                     for m in range(PQ_M)
                 ]
@@ -482,12 +428,7 @@ def _sq_l2(a, b):
     return out
 
 
-def _pq_scored(
-    emb: DataFrame,
-    n_queries: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def _pq_scored(emb: DataFrame) -> DataFrame:
     """(query_id, cand_id, score_pq, sim_exact) — the shared PQ/ADC scored
     stage behind ann_pq_adc_topk and ann_pq_rerank_topk.
 
@@ -503,7 +444,7 @@ def _pq_scored(
       argmin; codes fold back into an index-ordered byte array per vector.
       This is the table a deployment persists — the corpus-sized side.
     - LUT: dot(query_subvector, codeword) for every (query, m, cid) —
-      n_queries x PQ_M x PQ_CODES rows, folded into one flat array per
+      N_QUERIES x PQ_M x PQ_CODES rows, folded into one flat array per
       query ordered by (m, cid). Broadcast: ADC's whole point is that the
       expensive float math is query-side-only and codebook-sized.
     - SCORE: one broadcast join of the LUT rows onto the code table; the
@@ -524,25 +465,26 @@ def _pq_scored(
     The norm is staged multiply-referenced so CollapseProject keeps the
     projection boundary (tokenize-once rule)."""
     nrm_src = emb.select(
-        F.col(id_col), F.col(vec_col), _norm(F.col(vec_col)).alias("nrm")
+        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
     )
-    unit = F.transform(F.col(vec_col), lambda x: x.cast("double") / F.col("nrm"))
-    zeros = F.transform(F.col(vec_col), lambda x: F.lit(0.0))
+    unit = F.transform(
+        F.col("embedding"), lambda x: x.cast("double") / F.col("nrm")
+    )
+    zeros = F.transform(F.col("embedding"), lambda x: F.lit(0.0))
     emb = nrm_src.select(
-        F.col(id_col),
-        F.when(F.col("nrm") > 0, unit).otherwise(zeros).alias(vec_col),
+        "vec_id", F.when(F.col("nrm") > 0, unit).otherwise(zeros).alias("embedding")
     )
-    cb = _pq_codebook(emb, id_col, vec_col)
+    cb = _pq_codebook(emb)
 
     # ENCODE the corpus: nearest codeword per (vector, subspace)
     sub = emb.select(
-        F.col(id_col).alias("cand_id"),
+        F.col("vec_id").alias("cand_id"),
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(m).cast("int").alias("m"),
-                        _pq_subvec(F.col(vec_col), m).alias("xv"),
+                        _pq_subvec(F.col("embedding"), m).alias("xv"),
                     )
                     for m in range(PQ_M)
                 ]
@@ -580,8 +522,8 @@ def _pq_scored(
     )
 
     # LUT per query: dot(query_sub, codeword) flattened in (m, cid) order
-    q = emb.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
     lut = (
         q.crossJoin(F.broadcast(cb))
@@ -611,7 +553,7 @@ def _pq_scored(
     # SCORE: fixed-order fold over the code array through the query's LUT.
     # Codes-only: NO raw-vector join here — the float cosine is attached by
     # _attach_exact AFTER rank/shortlist filters, so the exact pass touches
-    # only surviving rows (k or pool per query), never the corpus.
+    # only surviving rows (TOP_K or PQ_RERANK_POOL per query), never the corpus.
     # (Left as the interpreted fold on purpose: this stage touches only
     # queries x corpus rows AFTER the per-row work collapsed to one array
     # lookup per subspace — an unrolled 32-term element_at chain was tried
@@ -638,13 +580,13 @@ def _pq_scored(
     return scored, emb
 
 
-def _attach_exact(
-    subset: DataFrame, normed: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
+def _attach_exact(subset: DataFrame, normed: DataFrame) -> DataFrame:
     """Join the (already rank-filtered, per-query-bounded) rows back to the
     normalized vectors and compute the 6-dp exact cosine — the only float
     pass over raw vectors, costing |subset| rows, not the corpus."""
-    exact = normed.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"))
+    exact = normed.select(
+        F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cv")
+    )
     return (
         subset.join(exact, "cand_id")
         .withColumn(
@@ -654,19 +596,13 @@ def _attach_exact(
     )
 
 
-def ann_pq_adc_topk(
-    emb: DataFrame,
-    n_queries: int = N_QUERIES,
-    k: int = TOP_K,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-k by PQ/ADC score alone (see _pq_scored for the machinery);
+def ann_pq_adc_topk(emb: DataFrame) -> DataFrame:
+    """Top-TOP_K by PQ/ADC score alone (see _pq_scored for the machinery);
     exact cosine rides along as the in-band accuracy report, computed only
-    for the k surviving rows per query."""
-    scored, normed = _pq_scored(emb, n_queries, id_col, vec_col)
-    top = top_k(scored, ["query_id"], [F.desc("score_pq"), F.asc("cand_id")], k)
-    return _attach_exact(top, normed, id_col, vec_col).select(
+    for the TOP_K surviving rows per query."""
+    scored, normed = _pq_scored(emb)
+    top = top_k(scored, ["query_id"], [F.desc("score_pq"), F.asc("cand_id")], TOP_K)
+    return _attach_exact(top, normed).select(
         "query_id",
         "cand_id",
         F.round(F.col("score_pq"), 6).alias("score_pq"),
@@ -678,16 +614,9 @@ def ann_pq_adc_topk(
 PQ_RERANK_POOL = 50  # ADC shortlist size fed to the exact re-rank
 
 
-def ann_pq_rerank_topk(
-    emb: DataFrame,
-    n_queries: int = N_QUERIES,
-    k: int = TOP_K,
-    pool: int = PQ_RERANK_POOL,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The production PQ deployment shape: ADC shortlists POOL candidates
-    per query from the compressed codes, then EXACT cosine re-ranks only
+def ann_pq_rerank_topk(emb: DataFrame) -> DataFrame:
+    """The production PQ deployment shape: ADC shortlists PQ_RERANK_POOL
+    candidates per query from the compressed codes, then EXACT cosine re-ranks only
     the shortlist — recall recovers toward exact (ADC@5 alone measures
     0.68-0.76 across sf on these clusterless embeddings; rerank@5 over a
     50-pool measures 1.0, because the true top-5 survive into the
@@ -702,15 +631,15 @@ def ann_pq_rerank_topk(
     cross-engine agreement rests on identical folds for the shortlist and
     identical rounding for the re-rank. The cosine is computed AFTER the
     shortlist filter (see _attach_exact), so the float pass costs
-    pool x queries rows."""
-    scored, normed = _pq_scored(emb, n_queries, id_col, vec_col)
+    PQ_RERANK_POOL x queries rows."""
+    scored, normed = _pq_scored(emb)
     shortlist = top_k(
-        scored, ["query_id"], [F.desc("score_pq"), F.asc("cand_id")], pool
+        scored, ["query_id"], [F.desc("score_pq"), F.asc("cand_id")], PQ_RERANK_POOL
     )
-    pooled = _attach_exact(shortlist, normed, id_col, vec_col)
+    pooled = _attach_exact(shortlist, normed)
     # the re-rank's rk overwrites the shortlist's
     return top_k(
-        pooled, ["query_id"], [F.desc("sim_exact"), F.asc("cand_id")], k
+        pooled, ["query_id"], [F.desc("sim_exact"), F.asc("cand_id")], TOP_K
     ).select(
         "query_id",
         "cand_id",

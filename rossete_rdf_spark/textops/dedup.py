@@ -34,17 +34,16 @@ def normalized_fingerprint(text_col):
     return F.md5(F.trim(F.regexp_replace(F.lower(text_col), r"\s+", " ")))
 
 
-def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """One row per distinct normalized text: (fingerprint, canonical_id =
     lowest doc id, dup_count). Map-side-combinable single shuffle."""
     return (
         docs.select(
-            normalized_fingerprint(F.col(text_col)).alias("fingerprint"),
-            F.col(id_col),
+            normalized_fingerprint(F.col("text")).alias("fingerprint"), "doc_id"
         )
         .groupBy("fingerprint")
         .agg(
-            F.min(id_col).alias("canonical_id"),
+            F.min("doc_id").alias("canonical_id"),
             F.count(F.lit(1)).alias("dup_count"),
         )
     )
@@ -55,9 +54,7 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
 INCREMENTAL_BATCH_BUCKET = 90  # buckets >= this play the newly-arrived batch
 
 
-def incremental_exact_dedup(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def incremental_exact_dedup(docs: DataFrame) -> DataFrame:
     """Ingest-time dedup of a NEW BATCH against an EXISTING CORPUS — the
     incremental face of exact_dedup (a crawl pipeline never re-dedups the
     whole corpus; each arriving batch is checked against what is already
@@ -77,9 +74,9 @@ def incremental_exact_dedup(
     from .quality import split_bucket
 
     tagged = docs.select(
-        normalized_fingerprint(F.col(text_col)).alias("fingerprint"),
-        F.col(id_col),
-        split_bucket(F.col(id_col)).alias("__bucket"),
+        normalized_fingerprint(F.col("text")).alias("fingerprint"),
+        "doc_id",
+        split_bucket(F.col("doc_id")).alias("__bucket"),
     )
     corpus = (
         tagged.filter(F.col("__bucket") < INCREMENTAL_BATCH_BUCKET)
@@ -90,7 +87,7 @@ def incremental_exact_dedup(
         tagged.filter(F.col("__bucket") >= INCREMENTAL_BATCH_BUCKET)
         .groupBy("fingerprint")
         .agg(
-            F.min(id_col).alias("new_id"),
+            F.min("doc_id").alias("new_id"),
             F.count(F.lit(1)).alias("batch_dups"),
         )
     )
@@ -98,6 +95,9 @@ def incremental_exact_dedup(
 
 
 # ---------------------------------------------------------------------------
+
+
+SHINGLE_N = 3  # words per shingle: n-gram Jaccard, MinHash and page dedup
 
 
 def _doc_ngrams(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
@@ -111,16 +111,12 @@ def _doc_ngrams(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFram
 
 
 NGRAM_MAX_DF = 50  # drop n-grams present in more docs than this before the self-join
+NGRAM_JACCARD_MIN = 0.5
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """All pairs (id_a < id_b) with word-n-gram Jaccard >= threshold, computed
+def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
+    """All pairs (id_a < id_b) with word-SHINGLE_N-gram Jaccard >=
+    NGRAM_JACCARD_MIN, computed
     over *discriminative* n-grams only: grams whose document frequency exceeds
     NGRAM_MAX_DF (boilerplate — "click here to subscribe") are dropped before
     the self-join, from intersections AND set sizes, so the score stays a
@@ -132,7 +128,7 @@ def ngram_jaccard_pairs(
     NGRAM_MAX_DF * |gram rows|, i.e. linear in corpus size. (Measured here:
     sf0.1 went 198.8s -> seconds.) The df guard is one window over the gram
     shuffle key, and the self-join reuses that exchange."""
-    grams = _doc_ngrams(docs, id_col, text_col, n)
+    grams = _doc_ngrams(docs, "doc_id", "text", SHINGLE_N)
     # The df guard is a count() window over the gram shuffle key ON
     # PURPOSE — measured against a hash-agg + broadcast-anti-join
     # variant (20.2s vs 50.1s at sf0.1): the self-join below is a
@@ -165,7 +161,7 @@ def ngram_jaccard_pairs(
         inter.join(sa, "id_a")
         .join(sb, "id_b")
         .withColumn("jaccard", F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= NGRAM_JACCARD_MIN)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     )
 
@@ -175,16 +171,15 @@ def ngram_jaccard_pairs(
 
 def minhash_lsh_pairs(
     docs: DataFrame,
-    n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
     max_bucket: int | None = MAX_BUCKET,
 ) -> DataFrame:
     """Candidate near-dup pairs (id_a < id_b, n_bands they collide in):
-    lsh.candidate_pairs over word n-grams. The hot-bucket cap is ON by
+    lsh.candidate_pairs over word SHINGLE_N-grams. The hot-bucket cap is ON by
     default; max_bucket=None opts into the uncapped all-candidates variant
     (only sane on corpora known to be free of hot buckets)."""
-    return candidate_pairs(_doc_ngrams(docs, id_col, text_col, n), max_bucket)
+    return candidate_pairs(_doc_ngrams(docs, id_col, text_col, SHINGLE_N), max_bucket)
 
 
 # ---------------------------------------------------------------------------
@@ -192,17 +187,14 @@ def minhash_lsh_pairs(
 SIMHASH_BITS = 16
 
 
-def simhash(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash) — SIMHASH_BITS-char '0'/'1' string.
 
     Bit j is the sign of sum over tokens of +-1 by the high bit of md5
     nibble j (nibble in 89abcdef => +1). Token multiset, not set: repeated
     words weigh more, like classic SimHash term weighting."""
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(words_col(F.col(text_col))).alias("w"),
+        "doc_id", F.explode(words_col(F.col("text"))).alias("w")
     ).select("doc_id", F.md5("w").alias("h"))
     aggs = [
         F.sum(
@@ -221,9 +213,7 @@ def simhash(
 DECON_NGRAM = 8  # word n-gram width for train-vs-eval overlap (GPT-3 used 13)
 
 
-def decontaminate(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def decontaminate(docs: DataFrame) -> DataFrame:
     """Training-data decontamination: which TRAIN documents share a word
     DECON_NGRAM-gram with any EVAL (held-out test split) document, and how
     many distinct eval grams each shares. Output: (doc_id, n_shared_grams),
@@ -247,9 +237,9 @@ def decontaminate(
     # sf0.1). Materializing the word array as a column makes it one pass;
     # CollapseProject keeps the boundary because `_ws` is multiply referenced.
     staged = docs.select(
-        F.col(id_col).alias("doc_id"),
-        split_bucket(F.col(id_col)).alias("_b"),
-        words_col(F.coalesce(F.col(text_col), F.lit(""))).alias("_ws"),
+        "doc_id",
+        split_bucket(F.col("doc_id")).alias("_b"),
+        words_col(F.coalesce(F.col("text"), F.lit(""))).alias("_ws"),
     )
     grams = staged.select(
         "doc_id",
@@ -288,16 +278,11 @@ SPAN_POS_PACK = 1 << 20  # pos < 1M blocks/doc; ~3M-word docs — far above any
 # web page; a corpus with longer docs raises the pack width with the id range
 
 
-def span_dedup(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = SPAN_WORDS,
-) -> DataFrame:
+def span_dedup(docs: DataFrame) -> DataFrame:
     """(doc_id, clean_text, n_spans_dropped) — cross-corpus duplicated-span
-    removal: every n-word block that appears anywhere else in the corpus is
-    cut except its first occurrence, and each document is reassembled from
-    its surviving blocks in order.
+    removal: every SPAN_WORDS-word block that appears anywhere else in the
+    corpus is cut except its first occurrence, and each document is
+    reassembled from its surviving blocks in order.
 
     100 TB shape: blocks are built per-row in codegen (staged word array ->
     slice/concat_ws -> posexplode, zero shuffle); the occurrence stats are
@@ -308,13 +293,15 @@ def span_dedup(
     A boilerplate block repeated billions of times is ONE stats row, and
     its group in the stats agg is map-side-combined — the skew lives in the
     pre-agg explode, which is embarrassingly parallel."""
-    wc = words_col(F.coalesce(F.col(text_col), F.lit("")))
-    staged = docs.select(F.col(id_col).alias("doc_id"), wc.alias("_w"))
+    wc = words_col(F.coalesce(F.col("text"), F.lit("")))
+    staged = docs.select("doc_id", wc.alias("_w"))
     m = F.size("_w")
-    n_blocks = F.ceil(m / F.lit(n)).cast("int")
+    n_blocks = F.ceil(m / F.lit(SPAN_WORDS)).cast("int")
     blocks_arr = F.when(m > 0, F.transform(
         F.sequence(F.lit(0), n_blocks - 1),
-        lambda i: F.concat_ws(" ", F.slice("_w", i * n + 1, n)),
+        lambda i: F.concat_ws(
+            " ", F.slice("_w", i * SPAN_WORDS + 1, SPAN_WORDS)
+        ),
     )).otherwise(F.array().cast("array<string>"))
     per_doc = staged.select("doc_id", blocks_arr.alias("_blocks"))
     spans = per_doc.select(
@@ -350,11 +337,7 @@ def span_dedup(
 
 
 def incremental_minhash_neardup(
-    docs: DataFrame,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_bucket: int | None = MAX_BUCKET,
+    docs: DataFrame, max_bucket: int | None = MAX_BUCKET
 ) -> DataFrame:
     """NEAR-dup candidates of a NEW BATCH against an EXISTING CORPUS — the
     incremental face of minhash_lsh_pairs, completing the pair with
@@ -380,7 +363,7 @@ def incremental_minhash_neardup(
     of an archived doc, with LSH evidence strength."""
     from .quality import split_bucket
 
-    sig = signatures(_doc_ngrams(docs, id_col, text_col, n))
+    sig = signatures(_doc_ngrams(docs, "doc_id", "text", SHINGLE_N))
     bucket = split_bucket(F.col("id"))
     corp = (
         band_rows(sig.filter(bucket < INCREMENTAL_BATCH_BUCKET))

@@ -26,11 +26,11 @@ LANG_MARKERS: dict[str, list[str]] = {
 LANG_ORDER = ["en", "es", "de", "fr"]  # deterministic tie-break order
 
 
-def token_count(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def token_count(docs: DataFrame) -> DataFrame:
     """(doc_id, n_ws_tokens, n_bpe_tokens, n_chars)."""
-    t = F.col(text_col)
+    t = F.col("text")
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.size(words_col(t)).cast("long").alias("n_ws_tokens"),
         F.size(F.regexp_extract_all(t, F.lit(TOKEN_RE), 0)).cast("long").alias("n_bpe_tokens"),
         F.length(t).cast("long").alias("n_chars"),
@@ -54,11 +54,10 @@ def _pred_lang_expr(t):
     return F.when(best == 0, "und").otherwise(expr)
 
 
-def lang_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """(doc_id, pred_lang) — marker-word heuristic language ID."""
     return docs.select(
-        F.col(id_col).alias("doc_id"),
-        _pred_lang_expr(F.col(text_col)).alias("pred_lang"),
+        "doc_id", _pred_lang_expr(F.col("text")).alias("pred_lang")
     )
 
 
@@ -77,12 +76,12 @@ def _quality_exprs(t):
     return n_tok, stop_ratio, alpha_ratio, score
 
 
-def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, stopword_ratio, alpha_ratio, score) — a
     length/punct/stopword-ratio quality heuristic, rounded for portability."""
-    n_tok, stop_ratio, alpha_ratio, score = _quality_exprs(F.col(text_col))
+    n_tok, stop_ratio, alpha_ratio, score = _quality_exprs(F.col("text"))
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         n_tok.cast("long").alias("n_tokens"),
         F.round(stop_ratio, 6).alias("stopword_ratio"),
         F.round(alpha_ratio, 6).alias("alpha_ratio"),
@@ -90,11 +89,10 @@ def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     )
 
 
-def doc_fingerprint(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def doc_fingerprint(docs: DataFrame) -> DataFrame:
     """(doc_id, fingerprint) — md5 of lower/whitespace-normalized text."""
     return docs.select(
-        F.col(id_col).alias("doc_id"),
-        normalized_fingerprint(F.col(text_col)).alias("fingerprint"),
+        "doc_id", normalized_fingerprint(F.col("text")).alias("fingerprint")
     )
 
 
@@ -110,12 +108,7 @@ def split_bucket(id_col, seed: str = SPLIT_SEED):
     return F.pmod(minhash64(id_col.cast("string"), seed), F.lit(100))
 
 
-def train_test_split(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    seed: str = SPLIT_SEED,
-    bounds: tuple[int, int] = SPLIT_BOUNDS,
-) -> DataFrame:
+def train_test_split(docs: DataFrame) -> DataFrame:
     """Deterministic train/val/test assignment by CONTENT-STABLE hash bucket
     — the reproducible-split primitive of a training-data pipeline.
     rand(seed)/sampleBy are partitioning- and engine-dependent (a
@@ -124,14 +117,14 @@ def train_test_split(
     split that survives all of them, and the same arithmetic runs in any
     engine (the DuckDB oracle reproduces it bit-for-bit via the md5-prefix
     hash). Pure projection: no shuffle, no state, safe to recompute
-    anywhere. Change `seed` to draw a fresh independent split."""
-    bucket = split_bucket(F.col(id_col), seed)
-    lo, hi = bounds
+    anywhere. Change SPLIT_SEED to draw a fresh independent split."""
+    bucket = split_bucket(F.col("doc_id"))
+    lo, hi = SPLIT_BOUNDS
     split = (
         F.when(bucket < lo, "train").when(bucket < hi, "val").otherwise("test")
     )
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         bucket.cast("long").alias("bucket"),
         split.alias("split"),
     )
@@ -144,21 +137,15 @@ SAMPLE_RATES: dict[str, int] = {"en": 25, "zh": 50}
 SAMPLE_SEED = "sample"
 
 
-def _rate_expr(stratum_col: str, rates: dict[str, int]):
-    """Keep-rate-in-hundredths CASE expression over a stratum column."""
+def _rate_expr():
+    """Keep-rate-in-hundredths CASE expression over the lang column."""
     rate = F.lit(100)
-    for stratum, r in sorted(rates.items()):
-        rate = F.when(F.col(stratum_col) == stratum, r).otherwise(rate)
+    for stratum, r in sorted(SAMPLE_RATES.items()):
+        rate = F.when(F.col("lang") == stratum, r).otherwise(rate)
     return rate
 
 
-def stratified_sample(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    stratum_col: str = "lang",
-    rates: dict[str, int] = SAMPLE_RATES,
-    seed: str = SAMPLE_SEED,
-) -> DataFrame:
+def stratified_sample(docs: DataFrame) -> DataFrame:
     """(doc_id, lang, bucket) — deterministic per-stratum downsampling, the
     data-balancing primitive of a training mix (e.g. downweight the dominant
     language without touching the tail).
@@ -167,30 +154,24 @@ def stratified_sample(
     same md5-prefix arithmetic as the train/val/test split, different seed)
     falls under the stratum's keep-rate in hundredths. Same reproducibility
     contract as train_test_split: survivors are a pure function of
-    (seed, id), so the sample is identical under repartitioning, engine
+    (SAMPLE_SEED, id), so the sample is identical under repartitioning, engine
     migration, and incremental backfill — df.sample()/sampleBy() are none
     of those. 100 TB shape: projection + filter, zero shuffle; the rate
     table is a literal CASE expression, not even a broadcast."""
-    bucket = split_bucket(F.col(id_col), seed)
-    rate = _rate_expr(stratum_col, rates)
+    bucket = split_bucket(F.col("doc_id"), SAMPLE_SEED)
     return (
         docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.col(stratum_col).alias("lang"),
+            "doc_id",
+            "lang",
             bucket.cast("long").alias("bucket"),
-            rate.alias("_rate"),
+            _rate_expr().alias("_rate"),
         )
         .filter(F.col("bucket") < F.col("_rate"))
         .drop("_rate")
     )
 
 
-def source_stats(
-    docs: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
-    lang_col: str = "lang",
-) -> DataFrame:
+def source_stats(docs: DataFrame) -> DataFrame:
     """(source, n_docs, n_tokens, n_langs, stop_ratio, chars_per_token) —
     per-source (host/domain) corpus statistics, the "host reputation" rollup
     a crawl pipeline uses to drop low-quality domains wholesale.
@@ -206,10 +187,10 @@ def source_stats(
     both map-side combinable). At real scale swap in
     approx_count_distinct to collapse it to ONE exchange — exactness here
     is the oracle anchor, lang cardinality is tiny either way."""
-    t = F.col(text_col)
+    t = F.col("text")
     per_row = docs.select(
-        F.col(source_col).alias("source"),
-        F.col(lang_col).alias("lang"),
+        "source",
+        "lang",
         F.size(words_col(t)).cast("long").alias("toks"),
         _marker_count(t, "en").cast("long").alias("stops"),
         F.length(t).cast("long").alias("chars"),
@@ -239,15 +220,10 @@ def source_stats(
 TFIDF_TOP_K = 3
 
 
-def tfidf_top_terms(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = TFIDF_TOP_K,
-) -> DataFrame:
-    """(doc_id, term, score, rank) — top-k TF-IDF terms per document, the
-    classic keyword/relevance scorer of a training-data pipeline (feature
-    extraction, topic tagging, boilerplate detection).
+def tfidf_top_terms(docs: DataFrame) -> DataFrame:
+    """(doc_id, term, score, rank) — the top-TFIDF_TOP_K TF-IDF terms per
+    document, the classic keyword/relevance scorer of a training-data
+    pipeline (feature extraction, topic tagging, boilerplate detection).
 
     tf = term count / doc length (whitespace tokens, lowercased);
     idf = ln((N + 1) / (df + 1)) with N = corpus size, df = number of docs
@@ -264,10 +240,8 @@ def tfidf_top_terms(
     corpus. The df join keys on term — a plain shuffle join that AQE
     broadcasts when the vocabulary is small.
     """
-    w = words_col(F.lower(F.col(text_col)))
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(w).alias("term")
-    )
+    w = words_col(F.lower(F.col("text")))
+    toks = docs.select("doc_id", F.explode(w).alias("term"))
     tf = toks.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).cast("double").alias("cnt")
     )
@@ -290,7 +264,9 @@ def tfidf_top_terms(
             ).alias("score"),
         )
     )
-    return top_k(scored, ["doc_id"], [F.desc("score"), F.asc("term")], k).select(
+    return top_k(
+        scored, ["doc_id"], [F.desc("score"), F.asc("term")], TFIDF_TOP_K
+    ).select(
         "doc_id", "term", "score", F.col("rk").alias("rank")
     )
 
@@ -339,9 +315,7 @@ def _singleton_count(sorted_arr):
     return F.aggregate(sorted_arr, zero, step, lambda acc: acc["singles"])
 
 
-def repetition_scores(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def repetition_scores(docs: DataFrame) -> DataFrame:
     """(doc_id, n_words, dup_word_frac, top_bigram_frac, dup_trigram_frac) —
     Gopher-style repetition quality signals (Rae et al. 2021 §A1.1), the
     standard "remove auto-generated / boilerplate pages" filter of a
@@ -365,14 +339,12 @@ def repetition_scores(
     GROUP BY route — two independent computations agreeing is the point.
     NULL text counts as empty on BOTH sides (size(NULL) is -1 in non-ANSI
     Spark; the oracle coalesces to '' to match)."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     # PROJECTION BOUNDARY (same as winnow_fingerprints): CSE does not reach
     # inside the pos_grams lambdas, so building grams over words_col(t)
     # directly re-tokenizes once per element_at; materialize the word array
     # first (multiply referenced -> CollapseProject keeps the boundary).
-    staged = docs.select(
-        F.col(id_col).alias("doc_id"), words_col(t).alias("_ws")
-    )
+    staged = docs.select("doc_id", words_col(t).alias("_ws"))
     w = F.col("_ws")
     n = F.size(w)
     bg = F.array_sort(pos_grams(w, 2))
@@ -403,9 +375,7 @@ WINNOW_W = 5  # k-gram hashes per selection window
 _WINNOW_SEED = 777
 
 
-def winnow_fingerprints(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """(doc_id, fp) — distinct selected winnowing fingerprints per doc.
 
     Everything is per-row array math inside whole-stage codegen (transform/
@@ -423,10 +393,7 @@ def winnow_fingerprints(
     # chain once per window — O(m^2) digests per doc (measured: minutes
     # instead of seconds at sf0.1) — materialize `hs` as a column so it is
     # one md5 pass per row.
-    words = docs.select(
-        F.col(id_col).alias("doc_id"),
-        words_col(F.col(text_col)).alias("_ws"),
-    )
+    words = docs.select("doc_id", words_col(F.col("text")).alias("_ws"))
     hashes = F.transform(
         pos_grams(F.col("_ws"), WINNOW_K), lambda g: minhash64(g, _WINNOW_SEED)
     )
@@ -449,12 +416,7 @@ CLEAN_MIN_SCORE = 0.4
 CLEAN_MAX_DUP_WORD = 0.65
 
 
-def clean_corpus(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    stratum_col: str = "lang",
-) -> DataFrame:
+def clean_corpus(docs: DataFrame) -> DataFrame:
     """(doc_id, pred_lang, n_tokens, score, dup_word_frac) — the END PRODUCT
     of the training-data pipeline: exact-dedup canonical representatives
     that pass the quality-score and repetition filters and survive the
@@ -474,18 +436,18 @@ def clean_corpus(
     order); Catalyst correctly leaves them there."""
     from pyspark.sql.window import Window
 
-    t = F.col(text_col)
+    t = F.col("text")
     tc = F.coalesce(t, F.lit(""))
     n_tok, _, _, score = _quality_exprs(t)
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         normalized_fingerprint(t).alias("_fp"),
         _pred_lang_expr(t).alias("pred_lang"),
         n_tok.cast("long").alias("n_tokens"),
         F.round(score, 6).alias("score"),
         F.round(_dup_word_expr(words_col(tc)), 6).alias("dup_word_frac"),
-        split_bucket(F.col(id_col), SAMPLE_SEED).alias("_bucket"),
-        _rate_expr(stratum_col, SAMPLE_RATES).alias("_rate"),
+        split_bucket(F.col("doc_id"), SAMPLE_SEED).alias("_bucket"),
+        _rate_expr().alias("_rate"),
     )
     canon = F.min("doc_id").over(Window.partitionBy("_fp"))
     return (
@@ -500,9 +462,7 @@ def clean_corpus(
     )
 
 
-def unigram_logprob(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def unigram_logprob(docs: DataFrame) -> DataFrame:
     """(doc_id, toks, mean_logprob) — per-document mean unigram log-probability
     under the corpus's own unigram model, the CCNet-style language-model
     quality filter (docs far below the corpus's typical logprob are
@@ -518,9 +478,9 @@ def unigram_logprob(
     (collect_list -> array_sort by term -> aggregate(0.0, +)) so the oracle
     replays it bitwise; plain sum() is the documented scale path. The final
     6-dp round absorbs cross-libm ln() ulp (the tfidf/pmi precedent)."""
-    w = words_col(F.lower(F.col(text_col)))
+    w = words_col(F.lower(F.col("text")))
     tf = (
-        docs.select(F.col(id_col).alias("doc_id"), F.explode(w).alias("term"))
+        docs.select("doc_id", F.explode(w).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -632,10 +592,10 @@ def content_key(text_col, id_col) -> F.Column:
 DOMAIN_QUOTA_K = 10
 
 
-def domain_quota(docs: DataFrame, k: int = DOMAIN_QUOTA_K) -> DataFrame:
-    """(doc_id, source, rk) — per-domain quota sampling: keep at most k
-    documents per source, chosen by a content-stable hash rank. The corpus-
-    composition staple that stops mega-domains from dominating a training
+def domain_quota(docs: DataFrame) -> DataFrame:
+    """(doc_id, source, rk) — per-domain quota sampling: keep at most
+    DOMAIN_QUOTA_K documents per source, chosen by a content-stable hash
+    rank. The corpus-composition staple that stops mega-domains from dominating a training
     mix (the complement of doc_stratified_sample's per-stratum RATE: a
     quota is an absolute CAP, which a rate cannot express when domain sizes
     span orders of magnitude).
@@ -654,18 +614,18 @@ def domain_quota(docs: DataFrame, k: int = DOMAIN_QUOTA_K) -> DataFrame:
     staged = docs.select(
         "doc_id", "source", content_key(F.col("text"), F.col("doc_id")).alias("qkey")
     )
-    return salted_top_k_per_group(staged, ["source"], [F.asc("qkey")], k).select(
-        "doc_id", "source", "rk"
-    )
+    return salted_top_k_per_group(
+        staged, ["source"], [F.asc("qkey")], DOMAIN_QUOTA_K
+    ).select("doc_id", "source", "rk")
 
 
 GLOBAL_SAMPLE_K = 200
 
 
-def global_sample(docs: DataFrame, k: int = GLOBAL_SAMPLE_K) -> DataFrame:
+def global_sample(docs: DataFrame) -> DataFrame:
     """(doc_id, source, sample_rank) — an EXACT-size deterministic global
-    sample: the k documents with the smallest content-stable hash, ranked.
-    Rate-based samplers (sample(), doc_stratified_sample) cannot hit an
+    sample: the GLOBAL_SAMPLE_K documents with the smallest content-stable
+    hash, ranked. Rate-based samplers (sample(), doc_stratified_sample) cannot hit an
     exact row count, and rand()-seeded ones are not stable under
     repartitioning; "give me exactly 100k held-out docs from 10^12, the
     same ones every run" needs a total order on a content key.
@@ -687,7 +647,7 @@ def global_sample(docs: DataFrame, k: int = GLOBAL_SAMPLE_K) -> DataFrame:
             content_key(F.col("text"), F.col("doc_id")).alias("qkey"),
         )
         .orderBy("qkey")
-        .limit(k)
+        .limit(GLOBAL_SAMPLE_K)
     )
     return top.select(
         "doc_id",

@@ -5,6 +5,9 @@ from __future__ import annotations
 
 import glob
 import os
+import tempfile
+
+import pytest
 
 from rossete_rdf_spark.__main__ import main
 
@@ -49,3 +52,21 @@ def test_cli_output_dir_and_strict_nt(spark, tmp_path):
     assert len(lines) == 4
     assert _preds(lines) == {RDF_TYPE, "<http://ex.org/name>"}
     assert f"<http://ex.org/stop/1> {RDF_TYPE} <http://ex.org/Stop> ." in lines
+
+
+def test_cli_failed_write_removes_its_temp_dir(spark, tmp_path, monkeypatch):
+    # the single-file output is staged in a rossete_out_* temp directory;
+    # a write that fails must not leave it behind under TMPDIR
+    mapping = _mapping(tmp_path)
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("write failed")
+
+    monkeypatch.setattr("rossete_rdf_spark.rml.writers.write_nt", boom)
+    with pytest.raises(RuntimeError, match="write failed"):
+        main(["--mappings", mapping, "--output", str(tmp_path / "out.nt"),
+              "--base-dir", str(tmp_path)])
+    assert not list(scratch.glob("rossete_out_*"))

@@ -16,6 +16,7 @@ from rossete_rdf_spark.pipeline import (
     synth_pages,
 )
 from rossete_rdf_spark.pipeline.canonicalize import canonical_entity_map, verified_pairs
+from rossete_rdf_spark.pipeline.checkpoint import CheckpointManager
 
 N_PAGES = 400
 
@@ -104,6 +105,58 @@ def test_pipeline_end_to_end(spark, pages, workdir):
     # near-dup pages produced canonical entity IRIs: every mention object is
     # a canonical surface (mentions graph non-empty)
     assert t.filter(t.graph == "mentions").count() > 0
+
+
+def test_manifest_schema_is_the_inferred_schema(spark, workdir):
+    """Each stage entry records exactly the schema a schema-inferring read
+    of its snapshot gives, so reading with it changes no type or
+    nullability."""
+    from pyspark.sql.types import StructType
+
+    full = os.path.join(workdir, "full")  # built by test_pipeline_end_to_end
+    stages = CheckpointManager(spark, full).manifest["stages"]
+    assert len(stages) == 7
+    for name, entry in stages.items():
+        inferred = spark.read.parquet(entry["path"]).schema
+        assert StructType.fromJson(entry["schema"]) == inferred, name
+
+
+def _drop_entry(cp):
+    del cp.manifest["stages"]["s"]
+
+
+def _drop_success(cp):
+    os.remove(os.path.join(cp._stage_path("s"), "_SUCCESS"))
+
+
+def _drop_schema(cp):
+    del cp.manifest["stages"]["s"]["schema"]
+
+
+@pytest.mark.parametrize(
+    "damage, recomputes",
+    [(_drop_entry, True), (_drop_success, True), (_drop_schema, True), (None, False)],
+)
+def test_checkpoint_crash_window(spark, tmp_path, damage, recomputes):
+    """A stage resumes only when both its manifest entry (with a schema)
+    and its snapshot's _SUCCESS marker exist: a crash between the snapshot
+    write and the manifest save, a snapshot without _SUCCESS, or an entry
+    from a manifest that recorded no schema all recompute the stage."""
+    workdir = str(tmp_path / "cp")
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.range(5).selectExpr("id", "cast(id AS string) AS s")
+
+    cp = CheckpointManager(spark, workdir)
+    cp.run_stage("s", build)
+    if damage is not None:
+        damage(cp)
+        cp._save()
+    again = CheckpointManager(spark, workdir).run_stage("s", build)
+    assert len(calls) == (2 if recomputes else 1)
+    assert sorted(map(tuple, again.collect())) == [(i, str(i)) for i in range(5)]
 
 
 def test_pipeline_resume_identity(spark, pages, workdir):

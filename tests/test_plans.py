@@ -598,3 +598,29 @@ def test_small_connected_components_is_two_jobs(spark):
     jobs = sc.statusTracker().getJobIdsForGroup("cc-small")
     assert 1 <= len(jobs) <= 2, jobs
     assert comp.count() > 0
+
+
+def test_checkpoint_snapshot_reads_launch_no_job(spark, tmp_path):
+    # the manifest records each snapshot's schema, so neither the read after
+    # the write nor a resume runs Spark's schema-inference job: a fresh stage
+    # is its one write job, a finished one is no job at all
+    from rossete_rdf_spark.pipeline.checkpoint import CheckpointManager
+
+    workdir = str(tmp_path / "cp")
+    sc = spark.sparkContext
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, "checkpoint job-count pin")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return sc.statusTracker().getJobIdsForGroup(group)
+
+    def stage():
+        return CheckpointManager(spark, workdir).run_stage(
+            "s", lambda: spark.range(0, 10, 1, 1)
+        )
+
+    assert len(jobs_of("cp-fresh", stage)) == 1
+    assert jobs_of("cp-resume", stage) == []
