@@ -1,9 +1,9 @@
 """KG-construction ops over the `documents` table (the driver-checkable,
 batch face of the web-pipeline stages in pipeline/):
 
-  kg_mentions     mention detection (term extraction) over text
+  kg_mentions     mentions_from: mention detection (term extraction) over text
   kg_entity_link  dictionary-based entity linking (corpus-derived gazetteer)
-  kg_doc_triples  RML-style triple materialisation for documents
+  kg_doc_triples  doc_triples_from: RML-style triple materialisation
 
 These are the same shapes the web pipeline runs over (url, warc_ts, html,
 text, lang) pages; here they run over the synthetic documents table so the
@@ -19,7 +19,7 @@ window sort on the (potentially hub-skewed) term key."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .rml.terms import RDF_TYPE, XSD_INTEGER, XSD_STRING, emit_triples, iri, po, typed_literal
@@ -32,10 +32,6 @@ DOC_NS = "http://kg.example.com/doc/"
 ONTO = "http://kg.example.com/ontology#"
 MENTIONS_PRED = f"<{ONTO}mentions>"
 LANG_PRED = f"<{ONTO}lang>"
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def eligible_tokens(docs: DataFrame, out_col: str = "mention") -> DataFrame:
@@ -54,10 +50,6 @@ def mentions_from(docs: DataFrame) -> DataFrame:
     return eligible_tokens(docs).groupBy("doc_id", "mention").agg(
         F.count(F.lit(1)).alias("n_occurrences")
     )
-
-
-def kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return mentions_from(_docs(spark, sf_dir))
 
 
 def linked_mentions_from(docs: DataFrame) -> DataFrame:
@@ -91,10 +83,10 @@ def linked_mentions_from(docs: DataFrame) -> DataFrame:
     )
 
 
-def kg_entity_link(spark: SparkSession, sf_dir: str) -> DataFrame:
+def kg_entity_link(docs: DataFrame) -> DataFrame:
     """(doc_id, mention, entity_iri, n_occurrences) — mention rows whose term
     is in the corpus gazetteer."""
-    return linked_mentions_from(_docs(spark, sf_dir)).select(
+    return linked_mentions_from(docs).select(
         "doc_id",
         "mention",
         F.concat(F.lit(ENTITY_NS), F.col("mention")).alias("entity_iri"),
@@ -140,11 +132,7 @@ def doc_triples_from(docs: DataFrame) -> DataFrame:
     return per_doc.unionByName(t_ment)
 
 
-def kg_doc_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return doc_triples_from(_docs(spark, sf_dir))
-
-
-def kg_predicate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+def kg_predicate_stats(docs: DataFrame) -> DataFrame:
     """VoID-style dataset summary over the materialised triple table:
     per predicate, the triple count and the distinct subject/object counts.
 
@@ -156,7 +144,7 @@ def kg_predicate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     every real KG) costs a skewed-but-partial-aggregated shuffle rather than
     a single-reducer sort. At 10^12 triples you'd swap the exact distincts
     for approx_count_distinct and keep the same single-pass shape."""
-    t = doc_triples_from(_docs(spark, sf_dir))
+    t = doc_triples_from(docs)
     return t.groupBy("pred").agg(
         F.count(F.lit(1)).alias("n_triples"),
         F.countDistinct("subj").alias("n_subjects"),
@@ -164,7 +152,7 @@ def kg_predicate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def kg_bgp_entity_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
+def kg_bgp_entity_lang(docs: DataFrame) -> DataFrame:
     """SPARQL-style basic-graph-pattern star join over the triple table:
 
         ?doc <onto:mentions> ?entity .  ?doc <onto:lang> ?lang
@@ -180,7 +168,7 @@ def kg_bgp_entity_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     the subject join co-partitions. Mention edges are distinct per
     (doc, entity) and lang triples are exactly one per doc, so count(*)
     counts documents with no distinct needed."""
-    t = doc_triples_from(_docs(spark, sf_dir))
+    t = doc_triples_from(docs)
     m = t.filter(F.col("pred") == MENTIONS_PRED).select(
         "subj", F.col("obj").alias("entity")
     )
@@ -199,7 +187,7 @@ DELTA_DROP_BELOW = 10  # "new" snapshot loses buckets < 10 ...
 DELTA_OLD_BELOW = 90  # ... "old" snapshot lacked buckets >= 90
 
 
-def kg_triples_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
+def kg_triples_delta(docs: DataFrame) -> DataFrame:
     """Incremental KG maintenance: the exact (add/del) triple delta between
     two corpus snapshots — the op a resumable 10^12-doc pipeline runs per
     crawl increment instead of re-materialising the world.
@@ -219,7 +207,6 @@ def kg_triples_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (two shuffles of the same key) and never a sort."""
     from .textops.quality import split_bucket
 
-    docs = _docs(spark, sf_dir)
     bucket = split_bucket(F.col("doc_id"), DELTA_SEED)
     t_old = doc_triples_from(docs.filter(bucket < DELTA_OLD_BELOW)).withColumn(
         "_side", F.lit(-1)
@@ -251,7 +238,7 @@ ENT_TABLE = f"<{ENTITY_NS}table>"
 UNBOUND = "<urn:unbound>"
 
 
-def kg_optional_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
+def kg_optional_mentions(docs: DataFrame) -> DataFrame:
     """SPARQL OPTIONAL over the triple table:
 
         ?doc <onto:lang> ?lang .
@@ -271,7 +258,7 @@ def kg_optional_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     the optional side when the entity filter makes it small — which a
     2-constant IN does, but a hub entity would not, so no broadcast is
     hard-coded."""
-    t = doc_triples_from(_docs(spark, sf_dir))
+    t = doc_triples_from(docs)
     lang = t.filter(F.col("pred") == LANG_PRED).select("subj", F.col("obj").alias("lang"))
     opt = t.filter(
         (F.col("pred") == MENTIONS_PRED) & F.col("obj").isin(ENT_SPARK, ENT_STREAM)
@@ -281,7 +268,7 @@ def kg_optional_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def kg_not_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
+def kg_not_exists(docs: DataFrame) -> DataFrame:
     """SPARQL FILTER NOT EXISTS:
 
         ?doc <onto:mentions> ent:table .
@@ -293,14 +280,14 @@ def kg_not_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins keep only the probe side's columns, so the shape is
     anti-first-then-enrich: the anti join shrinks the row set before the
     enrichment join touches it."""
-    t = doc_triples_from(_docs(spark, sf_dir))
+    t = doc_triples_from(docs)
     pos = t.filter((F.col("pred") == MENTIONS_PRED) & (F.col("obj") == ENT_TABLE)).select("subj")
     neg = t.filter((F.col("pred") == MENTIONS_PRED) & (F.col("obj") == ENT_STREAM)).select("subj")
     lang = t.filter(F.col("pred") == LANG_PRED).select("subj", F.col("obj").alias("lang"))
     return pos.join(neg, "subj", "left_anti").join(lang, "subj").select("subj", "lang")
 
 
-def kg_describe_entity(spark: SparkSession, sf_dir: str) -> DataFrame:
+def kg_describe_entity(docs: DataFrame) -> DataFrame:
     """SPARQL DESCRIBE ent:spark (concise-bounded-description flavor): every
     triple of every document that mentions the seed entity — the seed's
     1-hop neighborhood through its incoming `mentions` edges.
@@ -311,14 +298,14 @@ def kg_describe_entity(spark: SparkSession, sf_dir: str) -> DataFrame:
     subj-partitioned layout is co-partitioned and shuffle-free. The seed set
     is corpus-size-dependent (a hub entity's CBD is large), so no broadcast
     is hard-coded — AQE downgrades to broadcast when the seed set is small."""
-    t = doc_triples_from(_docs(spark, sf_dir))
+    t = doc_triples_from(docs)
     seeds = t.filter(
         (F.col("pred") == MENTIONS_PRED) & (F.col("obj") == ENT_SPARK)
     ).select("subj")
     return t.join(seeds, "subj", "semi").select("subj", "pred", "obj")
 
 
-def kg_ask(spark: SparkSession, sf_dir: str) -> DataFrame:
+def kg_ask(docs: DataFrame) -> DataFrame:
     """SPARQL ASK — the boolean query form:
 
         ASK { ?doc <onto:mentions> ent:spark . ?doc <onto:mentions> ent:table }
@@ -328,7 +315,7 @@ def kg_ask(spark: SparkSession, sf_dir: str) -> DataFrame:
     (local limit per task + early-exit global limit), so at 10^12 triples a
     satisfiable ASK touches a few partitions, not the corpus. The final
     single-row aggregate just converts presence to a boolean."""
-    t = doc_triples_from(_docs(spark, sf_dir))
+    t = doc_triples_from(docs)
     a = t.filter((F.col("pred") == MENTIONS_PRED) & (F.col("obj") == ENT_SPARK)).select("subj")
     b = t.filter((F.col("pred") == MENTIONS_PRED) & (F.col("obj") == ENT_TABLE)).select("subj")
     return a.join(b, "subj", "semi").limit(1).agg((F.count(F.lit(1)) > 0).alias("ask"))
@@ -337,7 +324,7 @@ def kg_ask(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONSTRUCT_MIN_DOCS = 60
 
 
-def kg_construct_popular(spark: SparkSession, sf_dir: str) -> DataFrame:
+def kg_construct_popular(docs: DataFrame) -> DataFrame:
     """SPARQL CONSTRUCT — pattern-rewriting query form: derive NEW triples
 
         CONSTRUCT { ?e <onto:popularIn> ?lang }
@@ -349,7 +336,7 @@ def kg_construct_popular(spark: SparkSession, sf_dir: str) -> DataFrame:
     store. Same star-join + aggregate shape as kg_bgp_entity_lang (one
     subject-keyed join, one map-side-combinable aggregate); the CONSTRUCT
     step itself is a free projection into (subj, pred, obj) form."""
-    t = doc_triples_from(_docs(spark, sf_dir))
+    t = doc_triples_from(docs)
     m = t.filter(F.col("pred") == MENTIONS_PRED).select("subj", F.col("obj").alias("entity"))
     lang = t.filter(F.col("pred") == LANG_PRED).select("subj", F.col("obj").alias("lang"))
     return (
@@ -386,7 +373,7 @@ def _tbox_edges() -> list[tuple[str, str]]:
     return edges
 
 
-def kg_rdfs_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
+def kg_rdfs_inference(docs: DataFrame) -> DataFrame:
     """RDFS subClassOf materialisation (forward chaining): every document's
     full type set — its per-source leaf class plus ALL transitive
     superclasses — as (subj, type_iri) rows. The enrichment step a KG
@@ -427,9 +414,10 @@ def kg_rdfs_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not grown:
             break
         closed |= grown
-    closure = spark.createDataFrame(sorted(closed), "sub string, super string")
+    closure = docs.sparkSession.createDataFrame(
+        sorted(closed), "sub string, super string"
+    )
 
-    docs = _docs(spark, sf_dir)
     direct = docs.select(
         iri(DOC_NS, F.col("doc_id")).alias("subj"),
         F.concat(F.lit(f"{ONTO}Source_"), F.col("source")).alias("leaf"),
@@ -450,7 +438,7 @@ SHACL_ALLOWED_LANGS = ("en", "es", "de", "fr")  # sh:in on onto:lang
 SHACL_MAX_MENTIONS = 23  # sh:maxCount on onto:mentions (link-farm bar)
 
 
-def kg_shacl_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
+def kg_shacl_validate(docs: DataFrame) -> DataFrame:
     """SHACL-style validation report over the MATERIALISED triple table:
     (focus, shape, value) rows, one per violation — the QA gate a KG
     pipeline runs before publishing a snapshot. Three shapes:
@@ -475,7 +463,7 @@ def kg_shacl_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     violation sets union without dedup (each shape emits at most one row per
     focus by construction: minCount from the distinct focus set, value
     shapes from single-valued predicates)."""
-    t = doc_triples_from(_docs(spark, sf_dir))
+    t = doc_triples_from(docs)
     focus = t.filter(F.col("pred") == RDF_TYPE).select("subj")
     ment = t.filter(F.col("pred") == MENTIONS_PRED).select("subj")
     v_mincount = focus.join(ment, "subj", "left_anti").select(
@@ -512,7 +500,7 @@ def kg_shacl_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def kg_group_concat_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def kg_group_concat_langs(docs: DataFrame) -> DataFrame:
     """SPARQL 1.1 GROUP_CONCAT — the aggregate query form:
 
         SELECT ?e (GROUP_CONCAT(DISTINCT ?lang; separator=",") AS ?langs)
@@ -528,7 +516,7 @@ def kg_group_concat_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the language cardinality (single digits), so the ObjectHashAggregate
     buffer stays tiny even for hub entities; n_langs rides along from the
     same set."""
-    t = doc_triples_from(_docs(spark, sf_dir))
+    t = doc_triples_from(docs)
     m = t.filter(F.col("pred") == MENTIONS_PRED).select(
         "subj", F.col("obj").alias("entity")
     )
@@ -547,7 +535,7 @@ def kg_group_concat_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def kg_apply_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
+def kg_apply_delta(docs: DataFrame) -> DataFrame:
     """Incremental-maintenance ROUND TRIP: apply kg_triples_delta's (add/del)
     stream to the OLD snapshot and return the reconstructed NEW snapshot —
     proving, in-band against an oracle that materialises the new snapshot
@@ -564,10 +552,9 @@ def kg_apply_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     old -> delta -> apply is exercised, not a cached delta table."""
     from .textops.quality import split_bucket
 
-    docs = _docs(spark, sf_dir)
     bucket = split_bucket(F.col("doc_id"), DELTA_SEED)
     t_old = doc_triples_from(docs.filter(bucket < DELTA_OLD_BELOW))
-    delta = kg_triples_delta(spark, sf_dir)
+    delta = kg_triples_delta(docs)
     signed = (
         t_old.withColumn("_d", F.lit(1))
         .unionByName(

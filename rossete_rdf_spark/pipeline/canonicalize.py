@@ -86,7 +86,7 @@ def canonical_entity_map(surfaces: DataFrame, threshold: float = CANON_JACCARD) 
 CANON_PLURAL_MOD = 3  # ~1/3 of surfaces get a deterministic plural twin
 
 
-def entity_canonical_query(spark, sf_dir: str) -> DataFrame:
+def entity_canonical_query(docs: DataFrame) -> DataFrame:
     """Driver-contract face of the canonicalization stage: (surface,
     canonical) over the corpus's mention-eligible vocabulary, with
     deterministic plural twins ('w' -> 'ws' for surfaces whose content hash
@@ -96,11 +96,8 @@ def entity_canonical_query(spark, sf_dir: str) -> DataFrame:
     the DuckDB oracle replays the identical banding/cap/verify pipeline and
     closes components with a recursive min-label CTE, so both engines miss
     the same pairs. Scale shape: that of canonical_entity_map."""
-    from pyspark.sql import functions as F
-
     from ..kgops import eligible_tokens
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     words = eligible_tokens(docs, "w").select("w").distinct()
     variants = words.filter(
         minhash64(F.col("w"), "plural") % CANON_PLURAL_MOD == 0

@@ -235,14 +235,13 @@ def synth_media(spark, n: int, partitions: int = 8) -> DataFrame:
     )
 
 
-def multimodal_features_query(spark, sf_dir: str) -> DataFrame:
+def multimodal_features_query(docs: DataFrame) -> DataFrame:
     """Driver-contract wrapper: mint a real BMP or PPM payload per document
     id, run the mapInPandas extraction — REAL header parsing + numpy channel
     means, no stub — and project byte count, parsed dimensions, and
     per-channel means. The synth gradient gives every statistic a closed
     form in the id (see synth_image_bytes), which is what the DuckDB oracle
     computes; the Spark side only ever sees the binary payload."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     media = docs.select(
         F.col("doc_id").alias("media_id"),
         F.when(F.col("doc_id") % 2 == 0, F.lit("bmp"))

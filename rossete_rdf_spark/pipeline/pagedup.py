@@ -67,14 +67,12 @@ def canonical_pages_exact(pages_text: DataFrame) -> DataFrame:
     return _keep_canonical(pages_text, exact_duplicate_edges(pages_text))
 
 
-def page_canonical_exact_query(spark, sf_dir: str) -> DataFrame:
+def page_canonical_exact_query(docs: DataFrame) -> DataFrame:
     """Driver-contract wrapper for the CC tier. The documents table has no
     exact duplicates, so the query deterministically plants them — every 7th
     doc gets a second url with identical text — then runs the full
     exact-edges -> connected-components -> keep-canonical path and returns
     the surviving urls. Oracle: url = min(url) per text fingerprint."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
     def pages(tag: str, flt=None):
         d = docs.filter(flt) if flt is not None else docs
         return d.select(
@@ -86,7 +84,7 @@ def page_canonical_exact_query(spark, sf_dir: str) -> DataFrame:
     return canonical_pages_exact(all_pages).select("url")
 
 
-def page_canonical_lsh_query(spark, sf_dir: str) -> DataFrame:
+def page_canonical_lsh_query(docs: DataFrame) -> DataFrame:
     """Driver-contract wrapper for the NEAR-DUP tier — the full
     duplicate_edges path that page_canonical_exact cannot reach: capped
     MinHash-LSH banding, >=2-band agreement, one-aggregate exact-Jaccard
@@ -100,7 +98,6 @@ def page_canonical_lsh_query(spark, sf_dir: str) -> DataFrame:
     cap, band threshold, Jaccard verify) and closes the components with a
     recursive min-label reachability CTE — so every planted OR incidental
     collision resolves identically on both engines."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     orig = docs.select(
         F.concat(F.lit("u"), F.col("doc_id").cast("string")).alias("url"), "text"
     )

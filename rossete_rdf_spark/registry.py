@@ -1,6 +1,19 @@
 """Registry of driver-contract queries: name -> (spark, sf_dir) -> DataFrame,
 plus the DuckDB oracle for each (oracles.py). This is the single source of
-truth consumed by __spark_entry__.py, the cross-check tests, and bench.py."""
+truth consumed by __spark_entry__.py, the cross-check tests, and bench.py.
+
+Two kinds of query sit behind that one contract:
+
+- Table ops are functions of their input DataFrames. `_op(fn, *tables)`
+  adapts one: each call reads every named table once, through
+  tables.read_table, and passes them to `fn` positionally, so an entry
+  lists its tables in parameter order, like the oracle's FROM clause. An op
+  that needs the session takes it from its input's `.sparkSession`.
+- Path ops keep `(spark, sf_dir)` because their input is a path, not
+  a table: the 9 RML queries (their mappings name file sources), the 5
+  streaming queries (readStream over a directory) and rel_bucketed_join
+  (catalog tables staged per sf_dir). Their table reads also go through
+  tables.read_table."""
 
 from __future__ import annotations
 
@@ -27,6 +40,7 @@ from .streaming.events import (
     streaming_sessionize_query,
     streaming_static_join_query,
 )
+from .tables import read_table
 from .textops import (
     ann_cosine_topk,
     ann_pq_adc_topk,
@@ -72,120 +86,116 @@ from .textops import (
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
-def _docs_op(fn) -> QueryFn:
+def _op(fn: Callable[..., DataFrame], *tables: str) -> QueryFn:
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return fn(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-    return run
-
-
-def _emb_op(fn) -> QueryFn:
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return fn(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+        return fn(*(read_table(spark, sf_dir, t) for t in tables))
 
     return run
 
 
 QUERIES: dict[str, QueryFn] = {
     # training-data ops: dedup family
-    "exact_dedup": _docs_op(exact_dedup),
-    "incremental_exact_dedup": _docs_op(incremental_exact_dedup),
-    "incremental_minhash_neardup": _docs_op(incremental_minhash_neardup),
-    "doc_fingerprint": _docs_op(doc_fingerprint),
-    "doc_winnow_fingerprint": _docs_op(winnow_fingerprints),
-    "ngram_jaccard_pairs": _docs_op(ngram_jaccard_pairs),
-    "minhash_lsh_pairs": _docs_op(minhash_lsh_pairs),
-    "simhash": _docs_op(simhash),
-    "doc_span_dedup": _docs_op(span_dedup),
+    "exact_dedup": _op(exact_dedup, "documents"),
+    "incremental_exact_dedup": _op(incremental_exact_dedup, "documents"),
+    "incremental_minhash_neardup": _op(incremental_minhash_neardup, "documents"),
+    "doc_fingerprint": _op(doc_fingerprint, "documents"),
+    "doc_winnow_fingerprint": _op(winnow_fingerprints, "documents"),
+    "ngram_jaccard_pairs": _op(ngram_jaccard_pairs, "documents"),
+    "minhash_lsh_pairs": _op(minhash_lsh_pairs, "documents"),
+    "simhash": _op(simhash, "documents"),
+    "doc_span_dedup": _op(span_dedup, "documents"),
     # text analysis
-    "token_count": _docs_op(token_count),
-    "lang_id": _docs_op(lang_id),
-    "quality_score": _docs_op(quality_score),
-    "doc_repetition_score": _docs_op(repetition_scores),
-    "doc_train_test_split": _docs_op(train_test_split),
-    "doc_stratified_sample": _docs_op(stratified_sample),
-    "doc_domain_quota": _docs_op(domain_quota),
-    "doc_global_sample": _docs_op(global_sample),
-    "doc_length_outliers": _docs_op(length_outliers),
-    "doc_source_stats": _docs_op(source_stats),
-    "doc_clean_corpus": _docs_op(clean_corpus),
-    "doc_tfidf_top_terms": _docs_op(tfidf_top_terms),
-    "doc_unigram_logprob": _docs_op(unigram_logprob),
-    "vocab_dense_ids": _docs_op(vocab_dense_ids),
-    "doc_decontaminate": _docs_op(decontaminate),
+    "token_count": _op(token_count, "documents"),
+    "lang_id": _op(lang_id, "documents"),
+    "quality_score": _op(quality_score, "documents"),
+    "doc_repetition_score": _op(repetition_scores, "documents"),
+    "doc_train_test_split": _op(train_test_split, "documents"),
+    "doc_stratified_sample": _op(stratified_sample, "documents"),
+    "doc_domain_quota": _op(domain_quota, "documents"),
+    "doc_global_sample": _op(global_sample, "documents"),
+    "doc_length_outliers": _op(length_outliers, "documents"),
+    "doc_source_stats": _op(source_stats, "documents"),
+    "doc_clean_corpus": _op(clean_corpus, "documents"),
+    "doc_tfidf_top_terms": _op(tfidf_top_terms, "documents"),
+    "doc_unigram_logprob": _op(unigram_logprob, "documents"),
+    "vocab_dense_ids": _op(vocab_dense_ids, "documents"),
+    "doc_decontaminate": _op(decontaminate, "documents"),
     # web-corpus cleaning (URL canonicalization + PII scrub)
-    "doc_url_dedup": _docs_op(url_dedup),
-    "doc_pii_redact": _docs_op(pii_redact),
-    "doc_domain_blocklist": _docs_op(domain_blocklist),
+    "doc_url_dedup": _op(url_dedup, "documents"),
+    "doc_pii_redact": _op(pii_redact, "documents"),
+    "doc_domain_blocklist": _op(domain_blocklist, "documents"),
     # fixed-memory sketches (KMV/HLL distinct estimates, count-min heavy hitters)
-    "sketch_distinct_kmv": _docs_op(sketch_distinct_kmv),
-    "sketch_distinct_hll": _docs_op(sketch_distinct_hll),
-    "heavy_hitters_cms": _docs_op(heavy_hitters_cms),
+    "sketch_distinct_kmv": _op(sketch_distinct_kmv, "documents"),
+    "sketch_distinct_hll": _op(sketch_distinct_hll, "documents"),
+    "heavy_hitters_cms": _op(heavy_hitters_cms, "documents"),
     # similarity search + embedding-tier dedup
-    "ann_cosine_topk": _emb_op(ann_cosine_topk),
-    "ann_lsh_bucket_topk": _emb_op(ann_lsh_bucket_topk),
-    "ann_ivf_topk": _emb_op(ann_ivf_topk),
-    "ann_ivf_nprobe_topk": _emb_op(ann_ivf_nprobe_topk),
-    "ann_ivf_kmeans_topk": _emb_op(ann_ivf_kmeans_topk),
-    "ann_sq8_topk": _emb_op(ann_sq8_topk),
-    "ann_pq_adc_topk": _emb_op(ann_pq_adc_topk),
-    "ann_pq_rerank_topk": _emb_op(ann_pq_rerank_topk),
-    "embedding_neardup_pairs": _emb_op(embedding_neardup_pairs),
+    "ann_cosine_topk": _op(ann_cosine_topk, "embeddings"),
+    "ann_lsh_bucket_topk": _op(ann_lsh_bucket_topk, "embeddings"),
+    "ann_ivf_topk": _op(ann_ivf_topk, "embeddings"),
+    "ann_ivf_nprobe_topk": _op(ann_ivf_nprobe_topk, "embeddings"),
+    "ann_ivf_kmeans_topk": _op(ann_ivf_kmeans_topk, "embeddings"),
+    "ann_sq8_topk": _op(ann_sq8_topk, "embeddings"),
+    "ann_pq_adc_topk": _op(ann_pq_adc_topk, "embeddings"),
+    "ann_pq_rerank_topk": _op(ann_pq_rerank_topk, "embeddings"),
+    "embedding_neardup_pairs": _op(embedding_neardup_pairs, "embeddings"),
     # KG construction (batch face)
-    "kg_mentions": kgops.kg_mentions,
-    "kg_entity_link": kgops.kg_entity_link,
-    "kg_doc_triples": kgops.kg_doc_triples,
+    "kg_mentions": _op(kgops.mentions_from, "documents"),
+    "kg_entity_link": _op(kgops.kg_entity_link, "documents"),
+    "kg_doc_triples": _op(kgops.doc_triples_from, "documents"),
     # KG consumption + maintenance over the materialised triple table
-    "kg_predicate_stats": kgops.kg_predicate_stats,
-    "kg_bgp_entity_lang": kgops.kg_bgp_entity_lang,
-    "kg_triples_delta": kgops.kg_triples_delta,
-    "kg_apply_delta": kgops.kg_apply_delta,
+    "kg_predicate_stats": _op(kgops.kg_predicate_stats, "documents"),
+    "kg_bgp_entity_lang": _op(kgops.kg_bgp_entity_lang, "documents"),
+    "kg_triples_delta": _op(kgops.kg_triples_delta, "documents"),
+    "kg_apply_delta": _op(kgops.kg_apply_delta, "documents"),
     # SPARQL algebra over the triple table (OPTIONAL / NOT EXISTS / DESCRIBE)
-    "kg_optional_mentions": kgops.kg_optional_mentions,
-    "kg_not_exists": kgops.kg_not_exists,
-    "kg_describe_entity": kgops.kg_describe_entity,
-    "kg_ask": kgops.kg_ask,
-    "kg_construct_popular": kgops.kg_construct_popular,
-    "kg_group_concat_langs": kgops.kg_group_concat_langs,
+    "kg_optional_mentions": _op(kgops.kg_optional_mentions, "documents"),
+    "kg_not_exists": _op(kgops.kg_not_exists, "documents"),
+    "kg_describe_entity": _op(kgops.kg_describe_entity, "documents"),
+    "kg_ask": _op(kgops.kg_ask, "documents"),
+    "kg_construct_popular": _op(kgops.kg_construct_popular, "documents"),
+    "kg_group_concat_langs": _op(kgops.kg_group_concat_langs, "documents"),
     # RDFS forward chaining + SHACL-style snapshot validation
-    "kg_rdfs_inference": kgops.kg_rdfs_inference,
-    "kg_shacl_validate": kgops.kg_shacl_validate,
+    "kg_rdfs_inference": _op(kgops.kg_rdfs_inference, "documents"),
+    "kg_shacl_validate": _op(kgops.kg_shacl_validate, "documents"),
     # entity canonicalization (LSH blocking -> Jaccard verify -> CC), oracled
-    "kg_entity_canonical": entity_canonical_query,
+    "kg_entity_canonical": _op(entity_canonical_query, "documents"),
     # entity-graph analytics over the co-mention graph
-    "kg_entity_pagerank": _docs_op(entity_pagerank),
-    "kg_entity_triangles": _docs_op(entity_triangles),
-    "kg_comention_pmi": _docs_op(comention_pmi),
-    "kg_label_propagation": _docs_op(label_propagation),
-    "kg_bfs_reachability": _docs_op(bfs_reachability),
+    "kg_entity_pagerank": _op(entity_pagerank, "documents"),
+    "kg_entity_triangles": _op(entity_triangles, "documents"),
+    "kg_comention_pmi": _op(comention_pmi, "documents"),
+    "kg_label_propagation": _op(label_propagation, "documents"),
+    "kg_bfs_reachability": _op(bfs_reachability, "documents"),
     # relational / streaming-batch twins
-    "rel_first_match_join": relops.rel_first_match_join,
-    "rel_runtime_filter_join": relops.rel_runtime_filter_join,
-    "rel_skew_join_agg": relops.rel_skew_join_agg,
-    "rel_salted_join": relops.rel_salted_join,
+    "rel_first_match_join": _op(relops.rel_first_match_join, "part", "lineitem"),
+    "rel_runtime_filter_join": _op(relops.rel_runtime_filter_join, "part", "lineitem"),
+    "rel_skew_join_agg": _op(relops.rel_skew_join_agg, "lineitem", "orders"),
+    "rel_salted_join": _op(relops.rel_salted_join, "lineitem", "orders"),
     "rel_bucketed_join": relops.rel_bucketed_join,
-    "events_asof_join": relops.events_asof_join,
-    "events_asof_join_bucketed": relops.events_asof_join_bucketed,
-    "events_range_join": relops.events_range_join,
-    "events_moving_avg": relops.events_moving_avg,
-    "events_funnel": relops.events_funnel,
-    "events_retention_cohorts": relops.events_retention_cohorts,
-    "events_top_spenders": relops.events_top_spenders,
-    "events_top_spenders_salted": relops.events_top_spenders_salted,
-    "events_value_quantiles": relops.events_value_quantiles,
-    "events_value_histogram": relops.events_value_histogram,
-    "events_anomaly_zscore": relops.events_anomaly_zscore,
-    "mention_counts_salted": relops.mention_counts_salted,
-    "events_rollup": relops.events_rollup,
-    "events_cube": relops.events_cube,
-    "events_pivot": relops.events_pivot,
-    "events_unpivot_roundtrip": relops.events_unpivot_roundtrip,
-    "events_hourly_agg": relops.events_hourly_agg,
-    "events_hopping_agg": relops.events_hopping_agg,
-    "events_sessionize": relops.events_sessionize,
-    "tpch_q1_pricing": relops.tpch_q1_pricing,
-    "tpch_q3_shipping": relops.tpch_q3_shipping,
-    "tpch_q5_local_volume": relops.tpch_q5_local_volume,
+    "events_asof_join": _op(relops.events_asof_join, "events"),
+    "events_asof_join_bucketed": _op(relops.events_asof_join_bucketed, "events"),
+    "events_range_join": _op(relops.events_range_join, "events"),
+    "events_moving_avg": _op(relops.events_moving_avg, "events"),
+    "events_funnel": _op(relops.events_funnel, "events"),
+    "events_retention_cohorts": _op(relops.events_retention_cohorts, "events"),
+    "events_top_spenders": _op(relops.events_top_spenders, "events"),
+    "events_top_spenders_salted": _op(relops.events_top_spenders_salted, "events"),
+    "events_value_quantiles": _op(relops.events_value_quantiles, "events"),
+    "events_value_histogram": _op(relops.events_value_histogram, "events"),
+    "events_anomaly_zscore": _op(relops.events_anomaly_zscore, "events"),
+    "mention_counts_salted": _op(relops.mention_counts_salted, "documents"),
+    "events_rollup": _op(relops.events_rollup, "events"),
+    "events_cube": _op(relops.events_cube, "events"),
+    "events_pivot": _op(relops.events_pivot, "events"),
+    "events_unpivot_roundtrip": _op(relops.events_unpivot_roundtrip, "events"),
+    "events_hourly_agg": _op(relops.events_hourly_agg, "events"),
+    "events_hopping_agg": _op(relops.events_hopping_agg, "events"),
+    "events_sessionize": _op(relops.events_sessionize, "events"),
+    "tpch_q1_pricing": _op(relops.tpch_q1_pricing, "lineitem"),
+    "tpch_q3_shipping": _op(relops.tpch_q3_shipping, "customer", "orders", "lineitem"),
+    "tpch_q5_local_volume": _op(
+        relops.tpch_q5_local_volume,
+        "lineitem", "orders", "customer", "supplier", "nation", "region",
+    ),
     # structured streaming (real readStream -> watermark -> memory sink)
     "streaming_hourly_agg": streaming_hourly_agg_query,
     "streaming_dedup": streaming_dedup_query,
@@ -193,10 +203,10 @@ QUERIES: dict[str, QueryFn] = {
     "streaming_static_join": streaming_static_join_query,
     "streaming_sessionize": streaming_sessionize_query,
     # multimodal binary-column plumbing (mapInPandas feature extraction)
-    "multimodal_features": multimodal_features_query,
+    "multimodal_features": _op(multimodal_features_query, "documents"),
     # page-dedup tiers through real iterative connected components
-    "page_canonical_exact": page_canonical_exact_query,
-    "page_canonical_lsh": page_canonical_lsh_query,
+    "page_canonical_exact": _op(page_canonical_exact_query, "documents"),
+    "page_canonical_lsh": _op(page_canonical_lsh_query, "documents"),
     # RML engine end-to-end
     "rml_nation_region_graph": rmlops.rml_nation_region_graph,
     "rml_subject_space_discard": rmlops.rml_subject_space_discard,

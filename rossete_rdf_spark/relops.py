@@ -5,11 +5,14 @@ aggregation, and two TPC-H-style health queries used as bench anchors."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .rml.compiler import first_match_join
+from .tables import read_table, scratch_dir
 
 
 def _asof_tag(
@@ -194,15 +197,13 @@ def asof_join_bucketed(
 # --- driver-contract queries ------------------------------------------------
 
 
-def rel_first_match_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+def rel_first_match_join(part: DataFrame, lineitem: DataFrame) -> DataFrame:
     """Each part joined to its first lineitem occurrence (ordered by
     (l_orderkey, l_linenumber)) — J1 semantics over TPC-H-ish tables."""
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     # (l_orderkey, l_linenumber) bit-packed into one long: linenumber is
     # 1..7, so *8 preserves lexicographic order and stays unique (the PK) —
     # every carried column is fixed-width, so the collapse is HashAggregate
-    li = li.select(
+    li = lineitem.select(
         "l_partkey",
         "l_orderkey",
         "l_linenumber",
@@ -221,7 +222,7 @@ def rel_first_match_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def rel_runtime_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+def rel_runtime_filter_join(part: DataFrame, lineitem: DataFrame) -> DataFrame:
     """Runtime bloom-filter join pruning: a selective dim-side predicate
     (p_brand = 'Brand#13', ~1/25 of part) builds a bloom filter that Spark's
     InjectRuntimeFilter rule pushes into the FACT-side scan as
@@ -244,16 +245,14 @@ def rel_runtime_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     only prunes rows the join would drop."""
     from .session import scoped_conf
 
-    with scoped_conf(spark, {
+    with scoped_conf(lineitem.sparkSession, {
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }):
-        part = spark.read.parquet(f"{sf_dir}/part.parquet")
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
         dim = part.filter(F.col("p_brand") == "Brand#13")
         out = (
-            li.join(dim, F.col("l_partkey") == F.col("p_partkey"))
+            lineitem.join(dim, F.col("l_partkey") == F.col("p_partkey"))
             .groupBy("p_brand", "p_size")
             .agg(
                 F.count(F.lit(1)).alias("n_items"),
@@ -270,7 +269,7 @@ def rel_runtime_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def rel_skew_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+def rel_skew_join_agg(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
     """AQE skew-join demo query: a deliberately hub-skewed fact key (75% of
     lineitem rows collapse onto key 0) joined to a key-unique dim, then
     aggregated. Correctness never depends on the skew handling — the
@@ -288,16 +287,16 @@ def rel_skew_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
       whole fact is one parquet row group = ONE map task (unsplittable —
       the rule logs 'number of skewed partitions: 0'). A real fact table
       has thousands of maps; the repartition mimics that."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     skew_key = F.when(F.col("l_orderkey") % 4 != 0, F.lit(0)).otherwise(
         F.col("l_orderkey")
     )
-    fact = li.repartition(16).select(skew_key.alias("k"), "l_quantity")
+    fact = lineitem.repartition(16).select(skew_key.alias("k"), "l_quantity")
     dim = (
         orders.filter((F.col("o_orderkey") % 4 == 0) & (F.col("o_orderkey") > 0))
         .select(F.col("o_orderkey").alias("k"))
-        .unionByName(spark.range(1).select(F.lit(0).cast("long").alias("k")))
+        .unionByName(
+            lineitem.sparkSession.range(1).select(F.lit(0).cast("long").alias("k"))
+        )
         .withColumn("tag", F.concat(F.lit("grp"), (F.col("k") % 3).cast("string")))
     )
     return (
@@ -313,7 +312,7 @@ def rel_skew_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 SALTED_JOIN_REP = 8
 
 
-def rel_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+def rel_salted_join(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
     """The MANUAL hub-join mitigation, beside rel_skew_join_agg's AQE one:
     the same hub-skewed fact key (75% of lineitem rows collapse onto key 0)
     joined to the same key-unique dim, but the skew is handled by explicit
@@ -337,20 +336,20 @@ def rel_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     hub rows tied on quantity still spread, because the salt sees the full
     row identity, not just the two projected columns. Correctness never
     depends on it — the oracle is the plain join + aggregate."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     skew_key = F.when(F.col("l_orderkey") % 4 != 0, F.lit(0)).otherwise(
         F.col("l_orderkey")
     )
-    fact = li.select(
+    fact = lineitem.select(
         skew_key.alias("k"),
         "l_quantity",
-        _row_salt(li, SALTED_JOIN_REP).alias("_salt"),
+        _row_salt(lineitem, SALTED_JOIN_REP).alias("_salt"),
     )
     dim = (
         orders.filter((F.col("o_orderkey") % 4 == 0) & (F.col("o_orderkey") > 0))
         .select(F.col("o_orderkey").alias("k"))
-        .unionByName(spark.range(1).select(F.lit(0).cast("long").alias("k")))
+        .unionByName(
+            lineitem.sparkSession.range(1).select(F.lit(0).cast("long").alias("k"))
+        )
         .withColumn("tag", F.concat(F.lit("grp"), (F.col("k") % 3).cast("string")))
         .withColumn(
             "_salt",
@@ -396,27 +395,26 @@ def rel_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
       pinned in tests/test_plans.py with the hold-past-action idiom and
       BOTH broadcast thresholds (static + adaptive) held at -1.
 
-    The tables are EXTERNAL (explicit path under /tmp keyed by sf_dir, the
-    _events_stream convention) so the query never depends on
-    spark.sql.warehouse.dir; table names carry the same sf_dir tag, so
-    calls against different sf_dirs are independent and a returned (lazy)
-    DataFrame is never silently re-pointed at other data by a later call.
-    mode('overwrite') onto the FIXED per-sf_dir path makes reruns
-    idempotent and bounds /tmp to one staged copy per sf_dir (an
-    application-id-keyed path would leak a copy per Spark app). Like the
+    The tables are EXTERNAL (explicit path in tables.scratch_dir, the
+    per-sf_dir temp directory the streaming and RML fixture queries use)
+    so the query never depends on spark.sql.warehouse.dir; table names
+    carry the same sf_dir tag, so calls against different sf_dirs are
+    independent and a returned (lazy) DataFrame is never silently
+    re-pointed at other data by a later call. mode('overwrite') onto the
+    FIXED per-sf_dir path makes reruns idempotent and bounds the temp
+    directory to one staged copy per sf_dir (an application-id-keyed path
+    would leak a copy per Spark app). Like the
     repo's other scoped-resource ops this is not concurrent-safe across
     two simultaneous Spark applications sharing the path. The only
     Exchange in the whole plan is the final aggregate's.
 
     Oracle: the plain customer x orders join + aggregate."""
-    import re
-
-    tag = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir).strip("_")
-    base = f"/tmp/rossete_bucketed/{tag}"
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    base = scratch_dir(sf_dir, "bucketed")
+    tag = os.path.basename(base)
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    customer = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
     (
@@ -449,15 +447,14 @@ def rel_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_asof_join(events: DataFrame) -> DataFrame:
     """For each purchase event, the most recent click by the same user at or
     before the purchase (attribution-style as-of join). Timestamps are
     rendered as strings and value rounded for engine portability."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    pur = ev.filter(F.col("event_type") == "purchase").select(
+    pur = events.filter(F.col("event_type") == "purchase").select(
         "user_id", "event_id", "ts", "value"
     )
-    clk = ev.filter(F.col("event_type") == "click").select(
+    clk = events.filter(F.col("event_type") == "click").select(
         "user_id", "event_id", "ts"
     )
     out = asof_join(pur, clk, on="user_id", right_cols=["event_id"])
@@ -471,7 +468,7 @@ def events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_asof_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_asof_join_bucketed(events: DataFrame) -> DataFrame:
     """events_asof_join through the hub-safe BUCKETED as-of join: identical
     semantics (property-tested output-equivalent, tests/test_ops_properties),
     so it shares events_asof_join's oracle — but the execution plan replaces
@@ -479,11 +476,10 @@ def events_asof_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus a cross-bucket carry over the per-key bucket list. This is the
     variant to reach for when single keys (bot users, null-ish default ids)
     accumulate more history than one partition should sort."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    pur = ev.filter(F.col("event_type") == "purchase").select(
+    pur = events.filter(F.col("event_type") == "purchase").select(
         "user_id", "event_id", "ts", "value"
     )
-    clk = ev.filter(F.col("event_type") == "click").select(
+    clk = events.filter(F.col("event_type") == "click").select(
         "user_id", "event_id", "ts"
     )
     out = asof_join_bucketed(
@@ -544,21 +540,17 @@ def bucketed_range_join(
 RANGE_SLOTS = [(0, 7), (7, 13), (13, 22), (22, 24), (6, 14)]  # last one overlaps
 
 
-def events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_range_join(events: DataFrame) -> DataFrame:
     """Range-join contract query: each event matched to every deterministic
     daily interval containing it. The interval set partitions each day into
     four irregular slots PLUS one overlapping 6h–14h slot, so the join is
     genuinely non-equi (events in 6–14h match twice) — exactly what the
     bucket-explode equi-join composition must reproduce. All time arithmetic
     is integer epoch seconds so both engines compare identical numbers."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = events.select(
         "event_id", F.col("ts").cast("timestamp").cast("long").alias("ts_s")
     )
-    days = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select(F.to_date("ts").alias("d"))
-        .distinct()
-    )
+    days = events.select(F.to_date("ts").alias("d")).distinct()
     slots = F.array(
         *[
             F.struct(
@@ -581,7 +573,7 @@ def events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id", "interval_id")
 
 
-def mention_counts_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
+def mention_counts_salted(docs: DataFrame) -> DataFrame:
     """Corpus-wide term counts via SALTED two-stage aggregation — the
     hub-key pattern: stage 1 aggregates on (salt, mention) so a hub term
     spreads over 16 reducers, stage 2 merges the 16 partials. Results are
@@ -591,7 +583,7 @@ def mention_counts_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     salting is the aggregation-side equivalent, made explicit here."""
     from .kgops import eligible_tokens  # deferred: kgops -> textops -> relops
 
-    toks = eligible_tokens(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    toks = eligible_tokens(docs)
     salted = toks.withColumn("__salt", (F.crc32(F.col("doc_id").cast("string")) % 16))
     partial = salted.groupBy("__salt", "mention").agg(
         F.count(F.lit(1)).alias("c")
@@ -599,7 +591,7 @@ def mention_counts_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return partial.groupBy("mention").agg(F.sum("c").alias("n_occurrences"))
 
 
-def events_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_moving_avg(events: DataFrame) -> DataFrame:
     """Per-user 3-event moving average of `value` (frame-based window
     aggregate — the rolling-feature pattern of a training-data pipeline).
     One shuffle on user_id with a per-user local sort; the frame (2
@@ -607,13 +599,12 @@ def events_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     user's history never leaves its partition. Hub users are naturally
     bounded by per-user activity (the salting pattern is for unbounded hub
     KEYS; a per-entity time series is the partition unit here)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
         .rowsBetween(-2, Window.currentRow)
     )
-    return ev.select(
+    return events.select(
         "user_id",
         "event_id",
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
@@ -667,13 +658,12 @@ def salted_top_k_per_group(
     return top_k(partial, by, order, k)
 
 
-def events_top_spenders(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_top_spenders(events: DataFrame) -> DataFrame:
     """Top-3 users by total value within each event type: aggregate first
     (hash agg with map-side partials), THEN rank the (small) per-type
     aggregate — the shuffled data is one row per (type, user), never the
     raw events."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    per_user = ev.groupBy("event_type", "user_id").agg(
+    per_user = events.groupBy("event_type", "user_id").agg(
         F.round(F.sum("value"), 2).alias("total_value")
     )
     ranked = top_k(
@@ -682,7 +672,7 @@ def events_top_spenders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked.select("event_type", "user_id", "total_value", "rk")
 
 
-def events_top_spenders_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_top_spenders_salted(events: DataFrame) -> DataFrame:
     """Hub-safe top-k over a PLANTED tie-heavy hub group: every non-purchase
     event collapses into one 'hot' group (most of the table) and the ranking
     score is the value floored to whole units, so thousands of hub rows tie
@@ -692,8 +682,7 @@ def events_top_spenders_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     heavy-ties property test proves the spread). Ranks RAW events — k per
     salt slice, then k-of-k — with event_id as the tie-break, so output is
     deterministic and oracle-comparable despite the ties."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    fact = ev.select(
+    fact = events.select(
         F.when(F.col("event_type") == "purchase", F.col("event_type"))
         .otherwise(F.lit("hot"))
         .alias("grp"),
@@ -707,14 +696,13 @@ def events_top_spenders_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked.select("grp", "event_id", "user_id", "score", "rk")
 
 
-def events_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_value_quantiles(events: DataFrame) -> DataFrame:
     """Exact p50/p90/p99 of value per event type. Spark's `percentile` is
     the EXACT aggregate (collects the group's values — fine for bounded
     groups; for unbounded cardinality swap in approx_percentile, which has
     no cross-engine oracle). Both engines interpolate identically on the
     sorted doubles, so rounded values hash-match."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.groupBy("event_type").agg(
+    return events.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.expr("percentile(value, 0.5)"), 6).alias("p50"),
         F.round(F.expr("percentile(value, 0.9)"), 6).alias("p90"),
@@ -726,7 +714,7 @@ HIST_BINS = 10
 HIST_WIDTH_CENTS = 5000  # 50.00-wide bins over value in [0, 500)
 
 
-def events_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_value_histogram(events: DataFrame) -> DataFrame:
     """(event_type, bin, bin_lo, bin_hi, n_events, sum_value) — fixed-bin
     value histogram per event type, the UNBOUNDED-cardinality companion to
     events_value_quantiles: the exact percentile aggregate buffers each
@@ -742,9 +730,7 @@ def events_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     a bin edge bins identically in both engines. The top bin is open
     (least(.., BINS-1)) so outliers never drop. sum_value recomposes from
     the exact integer cents sum."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
-        "cents", F.floor(F.col("value") * 100 + 0.5).cast("long")
-    )
+    ev = events.withColumn("cents", F.floor(F.col("value") * 100 + 0.5).cast("long"))
     # true integer division (Spark `div`, DuckDB `//`): never a float
     b = F.least(
         F.expr(f"cents div {HIST_WIDTH_CENTS}").cast("int"),
@@ -770,7 +756,7 @@ def events_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 Z_THRESHOLD = 3.0
 
 
-def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_anomaly_zscore(events: DataFrame) -> DataFrame:
     """(event_id, event_type, zscore) — per-type z-score outliers, the
     standard metric-anomaly sweep over an event stream.
 
@@ -788,9 +774,7 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back onto the scan — the second pass is a broadcast hash join
     fused into codegen, so at 100 TB the op costs one shuffle of partial
     aggregates plus one full scan, never a window sort over the corpus."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
-        "cents", F.floor(F.col("value") * 100 + 0.5).cast("long")
-    )
+    ev = events.withColumn("cents", F.floor(F.col("value") * 100 + 0.5).cast("long"))
     stats = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
         F.sum("cents").cast("double").alias("s"),
@@ -809,7 +793,7 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_rollup(events: DataFrame) -> DataFrame:
     """Hierarchical totals in ONE pass: ROLLUP(event_type, hour_of_day)
     computes per-(type, hour), per-type, and grand totals without
     re-scanning — Spark expands the grouping sets inside a single shuffle
@@ -818,9 +802,7 @@ def events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the output coalesces them to 'ALL'/-1 sentinels (no real type is 'ALL',
     no real hour is -1) so every engine and comparison harness totals-orders
     them identically."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
-        "hour_of_day", F.hour("ts").cast("long")
-    )
+    ev = events.withColumn("hour_of_day", F.hour("ts").cast("long"))
     out = ev.rollup("event_type", "hour_of_day").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("sum_value"),
@@ -836,22 +818,21 @@ def events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 PIVOT_TYPES = ["click", "view", "purchase", "signup", "error"]
 
 
-def events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_pivot(events: DataFrame) -> DataFrame:
     """Long->wide pivot: per-user spend split into one column per event
     type. The value list is EXPLICIT — with it, pivot is a single
     shuffle-and-aggregate (conditional aggregation per column); without it,
     Spark first runs a distinct-values job over the corpus. Always pass the
     list at scale."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     out = (
-        ev.groupBy("user_id")
+        events.groupBy("user_id")
         .pivot("event_type", PIVOT_TYPES)
         .agg(F.round(F.sum("value"), 2))
     )
     return out
 
 
-def events_unpivot_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_unpivot_roundtrip(events: DataFrame) -> DataFrame:
     """Wide->long unpivot of the pivot result, proving the pivot/unpivot
     pair LOSSLESS in-band (the kg_apply_delta pattern): the query returns
     unpivot(pivot(events)) while the oracle materializes the direct
@@ -860,7 +841,7 @@ def events_unpivot_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     each wide row expands to |types| long rows in the same task); NULL
     cells — types a user never produced, created by the pivot, absent from
     the direct aggregate — are dropped, which is the lossless inverse."""
-    wide = events_pivot(spark, sf_dir)
+    wide = events_pivot(events)
     return wide.unpivot(
         ids=["user_id"],
         values=PIVOT_TYPES,
@@ -869,7 +850,7 @@ def events_unpivot_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("total_value").isNotNull())
 
 
-def events_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_cube(events: DataFrame) -> DataFrame:
     """CUBE(event_type, hour_of_day): all four grouping sets — per-(type,
     hour), per-type, per-hour, grand total — in ONE shuffle with map-side
     partials, completing the grouping-sets family next to events_rollup's
@@ -877,9 +858,7 @@ def events_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     2^n sets, which is why the dimension count stays small at scale). Same
     sentinel discipline as the rollup: subtotal NULLs coalesced to
     'ALL'/-1 so both engines order and hash identically."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
-        "hour_of_day", F.hour("ts").cast("long")
-    )
+    ev = events.withColumn("hour_of_day", F.hour("ts").cast("long"))
     out = ev.cube("event_type", "hour_of_day").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("sum_value"),
@@ -892,12 +871,11 @@ def events_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_hourly_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_hourly_agg(events: DataFrame) -> DataFrame:
     """Tumbling 1h window per event_type: count + sum(value). The batch twin
     of the streaming variant in streaming/ (same grouping expression)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return (
-        ev.groupBy(
+        events.groupBy(
             F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss").alias(
                 "hour"
             ),
@@ -914,7 +892,7 @@ HOP_WINDOW = "2 hours"
 HOP_SLIDE = "1 hour"
 
 
-def events_hopping_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_hopping_agg(events: DataFrame) -> DataFrame:
     """Hopping (sliding) 2h-window-every-1h aggregate per event_type — the
     overlapping-window rollup (each event lands in exactly
     window/slide = 2 windows). Expressed with F.window's slideDuration:
@@ -924,9 +902,8 @@ def events_hopping_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     window function is involved (same aggregate shape as the tumbling
     `events_hourly_agg`, which this extends). Epoch-aligned window starts,
     UTC session — the oracle reproduces the alignment arithmetic exactly."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return (
-        ev.groupBy(F.window("ts", HOP_WINDOW, HOP_SLIDE).alias("w"), "event_type")
+        events.groupBy(F.window("ts", HOP_WINDOW, HOP_SLIDE).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 2).alias("sum_value"),
@@ -940,18 +917,19 @@ def events_hopping_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_sessionize(events: DataFrame) -> DataFrame:
     """Gap-based sessionization (30 min): per (user, session) event count and
     span. One window over (user_id, ts) — the declarative form of a stateful
     session operator; scales as a single shuffle on user_id."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # parquet timestamps load as TIMESTAMP_NTZ in Spark 4; session tz is UTC
     # so the epoch-seconds detour is exact
     epoch = F.col("ts").cast("timestamp").cast("long")
     gap = epoch - F.lag(epoch).over(w)
     sess = (
-        ev.withColumn("new_sess", F.when(gap.isNull() | (gap > 1800), 1).otherwise(0))
+        events.withColumn(
+            "new_sess", F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
+        )
         .withColumn("session_id", F.sum("new_sess").over(w))
     )
     return sess.groupBy("user_id", "session_id").agg(
@@ -962,10 +940,9 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def tpch_q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+def tpch_q1_pricing(lineitem: DataFrame) -> DataFrame:
     return (
-        li.groupBy("l_returnflag", "l_linestatus")
+        lineitem.groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
             F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
@@ -977,16 +954,15 @@ def tpch_q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def tpch_q3_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
+def tpch_q3_shipping(
+    customer: DataFrame, orders: DataFrame, lineitem: DataFrame
+) -> DataFrame:
     """Join-heavy anchor: customer x orders x lineitem, top 10 revenue.
     customer is small -> broadcast; the big join shuffles on orderkey."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        lineitem.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(
-            F.broadcast(cust.filter(F.col("c_mktsegment") == "BUILDING")),
+            F.broadcast(customer.filter(F.col("c_mktsegment") == "BUILDING")),
             F.col("o_custkey") == F.col("c_custkey"),
         )
         .groupBy("l_orderkey")
@@ -1000,7 +976,14 @@ def tpch_q3_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def tpch_q5_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
+def tpch_q5_local_volume(
+    lineitem: DataFrame,
+    orders: DataFrame,
+    customer: DataFrame,
+    supplier: DataFrame,
+    nation: DataFrame,
+    region: DataFrame,
+) -> DataFrame:
     """TPC-H Q5 (local supplier volume): the 6-table join anchor — revenue
     per ASIA nation for 1996 orders where the supplier and customer share a
     nation. The join-ordering showcase:
@@ -1016,24 +999,18 @@ def tpch_q5_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
       of the aggregate. customer/supplier are NOT hard-broadcast (they grow
       with SF); AQE downgrades those shuffles to broadcast when small.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
+    orders = orders.filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1997-01-01")
     )
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    supp = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    nat = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    reg = spark.read.parquet(f"{sf_dir}/region.parquet").filter(
-        F.col("r_name") == "ASIA"
-    )
-    asia_nat = nat.join(
+    reg = region.filter(F.col("r_name") == "ASIA")
+    asia_nat = nation.join(
         F.broadcast(reg), F.col("n_regionkey") == F.col("r_regionkey")
     ).select("n_nationkey", "n_name")
     return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
+        lineitem.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(customer, F.col("o_custkey") == F.col("c_custkey"))
         .join(
-            supp,
+            supplier,
             (F.col("l_suppkey") == F.col("s_suppkey"))
             & (F.col("s_nationkey") == F.col("c_nationkey")),
         )
@@ -1050,7 +1027,7 @@ def tpch_q5_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 FUNNEL_WINDOW_HOURS = 24
 
 
-def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_funnel(events: DataFrame) -> DataFrame:
     """Sequential conversion funnel (view -> click -> purchase) per user,
     ClickHouse-windowFunnel semantics: the earliest view anchors a
     FUNNEL_WINDOW_HOURS window; the step timestamps are the earliest click
@@ -1067,24 +1044,23 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     array_sort per user) is deliberately avoided: it is ObjectHashAggregate
     with per-user O(history) buffers — the shape that falls over on hub
     users, where conditional min() never does."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     win = F.expr(f"INTERVAL {FUNNEL_WINDOW_HOURS} HOURS")
 
-    users = ev.select("user_id").distinct()
+    users = events.select("user_id").distinct()
     v = (
-        ev.filter(F.col("event_type") == "view")
+        events.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t_view"))
     )
     c = (
-        ev.filter(F.col("event_type") == "click")
+        events.filter(F.col("event_type") == "click")
         .join(v, "user_id")
         .filter((F.col("ts") > F.col("t_view")) & (F.col("ts") <= F.col("t_view") + win))
         .groupBy("user_id", "t_view")
         .agg(F.min("ts").alias("t_click"))
     )
     p = (
-        ev.filter(F.col("event_type") == "purchase")
+        events.filter(F.col("event_type") == "purchase")
         .join(c, "user_id")
         .filter(
             (F.col("ts") > F.col("t_click")) & (F.col("ts") <= F.col("t_view") + win)
@@ -1111,7 +1087,7 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_retention_cohorts(events: DataFrame) -> DataFrame:
     """Retention cohort matrix: users grouped by first-activity day, counted
     on each subsequent active day — (cohort_day, day_offset, n_active). The
     standard product-analytics rollup, at the scale where it matters (one
@@ -1123,9 +1099,8 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     final (cohort, offset) aggregate is small (days x days). count(*) on the
     (user, day)-distinct rows IS the distinct-user count — no second
     count(DISTINCT) pass."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    first = ev.groupBy("user_id").agg(F.min(F.to_date("ts")).alias("cohort"))
-    act = ev.select("user_id", F.to_date("ts").alias("d")).distinct()
+    first = events.groupBy("user_id").agg(F.min(F.to_date("ts")).alias("cohort"))
+    act = events.select("user_id", F.to_date("ts").alias("d")).distinct()
     return (
         act.join(first, "user_id")
         .select(

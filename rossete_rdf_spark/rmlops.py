@@ -9,8 +9,6 @@ from __future__ import annotations
 import csv
 import json
 import os
-import re
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -18,6 +16,7 @@ from .rml.compiler import materialize_all
 from .rml.config import EngineConfig, FileSpec
 from .rml.parser import parse_mapping_text
 from .rml.writers import nt_lines, ttl_lines
+from .tables import scratch_dir, table_path
 
 _PREFIXES = """
 @prefix rr: <http://www.w3.org/ns/r2rml#>.
@@ -32,16 +31,6 @@ def _run(
 ) -> DataFrame:
     maps = parse_mapping_text(mapping)
     return materialize_all(spark, maps, config=config).select("subj", "pred", "obj")
-
-
-def _fixture_dir(sf_dir: str) -> str:
-    """Deterministic per-sf_dir scratch dir for source-format fixtures the
-    contract queries derive from the parquet tables (so the DuckDB oracle —
-    which reads the same parquet — sees identical values)."""
-    tag = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir).strip("_")
-    d = os.path.join(tempfile.gettempdir(), f"rossete_src_fixtures_{tag}")
-    os.makedirs(d, exist_ok=True)
-    return d
 
 
 def rml_nation_region_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -141,9 +130,9 @@ def rml_csv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DuckDB oracle reads the same rows from the nation parquet view."""
     import pyarrow.parquet as pq
 
-    path = os.path.join(_fixture_dir(sf_dir), "nation.csv")
+    path = os.path.join(scratch_dir(sf_dir, "src_fixtures"), "nation.csv")
     tbl = pq.read_table(
-        os.path.join(sf_dir, "nation.parquet"),
+        table_path(sf_dir, "nation"),
         columns=["n_nationkey", "n_name", "n_regionkey"],
     )
     rows = sorted(tbl.to_pylist(), key=lambda r: r["n_nationkey"])
@@ -176,16 +165,16 @@ def rml_json_iterator(spark: SparkSession, sf_dir: str) -> DataFrame:
     (src/input.rs:333-392). Oracle reads the nation parquet view."""
     import pyarrow.parquet as pq
 
-    path = os.path.join(_fixture_dir(sf_dir), "regions_nested.json")
+    path = os.path.join(scratch_dir(sf_dir, "src_fixtures"), "regions_nested.json")
     regions = sorted(
         pq.read_table(
-            os.path.join(sf_dir, "region.parquet"), columns=["r_regionkey", "r_name"]
+            table_path(sf_dir, "region"), columns=["r_regionkey", "r_name"]
         ).to_pylist(),
         key=lambda r: r["r_regionkey"],
     )
     nations = sorted(
         pq.read_table(
-            os.path.join(sf_dir, "nation.parquet"),
+            table_path(sf_dir, "nation"),
             columns=["n_nationkey", "n_name", "n_regionkey"],
         ).to_pylist(),
         key=lambda r: r["n_nationkey"],

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import scoped_conf
+from ..tables import read_table, scratch_dir, table_path
 
 _SINK_SEQ = itertools.count()
 
@@ -63,17 +64,12 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     directories; expose the single file through a per-sf_dir symlink dir
     (zero-copy)."""
     import os
-    import re
-    import tempfile
 
-    src = os.path.join(sf_dir, "events.parquet")
-    tag = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir).strip("_")
-    stream_dir = os.path.join(tempfile.gettempdir(), f"rossete_stream_{tag}")
-    os.makedirs(stream_dir, exist_ok=True)
+    stream_dir = scratch_dir(sf_dir, "stream")
     link = os.path.join(stream_dir, "events.parquet")
     if not os.path.exists(link):
-        os.symlink(src, link)
-    batch = spark.read.parquet(src)
+        os.symlink(table_path(sf_dir, "events"), link)
+    batch = read_table(spark, sf_dir, "events")
     return spark.readStream.schema(batch.schema).parquet(stream_dir)
 
 
@@ -318,6 +314,6 @@ def streaming_static_join(events: DataFrame, dim: DataFrame) -> DataFrame:
 def streaming_static_join_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract wrapper: readStream events x static customer dim ->
     memory sink (append; stateless, so every row is final on arrival)."""
-    dim = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    dim = read_table(spark, sf_dir, "customer")
     out = streaming_static_join(_events_stream(spark, sf_dir), dim)
     return _run_to_memory_sink(spark, out, "ststatic", "append")

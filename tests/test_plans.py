@@ -4,8 +4,7 @@ of small sides, no Python in JVM-only pipelines."""
 
 import pytest
 
-from rossete_rdf_spark.kgops import kg_doc_triples, kg_entity_link
-from rossete_rdf_spark.relops import tpch_q1_pricing, tpch_q3_shipping
+from rossete_rdf_spark.registry import QUERIES
 from rossete_rdf_spark.rmlops import rml_nation_region_graph
 
 SF = "/root/testdata/sf0.001"
@@ -19,8 +18,19 @@ def _plan(df) -> str:
     )
 
 
+def _jobs_of(spark, group, fn) -> list[int]:
+    """Ids of the Spark jobs that fn() launches, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job-count pin")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
 def test_q1_scan_is_column_pruned(spark):
-    plan = _plan(tpch_q1_pricing(spark, SF))
+    plan = _plan(QUERIES["tpch_q1_pricing"](spark, SF))
     # the lineitem scan must read only the 6 referenced columns, not all 11
     assert "ReadSchema" in plan
     scan = [ln for ln in plan.splitlines() if "ReadSchema" in ln][0]
@@ -29,7 +39,7 @@ def test_q1_scan_is_column_pruned(spark):
 
 
 def test_q3_broadcasts_customer(spark):
-    plan = _plan(tpch_q3_shipping(spark, SF))
+    plan = _plan(QUERIES["tpch_q3_shipping"](spark, SF))
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 
@@ -39,7 +49,7 @@ def test_entity_link_single_scan_broadcast_gazetteer(spark):
     # aggregate — visible only in the FINAL plan, so execute first), exactly
     # one join and it's a broadcast, and no window sort on the hub-skewable
     # mention key
-    df = kg_entity_link(spark, SF)
+    df = QUERIES["kg_entity_link"](spark, SF)
     df.collect()
     plan = _plan(df)
     final = plan.split("== Initial Plan ==")[0]
@@ -54,9 +64,7 @@ def test_first_match_join_has_no_sort(spark):
     # parent collapse is min_by hash aggregation; the old row_number window
     # put a per-partition sort exchange in the plan (inverts under
     # parallelism on allocation-heavy stages — BENCH.md measurements)
-    from rossete_rdf_spark.relops import rel_first_match_join
-
-    plan = _plan(rel_first_match_join(spark, SF))
+    plan = _plan(QUERIES["rel_first_match_join"](spark, SF))
     assert "Window" not in plan
     # the packed order_col keeps every min_by buffer primitive -> whole-stage
     # HashAggregate; a struct anywhere in the buffer would drop the plan to
@@ -70,7 +78,7 @@ def test_doc_triples_two_pruned_scans(spark):
     # the mention chain (AQE stage reuse collapses the gazetteer branch onto
     # the mention shuffle — final plan only); the old shape scanned
     # documents 4+ times
-    df = kg_doc_triples(spark, SF)
+    df = QUERIES["kg_doc_triples"](spark, SF)
     df.collect()
     plan = _plan(df)
     final = plan.split("== Initial Plan ==")[0]
@@ -88,9 +96,7 @@ def test_runtime_filter_join_injects_bloom_filter(spark):
     # pruning of the big scan before the join exchange; the query function
     # scopes the confs and memoizes the optimized plan, so the filter
     # survives the conf restore
-    from rossete_rdf_spark.relops import rel_runtime_filter_join
-
-    df = rel_runtime_filter_join(spark, SF)
+    df = QUERIES["rel_runtime_filter_join"](spark, SF)
     plan = _plan(df)
     assert "might_contain" in plan.lower()
     # and the session confs are back to their defaults afterwards
@@ -106,7 +112,6 @@ def test_skew_join_actually_splits(spark):
     # 256MB+ partitions) the executed plan must carry the skew=true SMJ.
     # The decision is made at RUNTIME by AQE, so the confs stay set until
     # after the collect.
-    from rossete_rdf_spark.relops import rel_skew_join_agg
     from rossete_rdf_spark.session import scoped_conf
 
     # hold-past-action idiom: AQE makes the split while the job runs, so the
@@ -117,7 +122,7 @@ def test_skew_join_actually_splits(spark):
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16KB",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }):
-        df = rel_skew_join_agg(spark, SF_SKEW)
+        df = QUERIES["rel_skew_join_agg"](spark, SF_SKEW)
         rows = {r.tag: (r.n_items, r.sum_qty) for r in df.collect()}
         assert rows["grp0"][0] > 5 * rows["grp1"][0]  # the hub is real
         plan = _plan(df)
@@ -224,9 +229,8 @@ def test_bgp_lang_side_never_tokenizes(spark):
     # (split on text) must appear exactly twice in the optimized plan: the
     # mention aggregate and the gazetteer aggregate on the MENTION side
     # (AQE-reused at runtime), never a third time under the lang pattern.
-    from rossete_rdf_spark.kgops import kg_bgp_entity_lang
-
-    opt = kg_bgp_entity_lang(spark, SF)._jdf.queryExecution().optimizedPlan().toString()
+    df = QUERIES["kg_bgp_entity_lang"](spark, SF)
+    opt = df._jdf.queryExecution().optimizedPlan().toString()
     assert opt.count("split(text") == 2
 
 
@@ -264,9 +268,7 @@ def test_decontaminate_broadcasts_eval_grams(spark):
 def test_funnel_has_no_object_hash_aggregate(spark):
     # the conditional-min shape must stay in whole-stage HashAggregate —
     # never collect_list-per-user (ObjectHashAggregate) or a sort
-    from rossete_rdf_spark.relops import events_funnel
-
-    plan = _plan(events_funnel(spark, SF))
+    plan = _plan(QUERIES["events_funnel"](spark, SF))
     assert "ObjectHashAggregate" not in plan
     assert "collect_list" not in plan
 
@@ -301,35 +303,27 @@ def test_url_dedup_single_hash_agg_shuffle(spark):
 def test_anomaly_zscore_broadcasts_stats(spark):
     # the 5-row per-type stats table must come back as a broadcast hash join
     # (one shuffle total), not a second shuffle of the full event scan
-    from rossete_rdf_spark.relops import events_anomaly_zscore
-
-    plan = _plan(events_anomaly_zscore(spark, SF))
+    plan = _plan(QUERIES["events_anomaly_zscore"](spark, SF))
     assert "BroadcastHashJoin" in plan
     assert plan.count("Exchange hashpartitioning") <= 1
 
 
 def test_not_exists_is_anti_join(spark):
     # SPARQL FILTER NOT EXISTS must lower to a set-oriented anti join
-    from rossete_rdf_spark.kgops import kg_not_exists
-
-    plan = _plan(kg_not_exists(spark, SF))
+    plan = _plan(QUERIES["kg_not_exists"](spark, SF))
     assert "LeftAnti" in plan
 
 
 def test_describe_is_semi_join(spark):
     # SPARQL DESCRIBE lowers to a semi join (dedup of seeds by construction)
-    from rossete_rdf_spark.kgops import kg_describe_entity
-
-    plan = _plan(kg_describe_entity(spark, SF))
+    plan = _plan(QUERIES["kg_describe_entity"](spark, SF))
     assert "LeftSemi" in plan
 
 
 def test_ask_has_early_exit_limit(spark):
     # SPARQL ASK must carry a limit above the semi join so a satisfiable ask
     # can stop at the first match instead of scanning the corpus
-    from rossete_rdf_spark.kgops import kg_ask
-
-    plan = _plan(kg_ask(spark, SF))
+    plan = _plan(QUERIES["kg_ask"](spark, SF))
     assert "Limit" in plan or "CollectLimit" in plan
     assert "LeftSemi" in plan
 
@@ -376,15 +370,13 @@ def test_salted_join_matches_plain_join(spark):
     # aggregate equals the plain (unsalted) hub join's, and the join key
     # carries the salt column so the hub key's rows spread over
     # SALTED_JOIN_REP reducers
-    from rossete_rdf_spark.relops import rel_salted_join, rel_skew_join_agg
-
     salted = {
         r.tag: (r.n_items, r.sum_qty)
-        for r in rel_salted_join(spark, SF_SKEW).collect()
+        for r in QUERIES["rel_salted_join"](spark, SF_SKEW).collect()
     }
     plain = {
         r.tag: (r.n_items, r.sum_qty)
-        for r in rel_skew_join_agg(spark, SF_SKEW).collect()
+        for r in QUERIES["rel_skew_join_agg"](spark, SF_SKEW).collect()
     }
     assert salted == plain
     assert salted["grp0"][0] > 5 * salted["grp1"][0]  # the hub is real
@@ -436,8 +428,6 @@ def test_top_k_plans_partial_group_limit(spark, name, group_limits, windows):
     # but loses every group limit. The PQ re-rank plans only the final
     # limit: the broadcast exact-cosine join keeps the shortlist's query_id
     # partitioning, so it needs no shuffle to put a partial limit under.
-    from rossete_rdf_spark.registry import QUERIES
-
     plan = _plan(QUERIES[name](spark, SF))
     assert plan.count("WindowGroupLimit (") == group_limits
     assert plan.count("Window (") == windows
@@ -607,20 +597,24 @@ def test_checkpoint_snapshot_reads_launch_no_job(spark, tmp_path):
     from rossete_rdf_spark.pipeline.checkpoint import CheckpointManager
 
     workdir = str(tmp_path / "cp")
-    sc = spark.sparkContext
-
-    def jobs_of(group, fn):
-        sc.setJobGroup(group, "checkpoint job-count pin")
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return sc.statusTracker().getJobIdsForGroup(group)
 
     def stage():
         return CheckpointManager(spark, workdir).run_stage(
             "s", lambda: spark.range(0, 10, 1, 1)
         )
 
-    assert len(jobs_of("cp-fresh", stage)) == 1
-    assert jobs_of("cp-resume", stage) == []
+    assert len(_jobs_of(spark, "cp-fresh", stage)) == 1
+    assert _jobs_of(spark, "cp-resume", stage) == []
+
+
+@pytest.mark.parametrize(
+    "name, n_tables",
+    [("events_range_join", 1), ("kg_apply_delta", 1), ("tpch_q5_local_volume", 6)],
+)
+def test_building_a_query_infers_each_table_once(spark, name, n_tables):
+    # building a registry query's DataFrame runs one schema-inference job per
+    # table read; the registry reads each input table once per call, so a
+    # query that uses a table in two branches (the range join's events and
+    # its day list, the delta-apply's old snapshot and its delta) infers it once
+    jobs = _jobs_of(spark, f"build-{name}", lambda: QUERIES[name](spark, SF))
+    assert len(jobs) == n_tables

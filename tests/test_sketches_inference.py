@@ -3,12 +3,7 @@ enrichment/validation queries (RDFS inference, SHACL report)."""
 
 from pyspark.sql import functions as F
 
-from rossete_rdf_spark.kgops import (
-    ONTO,
-    _tbox_edges,
-    kg_rdfs_inference,
-    kg_shacl_validate,
-)
+from rossete_rdf_spark.kgops import ONTO, _tbox_edges
 from rossete_rdf_spark.registry import QUERIES
 from rossete_rdf_spark.textops.sketches import (
     CMS_TOP,
@@ -69,14 +64,14 @@ def test_cms_estimates_upper_bound_exact(spark):
 def test_rdfs_inference_corpus_side_never_shuffles(spark):
     # the ABox pass must be map-only: broadcast TBox closure, no hash
     # partitioning exchange anywhere (the corpus-sized side never shuffles)
-    plan = _plan(kg_rdfs_inference(spark, SF))
+    plan = _plan(QUERIES["kg_rdfs_inference"](spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "Exchange hashpartitioning" not in plan
 
 
 def test_rdfs_inference_types_transitive(spark):
     # pick one doc and check the full chain is present
-    df = kg_rdfs_inference(spark, SF)
+    df = QUERIES["kg_rdfs_inference"](spark, SF)
     one = df.limit(1).collect()[0].subj
     got = {r.type_iri for r in df.filter(F.col("subj") == one).collect()}
     assert len(got) == 4  # leaf + crawl + web + document
@@ -93,7 +88,7 @@ def test_tbox_is_acyclic_and_fixed(spark):
 
 
 def test_shacl_shapes_partition_violations(spark):
-    rows = kg_shacl_validate(spark, SF).collect()
+    rows = QUERIES["kg_shacl_validate"](spark, SF).collect()
     by_shape = {}
     for r in rows:
         by_shape.setdefault(r.shape, []).append(r)
@@ -119,9 +114,8 @@ def test_q5_pushes_date_filter_to_orders_scan(spark):
 
 
 def test_hopping_agg_events_land_in_exactly_two_windows(spark):
-    from rossete_rdf_spark.relops import events_hopping_agg
-
-    total = events_hopping_agg(spark, SF).agg(F.sum("n_events")).collect()[0][0]
+    hop = QUERIES["events_hopping_agg"](spark, SF)
+    total = hop.agg(F.sum("n_events")).collect()[0][0]
     n_events = spark.read.parquet(f"{SF}/events.parquet").count()
     assert total == 2 * n_events  # window/slide = 2 overlapping windows each
 

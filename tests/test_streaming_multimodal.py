@@ -9,7 +9,7 @@ from rossete_rdf_spark.pipeline.multimodal import (
     synth_image_bytes,
     synth_media,
 )
-from rossete_rdf_spark.relops import events_hourly_agg
+from rossete_rdf_spark.registry import QUERIES
 from rossete_rdf_spark.streaming import streaming_hourly_agg
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -38,7 +38,7 @@ def test_streaming_hourly_matches_batch(spark, tmp_path):
     }
     exp = {
         (r["hour"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in events_hourly_agg(spark, SF_DIR).collect()
+        for r in QUERIES["events_hourly_agg"](spark, SF_DIR).collect()
     }
     assert got == exp and len(got) > 0
 
