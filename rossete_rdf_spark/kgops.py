@@ -7,7 +7,8 @@ batch face of the web-pipeline stages in pipeline/):
 
 These are the same shapes the web pipeline runs over (url, warc_ts, html,
 text, lang) pages; here they run over the synthetic documents table so the
-driver can oracle-check them in DuckDB.
+driver can oracle-check them in DuckDB. Tokenization is shared outright:
+eligible_tokens is the pipeline's mentions stage too (keyed by url).
 
 Scan discipline (the 100 TB concern): `kg_doc_triples` reads `documents`
 exactly twice — one column-pruned scan of the metadata columns (doc_id, lang,
@@ -34,20 +35,26 @@ MENTIONS_PRED = f"<{ONTO}mentions>"
 LANG_PRED = f"<{ONTO}lang>"
 
 
-def eligible_tokens(docs: DataFrame, out_col: str = "mention") -> DataFrame:
-    """(doc_id, <out_col>) token stream of mention-ELIGIBLE terms (length >=
-    MIN_MENTION_LEN) — the single definition of eligibility, shared by the
-    mention/gazetteer stages and entity canonicalization so the two can
-    never silently canonicalize different surface sets."""
+def eligible_tokens(docs: DataFrame, key: str, out_col: str) -> DataFrame:
+    """(<key>, <out_col>) token stream of mention-ELIGIBLE terms of `text`
+    (length >= MIN_MENTION_LEN) — the single definition of eligibility,
+    shared by the registry's kg_* twin, entity canonicalization and the
+    pipeline's mentions stage, so none of them can silently see a
+    different surface set.
+
+    Domain: tokens split on Java `\\s`, which is ASCII `[ \\t\\n\\x0B\\f\\r]`.
+    Unicode spaces (NBSP, U+3000, `\\x1c`-`\\x1f`) do NOT split, so
+    "alpha\\xa0beta" is one token; on ASCII-whitespace text the stream
+    equals Python's `[w for w in t.split() if len(w) >= 4]`."""
     return docs.select(
-        "doc_id", F.explode(words_col(F.col("text"))).alias(out_col)
+        key, F.explode(words_col(F.col("text"))).alias(out_col)
     ).filter(F.length(out_col) >= MIN_MENTION_LEN)
 
 
 def mentions_from(docs: DataFrame) -> DataFrame:
     """(doc_id, mention, n_occurrences) — eligible tokens counted per doc.
     Explode + count: one shuffle keyed by (doc_id, mention)."""
-    return eligible_tokens(docs).groupBy("doc_id", "mention").agg(
+    return eligible_tokens(docs, "doc_id", "mention").groupBy("doc_id", "mention").agg(
         F.count(F.lit(1)).alias("n_occurrences")
     )
 

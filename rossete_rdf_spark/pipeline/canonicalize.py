@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..graph.cc import connected_components
+from ..kgops import eligible_tokens
 from ..textops.lsh import (
     MAX_BUCKET,
     MIN_BANDS,
@@ -96,9 +97,7 @@ def entity_canonical_query(docs: DataFrame) -> DataFrame:
     the DuckDB oracle replays the identical banding/cap/verify pipeline and
     closes components with a recursive min-label CTE, so both engines miss
     the same pairs. Scale shape: that of canonical_entity_map."""
-    from ..kgops import eligible_tokens
-
-    words = eligible_tokens(docs, "w").select("w").distinct()
+    words = eligible_tokens(docs, "doc_id", "w").select("w").distinct()
     variants = words.filter(
         minhash64(F.col("w"), "plural") % CANON_PLURAL_MOD == 0
     ).select(F.concat(F.col("w"), F.lit("s")).alias("w"))

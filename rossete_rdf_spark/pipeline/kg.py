@@ -3,7 +3,8 @@
   pages (url, warc_ts, html, text, lang)
     -> extract      text re-derived from html bytes (Arrow UDF; byte-identical
                     per url — the pinned invariant)
-    -> mentions     vectorized mention detection, exploded per occurrence
+    -> mentions     kgops.eligible_tokens (the registry's JVM tokenizer),
+                    one row per occurrence
     -> gazetteer    corpus-derived entity dictionary (salted counting)
     -> linked       broadcast entity linking
     -> canonical    MinHash-LSH blocking + Jaccard verify + connected

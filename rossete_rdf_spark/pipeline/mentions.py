@@ -1,52 +1,29 @@
 """Mention detection + entity linking over extracted page text.
 
-Per BASELINE.json input_hint these run as batched Arrow UDFs (no per-row
-Python): mention detection is a vectorized pandas UDF producing the mention
-list per page; linking is a broadcast join against the corpus-derived
+No Python runs here: mention detection is kgops.eligible_tokens, the same
+JVM tokenizer and length bar the registry's kg_* twin uses, exploded per
+occurrence; linking is a broadcast join against the corpus-derived
 gazetteer (small side), with the mention-count aggregation SALTED to survive
 hub surfaces (a surface like 'spark' can appear on a large fraction of all
 pages — a plain groupBy would put one key on one reducer)."""
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType
 
-MIN_MENTION_LEN = 4
+from ..kgops import eligible_tokens
+
 SALT_BUCKETS = 16
-
-_WORD = re.compile(r"\S+")
-
-
-@pandas_udf(ArrayType(StringType()))
-def detect_mentions_udf(text: pd.Series) -> pd.Series:
-    """Vectorized mention detector: tokens of length >= MIN_MENTION_LEN.
-    (Swap in an NER model here at production; the Spark-side contract —
-    batched Arrow in, array<string> out — stays identical.)"""
-    return text.map(
-        lambda t: [w for w in _WORD.findall(t or "") if len(w) >= MIN_MENTION_LEN]
-    )
 
 
 def page_mentions(
     pages_text: DataFrame, python_parallelism: int | None = None
 ) -> DataFrame:
     """(url, text) -> (url, surface) one row per mention occurrence.
-    python_parallelism bounds this stage's Python workers (see
-    extract.extract_pages)."""
-    df = (
-        pages_text.coalesce(python_parallelism)
-        if python_parallelism
-        else pages_text
-    )
-    return df.select(
-        "url", F.explode(detect_mentions_udf(F.col("text"))).alias("surface")
-    )
+    python_parallelism is accepted and ignored: this stage runs no Python
+    (bench.py passes it positionally)."""
+    return eligible_tokens(pages_text, "url", "surface")
 
 
 def salted_surface_counts(mentions: DataFrame) -> DataFrame:

@@ -583,7 +583,7 @@ def mention_counts_salted(docs: DataFrame) -> DataFrame:
     salting is the aggregation-side equivalent, made explicit here."""
     from .kgops import eligible_tokens  # deferred: kgops -> textops -> relops
 
-    toks = eligible_tokens(docs)
+    toks = eligible_tokens(docs, "doc_id", "mention")
     salted = toks.withColumn("__salt", (F.crc32(F.col("doc_id").cast("string")) % 16))
     partial = salted.groupBy("__salt", "mention").agg(
         F.count(F.lit(1)).alias("c")

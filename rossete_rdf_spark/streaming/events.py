@@ -8,6 +8,7 @@ events older than the allowed lateness are dropped and state is bounded."""
 from __future__ import annotations
 
 import itertools
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -63,11 +64,9 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet. FileStreamSource ingests
     directories; expose the single file through a per-sf_dir symlink dir
     (zero-copy)."""
-    import os
-
     stream_dir = scratch_dir(sf_dir, "stream")
     link = os.path.join(stream_dir, "events.parquet")
-    if not os.path.exists(link):
+    if not os.path.lexists(link):
         os.symlink(table_path(sf_dir, "events"), link)
     batch = read_table(spark, sf_dir, "events")
     return spark.readStream.schema(batch.schema).parquet(stream_dir)

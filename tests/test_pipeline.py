@@ -17,6 +17,7 @@ from rossete_rdf_spark.pipeline import (
 )
 from rossete_rdf_spark.pipeline.canonicalize import canonical_entity_map, verified_pairs
 from rossete_rdf_spark.pipeline.checkpoint import CheckpointManager
+from rossete_rdf_spark.pipeline.mentions import page_mentions
 
 N_PAGES = 400
 
@@ -39,6 +40,33 @@ def test_extraction_byte_identical_per_url(pages):
     assert len(rows) == N_PAGES
     for r in rows:
         assert extract_text_bytes(bytes(r["html"])).decode() == r["text"], r["url"]
+
+
+def _python_tokens(text: str) -> list[str]:
+    return [w for w in text.split() if len(w) >= 4]
+
+
+@pytest.mark.parametrize(
+    "text, expected",
+    [
+        # ASCII whitespace: the pipeline's tokens are Python's str.split()
+        ("  alpha beta   gamma\tdelta\t\tepsilon  ", None),
+        ("\tone\vthree\v\vfour\nfive\r\nsixty\fseven \v", None),
+        ("tiny a bb ccc dddd", None),
+        ("", None),
+        # documented domain: NBSP, U+3000 and \x1c do not split (Java \s
+        # is ASCII), where Python's str.split() would give five tokens
+        (
+            "alpha\xa0betagamma  delta\x1cepsilon\u3000zeta",
+            ["alpha\xa0betagamma", "delta\x1cepsilon\u3000zeta"],
+        ),
+    ],
+    ids=["spaces-tabs", "v-f-r-n", "short-words", "empty", "unicode-space"],
+)
+def test_page_mentions_tokens(spark, text, expected):
+    df = spark.createDataFrame([("u", text)], "url string, text string")
+    got = [r["surface"] for r in page_mentions(df).collect()]
+    assert got == (_python_tokens(text) if expected is None else expected)
 
 
 def test_connected_components_basic(spark):

@@ -2,8 +2,12 @@
 actually appear in the plans — column pruning to the parquet scan, broadcast
 of small sides, no Python in JVM-only pipelines."""
 
+import re
+
 import pytest
 
+from rossete_rdf_spark.pipeline import extract_pages, synth_pages
+from rossete_rdf_spark.pipeline.mentions import page_mentions
 from rossete_rdf_spark.registry import QUERIES
 from rossete_rdf_spark.rmlops import rml_nation_region_graph
 
@@ -136,6 +140,18 @@ def test_rml_graph_plan_has_no_python(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     # AQE owns the plan (runtime re-plan + skew handling enabled)
     assert "AdaptiveSparkPlan" in plan
+
+
+def test_pipeline_python_is_extraction_only(spark):
+    # the KG pipeline's one Python stage is extraction: mention detection
+    # over a text DataFrame is the JVM tokenizer, no Python UDF node
+    text = spark.createDataFrame([("u", "alpha beta gamma")], "url string, text string")
+    plan = _plan(page_mentions(text))
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    # the formatted plan names each node twice (tree and detail); count
+    # the detail headers
+    extract = _plan(extract_pages(synth_pages(spark, 8, partitions=1)))
+    assert len(re.findall(r"^\(\d+\) ArrowEvalPython", extract, re.M)) == 1
 
 
 def test_rml_parquet_scan_is_column_pruned(spark):

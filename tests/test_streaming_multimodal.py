@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from rossete_rdf_spark.pipeline.multimodal import (
     MEDIA_SCHEMA,
     decode_image,
@@ -41,6 +45,20 @@ def test_streaming_hourly_matches_batch(spark, tmp_path):
         for r in QUERIES["events_hourly_agg"](spark, SF_DIR).collect()
     }
     assert got == exp and len(got) > 0
+
+
+@pytest.mark.parametrize("query", ["events_hourly_agg", "streaming_hourly_agg"])
+def test_relative_sf_dir_matches_absolute(spark, monkeypatch, query):
+    """A relative sf_dir resolves against the Python working directory (not
+    the JVM's start directory), and the streaming twin's events link is
+    absolute: a second run finds the link it made instead of tripping on
+    it."""
+    exp = sorted(QUERIES[query](spark, SF_DIR).collect())
+    monkeypatch.chdir(os.path.dirname(SF_DIR))
+    rel = os.path.basename(SF_DIR)
+    for _ in range(2):
+        assert sorted(QUERIES[query](spark, rel).collect()) == exp
+    assert exp
 
 
 def test_multimodal_feature_plumbing(spark):
