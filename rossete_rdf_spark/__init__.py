@@ -2,7 +2,8 @@
 
 A from-scratch re-implementation of the query/data-processing capabilities of
 the reference engine RubenCid35/rossete-rdf (Rust, /root/reference), expressed
-as Spark DataFrame transforms + vectorized Arrow UDFs instead of
+as Spark DataFrame transforms (Arrow UDFs only for media, XML and the
+streaming sessionizer) instead of
 threads + SQLite staging.
 
 Layout:

@@ -60,7 +60,8 @@ class CheckpointManager:
         success = os.path.join(self._stage_path(name), "_SUCCESS")
         return "schema" in entry and os.path.exists(success)
 
-    def _read(self, name: str) -> DataFrame:
+    def read(self, name: str) -> DataFrame:
+        """Stage `name`'s snapshot, read with the schema its entry records."""
         schema = StructType.fromJson(self.manifest["stages"][name]["schema"])
         return self.spark.read.schema(schema).parquet(self._stage_path(name))
 
@@ -69,7 +70,7 @@ class CheckpointManager:
         the existing snapshot if this stage already completed."""
         path = self._stage_path(name)
         if self.is_complete(name):
-            return self._read(name)
+            return self.read(name)
 
         t0 = time.time()
         df = build()
@@ -89,7 +90,7 @@ class CheckpointManager:
             "schema": _as_nullable(df.schema).jsonValue(),
         }
         self._save()
-        return self._read(name)
+        return self.read(name)
 
     @staticmethod
     def _footer_counts(path: str) -> dict[str, int]:

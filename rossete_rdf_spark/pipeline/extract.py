@@ -2,20 +2,22 @@
 invariant: extraction is byte-identical per url across runs and cluster
 sizes (BASELINE.json input_hint).
 
-Implemented as an Arrow-batched pandas UDF (never row-at-a-time Python): each
-batch is a pandas Series of byte strings; the extractor is pure and
-deterministic. Real-world decode of images/audio/video would slot in the
-same way — see multimodal.py for the stubbed variants."""
+`extract_text_bytes` is the specification, a pure function of the bytes;
+`extract_pages` computes the same text as one JVM projection, so the
+pipeline starts no Python worker. The projection decodes first
+(`make_valid_utf8`, the replacement decoding of Python's
+`decode("utf-8", "replace")`) and then matches: every delimiter the
+extractor matches (`<body`, `>`, `</body>`, tags, ASCII whitespace) is
+ASCII, and a replaced invalid byte sequence never absorbs an ASCII byte,
+so decoding before or after the regexes gives the same string
+(tests/test_pipeline.py::test_extract_pages_matches_spec pins it)."""
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
-from pyspark.sql.functions import pandas_udf
 
 _TAG = re.compile(rb"<[^>]*>")
 _WS = re.compile(rb"\s+")
@@ -33,25 +35,17 @@ def extract_text_bytes(html: bytes) -> bytes:
     return _WS.sub(b" ", no_tags).strip()
 
 
-@pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return html.map(lambda b: extract_text_bytes(b).decode("utf-8", "replace"))
-
-
 def extract_pages(pages: DataFrame, python_parallelism: int | None = None) -> DataFrame:
     """(url, warc_ts, html, ...) -> (url, warc_ts, lang, text) with text
-    re-derived from html bytes. Column expression everywhere except the
-    vectorized extractor itself.
+    re-derived from html bytes: `extract_text_bytes(html)` decoded with
+    replacement, "" for a NULL html. python_parallelism is accepted and
+    ignored: this stage runs no Python (bench.py passes it positionally).
 
-    python_parallelism caps the number of concurrent Python workers for this
-    stage (coalesce, no shuffle) — the pandas-UDF analogue of running model
-    inference with spark.task.cpus > 1: JVM-side stages keep full
-    parallelism, the Python stage runs at the worker count that saturates
-    the Arrow feed instead of oversubscribing every core."""
-    df = pages.coalesce(python_parallelism) if python_parallelism else pages
-    return df.select(
-        "url",
-        "warc_ts",
-        "lang",
-        extract_text_udf(F.col("html")).alias("text"),
-    )
+    Java's `(?i)` and `\\s` are ASCII, like Python's on bytes; the body
+    pass keeps the whole string when there is no body, like `_BODY.search`."""
+    decoded = F.make_valid_utf8(F.col("html").cast("string"))
+    body = F.regexp_replace(decoded, r"(?is)^.*?<body[^>]*>(.*)</body>.*$", "$1")
+    no_tags = F.regexp_replace(body, "<[^>]*>", " ")
+    collapsed = F.trim(F.regexp_replace(no_tags, r"\s+", " "))
+    text = F.coalesce(collapsed, F.lit("")).alias("text")
+    return pages.select("url", "warc_ts", "lang", text)

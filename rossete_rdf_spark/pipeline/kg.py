@@ -1,8 +1,8 @@
 """End-to-end web-scale KG construction (the north-rule pipeline):
 
   pages (url, warc_ts, html, text, lang)
-    -> extract      text re-derived from html bytes (Arrow UDF; byte-identical
-                    per url — the pinned invariant)
+    -> extract      text re-derived from html bytes (one JVM projection;
+                    byte-identical per url — the pinned invariant)
     -> mentions     kgops.eligible_tokens (the registry's JVM tokenizer),
                     one row per occurrence
     -> gazetteer    corpus-derived entity dictionary (salted counting)
@@ -16,8 +16,10 @@
 
 Every stage snapshots through CheckpointManager: a killed run resumes from
 the last complete stage and produces the identical final triple set (tested
-in tests/test_pipeline.py). Skew levers: salted surface counting, AQE
-skew-join (session default), broadcast for every small side."""
+in tests/test_pipeline.py); load_triples reads the final snapshot with the
+schema its manifest entry records. No stage starts a Python worker. Skew
+levers: salted surface counting, AQE skew-join (session default), broadcast
+for every small side."""
 
 from __future__ import annotations
 
@@ -111,4 +113,4 @@ def run_kg_pipeline(
 
 
 def load_triples(spark: SparkSession, workdir: str) -> DataFrame:
-    return spark.read.parquet(f"{workdir}/stage_triples.parquet")
+    return CheckpointManager(spark, workdir).read("triples")

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import itertools
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,16 +27,6 @@ _SINK_SEQ = itertools.count()
 # (stores must fit executor memory), not to core count.
 STATEFUL_SHUFFLE_PARTITIONS = "8"
 WATERMARK = "2 hours"  # event-time lateness bound of every watermarked stream
-
-
-def _ckpt_dir(tag: str) -> str:
-    """Fresh checkpoint dir per query start. Real deployments point this at
-    durable shared storage (HDFS/S3) — the whole point of the checkpoint is
-    surviving driver loss; the availableNow contract queries throw theirs
-    away, so the temp dir serves."""
-    import tempfile
-
-    return tempfile.mkdtemp(prefix=f"rossete_ckpt_{tag}_")
 
 
 def streaming_hourly_agg(events: DataFrame) -> DataFrame:
@@ -78,15 +69,21 @@ def _run_to_memory_sink(
     """Start `out` into a fresh memory sink with an availableNow trigger
     (single micro-batch), await it, return the sink table. Runs under the
     scoped stateful-partition override (state stores are latched at query
-    start)."""
+    start).
+
+    The checkpoint is a temp directory removed once the query ends: the
+    memory sink keeps its rows on the driver, and a finished availableNow
+    query is never restarted. Real deployments point checkpointLocation at
+    durable shared storage (HDFS/S3), since the checkpoint exists to
+    survive driver loss."""
     name = f"streaming_{tag}_sink_{next(_SINK_SEQ)}"
     with scoped_conf(
         spark, {"spark.sql.shuffle.partitions": STATEFUL_SHUFFLE_PARTITIONS}
-    ):
+    ), tempfile.TemporaryDirectory(prefix=f"rossete_ckpt_{tag}_") as ckpt:
         q = (
             out.writeStream.format("memory")
             .queryName(name)
-            .option("checkpointLocation", _ckpt_dir(tag))
+            .option("checkpointLocation", ckpt)
             .outputMode(output_mode)
             .trigger(availableNow=True)
             .start()

@@ -10,6 +10,7 @@ import pytest
 
 from rossete_rdf_spark.graph.cc import connected_components
 from rossete_rdf_spark.pipeline import (
+    extract_pages,
     extract_text_bytes,
     load_triples,
     run_kg_pipeline,
@@ -40,6 +41,66 @@ def test_extraction_byte_identical_per_url(pages):
     assert len(rows) == N_PAGES
     for r in rows:
         assert extract_text_bytes(bytes(r["html"])).decode() == r["text"], r["url"]
+
+
+_FRAGMENTS = (
+    b"<body>", b"</body>", b"<BODY class=x>", b"</Body >", b"<p>", b"</p>",
+    b"<", b">", b" ", b"\t", b"\n", b"\r\n", b"\v", b"\f", b"\x1c",
+    b"\xc2\xa0", "\u3000".encode(), "\U0001f600".encode(), b"\xe2\x82\xac",
+    b"\xe2\x82", b"\xc0\xaf", b"\xf4\x90\x80\x80", b"\x80", b"\xed\xa0\x80",
+    b"\xff", b"$1", b"\\", b"word",
+)
+
+
+def _fuzz_html(seed: int, n: int) -> list[bytes]:
+    """n seeded byte strings: HTML fragments, whitespace and invalid UTF-8
+    mixed with random bytes."""
+    import random
+
+    rng = random.Random(seed)
+    out = []
+    for _ in range(n):
+        parts = [
+            rng.choice(_FRAGMENTS) if rng.random() < 0.7 else rng.randbytes(rng.randint(1, 4))
+            for _ in range(rng.randint(0, 12))
+        ]
+        out.append(b"".join(parts))
+    return out
+
+
+def _extracted(spark, htmls: list) -> list[str]:
+    df = spark.createDataFrame(
+        [(str(i), h) for i, h in enumerate(htmls)], "url string, html binary"
+    ).selectExpr("url", "CAST(NULL AS timestamp) AS warc_ts", "'' AS lang", "html")
+    got = {r["url"]: r["text"] for r in extract_pages(df).collect()}
+    return [got[str(i)] for i in range(len(htmls))]
+
+
+@pytest.mark.parametrize(
+    "htmls",
+    [
+        [None, b""],
+        [
+            b"<html><BODY class=x> up <I>per</I> </BODY></html>",
+            b"no body <b>here</b>",
+            b"<body>one</body> between <body>two</body> after",
+            b"<body> open but never closed",
+        ],
+        [b"a\vb", b"a\fb", b"a\x1cb", b"a\xc2\xa0b", "a\u3000b".encode()],
+        [b"a\xe2\x82b", b"a\xc0\xafb", b"a\xf4\x90\x80\x80b", b"\x80\x80", b"a\xed\xa0\x80b"],
+        ["<body>\U0001f600 $1 back\\slash</body>".encode()],
+        _fuzz_html(17, 20_000),
+    ],
+    ids=["null-empty", "body", "whitespace", "invalid-utf8", "emoji-replacement", "fuzz"],
+)
+def test_extract_pages_matches_spec(spark, htmls):
+    """The JVM extractor is the spec decoded with replacement, and "" for
+    NULL: body choice, ASCII whitespace, invalid UTF-8 (the encoded
+    surrogate included) and replacement-pattern text in the body."""
+    want = [extract_text_bytes(h).decode("utf-8", "replace") for h in htmls]
+    got = _extracted(spark, htmls)
+    bad = [(h, w, g) for h, w, g in zip(htmls, want, got) if w != g]
+    assert not bad, (len(bad), bad[:5])
 
 
 def _python_tokens(text: str) -> list[str]:

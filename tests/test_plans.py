@@ -2,8 +2,6 @@
 actually appear in the plans — column pruning to the parquet scan, broadcast
 of small sides, no Python in JVM-only pipelines."""
 
-import re
-
 import pytest
 
 from rossete_rdf_spark.pipeline import extract_pages, synth_pages
@@ -142,16 +140,13 @@ def test_rml_graph_plan_has_no_python(spark):
     assert "AdaptiveSparkPlan" in plan
 
 
-def test_pipeline_python_is_extraction_only(spark):
-    # the KG pipeline's one Python stage is extraction: mention detection
-    # over a text DataFrame is the JVM tokenizer, no Python UDF node
+def test_pipeline_runs_no_python(spark):
+    # no stage of the KG pipeline starts a Python worker: extraction is a
+    # JVM projection over the html bytes, mention detection the JVM tokenizer
     text = spark.createDataFrame([("u", "alpha beta gamma")], "url string, text string")
-    plan = _plan(page_mentions(text))
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    # the formatted plan names each node twice (tree and detail); count
-    # the detail headers
-    extract = _plan(extract_pages(synth_pages(spark, 8, partitions=1)))
-    assert len(re.findall(r"^\(\d+\) ArrowEvalPython", extract, re.M)) == 1
+    for df in (extract_pages(synth_pages(spark, 8, partitions=1)), page_mentions(text)):
+        plan = _plan(df)
+        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_rml_parquet_scan_is_column_pruned(spark):
@@ -609,18 +604,21 @@ def test_small_connected_components_is_two_jobs(spark):
 def test_checkpoint_snapshot_reads_launch_no_job(spark, tmp_path):
     # the manifest records each snapshot's schema, so neither the read after
     # the write nor a resume runs Spark's schema-inference job: a fresh stage
-    # is its one write job, a finished one is no job at all
+    # is its one write job, a finished one is no job at all, and so is
+    # load_triples, which reads the triples stage with the same schema
+    from rossete_rdf_spark.pipeline import load_triples
     from rossete_rdf_spark.pipeline.checkpoint import CheckpointManager
 
     workdir = str(tmp_path / "cp")
 
     def stage():
         return CheckpointManager(spark, workdir).run_stage(
-            "s", lambda: spark.range(0, 10, 1, 1)
+            "triples", lambda: spark.range(0, 10, 1, 1)
         )
 
     assert len(_jobs_of(spark, "cp-fresh", stage)) == 1
     assert _jobs_of(spark, "cp-resume", stage) == []
+    assert _jobs_of(spark, "cp-load", lambda: load_triples(spark, workdir)) == []
 
 
 @pytest.mark.parametrize(

@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import glob
 import os
+import tempfile
 
 import pytest
 
@@ -45,6 +47,20 @@ def test_streaming_hourly_matches_batch(spark, tmp_path):
         for r in QUERIES["events_hourly_agg"](spark, SF_DIR).collect()
     }
     assert got == exp and len(got) > 0
+
+
+def test_streaming_query_removes_its_checkpoint(spark, monkeypatch, tmp_path):
+    """A streaming contract query's checkpoint outlives no call: the memory
+    sink keeps the rows on the driver, so the directory goes once the query
+    ends (counted under a temp directory of this test's own)."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def checkpoints() -> int:
+        return len(glob.glob(os.path.join(tempfile.gettempdir(), "rossete_ckpt_*")))
+
+    before = checkpoints()
+    assert QUERIES["streaming_hourly_agg"](spark, SF_DIR).collect()
+    assert checkpoints() == before
 
 
 @pytest.mark.parametrize("query", ["events_hourly_agg", "streaming_hourly_agg"])
